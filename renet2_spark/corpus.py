@@ -115,14 +115,14 @@ def sentence_arrays(documents: DataFrame) -> DataFrame:
     sf0.1 and one full shuffle cheaper at scale."""
     words = F.split(F.col("text"), " ")
     n_sent = F.ceil(F.size(words) / F.lit(SENT_WORDS)).cast("int")
+    sents = F.transform(
+        F.sequence(F.lit(0), n_sent - 1),
+        lambda s: F.array_join(F.slice(words, s * SENT_WORDS + 1, SENT_WORDS), " "),
+    )
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.transform(
-            F.sequence(F.lit(0), n_sent - 1),
-            lambda s: F.array_join(
-                F.slice(words, s * SENT_WORDS + 1, SENT_WORDS), " "
-            ),
-        ).alias("_sents"),
+        # NULL text has no sentences (sentences_direct yields no rows)
+        F.coalesce(sents, F.array().cast("array<string>")).alias("_sents"),
     )
 
 

@@ -30,7 +30,7 @@ from .session import local_table
 # surface -> raw id emitted by the tagger (pre-normalization)
 GENE_RAW: dict[str, str] = {
     "scan": "1001",
-    "join": "1002",  # hot entity: present in ~96% of docs (skew fixture)
+    "join": "1002",  # hot entity: present in ~77% of docs (skew fixture)
     "hash": "1003",
     "merge": "1004",
     "filter": "1005",

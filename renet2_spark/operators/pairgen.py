@@ -17,7 +17,8 @@ shuffle key is (doc_id, sent_no), which is uniformly distributed no
 matter how hot an entity is. This is the explicit skew defusal the
 north_rule asks for: keying fan-out by document, never by entity.
 Entity-keyed aggregations downstream use salted two-phase aggs
-(operators/skew.py).
+(operators/skew.py). The flagship edge plan (edge_relations) keys
+every step by doc_id alone, so it needs one shuffle in total.
 
 Feature columns for the scorer (document-level evidence, the same
 signals the reference's feature codes 4/5/6 mark per token,
@@ -73,69 +74,74 @@ def doc_pair_candidates(mentions: DataFrame) -> DataFrame:
     )
 
 
-_EDGE_CACHES: list[DataFrame] = []
-
-
-def release_edge_caches() -> None:
-    while _EDGE_CACHES:
-        try:
-            _EDGE_CACHES.pop().unpersist()
-        except Exception:
-            pass  # cache belonged to an already-stopped session
-
-
 def edge_relations(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(pairs, info) for the flagship edge plan from ONE pass over the
-    mention chain (r7, guide §2.4): both consumers aggregate first by
-    (doc_id, sent_no, type, entity_id) — an IDENTICAL partial-agg +
-    exchange subtree, which AQE stage reuse executes once — and derive
-    their shapes from that relation. Previously sentence_pair_candidates
-    and the two entity_info sides each re-ran the scan+tokenize+tag
-    chain (3 executions of ~4.5 task-s at sf0.1; stage profile in
-    OPTIMIZATION_r07.md). Values are identical to
-    sentence_pair_candidates(mentions) / entity_info(mentions):
-    the per-sentence entity sets, distinct-sentence counts, mention
-    counts and sorted-distinct name joins all commute with the
-    per-sentence pre-aggregation."""
-    m2 = mentions.groupBy("doc_id", "sent_no", "type", "entity_id").agg(
-        F.count("*").cast("long").alias("_n"),
-        F.collect_set("mention").alias("_names"),
+    """(pairs, info) for the flagship edge plan, doc-local after ONE
+    shuffle: every key below starts with doc_id, so the
+    HashPartitioning(doc_id) of the repartition satisfies both
+    aggregations and the plan has no other exchange, no join and no
+    persist (the reference likewise builds candidates one document at
+    a time, sequence_utils.py:255-304).
+
+    info: (doc_id, type, entity_id, n_mentions, name, sents) — one row
+    per entity in a doc, with entity_info's count and sorted-distinct
+    '|'-joined name, plus the set of its sentence numbers.
+    pairs: (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d,
+    g_name, d_name) — the same rows and values as
+    pair_features(mentions) joined to both sides' names. Every non-Gene
+    tag (incl. composites) is on the disease side (reference
+    ann_utils.py:195-207).
+
+    n_cooc_sents = |g.sents & d.sents| is computed INSIDE the
+    generator input and the zero pairs are filtered there: as a
+    projected column, Catalyst would push a downstream predicate on it
+    (the vote cutoff) through the projection and evaluate the
+    intersection once per reference."""
+    info = (
+        mentions.repartition("doc_id")
+        .groupBy("doc_id", "type", "entity_id")
+        .agg(
+            F.count("*").cast("int").alias("n_mentions"),
+            F.concat_ws("|", F.sort_array(F.collect_set("mention"))).alias("name"),
+            F.collect_set("sent_no").alias("sents"),
+        )
     )
-    # persist: Catalyst pushes the downstream type filters below the
-    # aggregation into each branch's dictionary side, so the three
-    # consumers would otherwise still evaluate the whole mention chain
-    # separately (r7 stage profile: 3 x ~0.35s serialized on a 1-split
-    # corpus). The relation is one row per (doc, sent, type, entity) —
-    # far smaller than the corpus; rotated per call like the other
-    # registries (overlapping builds lose only the reuse).
-    release_edge_caches()
-    m2 = m2.persist()
-    _EDGE_CACHES.append(m2)
-    per_sent = m2.groupBy("doc_id", "sent_no").agg(
-        F.collect_set(
-            F.when(F.col("type") == "Gene", F.col("entity_id"))
-        ).alias("genes"),
-        F.collect_set(
-            F.when(F.col("type") != "Gene", F.col("entity_id"))
-        ).alias("diseases"),
+    ent = F.struct(
+        F.col("entity_id").alias("id"),
+        F.col("n_mentions").alias("n"),
+        "name",
+        "sents",
+    )
+    gene = F.col("type") == "Gene"
+    per_doc = info.groupBy("doc_id").agg(
+        F.collect_list(F.when(gene, ent)).alias("gs"),
+        F.collect_list(F.when(~gene, ent)).alias("ds"),
+    )
+    g = F.col("g")
+    cooc = F.filter(
+        F.transform(
+            "ds",
+            lambda d: F.struct(
+                d["id"].alias("id"),
+                d["n"].alias("n"),
+                d["name"].alias("name"),
+                F.size(F.array_intersect(g["sents"], d["sents"])).alias("c"),
+            ),
+        ),
+        lambda p: p["c"] > 0,
     )
     pairs = (
-        per_sent.select(
-            "doc_id", "sent_no", F.explode("genes").alias("gene_id"), "diseases"
-        )
+        per_doc.select("doc_id", F.explode("gs").alias("g"), "ds")
+        .select("doc_id", "g", F.explode(cooc).alias("d"))
         .select(
-            "doc_id", "sent_no", "gene_id",
-            F.explode("diseases").alias("disease_id"),
+            "doc_id",
+            F.col("g.id").alias("gene_id"),
+            F.col("d.id").alias("disease_id"),
+            F.col("d.c").alias("n_cooc_sents"),
+            F.col("g.n").alias("n_g"),
+            F.col("d.n").alias("n_d"),
+            F.col("g.name").alias("g_name"),
+            F.col("d.name").alias("d_name"),
         )
-        .groupBy("doc_id", "gene_id", "disease_id")
-        .agg(F.countDistinct("sent_no").cast("int").alias("n_cooc_sents"))
-    )
-    info = m2.groupBy("doc_id", "type", "entity_id").agg(
-        F.sum("_n").cast("int").alias("n_mentions"),
-        F.concat_ws(
-            "|",
-            F.sort_array(F.array_distinct(F.flatten(F.collect_list("_names")))),
-        ).alias("name"),
     )
     return pairs, info
 
@@ -149,11 +155,6 @@ def entity_info(mentions: DataFrame) -> DataFrame:
         F.count("*").cast("int").alias("n_mentions"),
         F.concat_ws("|", F.sort_array(F.collect_set("mention"))).alias("name"),
     )
-
-
-def entity_mention_counts(mentions: DataFrame) -> DataFrame:
-    """(doc_id, type, entity_id, n_mentions) — doc-level evidence."""
-    return entity_info(mentions).drop("name")
 
 
 def pair_features(
@@ -180,93 +181,4 @@ def pair_features(
         .select(
             "doc_id", "gene_id", "disease_id", "n_cooc_sents", "n_g", "n_d"
         )
-    )
-
-
-def doc_local_pair_table(mentions: DataFrame) -> DataFrame:
-    """Fused document-local pair generation: ONE shuffle
-    (groupBy doc_id), then the per-doc gene x disease fan-out, sentence
-    co-occurrence counts, evidence counts and name aggregation are all
-    row-local array expressions, exploded at the end. Output:
-    (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d, g_name,
-    d_name).
-
-    This replaces a 4-join / 6-exchange plan (pairs + per-entity
-    counts + per-entity names) whose repeated mention-chain recompute
-    and exchange fan-out dominated wall-clock (measured: join plan 58s
-    vs fused plan at rep=64/32 cores). Per-doc arrays are bounded
-    (<= 500 sentences x 512 tokens caps, reference raw.py:648-698), so
-    the row-local work is O(genes x diseases) with tiny constants —
-    and the shuffle key is doc_id, which hot entities cannot skew
-    (the north_rule's salting requirement applies to entity-keyed
-    rollups, operators/skew.py)."""
-    ms = F.col("ms")
-
-    def info_arr(typ: str) -> "F.Column":
-        side = F.filter(ms, lambda m: m["type"] == F.lit(typ))
-        ids = F.array_distinct(F.transform(side, lambda m: m["entity_id"]))
-
-        def one(e):
-            mine = F.filter(side, lambda m: m["entity_id"] == e)
-            return F.struct(
-                e.alias("id"),
-                F.size(mine).cast("int").alias("n"),
-                F.concat_ws(
-                    "|",
-                    F.array_sort(
-                        F.array_distinct(F.transform(mine, lambda m: m["mention"]))
-                    ),
-                ).alias("name"),
-                F.array_distinct(
-                    F.transform(mine, lambda m: m["sent_no"])
-                ).alias("sents"),
-            )
-
-        return F.transform(ids, one)
-
-    per_doc = mentions.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct("sent_no", "type", "entity_id", "mention")
-        ).alias("ms")
-    )
-
-    def pair(gi, di):
-        return F.struct(
-            di["id"].alias("disease_id"),
-            F.size(F.array_intersect(gi["sents"], di["sents"]))
-            .cast("int")
-            .alias("n_cooc_sents"),
-            di["n"].alias("n_d"),
-            di["name"].alias("d_name"),
-        )
-
-    # explode-structured fan-out: each info array is computed ONCE per
-    # doc row and carried as data — a nested transform(ginfo, gi ->
-    # transform(dinfo, ...)) would re-evaluate the inner array
-    # expression per gene (lambda args are not memoized)
-    s1 = per_doc.select(
-        "doc_id", info_arr("Gene").alias("gis"), info_arr("Disease").alias("dis")
-    )
-    s2 = s1.select("doc_id", F.explode("gis").alias("gi"), "dis")
-    s3 = s2.select(
-        "doc_id",
-        F.col("gi.id").alias("gene_id"),
-        F.col("gi.n").alias("n_g"),
-        F.col("gi.name").alias("g_name"),
-        F.explode(
-            F.filter(
-                F.transform(F.col("dis"), lambda di: pair(F.col("gi"), di)),
-                lambda p: p["n_cooc_sents"] > 0,
-            )
-        ).alias("p"),
-    )
-    return s3.select(
-        "doc_id",
-        "gene_id",
-        F.col("p.disease_id").alias("disease_id"),
-        F.col("p.n_cooc_sents").alias("n_cooc_sents"),
-        "n_g",
-        F.col("p.n_d").alias("n_d"),
-        "g_name",
-        F.col("p.d_name").alias("d_name"),
     )

@@ -44,40 +44,45 @@ def model_logit(n_cooc: Column, n_g: Column, n_d: Column, i: Column) -> Column:
     )
 
 
-def _prob_col(i: float) -> Column:
-    """Model i's piecewise-linear probability as an ordinary
-    (whole-stage-codegen) expression — float semantics identical to
-    the transform/aggregate HOF formulation and the DuckDB oracle."""
-    logit = model_logit(
-        F.col("n_cooc_sents").cast("double"),
-        F.col("n_g").cast("double"),
-        F.col("n_d").cast("double"),
-        F.lit(i),
-    )
-    return F.greatest(
-        F.lit(0.0), F.least(F.lit(1.0), F.lit(0.5) + logit / F.lit(8.0))
-    )
-
-
 def score_and_vote(pairs: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
     """Fused deterministic scorer + ensemble vote with zero lambda
     HOFs (Spark evaluates HOF lambdas interpreted — measured hot in
     the reduce stage). Adds hit_cnt, prob_avg, prob_X; filters by the
-    vote cutoff. Bit-identical to ensemble_vote(score_pairs(...)):
-    the prob sum keeps the same left-fold association."""
-    probs = [_prob_col(float(i)) for i in range(N_MODELS)]
-    hit = None
-    for p in probs:
-        term = F.when(p > F.lit(0.5), F.lit(1)).otherwise(F.lit(0))
-        hit = term if hit is None else hit + term
-    s = F.lit(0.0)
-    for p in probs:
-        s = s + p
-    prob_x = F.concat_ws(";", *[F.format_number(p, 5) for p in probs])
+    vote cutoff. Bit-identical to ensemble_vote(score_pairs(...)): the
+    logit keeps model_logit's left-fold association, with its
+    model-independent prefix `_base` computed once, and the prob sum
+    keeps the same left fold.
+
+    Built from a few SQL strings: the equivalent Column-API tree costs
+    ~400 Py4J calls, which made it the largest part of build_edges'
+    driver-side construction."""
+    base = (
+        f"({W_COOC}D * CAST(n_cooc_sents AS DOUBLE)"
+        f" + {W_CNT}D * (CAST(n_g AS DOUBLE) + CAST(n_d AS DOUBLE)))"
+        f" + ({BIAS}D)"
+    )
+    probs = [
+        F.expr(
+            f"greatest(0.0D, least(1.0D, 0.5D"
+            f" + (_base + ({MODEL_STEP}D) * {float(i)}D) / 8.0D))"
+        ).alias(f"_p{i}")
+        for i in range(N_MODELS)
+    ]
+    ps = [f"_p{i}" for i in range(N_MODELS)]
+    hit = " + ".join(f"CASE WHEN {p} > 0.5D THEN 1 ELSE 0 END" for p in ps)
+    total = "0.0D"
+    for p in ps:
+        total = f"({total} + {p})"
+    fmt = ", ".join(f"format_number({p}, 5)" for p in ps)
     return (
-        pairs.withColumn("hit_cnt", hit.cast("int"))
-        .withColumn("prob_avg", F.round(s / F.lit(float(N_MODELS)), 5))
-        .withColumn("prob_X", prob_x)
+        pairs.select("*", F.expr(base).alias("_base"))
+        .select(*pairs.columns, *probs)
+        .select(
+            *pairs.columns,
+            F.expr(f"CAST({hit} AS INT)").alias("hit_cnt"),
+            F.expr(f"round({total} / {float(N_MODELS)}D, 5)").alias("prob_avg"),
+            F.expr(f"concat_ws(';', {fmt})").alias("prob_X"),
+        )
         .filter(F.col("hit_cnt") >= F.lit(cutoff))
     )
 
@@ -157,21 +162,4 @@ def materialize_edges(voted: DataFrame, entity_info: DataFrame) -> DataFrame:
         "d_name",
         "prob_avg",
         "hit_cnt",
-    )
-
-
-def dedupe_edges(edges: DataFrame) -> DataFrame:
-    """Window-ranked confidence dedup (north_star: 'deduplicated with
-    window-ranked confidence aggregation'; reference analogue
-    drop_duplicates + mean, predict.py:120-140): keep the
-    highest-confidence row per (doc_id, gene_id, disease_id)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("doc_id", "gene_id", "disease_id").orderBy(
-        F.desc("prob_avg"), F.desc("hit_cnt")
-    )
-    return (
-        edges.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

@@ -2,7 +2,7 @@
 
 The reference is single-node and has no skew story (SURVEY §4). At
 cluster scale, entity-keyed aggregations are dominated by hot entities
-(our fixture: gene 'join' occurs in ~96% of documents; real-world:
+(our fixture: gene 'join' occurs in ~77% of documents; real-world:
 TP53 / 'Neoplasms' D009369). The north_rule requires skew handled
 EXPLICITLY.
 

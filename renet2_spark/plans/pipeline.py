@@ -7,18 +7,19 @@ src/renet2/predict.py:338-448) as one declarative DataFrame DAG:
                     zero string allocation)--> raw mentions
     --canonicalize (narrow)--> mentions [optionally materialized as a
                     lineage-tracked stage table via CheckpointStore]
-    --sentence_pair_candidates (groupBy doc,sent -> explode cross)-->
-                    candidate pairs + co-occurrence counts
-    --entity_info (groupBy doc,type,entity: counts + names)-->
-    --pairs join gene-info join disease-info (doc-keyed sort-merge)-->
+    --edge_relations: repartition(doc_id) (the ONE shuffle)
+        --groupBy(doc,type,entity): count, names, sentence set-->
+        --groupBy(doc): gene / disease struct lists-->
+        --explode genes x explode diseases, |sentence intersection|
+          filtered > 0 inside the generator--> candidate pairs
     --score_and_vote (row-local codegen, 10 models one pass)--> edges
   mentions --salted two-phase agg--> nodes
 
-Every shuffle is keyed by doc_id (+sentence/entity-within-doc) —
-document-uniform, so hot entities (the 'join' gene appears in ~96% of
-docs) never skew a partition. Entity-GLOBAL rollups (nodes) go through
-salted two-phase aggregation (operators/skew.py). See BENCH.md for the
-measured evolution of this plan.
+Every shuffle is keyed by doc_id — document-uniform, so hot entities
+(the 'join' gene appears in ~77% of docs) never skew a partition.
+Entity-GLOBAL rollups (nodes) go through salted two-phase aggregation
+(operators/skew.py). See BENCH.md for the measured evolution of this
+plan.
 """
 
 from __future__ import annotations
@@ -77,6 +78,9 @@ def probe_corpus_contract_info(
                 F.concat(F.lit("probe:"), F.col("doc_id").cast("string"))
             ).alias("h"),
         )
+        # NULL/empty text has no sentences under either contract: it
+        # must neither take a sample slot nor fail the parity check
+        .filter(F.col("t") != "")
         .mapInPandas(heads, "t string, h string")
         .orderBy("h")
         .limit(sample)
@@ -84,7 +88,7 @@ def probe_corpus_contract_info(
     )
     packed = True
     for r in rows:
-        t = r["t"] or ""
+        t = r["t"]
         if tokenize_text(t) != t.split(" ") or split_sentences(t) != [t]:
             packed = False
             break
@@ -172,36 +176,15 @@ def build_edges(
                 },
             )
         # production path: mentions materialized as a lineage-tracked,
-        # resumable stage table; the three consumers below read it
-        # columnar instead of recomputing the tag chain
+        # resumable stage table; the edge plan below reads it columnar
+        # instead of recomputing the tag chain
         mentions = store.run_stage("mentions", mentions, lambda df: df)
-    # Join-shaped plan — measured fastest and best-scaling of three
-    # alternatives (in-memory persist: block-manager contention at
-    # high core counts; fused per-doc HOF arrays: lambda HOFs evaluate
-    # interpreted, 2x slower). All shuffle/join keys include doc_id,
-    # so hot entities cannot skew any exchange; aggregations are
-    # codegen'd built-ins with map-side partial aggregation. r7: pairs
-    # and info share one (doc, sent, type, entity) pre-aggregation so
-    # the mention chain executes once, not three times (edge_relations).
-    pairs, info = edge_relations(mentions)
-    g = info.filter(F.col("type") == "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("gene_id"),
-        F.col("n_mentions").alias("n_g"),
-        F.col("name").alias("g_name"),
-    )
-    # reference routes every non-Gene tag (incl. composites) to the
-    # disease side (ann_utils.py:195-207)
-    d = info.filter(F.col("type") != "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("disease_id"),
-        F.col("n_mentions").alias("n_d"),
-        F.col("name").alias("d_name"),
-    )
-    enriched = pairs.join(g, ["doc_id", "gene_id"]).join(
-        d, ["doc_id", "disease_id"]
-    )
-    voted = score_and_vote(enriched, cutoff=cutoff)
+    # doc-local plan: ONE shuffle (repartition by doc_id) serves the
+    # per-entity and per-doc aggregations, the gene x disease fan-out
+    # is a nested explode, so there is no join and no persist; the
+    # scorer is row-local codegen over the fanned-out pairs
+    pairs, _ = edge_relations(mentions)
+    voted = score_and_vote(pairs, cutoff=cutoff)
     return voted.select(
         "doc_id",
         "gene_id",

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -16,3 +17,20 @@ def spark():
     s = get_spark(app_name="renet2_spark_tests", master="local[8]")
     yield s
     s.stop()
+
+
+@contextmanager
+def sql_conf(spark, conf: dict):
+    """Set SQL confs on the shared session for a block, then restore
+    the previous values (the session fixture outlives the test)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

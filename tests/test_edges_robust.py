@@ -1,0 +1,83 @@
+"""The flagship edge plan does not depend on plan shape or on other
+builds in the same session, and degenerate corpora yield no edges.
+
+Config matrix after the assert_gpu_and_cpu_are_equal_collect pattern:
+one query, several session configs, every result equal to the exact
+DuckDB oracle."""
+
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+from pyspark.sql import functions as F
+
+from renet2_spark.corpus import raw_text_twin
+from renet2_spark.oracles import q_edges
+from renet2_spark.plans.pipeline import build_edges
+from tests.conftest import SF_SMOKE, sql_conf
+from tests.oracle_utils import compare
+
+CONFIGS = {
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "prefer_smj": {"spark.sql.join.preferSortMergeJoin": "true"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    "partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "partitions_200": {"spark.sql.shuffle.partitions": "200"},
+    "cached_partitioning_fixed": {
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false"
+    },
+}
+
+
+def _edges(spark, docs=None):
+    if docs is None:
+        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    return build_edges(spark, docs, corpus="packed")
+
+
+@pytest.mark.parametrize("name", sorted(CONFIGS))
+def test_build_edges_config_matrix(spark, name):
+    with sql_conf(spark, CONFIGS[name]):
+        ok, msg = compare(_edges(spark), q_edges(), SF_SMOKE)
+    assert ok, f"{name}: {msg}"
+
+
+def test_build_edges_concurrent_builds(spark):
+    """Two builds running at once in one session must not disturb
+    each other (no shared cache registry on the edge path)."""
+    with ThreadPoolExecutor(2) as pool:
+        futures = [
+            pool.submit(lambda: compare(_edges(spark), q_edges(), SF_SMOKE))
+            for _ in range(2)
+        ]
+        results = [f.result(timeout=600) for f in futures]
+    assert results == [(True, "ok")] * 2, results
+
+
+@pytest.mark.parametrize("corpus", ["auto", "packed", "raw"])
+def test_build_edges_empty_corpus(spark, corpus):
+    docs = spark.createDataFrame([], "doc_id bigint, text string")
+    assert build_edges(spark, docs, corpus=corpus).collect() == []
+
+
+@pytest.mark.parametrize("corpus", ["auto", "packed", "raw"])
+def test_build_edges_null_text_doc(spark, corpus):
+    """A NULL-text document contributes no edges, leaves the edges of
+    the documents beside it unchanged and does not flip auto routing.
+    The raw case runs on the punctuated twin, whose edges equal the
+    packed corpus's."""
+    docs = (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .select(F.col("doc_id").cast("string"), "text")
+        .orderBy("doc_id")
+        .limit(20)
+    )
+    with_null = docs.unionByName(
+        spark.createDataFrame([("-1", None)], "doc_id string, text string")
+    )
+    if corpus == "raw":
+        with_null = raw_text_twin(with_null)
+    want = sorted(build_edges(spark, docs, corpus="packed").collect())
+    got = sorted(build_edges(spark, with_null, corpus=corpus).collect())
+    assert want and got == want
+    only_null = with_null.filter("text IS NULL")
+    assert build_edges(spark, only_null, corpus=corpus).collect() == []

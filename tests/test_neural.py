@@ -544,8 +544,8 @@ def test_sentence_arrays_matches_grouped(spark):
     must equal regrouping sentences_direct's exploded relation per doc
     — same strings, same order — including the degenerate shapes:
     empty text (split('', ' ') = ['']), one word, exact 10/11-word
-    boundaries, repeated spaces (empty words), and a many-sentence
-    doc."""
+    boundaries, repeated spaces (empty words), a many-sentence doc and
+    NULL text."""
     from pyspark.sql import functions as F
 
     from renet2_spark.corpus import sentence_arrays, sentences_direct
@@ -557,6 +557,7 @@ def test_sentence_arrays_matches_grouped(spark):
         ("4", " ".join(f"w{i}" for i in range(11))),
         ("5", "a  b   c"),
         ("6", " ".join(f"tok{i}" for i in range(137))),
+        ("7", None),
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     got = {
@@ -577,4 +578,5 @@ def test_sentence_arrays_matches_grouped(spark):
         )
         .collect()
     }
+    want["7"] = []  # NULL text: no exploded sentences, an empty array
     assert got == want

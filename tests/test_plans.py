@@ -3,9 +3,11 @@ plans scale (broadcast dimensions, column pruning, candidate
 restriction, single-scan fan-outs) are asserted so a refactor cannot
 silently regress them to shuffle-heavy shapes."""
 
+import re
+
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, sql_conf
 
 
 def _optimized(df) -> str:
@@ -97,14 +99,28 @@ def test_labels_join_keys_include_doc(spark):
     )
 
 
-def test_vote_predicate_reaches_join(spark):
-    """Catalyst pushes the ensemble vote cutoff below the final joins
-    (rejected pairs never materialize post-join) — visible as the
-    hit-count CASE chain inside a Join condition or pre-join Filter."""
+def test_flagship_edge_plan_is_one_shuffle(spark):
+    """build_edges is doc-local: in the non-adaptive plan ONE
+    repartition(doc_id) exchange serves both aggregations, with no
+    shuffled join and no persist. The sentence intersection appears
+    once (inside the generator input) — the vote cutoff must not be
+    inlined into it."""
     from renet2_spark.plans.pipeline import build_edges
 
-    plan = _optimized(build_edges(spark, _docs(spark)))
-    assert "Join" in plan and "CASE WHEN" in plan
+    # a build earlier in the session may have cached an identical
+    # mention subtree, which Spark substitutes into this plan; the
+    # guard is about the plan build_edges itself makes
+    spark.catalog.clearCache()
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        df = build_edges(spark, _docs(spark), corpus="packed")
+        plan = _executed(df)
+        optimized = _optimized(df)
+    # "\bExchange" skips BroadcastExchange / ReusedExchange
+    assert len(re.findall(r"\bExchange ", plan)) == 1, plan
+    assert "hashpartitioning(doc_id" in plan
+    assert "InMemoryTableScan" not in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert optimized.count("array_intersect") == 1
 
 
 def test_decontaminate_probe_is_broadcast(spark):
