@@ -5,10 +5,12 @@ the first-class corpus-hygiene operators a 100 TB document pipeline
 needs before KG extraction. All are declarative DataFrame plans:
 
 * exact            — md5 grouping, one shuffle
-* ngram-jaccard    — word-shingle inverted index self-join (exact
-                     verification path; frequency-capped at scale)
-* minhash + LSH    — k=12 md5-minhash signature, b=4/r=3 banding,
-                     bucket join, exact-jaccard verify of candidates
+* ngram-jaccard    — word-shingle inverted index: one groupBy(shingle)
+                     yields each shingle's sorted member list, pairs fan
+                     out row-locally (frequency-capped at scale)
+* minhash + LSH    — k=12 md5-minhash signature computed row-locally,
+                     b=4/r=3 banding, sorted-member bucket fan-out,
+                     exact-jaccard verify of candidates by array_intersect
 * simhash          — 64-bit sign-of-sum signature over token hashes
 * embedding cosine — near-dup pairs over an embedding column
 
@@ -19,9 +21,9 @@ xxhash64 via the `hash_expr` hook; the plan shape is unchanged.
 Scale notes: the shingle inverted index is the textbook approach for
 exact-threshold dedup (common shingles are frequency-capped via
 `max_shingle_docs` — a shingle seen in more docs than that cannot be
-discriminative and would otherwise quadratically explode the join).
-MinHash-LSH bounds candidate generation to docs sharing a band
-bucket, turning O(n^2) into O(n * bucket_size); hot band buckets
+discriminative and would otherwise quadratically explode the pair
+fan-out). MinHash-LSH bounds candidate generation to docs sharing a
+band bucket, turning O(n^2) into O(n * bucket_size); hot band buckets
 (mass near-duplication — exactly the corpora LSH is aimed at) are
 additionally CAPPED at MAX_LSH_BUCKET members (deterministic keep-
 lowest-id rule, `cap_hot_buckets`), bounding any single bucket's
@@ -29,6 +31,10 @@ candidate fan-out at cap^2 instead of N^2; dropped membership is
 accounted by `hot_bucket_stats` (no-silent-caps rule). For corpora
 with large *identical* groups, run `dedup_exact` first — identical
 docs share every band and saturate the cap by construction.
+
+NULL shingles (the one shingle of a NULL-text doc) never match: SQL
+equality drops them in the oracle, so every grouped or intersected
+shingle relation here filters them out explicitly.
 """
 
 from __future__ import annotations
@@ -47,13 +53,13 @@ LSH_BANDS = 4  # r = K/BANDS = 3 rows per band
 SIMHASH_BITS = 64
 # default document-frequency cap on inverted-index shingles: a shingle
 # seen in more docs cannot discriminate near-dups and would make the
-# self-join quadratic on that key. Mirrored in the DuckDB oracle
+# pair fan-out quadratic on that key. Mirrored in the DuckDB oracle
 # (oracles._jaccard_cte) so parity holds at any scale. Dropped-shingle
 # accounting (no-silent-caps rule): `capped_shingle_stats`.
 MAX_SHINGLE_DF = 1024
-# per-(band, bucket) membership cap for every LSH bucket self-join:
-# N near-identical docs share every band bucket, so an uncapped join
-# emits O(N^2) candidate pairs on ONE key. Capping membership at B
+# per-(band, bucket) membership cap for every LSH bucket: N
+# near-identical docs share every band bucket, so an uncapped bucket
+# fans out O(N^2) candidate pairs on ONE key. Capping membership at B
 # (deterministic lowest-id members kept) bounds that to O(B^2) per
 # bucket. Mirrored in the DuckDB oracles (row_number <= cap), so
 # parity holds even when the cap binds. Accounting: hot_bucket_stats.
@@ -139,32 +145,6 @@ def capped_shingle_stats(
     )
 
 
-def df_capped_shingles(
-    sh: DataFrame,
-    max_shingle_docs: int = MAX_SHINGLE_DF,
-    broadcast_dropped: bool = True,
-) -> DataFrame:
-    """Drop shingles with document frequency > max_shingle_docs from an
-    exploded (doc_id, shingle) index. Shared by the ngram-jaccard AND
-    minhash-LSH verify paths so both under-count intersections
-    identically (round-2 advice fix: the minhash verify previously used
-    uncapped shingles and could over-count vs its own oracle).
-
-    broadcast_dropped=True applies the cap MAP-SIDE via a broadcast
-    anti-join — no extra shuffle of the inverted index (a semi-join
-    against the kept set would re-shuffle every shingle row; measured
-    2x slower at sf0.1). The dropped set's size is bounded by
-    total_shingle_rows / cap, which grows LINEARLY with the corpus —
-    at extreme scale that bound can exceed broadcast limits, so pass
-    broadcast_dropped=False to leave the join strategy to Catalyst/AQE
-    (which still broadcasts when the runtime size fits)."""
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    dropped = freq.filter(F.col("df") > max_shingle_docs).select("shingle")
-    if broadcast_dropped:
-        dropped = F.broadcast(dropped)
-    return sh.join(dropped, "shingle", "left_anti")
-
-
 def cap_hot_buckets(
     keys: DataFrame,
     bucket_cols: list[str],
@@ -175,15 +155,36 @@ def cap_hot_buckets(
     members of each bucket (deterministic; mirrored as a row_number
     CTE in the DuckDB oracles). Turns the worst-case O(N^2) candidate
     fan-out of a hot bucket into O(cap^2). The row_number shuffles on
-    the same key as the downstream bucket join, so AQE reuses the
-    exchange; a hot bucket costs one LINEAR single-task scan instead
-    of a quadratic join. Dropped membership: `hot_bucket_stats`."""
+    the bucket key, which the downstream bucket grouping (or join)
+    needs too, so the cap adds no exchange; a hot bucket costs one
+    LINEAR single-task scan. Dropped membership: `hot_bucket_stats`."""
     w = W.partitionBy(*bucket_cols).orderBy(id_col)
     return (
         keys.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= max_bucket_size)
         .drop("_r")
     )
+
+
+def _member_pairs(members: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) for every i < j over each row's `ds` member
+    array, sorted here: a row-local fan-out, so grouping members needs
+    no self-join on the grouping key (bounded by C(|ds|, 2) per row)."""
+    s = members.select(F.array_sort("ds").alias("ds"))
+    s = s.select("ds", F.posexplode("ds").alias("_i", "doc_a"))
+    return s.select(
+        "doc_a",
+        F.explode(F.slice("ds", F.col("_i") + 2, F.size("ds"))).alias("doc_b"),
+    )
+
+
+def _with_jaccard(common: DataFrame) -> DataFrame:
+    """Adds jaccard = n_common / (n_a + n_b - n_common), rounded to 5
+    places as in the DuckDB oracle."""
+    jac = F.col("n_common").cast("double") / (
+        (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+    )
+    return common.withColumn("jaccard", F.round(jac, 5))
 
 
 def hot_bucket_stats(
@@ -211,17 +212,16 @@ def dedup_ngram_jaccard(
     n: int = NGRAM,
     threshold: float = JACCARD_THRESHOLD,
     max_shingle_docs: int | None = MAX_SHINGLE_DF,
-    broadcast_dropped: bool = True,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by exact word-ngram Jaccard via inverted index:
     (doc_a, doc_b, n_common, n_a, n_b, jaccard).
 
-    The self-join is df-capped by default (MAX_SHINGLE_DF): set sizes
-    (n_a/n_b) are computed over ALL shingles, intersections over capped
-    shingles only — jaccard is under-counted for pairs whose overlap is
-    exclusively stop-shingles, never over-counted. The DuckDB oracle
-    applies the identical cap.
+    The pair fan-out is df-capped by default (MAX_SHINGLE_DF): set
+    sizes (n_a/n_b) are computed over ALL shingles, intersections over
+    capped shingles only — jaccard is under-counted for pairs whose
+    overlap is exclusively stop-shingles, never over-counted. The
+    DuckDB oracle applies the identical cap.
 
     `shingles` optionally injects a precomputed (doc_id, shingle)
     index for `documents` (e.g. a persisted table shared with a
@@ -250,45 +250,32 @@ def dedup_ngram_jaccard(
         sh_arr = _shared_shingle_arrays(documents, n)
         ex = sh_arr.select("doc_id", F.explode("shingles").alias("shingle"))
         sizes = sh_arr.select("doc_id", "n_sh")
+    ex = ex.filter(F.col("shingle").isNotNull())
     if max_shingle_docs is None:
         a = ex.alias("a")
         b = ex.alias("b")
-        common = (
+        pairs = (
             a.join(b, "shingle")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(
+            .select(
                 F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"),
             )
-            .agg(F.count("*").cast("int").alias("n_common"))
         )
     else:
         grouped = ex.groupBy("shingle").agg(
-            F.count("*").alias("df"), F.collect_list("doc_id").alias("docs")
+            F.count("*").alias("df"), F.collect_list("doc_id").alias("ds")
         )
-        kept = grouped.filter(
-            (F.col("df") >= 2) & (F.col("df") <= max_shingle_docs)
+        pairs = _member_pairs(
+            grouped.filter((F.col("df") >= 2) & (F.col("df") <= max_shingle_docs))
         )
-        s1 = kept.select(F.array_sort("docs").alias("ds"))
-        s2 = s1.select("ds", F.posexplode("ds").alias("_i", "doc_a"))
-        s3 = s2.select(
-            "doc_a",
-            F.explode(
-                F.slice("ds", F.col("_i") + 2, F.size("ds"))
-            ).alias("doc_b"),
-        )
-        common = s3.groupBy("doc_a", "doc_b").agg(
-            F.count("*").cast("int").alias("n_common")
-        )
+    common = pairs.groupBy("doc_a", "doc_b").agg(
+        F.count("*").cast("int").alias("n_common")
+    )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (
-        (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-    )
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(jac, 5))
+        _with_jaccard(common.join(sa, "doc_a").join(sb, "doc_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
     )
@@ -302,6 +289,20 @@ def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
         for i in range(k)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
+
+
+def _row_local_signatures(sh_arr: DataFrame, k: int = MINHASH_K) -> DataFrame:
+    """minhash_signatures computed per row of a (doc_id, shingles)
+    relation: no explode, no shuffle. array_min skips the NULL shingle
+    of a NULL-text doc as min() does. One SQL string per hash, since a
+    Python lambda given to F.transform is called as (element, index)."""
+    return sh_arr.selectExpr(
+        "doc_id",
+        *[
+            f"array_min(transform(shingles, s -> md5(concat('{i}:', s)))) AS mh_{i}"
+            for i in range(k)
+        ],
+    )
 
 
 def lsh_band_keys(
@@ -328,8 +329,6 @@ def dedup_minhash_lsh(
     threshold: float = JACCARD_THRESHOLD,
     max_shingle_docs: int | None = MAX_SHINGLE_DF,
     max_bucket_size: int | None = MAX_LSH_BUCKET,
-    broadcast_dropped: bool = True,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidates (same band bucket) verified by exact jaccard
     computed ONLY over the candidate set: (doc_a, doc_b, jaccard).
@@ -338,105 +337,63 @@ def dedup_minhash_lsh(
     compares docs outside a shared band bucket — and bucket membership
     is CAPPED at max_bucket_size (cap_hot_buckets), so even a corpus of
     N near-identical docs fans out O(cap^2) pairs per band, not O(N^2)
-    (round-2 verdict finding #2). Verification never touches a doc
-    outside the candidate set — shingles are df-capped with the SAME
-    cap as the exact path (round-2 advice: verify previously used
-    uncapped shingles) and semi-joined to candidate doc_ids, then each
-    candidate pair's intersection is counted by two equi-joins keyed
-    (doc_a) and (doc_b, shingle). No shingle self-join over the corpus
-    exists anywhere in this plan. Jaccard arithmetic (capped n_common /
-    uncapped n_a / n_b) matches the exact path and the DuckDB oracle.
+    (round-2 verdict finding #2).
 
-    `shingles` optionally injects a precomputed (doc_id, shingle)
-    index for the VERIFY path (r5 verdict #7: a parquet-materialized
-    relation shared with dedup_ngram_jaccard computes the shingle
-    explode + df-cap shuffle once instead of per-query); pass the
-    already-capped relation with max_shingle_docs=None, or the raw
-    index to have it capped here.
-
-    r7 (guide §1.2/§2.3): without an injected index, ONE persisted
-    per-doc shingle-ARRAY relation (doc_shingle_arrays — 5k rows at
-    sf0.1, cheap to cache) feeds the signature aggregation, the df-cap
-    frequency, the verify probes and the row-local set sizes. The four
-    consumers previously each re-ran the split + per-gram string build
-    from `text` (the r5 "persist costs more" A/B cached the EXPLODED
-    1.5M-row index, not the 5k-row array form; stage profiles showed
-    the rebuild at 7-17 task-seconds per pass — OPTIMIZATION_r07.md)."""
-    if shingles is not None:
-        sig_in = doc_shingles(documents)
-        sh = shingles
-        sizes_all = doc_shingle_counts(documents)
-    else:
-        sh_arr = _shared_shingle_arrays(documents)
-        sig_in = sh_arr.select(
-            "doc_id", F.explode("shingles").alias("shingle")
-        )
-        sh = sig_in
-        sizes_all = sh_arr.select("doc_id", "n_sh")
-    aggs = [
-        F.min(
-            F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))
-        ).alias(f"mh_{i}")
-        for i in range(MINHASH_K)
-    ]
-    keys = lsh_band_keys(sig_in.groupBy("doc_id").agg(*aggs))
+    Doc-local plan over ONE persisted relation, the per-doc shingle
+    arrays (_shared_shingle_arrays):
+      * signature — row-local (_row_local_signatures);
+      * block — band keys, the hot-bucket cap, then each bucket's
+        sorted member list fans out its pairs i < j row-locally (no
+        bucket self-join; the cap's window and the member grouping
+        share one exchange on the bucket key), distinct across bands;
+      * verify — each candidate pair carries both docs' shingle arrays;
+        their exploded array_intersect, minus NULL shingles and minus
+        shingles over the df cap (broadcast anti-join: that set has at
+        most total_shingle_rows / cap rows; the SAME cap as the exact
+        path — round-2 advice), is counted per pair. A pair
+        with no capped shared shingle emits no row, as the oracle's
+        inner join drops it. Set sizes are the cached n_sh column.
+    Verification is candidate-restricted by construction: only
+    candidate pairs ever fetch shingles, and no shingle-keyed join over
+    the corpus exists. Jaccard arithmetic (capped n_common / uncapped
+    n_a, n_b) matches the exact path and the DuckDB oracle. The
+    non-adaptive plan shuffles three times: bucket key, candidate pair
+    and shingle df (guarded by test_minhash_plan_is_doc_local)."""
+    sh_arr = _shared_shingle_arrays(documents)
+    keys = lsh_band_keys(_row_local_signatures(sh_arr))
     if max_bucket_size is not None:
         keys = cap_hot_buckets(
             keys, ["band", "band_key"], "doc_id", max_bucket_size
         )
-    # keys / cand / the probe-side shingles are each referenced several
-    # times downstream (self-join sides, the cand_docs union, the two
-    # intersection probes). Relying on AQE exchange reuse to collapse
-    # the duplicated subtrees works when they hang off a bare file
-    # scan, but NOT off an InMemoryTableScan (measured r7: the
-    # signature aggregation executed ~20x, 331 task-s vs 45 — see
-    # OPTIMIZATION_r07.md). Persisting these SMALL relations (band
-    # keys ~4 rows/doc, candidate pairs, candidate-doc shingles) makes
-    # each expensive subtree execute exactly once by construction.
-    keys = _cache_keep(keys)
-    a, b = keys.alias("a"), keys.alias("b")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+    cand = _member_pairs(
+        keys.groupBy("band", "band_key").agg(F.collect_list("doc_id").alias("ds"))
+    ).distinct()
+    shared = (
+        cand.join(sh_arr.toDF("doc_a", "sa", "n_a"), "doc_a")
+        .join(sh_arr.toDF("doc_b", "sb", "n_b"), "doc_b")
         .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            "doc_a",
+            "doc_b",
+            "n_a",
+            "n_b",
+            F.explode(F.array_intersect("sa", "sb")).alias("shingle"),
         )
-        .distinct()
+        .filter(F.col("shingle").isNotNull())
     )
-    cand = _cache_keep(cand)
     if max_shingle_docs is not None:
-        sh = df_capped_shingles(sh, max_shingle_docs, broadcast_dropped)
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_c = _cache_keep(sh.join(cand_docs, "doc_id", "left_semi"))
-    # set sizes row-locally (no explode/shuffle), candidate docs only
-    sizes = sizes_all.join(cand_docs, "doc_id", "left_semi")
-    # intersection per candidate pair: fan doc_a's shingles onto the
-    # pair, then probe doc_b's shingles on the composite (doc_b,
-    # shingle) key — work is O(|cand| * shingles_per_doc)
-    pa = cand.join(
-        sh_c.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-    )
-    common = (
-        pa.join(
-            sh_c.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
+        dropped = (
+            sh_arr.select(F.explode("shingles").alias("shingle"))
+            .groupBy("shingle")
+            .count()
+            .filter(F.col("count") > max_shingle_docs)
+            .select("shingle")
         )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("int").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (
-        (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+        shared = shared.join(F.broadcast(dropped), "shingle", "left_anti")
+    common = shared.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
+        F.count("*").cast("int").alias("n_common")
     )
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(jac, 5))
+        _with_jaccard(common)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -757,8 +714,9 @@ def _shared_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
 
 def _cache_keep(df: DataFrame) -> DataFrame:
     """Persist WITHOUT rotating the registry — for small intermediates
-    of a query whose head already rotated (_shared_shingle_arrays);
-    released together with it on the next query's rotation."""
+    of a chain whose head already rotated (_shared_shingle_arrays; the
+    traced plan prefixes in perfbench/workloads.py use it); released
+    together with it on the next rotation."""
     df = df.persist()
     _DEDUP_CACHES.append(df)
     return df

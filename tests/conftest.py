@@ -11,6 +11,20 @@ from renet2_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# session configs a headline plan must be insensitive to (after the
+# assert_gpu_and_cpu_are_equal_collect pattern): one query, each
+# config, every result equal to the exact DuckDB oracle
+CONFIG_MATRIX = {
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "prefer_smj": {"spark.sql.join.preferSortMergeJoin": "true"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    "partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "partitions_200": {"spark.sql.shuffle.partitions": "200"},
+    "cached_partitioning_fixed": {
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false"
+    },
+}
+
 
 @pytest.fixture(scope="session")
 def spark():

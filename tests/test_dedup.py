@@ -96,13 +96,16 @@ def test_minhash_jaccard_values_match_exact_path(spark):
 
 
 def test_minhash_plan_has_no_corpus_shingle_self_join(spark):
-    """Plan-shape guard: every aggregate in the verify path keys on the
-    candidate pair, and the only shingle-equi-join probes candidate
-    shingles (semi-joined) — assert by counting scans feeding the
-    shingle join: the old scale-killer had 2 unrestricted explode
-    branches self-joined on shingle with NO LeftSemi upstream."""
+    """Plan-shape guard: the old scale-killer self-joined two exploded
+    corpus shingle branches on shingle. The only shingle-keyed join
+    left is the LeftAnti that drops df-capped shingles (broadcast);
+    pairs share shingles through array_intersect, never a join."""
+    import re
+
     plan = dd.dedup_minhash_lsh(_docs(spark))._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan  # candidate-doc restriction is present
+    joins = re.findall(r"Join (\w+), \(([^)]*)\)", plan)
+    shingle_joins = [kind for kind, cond in joins if "shingle" in cond]
+    assert shingle_joins == ["LeftAnti"], joins
 
 
 def test_ngram_df_cap_drops_stop_shingle_evidence(spark):
@@ -176,23 +179,44 @@ def test_minhash_verify_respects_shingle_df_cap(spark):
         ).collect()
     }
     # threshold 0 so surviving candidates aren't filtered; cap binds on
-    # the df=5 prefix shingles -> lsh must report the capped jaccard
+    # the df=5 prefix shingles -> lsh must report the capped jaccard,
+    # and a pair with no capped shared shingle is not emitted at all
     for r in dd.dedup_minhash_lsh(
         docs, threshold=0.0, max_shingle_docs=4, max_bucket_size=None
     ).collect():
-        assert exact.get((r["doc_a"], r["doc_b"]), 0.0) == r["jaccard"]
+        assert exact[(r["doc_a"], r["doc_b"])] == r["jaccard"]
 
 
-def test_df_cap_shuffled_fallback_matches_broadcast(spark):
-    """ADVICE #4: broadcast_dropped=False (the 100 TB path where the
-    dropped-shingle set outgrows broadcast limits) must produce the
-    same rows as the default broadcast plan."""
-    docs = _docs(spark)
-    a = sorted(map(tuple, dd.dedup_ngram_jaccard(docs).collect()))
-    b = sorted(
-        map(tuple, dd.dedup_ngram_jaccard(docs, broadcast_dropped=False).collect())
+def test_minhash_threshold_zero_matches_oracle(spark):
+    """At threshold 0 every verified candidate survives the filter, so
+    a pair whose capped intersection is empty would show up; the
+    oracle's inner join drops such pairs and so must the operator."""
+    from renet2_spark.oracles import q_dedup_minhash
+    from tests.oracle_utils import compare
+
+    ok, msg = compare(
+        dd.dedup_minhash_lsh(_docs(spark), threshold=0.0),
+        q_dedup_minhash(threshold=0.0),
+        SF_SMOKE,
     )
-    assert a == b
+    assert ok, msg
+
+
+def test_row_local_signatures_match_minhash_signatures(spark):
+    """The per-row array_min signature equals the explode + groupBy
+    definition, NULL and empty text included."""
+    docs = _docs(spark).select("doc_id", "text").limit(50).unionByName(
+        spark.createDataFrame(
+            [(-1, None), (-2, ""), (-3, "one two")], "doc_id bigint, text string"
+        )
+    )
+    want = {r["doc_id"]: tuple(r) for r in dd.minhash_signatures(docs).collect()}
+    got = {
+        r["doc_id"]: tuple(r)
+        for r in dd._row_local_signatures(dd.doc_shingle_arrays(docs)).collect()
+    }
+    assert len(want) == 53 and got == want
+    assert want["-1"][1:] == (None,) * dd.MINHASH_K
 
 
 def test_dedup_components_transitive_chain(spark):

@@ -1,9 +1,7 @@
 """The flagship edge plan does not depend on plan shape or on other
 builds in the same session, and degenerate corpora yield no edges.
 
-Config matrix after the assert_gpu_and_cpu_are_equal_collect pattern:
-one query, several session configs, every result equal to the exact
-DuckDB oracle."""
+Config matrix: tests.conftest.CONFIG_MATRIX."""
 
 from concurrent.futures import ThreadPoolExecutor
 
@@ -13,20 +11,8 @@ from pyspark.sql import functions as F
 from renet2_spark.corpus import raw_text_twin
 from renet2_spark.oracles import q_edges
 from renet2_spark.plans.pipeline import build_edges
-from tests.conftest import SF_SMOKE, sql_conf
+from tests.conftest import CONFIG_MATRIX, SF_SMOKE, sql_conf
 from tests.oracle_utils import compare
-
-CONFIGS = {
-    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
-    "prefer_smj": {"spark.sql.join.preferSortMergeJoin": "true"},
-    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
-    "partitions_1": {"spark.sql.shuffle.partitions": "1"},
-    "partitions_200": {"spark.sql.shuffle.partitions": "200"},
-    "cached_partitioning_fixed": {
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false"
-    },
-}
-
 
 def _edges(spark, docs=None):
     if docs is None:
@@ -34,9 +20,9 @@ def _edges(spark, docs=None):
     return build_edges(spark, docs, corpus="packed")
 
 
-@pytest.mark.parametrize("name", sorted(CONFIGS))
+@pytest.mark.parametrize("name", sorted(CONFIG_MATRIX))
 def test_build_edges_config_matrix(spark, name):
-    with sql_conf(spark, CONFIGS[name]):
+    with sql_conf(spark, CONFIG_MATRIX[name]):
         ok, msg = compare(_edges(spark), q_edges(), SF_SMOKE)
     assert ok, f"{name}: {msg}"
 

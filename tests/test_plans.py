@@ -43,12 +43,14 @@ def test_flagship_dictionary_join_is_broadcast(spark):
 
 
 def test_minhash_verify_is_candidate_restricted(spark):
-    """No unrestricted shingle self-join: the verify path must contain
-    the candidate-doc LeftSemi restriction."""
+    """No unrestricted shingle self-join: verification fetches shingle
+    arrays only for candidate pairs, so its inner joins are exactly the
+    two lookups keyed on the candidate's doc_a and doc_b."""
     from renet2_spark.operators.dedup import dedup_minhash_lsh
 
     plan = _optimized(dedup_minhash_lsh(_docs(spark)))
-    assert "LeftSemi" in plan
+    inner = re.findall(r"Join Inner, \((\w+)#\d+ = (\w+)#\d+\)", plan)
+    assert sorted(inner) == [("doc_a", "doc_a"), ("doc_b", "doc_b")], plan
 
 
 def test_ngram_cap_applies_map_side(spark):
@@ -173,8 +175,41 @@ def test_minhash_bucket_cap_window_reuses_join_key(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     plan = _executed(dedup_minhash_lsh(docs))
     assert "hashpartitioning(band" in plan
-    # candidate restriction guard still present after the cap change
-    assert "LeftSemi" in _optimized(dedup_minhash_lsh(docs))
+
+
+def _cached_relations(df) -> int:
+    """Distinct persisted relations the optimized plan reads (one
+    InMemoryRelation node per reference, all sharing one cache)."""
+    system = df.sparkSession._jvm.java.lang.System
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    caches = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "InMemoryRelation":
+            caches.add(system.identityHashCode(leaf.cacheBuilder()))
+    return len(caches)
+
+
+def test_minhash_plan_is_doc_local(spark):
+    """dedup_minhash_lsh is doc-local over ONE persisted shingle-array
+    relation: signatures row-local, buckets fanned out from sorted
+    member lists, verification by array_intersect on candidate pairs.
+    In the non-adaptive plan that is at most three shuffles (bucket
+    key, candidate pair, shingle df), none keyed on doc_id, and no
+    shuffled join. Verification needs no candidate-doc semi-join: only
+    candidate pairs ever fetch shingles."""
+    from renet2_spark.operators.dedup import dedup_minhash_lsh
+
+    spark.catalog.clearCache()
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        df = dedup_minhash_lsh(_docs(spark))
+        plan = _executed(df)
+        assert _cached_relations(df) == 1
+    exchanges = re.findall(r"\bExchange hashpartitioning\((\w+)#", plan)
+    assert 0 < len(exchanges) <= 3, plan
+    assert "doc_id" not in exchanges, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert "hashpartitioning(band" in plan
 
 
 def test_text_profile_is_single_scan_no_shuffle(spark):
