@@ -90,7 +90,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flagship-chain queries (build_edges/build_nodes) shuffle within
     # a few narrow ops of the scan — the floor's extra exchange only
-    # costs there (interleaved sf0.1 A/B, scripts/ab_flagship_floor.py:
+    # costs there (interleaved sf0.1 A/B, BENCH.md "Contract wiring":
     # kg_edges +32%, kg_nodes +17%, kg_edges_incremental +31% with the
     # floor), matching pipeline.run's own plain scan
     return load_documents(spark, sf_dir)

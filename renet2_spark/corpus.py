@@ -39,10 +39,6 @@ from pyspark.sql import functions as F
 SENT_WORDS = 10  # words per derived sentence
 MEDIA_MOD = 7  # media span after paragraph s iff (doc_id + s) % 7 == 0
 
-# span struct field order is part of the row invariant
-SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
-
-
 def _span(kind: Column, text: Column, media_ref: Column, offset: Column) -> Column:
     return F.struct(
         kind.alias("kind"),
@@ -350,8 +346,3 @@ def ingest_parallelism_floor(df: DataFrame, spark, key: str = "doc_id") -> DataF
     if df.rdd.getNumPartitions() < max(2, target // 2):
         df = df.repartition(target, key)
     return df
-
-
-def load_corpus(spark, sf_dir: str) -> DataFrame:
-    """Read flat documents parquet and lift to the interleaved schema."""
-    return derive_spans(load_documents(spark, sf_dir))

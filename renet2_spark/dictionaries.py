@@ -1,9 +1,8 @@
 """Entity dictionaries + canonicalization maps.
 
 The reference consumes PubTator NER output plus pickled dictionaries
-(reference: src/renet2/utils/ann_utils.py:10-11 human gene set,
-utils/omim2mesh.py:8-11 OMIM→MeSH map, utils/gene_transfer.py:7-8
-species→human gene map, utils/mesh_match.py:6-7 MeSH C→D validity).
+(reference: utils/omim2mesh.py:8-11 OMIM→MeSH map,
+utils/gene_transfer.py:7-8 species→human gene map, utils/mesh_match.py:6-7 MeSH C→D validity).
 Our engine replaces the NER input with a dictionary+regex tagger
 (north_star) whose dictionaries below are defined over the synthetic
 corpus vocabulary — deterministically, so DuckDB oracles can inline
@@ -55,11 +54,6 @@ GENE_TRANSFER: dict[str, list[str]] = {"2008": ["1008"]}
 
 # reference: utils/mesh_match.py:6-14 — C-prefixed MeSH valid iff in dict
 MESH_C2D_VALID: set[str] = {"C0005"}
-
-# reference: utils/ann_utils.py:10-11 — human gene id set
-HUMAN_GENES: set[str] = {
-    "1001", "1002", "1003", "1004", "1005", "1006", "1007", "1008",
-}
 
 # ---- extension dictionary for the annotation-cleaning queries ----------
 # Used ONLY by kg_mentions_clean/kg_mentions_capped (not the flagship
@@ -126,22 +120,6 @@ def normalize_disease_id(raw: str) -> str:
         d = "|".join(OMIM2MESH.get(omim, [d]))
     d = d.split(";")[0]
     return d
-
-
-def gene_dict_df(spark: SparkSession) -> DataFrame:
-    return local_table(
-        spark,
-        [(s, r, GENE_CANON[s]) for s, r in GENE_RAW.items()],
-        "surface string, raw_id string, entity_id string",
-    )
-
-
-def disease_dict_df(spark: SparkSession) -> DataFrame:
-    return local_table(
-        spark,
-        [(s, r, DISEASE_CANON[s]) for s, r in DISEASE_RAW.items()],
-        "surface string, raw_id string, entity_id string",
-    )
 
 
 def entity_dict_df(spark: SparkSession) -> DataFrame:

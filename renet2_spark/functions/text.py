@@ -429,26 +429,6 @@ def filter_rnn(tokens: DataFrame, mentions: DataFrame | None = None
     )
 
 
-_TOK_UDF_SCHEMA = T.ArrayType(T.StringType())
-
-
-def tokenize_udf(col: str = "text"):
-    @F.pandas_udf(_TOK_UDF_SCHEMA)
-    def _tok(s: pd.Series) -> pd.Series:
-        return tokenize_series(s)
-
-    return _tok(F.col(col))
-
-
-def split_sentences_udf(col: str = "text"):
-    @F.pandas_udf(_TOK_UDF_SCHEMA)
-    def _split(s: pd.Series) -> pd.Series:
-        # per-string automaton (see module docstring) — Arrow-batched
-        return s.map(split_sentences)
-
-    return _split(F.col(col))
-
-
 _RAW_SENT_SCHEMA = T.ArrayType(
     T.StructType(
         [

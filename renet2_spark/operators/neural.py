@@ -22,10 +22,16 @@ feature-code matrix [S, T], S<=32 sentences, T<=54 tokens; codes
 5:target-gene, 6:target-joint}. Batches pad to the batch max S/T with
 masking, so results are independent of batching/partitioning.
 
+One encoder: pairs reach the scoring worker grouped per document
+(_doc_payload); the worker maps each doc's sentences through the
+packaged vocabulary (vocab_ids, the only vocabulary lookup) and builds
+the doc's tensors once (_doc_cache_entry); each pair then only flips
+its target codes (_target_feat). build_pair_tensors is that same
+recode for one pair, and pair_tensor_digests hashes it over the same
+payload, so the frozen encode digest pins the path that scores.
+
 Scale: scoring is embarrassingly parallel; Arrow batch size is the
-only memory knob (spark.sql.execution.arrow.maxRecordsPerBatch). No
-shuffle is introduced — the UDF runs in the same stage as the
-pair-feature join output.
+only memory knob (spark.sql.execution.arrow.maxRecordsPerBatch).
 """
 
 from __future__ import annotations
@@ -34,11 +40,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..dictionaries import VOCAB_SIZE, WORD_INDEX
+from ..dictionaries import VOCAB_SIZE
 
 N_MODELS = 10
 MAX_SENTS = 32  # reference abstract-mode snt_n (README.md:216)
@@ -328,47 +334,15 @@ def entity_remap(sorted_ments: list) -> dict[tuple[str, str], int]:
     return remap
 
 
-def build_pair_tensors(
-    tok_ids: list, ments: list, gene_id: str, disease_id: str,
-    max_sents: int = MAX_SENTS,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-pair [S, T] token-id and feature-code matrices (reference
-    sequence_utils.py:325-349 pair-specific recode; entity positions'
-    token ids remapped to reserved per-doc indices, raw.py:1223-1226).
-    max_sents selects the input shape: 32 = abstract mode, 400 =
-    full-text mode (MAX_SENTS_FT)."""
-    S = min(len(tok_ids), max_sents)
-    Tk = min(max((len(s) for s in tok_ids[:S]), default=1), MAX_TOKENS)
-    tok = np.zeros((S, Tk), dtype=np.int64)
-    feat = np.zeros((S, Tk), dtype=np.int64)
-    for si in range(S):
-        row = tok_ids[si][:Tk]
-        tok[si, : len(row)] = row
-    if ments is None:
-        ments = []
-    sorted_ments = sorted(ments, key=lambda m: (m["sent_no"], m["tok_no"]))
-    remap = entity_remap(sorted_ments)
-    for m in sorted_ments:
-        s, t = m["sent_no"], m["tok_no"]
-        if s >= S or t >= Tk:
-            continue
-        if m["type"] == "Gene":
-            code = (
-                FEATURE_TARGET_GENE
-                if m["entity_id"] == gene_id
-                else FEATURE_OTHER_GENE
-            )
-        else:
-            code = (
-                FEATURE_TARGET_DISEASE
-                if m["entity_id"] == disease_id
-                else FEATURE_OTHER_DISEASE
-            )
-        feat[s, t] = code
-        idx = remap.get((m["type"], m["entity_id"]))
-        if idx is not None:
-            tok[s, t] = ENT_BASE + idx
-    return tok, feat
+def vocab_ids(sentences: list[str], vocab: dict[str, int]) -> list[list[int]]:
+    """Token-id rows of one doc's space-joined sentences: every word
+    (the empty words of repeated spaces included) maps through `vocab`,
+    unknown words to vocab['[X]'] (reference raw_handler.py:24-33).
+    The encoder's only vocabulary lookup; it runs inside the scoring
+    worker, where the vocabulary ships with the package."""
+    oov = vocab["[X]"]
+    lookup = vocab.get
+    return [[lookup(w, oov) for w in s.split(" ")] for s in sentences]
 
 
 def _doc_cache_entry(tok_ids: list, ments,
@@ -403,6 +377,32 @@ def _doc_cache_entry(tok_ids: list, ments,
                 tok[s, t] = ENT_BASE + idx
             pos.setdefault((typ, m["entity_id"]), []).append((s, t))
     return tok, base, pos
+
+
+def _target_feat(base: np.ndarray, pos: dict, gene_id: str,
+                 disease_id: str) -> np.ndarray:
+    """One pair's feature codes: the doc's base codes with the target
+    gene's positions flipped to 5 and the target disease's to 4
+    (reference recode sequence_utils.py:325-349)."""
+    feat = base.copy()
+    for s, t in pos.get(("Gene", gene_id), ()):
+        feat[s, t] = FEATURE_TARGET_GENE
+    for s, t in pos.get(("Disease", disease_id), ()):
+        feat[s, t] = FEATURE_TARGET_DISEASE
+    return feat
+
+
+def build_pair_tensors(
+    tok_ids: list, ments: list, gene_id: str, disease_id: str,
+    max_sents: int = MAX_SENTS,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-pair [S, T] token-id and feature-code matrices (reference
+    sequence_utils.py:325-349 pair-specific recode; entity positions'
+    token ids remapped to reserved per-doc indices, raw.py:1223-1226).
+    max_sents selects the input shape: 32 = abstract mode, 400 =
+    full-text mode (MAX_SENTS_FT). The same recode score_batch runs."""
+    tok, base, pos = _doc_cache_entry(tok_ids, ments, max_sents)
+    return tok, _target_feat(base, pos, gene_id, disease_id)
 
 
 def score_batch(pdf: pd.DataFrame,
@@ -440,12 +440,7 @@ def score_batch(pdf: pd.DataFrame,
         if ent is None:
             ent = cache[doc_id] = _doc_cache_entry(t, m, max_sents)
         tok, base, pos = ent
-        feat = base.copy()
-        for s, tkn in pos.get(("Gene", g), ()):
-            feat[s, tkn] = FEATURE_TARGET_GENE
-        for s, tkn in pos.get(("Disease", d), ()):
-            feat[s, tkn] = FEATURE_TARGET_DISEASE
-        tensors.append((tok, feat))
+        tensors.append((tok, _target_feat(base, pos, g, d)))
     out = np.empty((B, N_MODELS), dtype=np.float32)
     groups: dict[tuple[int, int], list[int]] = {}
     for i, (tk, _) in enumerate(tensors):
@@ -457,88 +452,64 @@ def score_batch(pdf: pd.DataFrame,
     return out  # [B, N]
 
 
-# above this size a create_map literal becomes a pathological Catalyst
-# expression tree (the reference vocab is 82,948 entries,
-# raw_handler.py:30); the broadcast-join path is the default there
-LITERAL_MAP_MAX = 1024
-
-
-def _tok_ids_literal(sentences: DataFrame, vocab: dict[str, int]) -> DataFrame:
-    """(doc_id, tok_ids) via a create_map literal — fastest for small
-    vocabularies (no extra shuffle)."""
-    vocab_items = []
-    for k, v in vocab.items():
-        vocab_items += [F.lit(k), F.lit(v)]
-    vmap = F.create_map(*vocab_items)
-    oov = F.lit(vocab["[X]"])
-    ids = F.transform(
-        F.split(F.col("sentence"), " "),
-        lambda w: F.coalesce(vmap[w], oov).cast("int"),
+def _doc_payload(
+    pairs: DataFrame, sentences: DataFrame, mentions: DataFrame,
+    sents_arrays: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_id, _pairs, _sents, ments): one row per document with
+    pairs, so each doc's sentences and mentions cross the shuffle and
+    the Arrow boundary ONCE instead of once per pair (~10.7 pairs/doc
+    on the driver corpus; A/B in BENCH.md round 6). `_pairs` holds the
+    doc's pair rows minus doc_id; `_sents` its ordered sentence
+    strings, from `sents_arrays` (doc_id, _sents) when given — e.g.
+    corpus.sentence_arrays, derived row-locally from the text — else
+    by regrouping `sentences`; `ments` its mention coordinates (NULL
+    for a doc without mentions)."""
+    pair_cols = [c for c in pairs.columns if c != "doc_id"]
+    grouped = pairs.groupBy("doc_id").agg(
+        F.collect_list(F.struct(*pair_cols)).alias("_pairs")
     )
-    return (
-        sentences.select("doc_id", "sent_no", ids.alias("ids"))
-        .groupBy("doc_id")
-        .agg(
+    if sents_arrays is not None:
+        sents_g = sents_arrays.select("doc_id", "_sents")
+    else:
+        sents_g = sentences.groupBy("doc_id").agg(
             F.transform(
-                F.sort_array(F.collect_list(F.struct("sent_no", "ids"))),
-                lambda s: s["ids"],
-            ).alias("tok_ids")
+                F.array_sort(F.collect_list(F.struct("sent_no", "sentence"))),
+                lambda s: s["sentence"],
+            ).alias("_sents")
         )
-    )
-
-
-def _tok_ids_join(sentences: DataFrame, vocab: dict[str, int]) -> DataFrame:
-    """(doc_id, tok_ids) via explode + BROADCAST vocab join — the
-    production path for reference-scale vocabularies (82,948 entries):
-    the vocab ships once per executor as a hash relation instead of an
-    82k-branch expression tree. One extra (doc, sent)-keyed shuffle to
-    reassemble token order; both shuffle keys are document-uniform."""
-    from ..session import local_table
-
-    spark = sentences.sparkSession
-    vdf = local_table(spark, list(vocab.items()), "token string, tok_id int")
-    oov = F.lit(vocab["[X]"])
-    toks = sentences.select(
-        "doc_id",
-        "sent_no",
-        F.posexplode(F.split(F.col("sentence"), " ")).alias("tok_no", "token"),
-    )
-    mapped = toks.join(F.broadcast(vdf), "token", "left").select(
-        "doc_id",
-        "sent_no",
-        "tok_no",
-        F.coalesce("tok_id", oov).cast("int").alias("tok_id"),
-    )
-    per_sent = mapped.groupBy("doc_id", "sent_no").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("tok_no", "tok_id"))),
-            lambda s: s["tok_id"],
-        ).alias("ids")
-    )
-    return per_sent.groupBy("doc_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("sent_no", "ids"))),
-            lambda s: s["ids"],
-        ).alias("tok_ids")
-    )
-
-
-def doc_tensors(sentences: DataFrame, mentions: DataFrame,
-                vocab: dict[str, int] | None = None) -> DataFrame:
-    """(doc_id, tok_ids array<array<int>>, ments array<struct>) — one
-    row per doc, shared by every pair of the doc. Vocab lookup picks
-    the literal-map plan for small vocabularies and the broadcast-join
-    plan above LITERAL_MAP_MAX (round-1 verdict: an 82,948-entry
-    create_map literal is a catastrophic expression tree)."""
-    vocab = WORD_INDEX if vocab is None else vocab
-    builder = _tok_ids_literal if len(vocab) <= LITERAL_MAP_MAX else _tok_ids_join
-    toks = builder(sentences, vocab)
-    ments = mentions.groupBy("doc_id").agg(
+    ments_g = mentions.groupBy("doc_id").agg(
         F.collect_list(
             F.struct("sent_no", "tok_no", "type", "entity_id")
         ).alias("ments")
     )
-    return toks.join(ments, "doc_id", "left")
+    # repartition before the UDF: the rows are few/tiny in BYTES so
+    # AQE coalesces them to ~1 partition, but scoring is heavy in CPU
+    # per row — without this, one python worker scores everything
+    # (measured 24s -> ~2s at sf0.1 on 32 cores)
+    nparts = pairs.sparkSession.sparkContext.defaultParallelism * 2
+    return grouped.join(
+        sents_g.join(ments_g, "doc_id", "left"), "doc_id"
+    ).repartition(nparts)
+
+
+def _expand_pairs(pdf: pd.DataFrame, pair_cols: list[str],
+                  vocab: dict[str, int]) -> pd.DataFrame:
+    """A batch of _doc_payload rows -> one row per pair: doc_id,
+    tok_ids, ments and the pair columns (score_batch's input layout).
+    A doc's ids are looked up once and shared by all of its pairs."""
+    cols: dict = {c: [] for c in ("doc_id", "tok_ids", "ments", *pair_cols)}
+    for doc_id, sents, m, plist in zip(
+        pdf["doc_id"], pdf["_sents"], pdf["ments"], pdf["_pairs"]
+    ):
+        t = vocab_ids(sents, vocab)
+        for p in plist:
+            cols["doc_id"].append(doc_id)
+            cols["tok_ids"].append(t)
+            cols["ments"].append(m)
+            for c in pair_cols:
+                cols[c].append(p[c])
+    return pd.DataFrame(cols)
 
 
 def tensor_digest(tok: np.ndarray, feat: np.ndarray) -> str:
@@ -562,65 +533,53 @@ def pair_tensor_digests(
     the DETERMINISTIC tensor-encode stage (vocab lookup, entity-index
     remap, feature codes 0-6, truncation/padding; reference
     sequence_utils.py:325-349 + raw.py:1223-1226). Everything up to —
-    but excluding — the float forward pass, so the driver can
-    hash-check it exactly (round-3 verdict next #8: shrink the
-    un-oracled neural surface to the forward pass alone)."""
-    tensors = doc_tensors(sentences, mentions)
-    joined = pairs.select("doc_id", "gene_id", "disease_id").join(
-        tensors, "doc_id"
+    but excluding — the float forward pass, over the same payload and
+    lookup neural_score_pairs scores, so the driver can hash-check the
+    encoder exactly (round-3 verdict next #8: shrink the un-oracled
+    neural surface to the forward pass alone)."""
+    pair_cols = ["gene_id", "disease_id"]
+    payload = _doc_payload(
+        pairs.select("doc_id", *pair_cols), sentences, mentions
     )
     schema = (
         "doc_id string, gene_id string, disease_id string, tensor_md5 string"
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "gene_id": [], "disease_id": [],
-                   "tensor_md5": []}
-            for doc_id, t, m, g, d in zip(
-                pdf["doc_id"], pdf["tok_ids"], pdf["ments"],
-                pdf["gene_id"], pdf["disease_id"],
-            ):
-                tok, feat = build_pair_tensors(t, m, g, d, max_sents)
-                out["doc_id"].append(doc_id)
-                out["gene_id"].append(g)
-                out["disease_id"].append(d)
-                out["tensor_md5"].append(tensor_digest(tok, feat))
-            yield pd.DataFrame(out)
+        from renet2_spark.dictionaries import WORD_INDEX
 
-    return joined.mapInPandas(run, schema=schema)
+        for pdf in batches:
+            flat = _expand_pairs(pdf, pair_cols, WORD_INDEX)
+            if flat.empty:
+                continue
+            flat["tensor_md5"] = [
+                tensor_digest(*build_pair_tensors(t, m, g, d, max_sents))
+                for t, m, g, d in zip(
+                    flat["tok_ids"], flat["ments"], flat["gene_id"],
+                    flat["disease_id"],
+                )
+            ]
+            yield flat[["doc_id", *pair_cols, "tensor_md5"]]
+
+    return payload.mapInPandas(run, schema=schema)
 
 
 def neural_score_pairs(
     pairs: DataFrame, sentences: DataFrame, mentions: DataFrame,
-    max_sents: int = MAX_SENTS, per_doc: bool = True,
-    sents_arrays: DataFrame | None = None,
+    max_sents: int = MAX_SENTS, sents_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """pairs (doc_id, gene_id, disease_id, ...) -> + probs
     array<double> of the 10-model ensemble; plugs into
     scorer.ensemble_vote unchanged. max_sents = 32 (abstract mode,
     default) or MAX_SENTS_FT=400 (full-text mode).
 
-    per_doc=True (default, r6): pairs are grouped per document BEFORE
-    the tensor join, so each doc's (tok_ids, ments) payload crosses
-    the join, the shuffle, and the Arrow boundary ONCE instead of
-    once per pair (~10.7 pairs/doc on the driver corpus — the
-    per-pair layout moved ~10x the bytes; measured A/B in BENCH.md
-    round 6). The python side re-expands pairs against the executor-
-    local doc cache; scores are bitwise identical because score_batch
-    evaluates every pair at its own doc shape regardless of batch
-    composition (test_forward_all_bitwise_batch_invariance).
-    per_doc=False keeps the per-pair layout for A/B measurement.
-
-    r7 (guide §4.1/§2.4): the per_doc path no longer routes the vocab
-    lookup through _tok_ids_join (token posexplode -> 82,948-row
-    broadcast join -> two collect_list shuffles). Sentences are
-    grouped per doc as STRINGS (one shuffle) and the id mapping runs
-    as a plain dict lookup inside the scoring worker — the vocabulary
-    already lives in the shipped package (dictionaries.WORD_INDEX),
-    imported once per worker process. Identical ids by construction
-    (same dict, same OOV fallback, same whitespace split); the frozen
-    row-level golden oracle pins it.
+    Pairs travel grouped per document (_doc_payload); the worker
+    re-expands them (_expand_pairs), mapping each doc's sentences
+    through the packaged vocabulary (dictionaries.WORD_INDEX, imported
+    once per worker process) with vocab_ids, and scores them with
+    score_batch. Scores are bitwise independent of how pairs fall into
+    batches, since score_batch evaluates every pair at its own doc
+    shape (test_forward_all_bitwise_batch_invariance).
 
     sents_arrays optionally injects the per-doc sentence arrays
     directly as (doc_id, _sents array<string>) — e.g.
@@ -629,80 +588,20 @@ def neural_score_pairs(
     the exploded `sentences` relation (guide §2.4: drops a groupBy
     shuffle + collect_list re-assembly of the full sentence text).
     Must equal the grouped form: ordered sentence strings per doc."""
-    # repartition before the UDF: the rows are few/tiny in BYTES so
-    # AQE coalesces them to ~1 partition, but scoring is heavy in CPU
-    # per row — without this, one python worker scores everything
-    # (measured 24s -> ~2s at sf0.1 on 32 cores)
-    spark = pairs.sparkSession
-    nparts = spark.sparkContext.defaultParallelism * 2
     out_schema = T.StructType(
         list(pairs.schema.fields)
         + [T.StructField("probs", T.ArrayType(T.DoubleType()))]
     )
-
-    if not per_doc:
-        tensors = doc_tensors(sentences, mentions)
-        joined = pairs.join(tensors, "doc_id").repartition(nparts)
-
-        def run_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                probs = score_batch(pdf.reset_index(drop=True), max_sents)
-                out = pdf.drop(columns=["tok_ids", "ments"]).copy()
-                out["probs"] = [list(map(float, row)) for row in probs]
-                yield out
-
-        return joined.mapInPandas(run_flat, schema=out_schema)
-
     pair_cols = [c for c in pairs.columns if c != "doc_id"]
-    grouped = pairs.groupBy("doc_id").agg(
-        F.collect_list(F.struct(*pair_cols)).alias("_pairs")
-    )
-    if sents_arrays is not None:
-        sents_g = sents_arrays.select("doc_id", "_sents")
-    else:
-        sents_g = sentences.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sent_no", "sentence"))),
-                lambda s: s["sentence"],
-            ).alias("_sents")
-        )
-    ments_g = mentions.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct("sent_no", "tok_no", "type", "entity_id")
-        ).alias("ments")
-    )
-    doc_payload = sents_g.join(ments_g, "doc_id", "left")
-    joined = grouped.join(doc_payload, "doc_id").repartition(nparts)
     out_cols = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from renet2_spark.dictionaries import WORD_INDEX
 
-        oov = WORD_INDEX["[X]"]
-        lookup = WORD_INDEX.get
         for pdf in batches:
-            if len(pdf) == 0:
+            flat = _expand_pairs(pdf, pair_cols, WORD_INDEX)
+            if flat.empty:
                 continue
-            cols: dict = {c: [] for c in ("doc_id", "tok_ids", "ments")}
-            for c in pair_cols:
-                cols[c] = []
-            for doc_id, sents, m, plist in zip(
-                pdf["doc_id"], pdf["_sents"], pdf["ments"], pdf["_pairs"]
-            ):
-                t = [
-                    [lookup(w, oov) for w in s.split(" ")] for s in sents
-                ]
-                for p in plist:
-                    cols["doc_id"].append(doc_id)
-                    cols["tok_ids"].append(t)
-                    cols["ments"].append(m)
-                    for c in pair_cols:
-                        cols[c].append(p[c])
-            if not cols["doc_id"]:
-                continue
-            flat = pd.DataFrame(cols)
             # score_batch groups rows by per-doc tensor shape
             # internally (r6): canonical own-shape evaluation removes
             # both the padding waste (one 10-sentence doc in a mixed
@@ -714,4 +613,5 @@ def neural_score_pairs(
             out["probs"] = [list(map(float, row)) for row in probs]
             yield out[out_cols]
 
-    return joined.mapInPandas(run, schema=out_schema)
+    payload = _doc_payload(pairs, sentences, mentions, sents_arrays)
+    return payload.mapInPandas(run, schema=out_schema)

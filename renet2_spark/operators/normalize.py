@@ -14,16 +14,17 @@ Spark-first: the string surgery is native Catalyst expressions
 (regexp_replace/split — whole-stage codegen); the tiny OMIM/transfer
 maps become chained `when` literals built from the broadcast dicts
 (O(10) entries here; for real-world ~4k-entry maps use
-F.broadcast(map_df) joins — :func:`canonicalize_mentions_join` shows
-that path). Per-doc unification is a grouped applyInPandas: each
-group is ONE document's mentions (bounded, tiny graphs) — no global
-connected-components shuffle storm.
+F.broadcast(map_df) joins — :func:`canonicalize_mentions_by_join`
+takes that path above MAP_LITERAL_MAX). Per-doc unification is a
+grouped applyInPandas: each group is ONE document's mentions
+(bounded, tiny graphs) — no global connected-components shuffle
+storm.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dictionaries import GENE_TRANSFER, MESH_C2D_VALID, OMIM2MESH
@@ -46,22 +47,6 @@ def _disease_id_literal(raw: Column, omim: dict) -> Column:
     d = F.regexp_replace(raw, r"^MESH:", "")
     d = _map_literal(d, {f"OMIM:{k}": "|".join(v) for k, v in omim.items()})
     return F.split(d, ";")[0]
-
-
-def canonical_gene_id(raw: Column) -> Column:
-    return _gene_id_literal(raw, GENE_TRANSFER)
-
-
-def canonical_disease_id(raw: Column) -> Column:
-    return _disease_id_literal(raw, OMIM2MESH)
-
-
-def is_valid_mesh(disease_id: Column) -> Column:
-    """IsValidMeSH (reference utils/mesh_match.py:9-14)."""
-    valid_c = F.lit(False)
-    for c in MESH_C2D_VALID:
-        valid_c = valid_c | (disease_id == c)
-    return disease_id.startswith("D") | valid_c
 
 
 # above this size a when-chain / create_map literal is a pathological
@@ -149,19 +134,6 @@ def canonicalize_mentions_by_join(
     return validated
 
 
-def canonicalize_mentions_join(
-    mentions: DataFrame, spark: SparkSession, entity_dict: DataFrame
-) -> DataFrame:
-    """Broadcast-join canonicalization — the shape used when the map is
-    thousands of entries (reference dict_omim2mesh = 4,149 rows)."""
-    d = entity_dict.select("raw_id", F.col("entity_id").alias("_canon"))
-    return (
-        mentions.join(F.broadcast(d), "raw_id", "left")
-        .withColumn("entity_id", F.coalesce("_canon", "raw_id"))
-        .drop("_canon")
-    )
-
-
 _UNIFY_SCHEMA = (
     "doc_id string, sent_no int, tok_no int, start int, end int, "
     "mention string, type string, raw_id string, entity_id string"
@@ -175,7 +147,7 @@ def unify_doc_ids(mentions: DataFrame) -> DataFrame:
     (reference src/renet2/normalize_ann.py:26-49: add_d_cnt at 19-23,
     representative pick at 45; 'orig;rep' rewrite at 114-121 — we keep
     just the representative, the ';'-form is re-split by
-    canonical_gene_id anyway).
+    the gene-id canonicalization anyway).
 
     Grouped applyInPandas keyed by doc_id: graphs are bounded by the
     per-doc mention count (<= 512*500), so executor memory is safe at

@@ -6,17 +6,11 @@ src/renet2/parse_data.py:424, read src/renet2/raw.py:721-753). The
 north_star requires "a dictionary + regex tagger equivalent to
 GNormPlus/DNorm-style NER inputs".
 
-Two implementations with identical output (tests assert parity):
-
-* :func:`tag_mentions` — pure DataFrame: tokenize natively
-  (split/posexplode, whole-stage codegen) then broadcast-hash-join
-  token==surface against the entity dictionary. The corpus side is
-  never shuffled; the dictionary side is O(MB) and broadcast. This is
-  the 100 TB path.
-* :func:`tag_mentions_udf` — Arrow-vectorized pandas UDF running a
-  compiled alternation regex per text block (handles multi-word
-  surfaces / boundaries the token path can't). Kept for generality;
-  same schema.
+:func:`tag_mentions` is pure DataFrame: tokenize natively
+(split/posexplode, whole-stage codegen) then broadcast-hash-join
+token==surface against the entity dictionary. The corpus side is
+never shuffled; the dictionary side is O(MB) and broadcast. This is
+the 100 TB path. Multi-word surfaces go through :func:`tag_multiword`.
 
 Output schema (FIXTURES.md §6, reference anns.txt analogue):
     mentions(doc_id, sent_no, tok_no, start, end, mention, type, raw_id)
@@ -38,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..dictionaries import DISEASE_RAW, GENE_RAW, entity_dict_df
+from ..dictionaries import entity_dict_df
 
 
 def tokenize_sentences(sentences: DataFrame) -> DataFrame:
@@ -119,57 +113,6 @@ def tag_mentions(sentences: DataFrame, spark: SparkSession,
         "type",
         "raw_id",
     )
-
-
-_MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("sent_no", T.IntegerType()),
-        T.StructField("tok_no", T.IntegerType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("mention", T.StringType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("raw_id", T.StringType()),
-    ]
-)
-
-
-def tag_mentions_udf(sentences: DataFrame) -> DataFrame:
-    """Regex tagger via mapInPandas (Arrow batches, no per-row Python
-    at the driver; one compiled automaton per batch)."""
-    import re
-
-    gene = {k: v for k, v in GENE_RAW.items()}
-    dis = {k: v for k, v in DISEASE_RAW.items()}
-    surfaces = sorted(list(gene) + list(dis), key=len, reverse=True)
-    pat = re.compile(r"(?<![\w])(" + "|".join(map(re.escape, surfaces)) + r")(?![\w])")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in _MENTION_SCHEMA.fieldNames()}
-            for doc_id, sent_no, sentence, offset in zip(
-                pdf["doc_id"], pdf["sent_no"], pdf["sentence"], pdf["offset"]
-            ):
-                tok_no = -1
-                last = 0
-                for m in pat.finditer(sentence.lower()):
-                    tok_no = sentence.count(" ", 0, m.start())
-                    surf = m.group(1)
-                    typ = "Gene" if surf in gene else "Disease"
-                    rows["doc_id"].append(doc_id)
-                    rows["sent_no"].append(sent_no)
-                    rows["tok_no"].append(tok_no)
-                    rows["start"].append(offset + m.start())
-                    rows["end"].append(offset + m.end())
-                    rows["mention"].append(sentence[m.start() : m.end()])
-                    rows["type"].append(typ)
-                    rows["raw_id"].append(gene.get(surf) or dis[surf])
-                    last = m.end()
-            yield pd.DataFrame(rows)
-
-    cols = sentences.select("doc_id", "sent_no", "sentence", "offset")
-    return cols.mapInPandas(run, schema=_MENTION_SCHEMA)
 
 
 def tag_multiword(documents: DataFrame, spark: SparkSession,

@@ -270,6 +270,9 @@ def build_edges_neural(
     from ..operators.pairgen import entity_info
     from ..operators.scorer import N_MODELS
 
+    if mode not in ("abs", "ft"):
+        raise ValueError(f"mode must be abs|ft, got {mode!r}")
+    max_sents = MAX_SENTS_FT if mode == "ft" else MAX_SENTS
     release_pipeline_caches()
     if corpus == "auto":
         corpus = "packed" if probe_corpus_contract(documents) else "raw"
@@ -325,9 +328,6 @@ def build_edges_neural(
         )
     info = _cache(entity_info(mentions))
     pairs = pair_features(mentions, info=info)
-    if mode not in ("abs", "ft"):
-        raise ValueError(f"mode must be abs|ft, got {mode!r}")
-    max_sents = MAX_SENTS_FT if mode == "ft" else MAX_SENTS
     scored = neural_score_pairs(pairs, sentences, mentions,
                                 max_sents=max_sents,
                                 sents_arrays=sents_arrays)

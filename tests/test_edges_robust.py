@@ -1,5 +1,6 @@
-"""The flagship edge plan does not depend on plan shape or on other
-builds in the same session, and degenerate corpora yield no edges.
+"""The flagship and neural edge plans do not depend on plan shape or
+on other builds in the same session, and degenerate corpora yield no
+edges.
 
 Config matrix: tests.conftest.CONFIG_MATRIX."""
 
@@ -9,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from renet2_spark.corpus import raw_text_twin
-from renet2_spark.oracles import q_edges
-from renet2_spark.plans.pipeline import build_edges
+from renet2_spark.oracles import q_edges, q_edges_neural_golden
+from renet2_spark.plans.pipeline import build_edges, run_neural
 from tests.conftest import CONFIG_MATRIX, SF_SMOKE, sql_conf
 from tests.oracle_utils import compare
 
@@ -35,6 +36,30 @@ def test_build_edges_concurrent_builds(spark):
             pool.submit(lambda: compare(_edges(spark), q_edges(), SF_SMOKE))
             for _ in range(2)
         ]
+        results = [f.result(timeout=600) for f in futures]
+    assert results == [(True, "ok")] * 2, results
+
+
+@pytest.mark.parametrize("name", sorted(CONFIG_MATRIX))
+def test_build_edges_neural_config_matrix(spark, name):
+    with sql_conf(spark, CONFIG_MATRIX[name]):
+        ok, msg = compare(
+            run_neural(spark, SF_SMOKE), q_edges_neural_golden(), SF_SMOKE
+        )
+    assert ok, f"{name}: {msg}"
+
+
+def test_build_edges_neural_concurrent_builds(spark):
+    """Two neural builds at once: each build's start unpersists the
+    other's caches (_NEURAL_CACHES rotation), which may cost reuse but
+    must not change either result."""
+    def build():
+        return compare(
+            run_neural(spark, SF_SMOKE), q_edges_neural_golden(), SF_SMOKE
+        )
+
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(build) for _ in range(2)]
         results = [f.result(timeout=600) for f in futures]
     assert results == [(True, "ok")] * 2, results
 

@@ -169,25 +169,33 @@ def test_entity_remap_applied_in_tensors():
     assert (tok == tok2).all()
 
 
-def test_doc_tensors_vocab_join_path(spark):
-    """Above LITERAL_MAP_MAX the vocab lookup must switch to the
-    broadcast-join plan and produce identical tok_ids."""
-    from renet2_spark.dictionaries import WORD_INDEX
-    from renet2_spark.operators.neural import _tok_ids_join, _tok_ids_literal
+def test_vocab_ids_large_vocab_equals_dict_get():
+    """The encoder's one vocabulary lookup over a vocabulary larger
+    than 1,024 entries: every word, the empty words of repeated and
+    edge spaces included, maps exactly as dict.get(w, oov) over
+    s.split(" ")."""
+    from renet2_spark.operators.neural import vocab_ids
 
-    sents = spark.createDataFrame(
-        [("1", 0, "scan the slow table"), ("1", 1, "join big data"),
-         ("2", 0, "unknownword scan")],
-        "doc_id string, sent_no int, sentence string",
-    )
-    lit = {r["doc_id"]: r["tok_ids"]
-           for r in _tok_ids_literal(sents, WORD_INDEX).collect()}
-    join = {r["doc_id"]: r["tok_ids"]
-            for r in _tok_ids_join(sents, WORD_INDEX).collect()}
-    assert lit == join
-    plan = _tok_ids_join(sents, WORD_INDEX)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    vocab = {f"w{i}": i + 1 for i in range(3000)}
+    vocab["[X]"] = 3001
+    sents = ["w0 w1 w2999", "w5  unknown   w7", " w3 ", "", "zzz"]
+    oov = vocab["[X]"]
+    want = [[vocab.get(w, oov) for w in s.split(" ")] for s in sents]
+    assert vocab_ids(sents, vocab) == want
+    assert want[1] == [6, oov, oov, oov, oov, 8]
+    assert vocab_ids([], vocab) == []
+
+
+def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
+    """An unknown mode raises before anything is persisted or probed."""
+    from renet2_spark.plans import pipeline
+
+    pipeline.release_pipeline_caches()
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    for corpus in ("packed", "auto"):
+        with pytest.raises(ValueError, match="mode"):
+            build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
+        assert pipeline._NEURAL_CACHES == []
 
 
 def test_fulltext_mode_tensor_shape():
@@ -501,24 +509,12 @@ def test_score_batch_matches_forward_all():
                              "tok_ids": tok_ids, "ments": ments})
     pdf = pd.DataFrame(rows)
     got = score_batch(pdf)
-    # the dense reference path: per-pair full (tok, feat) via the
-    # base+target-flip recode (exactly what pre-r7 score_batch built)
-    # through forward_all — the semantics the frozen golden pins
-    from renet2_spark.operators.neural import (
-        FEATURE_TARGET_DISEASE,
-        FEATURE_TARGET_GENE,
-        _doc_cache_entry,
-    )
-
-    for i in range(len(pdf)):
-        tok, base, pos = _doc_cache_entry(
-            pdf.iloc[i]["tok_ids"], pdf.iloc[i]["ments"]
+    # the dense reference path: per-pair full (tok, feat) through
+    # forward_all — the semantics the frozen golden pins
+    for i, r in enumerate(pdf.itertuples()):
+        tok, feat = build_pair_tensors(
+            r.tok_ids, r.ments, r.gene_id, r.disease_id
         )
-        feat = base.copy()
-        for s, tkn in pos.get(("Gene", pdf.iloc[i]["gene_id"]), ()):
-            feat[s, tkn] = FEATURE_TARGET_GENE
-        for s, tkn in pos.get(("Disease", pdf.iloc[i]["disease_id"]), ()):
-            feat[s, tkn] = FEATURE_TARGET_DISEASE
         want = forward_all(tok[None], feat[None])[0]
         assert np.array_equal(got[i], want), i
 

@@ -259,3 +259,62 @@ def test_query_window_cap():
     assert missing == [], f"queries without an oracle: {missing}"
     stray = sorted(set(os_) - set(qs))
     assert stray == [], f"oracles without a query: {stray}"
+
+
+def _referenced_names(node) -> set[str]:
+    """Names a statement references: identifiers, attribute names,
+    imported names and identifier-like string constants (getattr by
+    name). Docstrings and comments never qualify."""
+    import ast
+
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                and n.value.isidentifier():
+            out.add(n.value)
+    return out
+
+
+def test_package_has_no_unreferenced_top_level_names():
+    """Every top-level function, class and assigned name in
+    renet2_spark/ is referenced outside its own definition somewhere
+    in the package, __spark_entry__.py, bench*.py, perfbench/,
+    scripts/ or tests/ — dead code fails here instead of lingering."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "renet2_spark"
+    files = [*pkg.rglob("*.py"), root / "__spark_entry__.py",
+             *root.glob("bench*.py")]
+    for d in ("perfbench", "scripts", "tests"):
+        files += (root / d).rglob("*.py")
+    defined: dict[str, str] = {}
+    used: set[str] = set()
+    for f in files:
+        for stmt in ast.parse(f.read_text()).body:
+            own = set()
+            if pkg in f.parents:
+                if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                    own = {stmt.name}
+                elif isinstance(stmt, ast.Assign):
+                    own = {t.id for t in stmt.targets if isinstance(t, ast.Name)}
+                elif isinstance(stmt, ast.AnnAssign) and isinstance(
+                    stmt.target, ast.Name
+                ):
+                    own = {stmt.target.id}
+            for name in own:
+                defined.setdefault(name, f"{f.relative_to(root)}:{stmt.lineno}")
+            used |= _referenced_names(stmt) - own
+    dead = {
+        name: where for name, where in defined.items()
+        if name not in used and not name.startswith("__")
+    }
+    assert dead == {}, f"top-level names referenced nowhere: {dead}"

@@ -259,37 +259,27 @@ def _load_pickle(path):
         return pickle.load(fh)
 
 
-def test_real_word_index_through_vocab_join_path(spark):
-    """doc_tensors with the REFERENCE's real 82,948-entry word_index:
-    the broadcast-join vocab plan (the production path the
-    LITERAL_MAP_MAX switch exists for) must reproduce a driver-side
+def test_real_word_index_through_vocab_lookup():
+    """The encoder's vocabulary lookup (neural.vocab_ids) with the
+    REFERENCE's real 82,948-entry word_index must reproduce a plain
     python lookup exactly, including the reference's own OOV rule
     ('[X]' -> word_index['UUUNKKK'] when absent, raw_handler.py:31-32)."""
-    from renet2_spark.operators.neural import LITERAL_MAP_MAX, doc_tensors
+    from renet2_spark.operators.neural import vocab_ids
 
     wi = _load_pickle(f"{_REF}/utils/word_index")
     vocab = dict(wi)
     if "[X]" not in vocab:
         vocab["[X]"] = vocab["UUUNKKK"]
-    assert len(vocab) > LITERAL_MAP_MAX  # real scale forces the join plan
+    assert len(vocab) > 80_000
     words = sorted(wi)[1000:1200]  # deterministic real-vocab sample
     sents = [
         (" ".join(words[i : i + 8] + ["zzzz-not-in-vocab"]))
         for i in range(0, 200, 8)
     ]
-    sdf = spark.createDataFrame(
-        [("d1", i, s) for i, s in enumerate(sents)],
-        "doc_id string, sent_no int, sentence string",
-    )
-    mdf = spark.createDataFrame(
-        [], "doc_id string, sent_no int, tok_no int, type string, entity_id string"
-    )
-    [row] = doc_tensors(sdf, mdf, vocab=vocab).collect()
-    got = row["tok_ids"]
     want = [
         [vocab.get(w, vocab["[X]"]) for w in s.split(" ")] for s in sents
     ]
-    assert got == want
+    assert vocab_ids(sents, vocab) == want
 
 
 def test_real_omim2mesh_human_genes_through_canonicalize(spark):
