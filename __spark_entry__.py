@@ -643,11 +643,11 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     'pairwise' is the keep-smallest-of-each-pair rule, rule='cc' keeps
     one representative per transitive near-dup connected component —
     the star-structure divergence between them is part of the hashed
-    surface. ONE persisted shingle table feeds both rules (the CC
-    propagation rounds materialize it; the pairwise branch reuses it
-    — the explode would otherwise run twice)."""
+    surface. ONE persisted shingle-array relation feeds both rules
+    (the CC propagation rounds materialize it; the pairwise branch
+    reuses it — the shingle pass would otherwise run twice)."""
     docs = _docs(spark, sf_dir)
-    sh = dd.cache_shared_shingles(docs)
+    sh = dd._shared_shingle_arrays(docs)
     a = dd.dedup_survivors(docs, shingles=sh).withColumn(
         "rule", F.lit("pairwise")
     )
@@ -790,10 +790,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": lambda s, d: dd.dedup_ngram_jaccard(_docs(s, d)),
         "dedup_minhash_lsh": lambda s, d: dd.dedup_minhash_lsh(_docs(s, d)),
         "dedup_simhash": lambda s, d: dd.dedup_simhash(_docs(s, d)),
-        "dedup_embedding": lambda s, d: dd.dedup_embedding(_emb(s, d)),
+        "dedup_embedding": lambda s, d: sim.dedup_embedding(_emb(s, d)),
         # LSH-blocked scale path — EXACT oracle (deterministic
         # hyperplane literals shared by both engines)
-        "dedup_embedding_lsh": lambda s, d: dd.dedup_embedding_lsh(
+        "dedup_embedding_lsh": lambda s, d: sim.dedup_embedding_lsh(
             _emb(s, d), n_planes=4, n_tables=8
         ),
         # both survivor rules (pairwise + transitive CC representative)

@@ -26,7 +26,7 @@ functions/textstats.py):
   deduplicated and broadcast (eval sets are small by definition); the
   probe is a broadcast semi/inner join against the train side's
   exploded shingles — no shuffle of the train corpus. The same
-  shingling as dedup (doc_shingles) so thresholds are comparable.
+  shingling as dedup (doc_shingle_arrays) so thresholds are comparable.
 
 * :func:`sample_hash` — deterministic content-independent sampling:
   keep a document iff the first 4 hex digits of md5(salt || doc_id),
@@ -45,34 +45,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .dedup import NGRAM, doc_shingles
+from .dedup import NGRAM, doc_shingle_arrays, doc_shingles
 
 PACK_BUDGET = 256  # tokens per packed context window
-
-# persisted generations of curation_pipeline's shared shingle table —
-# rotated at the start of each call (no persist without release;
-# mirrors plans.pipeline._NEURAL_CACHES). Concurrency caveat, same as
-# the neural caches: the registry assumes one curation chain in
-# flight per driver — a second concurrent call unpersists the first
-# call's shingle table, which silently degrades it back to
-# recompute-per-consumer (results stay IDENTICAL — persist is purely
-# a performance property — but the single-shingle-pass guarantee
-# holds per call only when calls don't overlap).
-_CURATION_CACHES: list[DataFrame] = []
-
-
-def release_curation_caches() -> None:
-    while _CURATION_CACHES:
-        try:
-            _CURATION_CACHES.pop().unpersist()
-        except Exception:
-            pass  # cache belonged to an already-stopped session
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    _CURATION_CACHES.append(df.persist())
-    return df
-
 
 def _pack_base(documents: DataFrame) -> DataFrame:
     """Slim packing projection: (source, doc_id, _ord, n_tokens).
@@ -280,29 +255,27 @@ def decontaminate(
     threshold instead of OOMing the driver. Results are identical
     (asserted by test_decontaminate_shuffled_fallback_matches).
 
-    `train_shingles` optionally injects a precomputed (doc_id,
-    shingle) index for `documents` (shared-pass hook, r4 verdict #2 —
-    curation_pipeline feeds both this stage and the dedup stage from
-    ONE persisted shingle table); must equal
-    doc_shingles(documents, n)."""
+    `train_shingles` optionally injects the shingle relation for
+    `documents` (shared-pass hook, r4 verdict #2 — curation_pipeline
+    feeds both this stage and the dedup stage from ONE persisted
+    relation); must equal doc_shingle_arrays(documents, n)."""
     eval_sh = doc_shingles(eval_docs, n).select("shingle").distinct()
     if broadcast_eval:
         eval_sh = F.broadcast(eval_sh)
     train_sh = (
         train_shingles
         if train_shingles is not None
-        else doc_shingles(documents, n)
+        else doc_shingle_arrays(documents, n)
     )
     hits = (
-        train_sh.join(eval_sh, "shingle")
+        train_sh.select("doc_id", F.explode("shingles").alias("shingle"))
+        .join(eval_sh, "shingle")
         .groupBy("doc_id")
         .agg(F.count("*").cast("int").alias("n_contaminated"))
     )
-    from .dedup import doc_shingle_counts
-
-    sizes = doc_shingle_counts(documents, n)
     return (
-        sizes.join(hits, "doc_id", "left")
+        train_sh.select("doc_id", "n_sh")
+        .join(hits, "doc_id", "left")
         .withColumn(
             "n_contaminated", F.coalesce("n_contaminated", F.lit(0))
         )
@@ -374,17 +347,15 @@ def curation_pipeline(
     are doc_id-keyed semi/anti joins (document-uniform, no skew).
 
     Shared shingle pass (r4 verdict #2): the quality-gated corpus is
-    shingled ONCE into a persisted (doc_id, shingle) table that feeds
-    BOTH the CC-dedup stage and the decontamination stage (the decon
-    side narrows it to dedup survivors with a doc_id semi-join) — at
-    the 100 TB target the explode-the-corpus shingle pass is the
-    chain's dominant cost and used to run twice. The persisted
-    generation is rotated per call via release_curation_caches()
-    (same hygiene as plans.pipeline's neural caches)."""
+    shingled ONCE into the persisted per-doc shingle-array relation
+    (dedup._shared_shingle_arrays) that feeds BOTH the CC-dedup stage
+    and the decontamination stage (the decon side narrows it to dedup
+    survivors with a doc_id semi-join) — at the 100 TB target the
+    shingle pass is the chain's dominant cost and used to run twice.
+    The persisted generation is rotated per call by the dedup cache
+    registry (dedup.release_dedup_caches)."""
     from ..functions.textstats import quality_score_col
-    from .dedup import dedup_components, doc_shingles
-
-    release_curation_caches()
+    from .dedup import _shared_shingle_arrays, dedup_components
 
     # tolerate minimal (doc_id, text) corpora: lang/source are only
     # carried through (source keys the packing; single default source
@@ -410,11 +381,11 @@ def curation_pipeline(
 
         base = base.withColumn("text", pii_mask_col())
     d1 = base.filter(quality_score_col() >= F.lit(min_quality))
-    # ONE shingle explode over the quality-gated corpus, shared by the
+    # ONE shingle build over the quality-gated corpus, shared by the
     # dedup and decontamination stages (dedup_components runs actions
-    # during its label-propagation loop, so the persisted table is
+    # during its label-propagation loop, so the persisted relation is
     # materialized before the decon branch is even constructed)
-    sh1 = _cache(doc_shingles(d1))
+    sh1 = _shared_shingle_arrays(d1)
     dup_losers = (
         dedup_components(
             d1, shingles=sh1, reliable_checkpoint=reliable_checkpoint

@@ -1,8 +1,9 @@
-"""Deduplication suite for large-scale training-data pipelines.
+"""Text deduplication suite for large-scale training-data pipelines.
 
 Not present in the reference (its corpus is keyed by PMID); these are
 the first-class corpus-hygiene operators a 100 TB document pipeline
-needs before KG extraction. All are declarative DataFrame plans:
+needs before KG extraction. All are declarative DataFrame plans over
+the `text` column:
 
 * exact            — md5 grouping, one shuffle
 * ngram-jaccard    — word-shingle inverted index: one groupBy(shingle)
@@ -12,7 +13,19 @@ needs before KG extraction. All are declarative DataFrame plans:
                      b=4/r=3 banding, sorted-member bucket fan-out,
                      exact-jaccard verify of candidates by array_intersect
 * simhash          — 64-bit sign-of-sum signature over token hashes
-* embedding cosine — near-dup pairs over an embedding column
+
+The near-dup operators share one pipeline: block -> purge -> candidate
+pairs -> verify (SparkER). `blocked_pairs` is the blocking primitive
+(hot-bucket cap, sorted-member fan-out, distinct); minhash uses it
+here and the embedding LSH in `operators.similarity` uses it too.
+Jaccard's shingle blocks share its fan-out (`_member_pairs`) but purge
+by document frequency, since the oracle drops a whole over-cap shingle.
+Embedding-cosine dedup and ANN search live in `operators.similarity`.
+
+Every shingle consumer reads one relation, the per-doc distinct
+shingle array with its size: (doc_id, shingles, n_sh)
+(`doc_shingle_arrays`, persisted once per query by
+`_shared_shingle_arrays`).
 
 Hash choice: md5 (not xxhash/murmur) so every stage is reproducible
 in ANSI SQL by the DuckDB oracle — at production scale swap in
@@ -101,30 +114,21 @@ def doc_shingles(documents: DataFrame, n: int = NGRAM) -> DataFrame:
 
 
 def doc_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
-    """(doc_id, shingles array<string>) — the per-doc distinct shingle
-    ARRAY, un-exploded. The row-local shingle construction (split +
-    per-gram array_join string building) is the single most expensive
-    narrow pass in the dedup family (r7 stage profile: 7-18 task-s per
-    pass at sf0.1), and the jaccard/minhash plans used to run it 3-4
-    times each (signature agg, df-frequency, set sizes, verify probes
-    all rebuilt it from `text`). Persisting THIS relation (one row per
-    doc — far cheaper to cache than the exploded index) lets every
-    consumer derive its view (explode / size()) from one build."""
+    """(doc_id, shingles array<string>, n_sh) — the per-doc distinct
+    shingle ARRAY, un-exploded, with its size: the one shingle relation
+    every dedup and decontamination consumer reads. The row-local
+    shingle construction (split + per-gram array_join string building)
+    is the single most expensive narrow pass in the dedup family (r7
+    stage profile: 7-18 task-s per pass at sf0.1); one row per doc is
+    far cheaper to persist than the exploded index, and each consumer
+    derives its view (explode / n_sh) from one build. n_sh is its own
+    column because the columnar cache prunes unread columns: set-size
+    consumers read the int instead of decoding the arrays (measured
+    ~3 task-s per pass at sf0.1)."""
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         _shingle_arr(n).alias("shingles"),
-    )
-
-
-def doc_shingle_counts(documents: DataFrame, n: int = NGRAM) -> DataFrame:
-    """(doc_id, n_sh) — per-doc distinct shingle counts, computed
-    ROW-LOCALLY (size of the shingle array): no explode, no shuffle.
-    Replaces the groupBy(doc_id) over exploded shingle strings, which
-    shuffled every shingle once just to count them."""
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.size(_shingle_arr(n)).cast("int").alias("n_sh"),
-    )
+    ).withColumn("n_sh", F.size("shingles").cast("int"))
 
 
 def capped_shingle_stats(
@@ -178,6 +182,27 @@ def _member_pairs(members: DataFrame) -> DataFrame:
     )
 
 
+def blocked_pairs(
+    keys: DataFrame,
+    bucket_cols: list[str],
+    id_col: str,
+    max_bucket_size: int | None = MAX_LSH_BUCKET,
+) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b for every pair of `id_col`
+    values sharing any bucket of `keys` — the one blocking primitive of
+    the LSH family (SparkER's block -> purge -> candidates): the
+    optional hot-bucket cap (cap_hot_buckets, lowest ids kept; None
+    disables it), one collect_list per bucket, the row-local sorted
+    fan-out (_member_pairs) and a distinct across buckets. No bucket
+    self-join; the cap's window and the grouping share one exchange.
+    Ids compare in their own type, so integer ids sort numerically."""
+    if max_bucket_size is not None:
+        keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
+    return _member_pairs(
+        keys.groupBy(*bucket_cols).agg(F.collect_list(id_col).alias("ds"))
+    ).distinct()
+
+
 def _with_jaccard(common: DataFrame) -> DataFrame:
     """Adds jaccard = n_common / (n_a + n_b - n_common), rounded to 5
     places as in the DuckDB oracle."""
@@ -221,59 +246,38 @@ def dedup_ngram_jaccard(
     sizes (n_a/n_b) are computed over ALL shingles, intersections over
     capped shingles only — jaccard is under-counted for pairs whose
     overlap is exclusively stop-shingles, never over-counted. The
-    DuckDB oracle applies the identical cap.
+    DuckDB oracle applies the identical cap. max_shingle_docs=None
+    omits the upper df bound.
 
-    `shingles` optionally injects a precomputed (doc_id, shingle)
-    index for `documents` (e.g. a persisted table shared with a
-    decontamination stage — r4 verdict #2: the composed curation chain
-    used to explode the corpus twice); it must equal
-    doc_shingles(documents, n). Set sizes stay row-local regardless.
+    `shingles` optionally injects the shingle relation for `documents`
+    (e.g. one persisted relation shared with a decontamination stage —
+    r4 verdict #2: the composed curation chain used to explode the
+    corpus twice); it must equal doc_shingle_arrays(documents, n).
+    Otherwise the relation comes from ONE persisted per-doc array build
+    (_shared_shingle_arrays) that also carries the set sizes.
 
-    Plan (r7 optimization, guide §2.3/§2.4): when the df cap is active
-    (the default), the inverted-index SELF-JOIN is replaced by ONE
-    groupBy(shingle) that yields the document frequency AND the sorted
-    member list, and candidate pairs fan out ROW-LOCALLY (i < j over
-    the sorted members — bounded by C(cap, 2) per shingle, the same
-    bound the capped join had). That removes the self-join hash probe,
-    the separate df-frequency aggregation AND its broadcast anti-join:
-    the exploded index is shuffled ONCE instead of three times
-    (measured at sf0.1: the join+count stage alone was 60 task-seconds
-    of 91.6 total; see OPTIMIZATION_r07.md). With max_shingle_docs=None
-    the streaming self-join formulation is kept — an uncapped hot
-    shingle must not be collected into one row. The shingle relation
-    itself comes from ONE persisted per-doc array build
-    (doc_shingle_arrays) shared with the set-size projection."""
-    if shingles is not None:
-        ex = shingles
-        sizes = doc_shingle_counts(documents, n)
-    else:
-        sh_arr = _shared_shingle_arrays(documents, n)
-        ex = sh_arr.select("doc_id", F.explode("shingles").alias("shingle"))
-        sizes = sh_arr.select("doc_id", "n_sh")
-    ex = ex.filter(F.col("shingle").isNotNull())
-    if max_shingle_docs is None:
-        a = ex.alias("a")
-        b = ex.alias("b")
-        pairs = (
-            a.join(b, "shingle")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-        )
-    else:
-        grouped = ex.groupBy("shingle").agg(
-            F.count("*").alias("df"), F.collect_list("doc_id").alias("ds")
-        )
-        pairs = _member_pairs(
-            grouped.filter((F.col("df") >= 2) & (F.col("df") <= max_shingle_docs))
-        )
-    common = pairs.groupBy("doc_a", "doc_b").agg(
+    Plan (r7 optimization, guide §2.3/§2.4): ONE groupBy(shingle)
+    yields the document frequency AND the member list, and candidate
+    pairs fan out ROW-LOCALLY (_member_pairs: i < j over the sorted
+    members — bounded by C(cap, 2) per shingle). No self-join of the
+    index, no separate df aggregation, no anti-join: the exploded index
+    is shuffled ONCE (measured at sf0.1: the old join+count stage alone
+    was 60 task-seconds of 91.6 total; see OPTIMIZATION_r07.md).
+    Uncapped, a hot shingle's member row is O(df) while the pairs it
+    emits are O(df^2) under any formulation."""
+    sh_arr = shingles if shingles is not None else _shared_shingle_arrays(documents, n)
+    ex = sh_arr.select("doc_id", F.explode("shingles").alias("shingle"))
+    grouped = ex.filter(F.col("shingle").isNotNull()).groupBy("shingle").agg(
+        F.count("*").alias("df"), F.collect_list("doc_id").alias("ds")
+    )
+    keep = F.col("df") >= 2
+    if max_shingle_docs is not None:
+        keep = keep & (F.col("df") <= max_shingle_docs)
+    common = _member_pairs(grouped.filter(keep)).groupBy("doc_a", "doc_b").agg(
         F.count("*").cast("int").alias("n_common")
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    sa = sh_arr.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sh_arr.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
         _with_jaccard(common.join(sa, "doc_a").join(sb, "doc_b"))
         .filter(F.col("jaccard") >= threshold)
@@ -342,10 +346,11 @@ def dedup_minhash_lsh(
     Doc-local plan over ONE persisted relation, the per-doc shingle
     arrays (_shared_shingle_arrays):
       * signature — row-local (_row_local_signatures);
-      * block — band keys, the hot-bucket cap, then each bucket's
-        sorted member list fans out its pairs i < j row-locally (no
-        bucket self-join; the cap's window and the member grouping
-        share one exchange on the bucket key), distinct across bands;
+      * block — band keys into blocked_pairs: the hot-bucket cap, then
+        each bucket's sorted member list fans out its pairs i < j
+        row-locally (no bucket self-join; the cap's window and the
+        member grouping share one exchange on the bucket key), distinct
+        across bands;
       * verify — each candidate pair carries both docs' shingle arrays;
         their exploded array_intersect, minus NULL shingles and minus
         shingles over the df cap (broadcast anti-join: that set has at
@@ -361,13 +366,7 @@ def dedup_minhash_lsh(
     and shingle df (guarded by test_minhash_plan_is_doc_local)."""
     sh_arr = _shared_shingle_arrays(documents)
     keys = lsh_band_keys(_row_local_signatures(sh_arr))
-    if max_bucket_size is not None:
-        keys = cap_hot_buckets(
-            keys, ["band", "band_key"], "doc_id", max_bucket_size
-        )
-    cand = _member_pairs(
-        keys.groupBy("band", "band_key").agg(F.collect_list("doc_id").alias("ds"))
-    ).distinct()
+    cand = blocked_pairs(keys, ["band", "band_key"], "doc_id", max_bucket_size)
     shared = (
         cand.join(sh_arr.toDF("doc_a", "sa", "n_a"), "doc_a")
         .join(sh_arr.toDF("doc_b", "sb", "n_b"), "doc_b")
@@ -458,120 +457,6 @@ def dedup_simhash(documents: DataFrame) -> DataFrame:
             F.min("doc_id").alias("keeper_doc_id"),
         )
         .filter(F.col("n_docs") > 1)
-    )
-
-
-def vec_dot(a, b):
-    """Sequential-fold double dot product (bit-compatible with the
-    DuckDB oracle's list fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def vec_norm(v):
-    """Sequential-fold double L2 norm."""
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
-def cosine(a, b):
-    """Sequential-fold double cosine — bit-compatible with DuckDB's
-    list_cosine_similarity on DOUBLE[]. NOTE (r7): inside a pairwise
-    join, prefer vec_dot(a, b) / (norm_a * norm_b) with the norms
-    precomputed ONCE PER SIDE before the join — this expression
-    recomputes both norms per PAIR (the folds evaluate interpreted),
-    tripling the per-pair work; the quotient is bitwise identical
-    either way (same sub-expressions, same association)."""
-    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-
-
-def dedup_embedding(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """Embedding-cosine near-dup pairs: (vec_a, vec_b, cos). Brute
-    pairwise here (oracle-checkable); the scale path buckets by
-    random-hyperplane LSH first (similarity.lsh_buckets)."""
-    a = embeddings.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        vec_norm(F.col("embedding")).alias("_na"),
-    )
-    b = embeddings.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        vec_norm(F.col("embedding")).alias("_nb"),
-    )
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cos",
-            F.round(
-                vec_dot(F.col("ea"), F.col("eb"))
-                / (F.col("_na") * F.col("_nb")),
-                5,
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
-    )
-
-
-def dedup_embedding_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    max_bucket_size: int | None = MAX_LSH_BUCKET,
-    **lsh_kw,
-) -> DataFrame:
-    """Scale path for embedding near-dup: candidates restricted to
-    pairs sharing a random-hyperplane LSH bucket (similarity.
-    lsh_buckets) — bucket membership capped at max_bucket_size
-    (cap_hot_buckets, lowest vec_id kept) — then exact-cosine verified.
-    Same output schema as dedup_embedding; approximate recall (measured
-    vs the brute-force baseline in tests), O(n * min(bucket, cap))
-    instead of O(n^2)."""
-    from .similarity import lsh_buckets
-
-    buckets = lsh_buckets(embeddings, **lsh_kw)
-    if max_bucket_size is not None:
-        buckets = cap_hot_buckets(
-            buckets, ["table", "bucket"], "vec_id", max_bucket_size
-        )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .distinct()
-    )
-    ea = embeddings.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        vec_norm(F.col("embedding")).alias("_na"),
-    )
-    eb = embeddings.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        vec_norm(F.col("embedding")).alias("_nb"),
-    )
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn(
-            "cos",
-            F.round(
-                vec_dot(F.col("ea"), F.col("eb"))
-                / (F.col("_na") * F.col("_nb")),
-                5,
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
     )
 
 
@@ -667,11 +552,13 @@ def repeated_spans(
     ).drop("_grp")
 
 
-# persisted generations of shared shingle tables for callers running
-# BOTH survivor rules over one corpus (the driver's dedup_survivors
-# query) — rotated per call like curation._CURATION_CACHES, with the
-# same single-chain-in-flight caveat (overlapping calls lose only the
-# reuse, never correctness)
+# persisted generations of the shared shingle-array relation (and
+# _cache_keep intermediates), rotated at the start of each
+# _shared_shingle_arrays call — no persist without release; the neural
+# caches (plans.pipeline._NEURAL_CACHES) follow the same rule. One
+# chain in flight per driver: an overlapping call unpersists the
+# first call's relation, which then loses only the reuse, never
+# correctness.
 _DEDUP_CACHES: list[DataFrame] = []
 
 
@@ -683,31 +570,14 @@ def release_dedup_caches() -> None:
             pass  # cache belonged to an already-stopped session
 
 
-def cache_shared_shingles(documents: DataFrame, n: int = NGRAM) -> DataFrame:
-    """One persisted doc_shingles table to feed several dedup stages
-    (materialized by the first action — e.g. dedup_components'
-    propagation rounds — and reused by every later consumer)."""
-    release_dedup_caches()
-    sh = doc_shingles(documents, n).persist()
-    _DEDUP_CACHES.append(sh)
-    return sh
-
-
 def _shared_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     """Rotated persisted doc_shingle_arrays relation — the one shingle
-    build a single dedup query's consumers share (r7; see
-    doc_shingle_arrays). Carries a precomputed n_sh column: the
-    columnar cache prunes unread columns, so set-size consumers read
-    the tiny int column instead of decoding the shingle arrays to
-    re-take size() (measured ~3 task-s per pass at sf0.1). Same
-    single-chain-in-flight caveat as the other rotated caches:
-    overlapping queries lose only the reuse."""
+    build a dedup query's consumers share (jaccard's index and set
+    sizes, minhash's signatures and verify, a curation chain's dedup
+    and decontamination stages, both survivor rules). Materialized by
+    the first action and reused by every later consumer."""
     release_dedup_caches()
-    df = (
-        doc_shingle_arrays(documents, n)
-        .withColumn("n_sh", F.size("shingles").cast("int"))
-        .persist()
-    )
+    df = doc_shingle_arrays(documents, n).persist()
     _DEDUP_CACHES.append(df)
     return df
 

@@ -1,16 +1,29 @@
-"""Similarity search over embedding columns.
+"""Embedding similarity: near-dup pairs and top-k search over an
+embedding column, all verified by one exact cosine.
 
-* :func:`ann_topk_brute` — exact cosine top-k; the correctness
-  baseline (DuckDB-oracled).
-* :func:`lsh_buckets` / :func:`ann_topk_lsh` — random-hyperplane LSH:
-  candidates only within a shared signature bucket (multi-probe via
-  several independent tables). Approximate — recall measured against
-  the brute-force baseline in tests, not an oracle query.
+* :func:`dedup_embedding` / :func:`ann_topk_brute` — exact pairwise
+  cosine; the correctness baselines.
+* :func:`dedup_embedding_lsh` / :func:`ann_topk_lsh` — random-hyperplane
+  LSH (:func:`lsh_buckets`): candidates only within a shared signature
+  bucket (multi-probe via several independent tables), bucket
+  membership capped (dedup.cap_hot_buckets). Dedup blocks its buckets
+  with dedup.blocked_pairs, the primitive minhash uses.
+* :func:`ann_topk_ivf` — inverted file: queries probe their nprobe
+  nearest centroid buckets.
+
+One verify for all of them: each side's id, vector and L2 norm are
+projected ONCE (:func:`_side`) before the pairwise join, then
+cos = round(dot / (norm_a * norm_b), 5) (:func:`_with_cos`) — bitwise
+the oracle's list cosine (same sub-expressions, same association). LSH
+and IVF top-k share the candidate step and re-rank
+(:func:`_probe_topk`); they differ only in how the probe keys are
+made. Every result is exact against a DuckDB oracle.
 
 Scale: brute force is O(n*q) — fine when the query set is small or as
-a final re-rank; the LSH path turns global search into per-bucket
-local search. Hyperplanes are deterministic (seeded numpy, broadcast
-as literal arrays), so results are stable across runs/executors.
+a final re-rank; the LSH and IVF paths turn global search into
+per-bucket local search. Hyperplanes are deterministic (seeded numpy,
+broadcast as literal arrays), so results are stable across
+runs/executors.
 """
 
 from __future__ import annotations
@@ -21,7 +34,76 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .dedup import cosine, vec_dot, vec_norm
+from .dedup import MAX_LSH_BUCKET, blocked_pairs, cap_hot_buckets
+
+
+def vec_dot(a, b):
+    """Sequential-fold double dot product (bit-compatible with the
+    DuckDB oracle's list fold)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def vec_norm(v):
+    """Sequential-fold double L2 norm."""
+    return F.sqrt(
+        F.aggregate(
+            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+        )
+    )
+
+
+def _side(emb: DataFrame, name: str) -> DataFrame:
+    """One side of a pairwise verify: (name, name_e, name_n) — the id,
+    the vector and its L2 norm, computed ONCE per row, not once per
+    pair (the interpreted norm folds would triple the per-pair work)."""
+    return emb.select(
+        F.col("vec_id").alias(name),
+        F.col("embedding").alias(f"{name}_e"),
+        vec_norm(F.col("embedding")).alias(f"{name}_n"),
+    )
+
+
+def _with_cos(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Adds cos over pairs carrying both _side projections a and b,
+    rounded to 5 places as in the DuckDB oracle."""
+    dot = vec_dot(F.col(f"{a}_e"), F.col(f"{b}_e"))
+    return pairs.withColumn(
+        "cos", F.round(dot / (F.col(f"{a}_n") * F.col(f"{b}_n")), 5)
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos): the k best neighbors per
+    query by cos, ties broken on the lower neighbor id."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cos")
+    )
+
+
+def _probe_topk(
+    qkeys: DataFrame, ckeys: DataFrame, on: str | list[str], emb: DataFrame,
+    k: int,
+) -> DataFrame:
+    """Approximate top-k from probe keys: candidates are the distinct
+    (query_id, neighbor_id) pairs whose query keys (qkeys) equal corpus
+    keys (ckeys) on `on`, self excluded, re-ranked by exact cosine."""
+    cand = (
+        qkeys.join(ckeys, on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+    pairs = cand.join(_side(emb, "query_id"), "query_id").join(
+        _side(emb, "neighbor_id"), "neighbor_id"
+    )
+    return _topk(_with_cos(pairs, "query_id", "neighbor_id"), k)
 
 
 def _floored(embeddings: DataFrame) -> DataFrame:
@@ -44,33 +126,26 @@ def ann_topk_brute(
 ) -> DataFrame:
     """Top-k cosine neighbors for vec_id < n_queries:
     (query_id, rank, neighbor_id, cos). Deterministic tie-break on
-    neighbor id. r7: each side's L2 norm is computed ONCE before the
-    pairwise join (the interpreted norm folds used to run per PAIR —
-    3x the per-pair work; dot/(qn*cn) is bitwise identical to the
-    fused cosine: same sub-expressions, same association)."""
+    neighbor id. Exact: every query scores every other vector."""
     emb = _floored(embeddings)
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        vec_norm(F.col("embedding")).alias("_qn"),
+    q = _side(emb.filter(F.col("vec_id") < n_queries), "query_id")
+    pairs = q.join(
+        _side(emb, "neighbor_id"), F.col("query_id") != F.col("neighbor_id")
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        vec_norm(F.col("embedding")).alias("_cn"),
+    return _topk(_with_cos(pairs, "query_id", "neighbor_id"), k)
+
+
+def dedup_embedding(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Embedding-cosine near-dup pairs: (vec_a, vec_b, cos). Brute
+    pairwise here (oracle-checkable); the scale path is
+    dedup_embedding_lsh."""
+    pairs = _side(embeddings, "vec_a").join(
+        _side(embeddings, "vec_b"), F.col("vec_a") < F.col("vec_b")
     )
-    scored = q.join(c, F.col("query_id") != F.col("neighbor_id")).withColumn(
-        "cos",
-        F.round(
-            vec_dot(F.col("qe"), F.col("ne")) / (F.col("_qn") * F.col("_cn")),
-            5,
-        ),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
+        _with_cos(pairs, "vec_a", "vec_b")
+        .filter(F.col("cos") >= threshold)
+        .select("vec_a", "vec_b", "cos")
     )
 
 
@@ -87,28 +162,63 @@ def lsh_buckets(
     seed: int = 42,
 ) -> DataFrame:
     """(vec_id, table, bucket) — sign-pattern bucket per hash table.
-    Planes are literal arrays → whole-stage codegen dot products."""
+    Planes are literal arrays → whole-stage codegen dot products.
+
+    A non-NULL embedding whose length is not `dim` raises: zip_with
+    would pad the shorter side with NULL, every dot product would be
+    NULL and every bit '0', so the whole input would land in ONE bucket
+    per table and the bucket cap would drop all but its lowest ids. A
+    NULL embedding gets the all-'0' bucket and never verifies."""
+    emb = F.col("embedding")
     out = []
     for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed + t)
-        bits = []
-        for p in planes:
-            lit = F.array(*[F.lit(float(x)) for x in p])
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), lit, lambda x, y: x.cast("double") * y
-                ),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-            bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+        bits = [
+            F.when(vec_dot(emb, F.array(*map(F.lit, p))) >= 0, F.lit("1"))
+            .otherwise(F.lit("0"))
+            for p in _hyperplanes(dim, n_planes, seed + t)
+        ]
         out.append(
             F.struct(F.lit(t).alias("table"), F.concat(*bits).alias("bucket"))
         )
-    return embeddings.select(
-        "vec_id", F.explode(F.array(*out)).alias("tb")
-    ).select(
+    wrong_dim = F.raise_error(
+        F.concat(
+            F.lit("lsh_buckets: vec_id "), F.col("vec_id").cast("string"),
+            F.lit(" has an embedding of length "), F.size(emb).cast("string"),
+            F.lit(f", expected dim={dim}"),
+        )
+    )
+    tables = F.when(emb.isNotNull() & (F.size(emb) != dim), wrong_dim).otherwise(
+        F.array(*out)
+    )
+    return embeddings.select("vec_id", F.explode(tables).alias("tb")).select(
         "vec_id", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
+    )
+
+
+def dedup_embedding_lsh(
+    embeddings: DataFrame,
+    threshold: float = 0.9,
+    max_bucket_size: int | None = MAX_LSH_BUCKET,
+    **lsh_kw,
+) -> DataFrame:
+    """Scale path for embedding near-dup: candidates are the pairs
+    sharing a random-hyperplane LSH bucket (lsh_buckets), blocked by
+    dedup.blocked_pairs — bucket membership capped at max_bucket_size
+    (lowest vec_id kept) — then exact-cosine verified. Same output
+    schema as dedup_embedding; approximate recall (measured vs the
+    brute-force baseline in tests), O(n * min(bucket, cap)) instead of
+    O(n^2). Integer vec_ids sort numerically, so vec_a < vec_b."""
+    cand = blocked_pairs(
+        lsh_buckets(embeddings, **lsh_kw), ["table", "bucket"], "vec_id",
+        max_bucket_size,
+    ).toDF("vec_a", "vec_b")
+    pairs = cand.join(_side(embeddings, "vec_a"), "vec_a").join(
+        _side(embeddings, "vec_b"), "vec_b"
+    )
+    return (
+        _with_cos(pairs, "vec_a", "vec_b")
+        .filter(F.col("cos") >= threshold)
+        .select("vec_a", "vec_b", "cos")
     )
 
 
@@ -207,46 +317,14 @@ def ann_topk_ivf(
         F.col("vec_id").alias("query_id"),
         F.explode(probe(F.col("embedding"))).alias("cid"),
     )
-    cand = (
-        qprobe.join(inv, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    q = embeddings.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        vec_norm(F.col("embedding")).alias("_qn"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        vec_norm(F.col("embedding")).alias("_cn"),
-    )
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.round(
-                vec_dot(F.col("qe"), F.col("ne"))
-                / (F.col("_qn") * F.col("_cn")),
-                5,
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
+    return _probe_topk(qprobe, inv, "cid", embeddings, k)
 
 
 def ann_topk_lsh(
     embeddings: DataFrame,
     k: int = 5,
     n_queries: int = 20,
+    max_bucket_size: int | None = MAX_LSH_BUCKET,
     **lsh_kw,
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing any LSH bucket
@@ -256,49 +334,17 @@ def ann_topk_lsh(
     the oracle), bounding a hot bucket's candidate fan-out at
     O(n_queries * cap) instead of O(n_queries * N); the query side is
     never capped, so every query still probes."""
-    from .dedup import MAX_LSH_BUCKET, cap_hot_buckets
-
-    max_bucket_size = lsh_kw.pop("max_bucket_size", MAX_LSH_BUCKET)
     buckets = lsh_buckets(embeddings, **lsh_kw)
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "table", "bucket"
-    )
+    qb = buckets.filter(F.col("vec_id") < n_queries)
     cb = (
         cap_hot_buckets(buckets, ["table", "bucket"], "vec_id", max_bucket_size)
         if max_bucket_size is not None
         else buckets
     )
-    cand = (
-        qb.join(cb, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    q = embeddings.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        vec_norm(F.col("embedding")).alias("_qn"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        vec_norm(F.col("embedding")).alias("_cn"),
-    )
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.round(
-                vec_dot(F.col("qe"), F.col("ne"))
-                / (F.col("_qn") * F.col("_cn")),
-                5,
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
+    return _probe_topk(
+        qb.withColumnRenamed("vec_id", "query_id"),
+        cb.withColumnRenamed("vec_id", "neighbor_id"),
+        ["table", "bucket"],
+        embeddings,
+        k,
     )

@@ -62,7 +62,6 @@ def stream_windowed_mention_counts(
     emits each window exactly once when the watermark passes it.
     State is bounded by (windows in flight x entity types)."""
     from ..dictionaries import entity_dict_fused_df
-    from ..operators.tagger import tag_mentions_fast
 
     stream = spark.readStream.schema(schema).parquet(input_dir)
     d = entity_dict_fused_df(spark)

@@ -231,33 +231,40 @@ def test_sample_balanced_hash_properties(spark):
 
 
 def test_curation_pipeline_single_shingle_pass(spark, monkeypatch):
-    """r4 verdict #2: the composed chain must explode the train corpus
-    into shingles exactly ONCE (a persisted table shared by the dedup
-    and decontamination stages); the only other shingle pass is the
-    tiny eval set. The persisted generation is rotated per call."""
+    """r4 verdict #2: the composed chain must shingle the train corpus
+    exactly ONCE (one persisted shingle-array relation shared by the
+    dedup and decontamination stages); the only other shingle pass is
+    the tiny eval set. The persisted generation is rotated per call."""
     from renet2_spark.operators import dedup as dd
 
     calls = []
-    real = dd.doc_shingles
 
-    def counting(documents, n=dd.NGRAM):
-        calls.append(1)
-        return real(documents, n)
+    def counting(name):
+        real = getattr(dd, name)
 
-    monkeypatch.setattr(dd, "doc_shingles", counting)
-    monkeypatch.setattr(cur, "doc_shingles", counting)
+        def wrapped(documents, n=dd.NGRAM):
+            calls.append(name)
+            return real(documents, n)
+
+        return wrapped
+
+    for name in ("doc_shingle_arrays", "doc_shingles"):
+        wrapped = counting(name)
+        monkeypatch.setattr(dd, name, wrapped)
+        monkeypatch.setattr(cur, name, wrapped)
     docs = _docs(spark)
     tr = docs.filter("doc_id % 97 != 3")
     ev = docs.filter("doc_id % 97 = 3")
     out = cur.curation_pipeline(tr, ev)
     assert out.count() > 0
-    assert len(calls) == 2  # ONE train-side pass + the eval set
-    assert len(cur._CURATION_CACHES) == 1  # the shared table, persisted
+    # ONE train-side pass + the eval set
+    assert sorted(calls) == ["doc_shingle_arrays", "doc_shingles"]
+    assert len(dd._DEDUP_CACHES) == 1  # the shared relation, persisted
     # generation rotated (and released) on the next call
     cur.curation_pipeline(tr, ev)
-    assert len(cur._CURATION_CACHES) == 1
-    cur.release_curation_caches()
-    assert not cur._CURATION_CACHES
+    assert len(dd._DEDUP_CACHES) == 1
+    dd.release_dedup_caches()
+    assert not dd._DEDUP_CACHES
 
 
 def test_pack_sequences_many_sources_bounded_plan(spark):

@@ -1,9 +1,11 @@
 """Dedup operators find the planted near-duplicates (docs sharing a
 long prefix, suffixed with 'dup') in the driver testdata."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from renet2_spark.operators import dedup as dd
+from renet2_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
 
 
@@ -65,7 +67,7 @@ def test_exact_dedup_no_false_positives(spark):
 
 def test_embedding_neardup_symmetric_threshold(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    pairs = dd.dedup_embedding(emb, threshold=0.5).collect()
+    pairs = sim.dedup_embedding(emb, threshold=0.5).collect()
     for p in pairs:
         assert p["vec_a"] < p["vec_b"]
         assert p["cos"] >= 0.5
@@ -74,9 +76,9 @@ def test_embedding_neardup_symmetric_threshold(spark):
 def test_embedding_lsh_recall_vs_exact(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     exact = {(r["vec_a"], r["vec_b"])
-             for r in dd.dedup_embedding(emb, threshold=0.4).collect()}
+             for r in sim.dedup_embedding(emb, threshold=0.4).collect()}
     lsh = {(r["vec_a"], r["vec_b"])
-           for r in dd.dedup_embedding_lsh(
+           for r in sim.dedup_embedding_lsh(
                emb, threshold=0.4, n_planes=4, n_tables=8).collect()}
     assert lsh <= exact
     if exact:
@@ -202,6 +204,47 @@ def test_minhash_threshold_zero_matches_oracle(spark):
     assert ok, msg
 
 
+def _blocked_pairs_reference(rows, cap):
+    """Pairs a < b sharing any bucket, among each bucket's `cap`
+    lowest ids (all ids when cap is None)."""
+    buckets = {}
+    for table, bucket, i in rows:
+        buckets.setdefault((table, bucket), []).append(i)
+    out = set()
+    for ids in buckets.values():
+        kept = sorted(ids)[:cap]
+        out |= {(a, b) for a in kept for b in kept if a < b}
+    return out
+
+
+@pytest.mark.parametrize(
+    "rows, cap",
+    [
+        # 2 < 10 numerically; as strings "10" would sort first
+        ([(0, "x", 10), (0, "x", 2)], 256),
+        # (1, 2) shares three buckets and comes out once
+        ([(t, "x", i) for t in range(3) for i in (1, 2)] + [(0, "y", 3)], 256),
+        # cap boundary: a bucket of exactly cap members stays whole, one
+        # of cap + 1 drops its highest id, and id 4 is kept in one
+        # bucket while cut from the other
+        (
+            [(0, "a", i) for i in (1, 3, 4)]
+            + [(0, "b", i) for i in (1, 2, 3, 4)]
+            + [(1, "a", i) for i in (5, 6)],
+            3,
+        ),
+        ([(0, "a", i) for i in range(6)] + [(1, "a", i) for i in (4, 7)], None),
+    ],
+    ids=["numeric_order", "shared_buckets_once", "cap_boundary", "uncapped"],
+)
+def test_blocked_pairs_matches_reference(spark, rows, cap):
+    keys = spark.createDataFrame(rows, "table int, bucket string, id long")
+    got = [tuple(r) for r in
+           dd.blocked_pairs(keys, ["table", "bucket"], "id", cap).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _blocked_pairs_reference(rows, cap)
+
+
 def test_row_local_signatures_match_minhash_signatures(spark):
     """The per-row array_min signature equals the explode + groupBy
     definition, NULL and empty text included."""
@@ -319,10 +362,11 @@ def test_dedup_components_reliable_checkpoint_matches(spark):
 
 def test_dedup_ngram_jaccard_injected_shingles_match(spark):
     """The shared-pass hook (shingles=) must be a pure optimization:
-    injecting a precomputed doc_shingles table changes nothing."""
+    injecting a precomputed doc_shingle_arrays relation changes
+    nothing."""
     from renet2_spark.operators.dedup import (
         dedup_ngram_jaccard,
-        doc_shingles,
+        doc_shingle_arrays,
     )
     from tests.conftest import SF_SMOKE
 
@@ -332,7 +376,7 @@ def test_dedup_ngram_jaccard_injected_shingles_match(spark):
         map(
             tuple,
             dedup_ngram_jaccard(
-                docs, shingles=doc_shingles(docs)
+                docs, shingles=doc_shingle_arrays(docs)
             ).collect(),
         )
     )

@@ -1,5 +1,9 @@
+import pytest
+
+from renet2_spark import oracles
 from renet2_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
+from tests.oracle_utils import compare
 
 
 def _emb(spark):
@@ -96,3 +100,66 @@ def test_ivf_centroids_degenerate_inputs(spark):
     c = ivf_centroids(emb.filter("vec_id < 3"), n_centroids=8)
     assert c.shape[0] == 3  # clamped to the sample size
     assert np.isfinite(c).all()
+
+
+def test_lsh_buckets_rejects_wrong_dim(spark):
+    """A vector whose length is not `dim` used to hash to the all-'0'
+    bucket in every table (zip_with pads with NULL, so every dot was
+    NULL): 200 random 32-d vectors filled ONE bucket per table, and the
+    bucket cap dropped all but 256 ids without a count. Now it raises,
+    naming both lengths; the right dim spreads the same vectors, and a
+    NULL embedding keeps the all-'0' bucket."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    rng = np.random.RandomState(0)
+    schema = "vec_id long, embedding array<double>"
+    for d in (32, 128):
+        emb = spark.createDataFrame(
+            [(i, rng.randn(d).tolist()) for i in range(200)], schema
+        )
+        with pytest.raises(Exception, match=f"length {d}, expected dim=64"):
+            sim.lsh_buckets(emb).collect()
+        spread = sim.lsh_buckets(emb, dim=d).groupBy("table").agg(
+            F.countDistinct("bucket").alias("n")
+        )
+        assert all(r["n"] > 50 for r in spread.collect())
+    nulls = spark.createDataFrame([(0, None)], schema)
+    assert {r["bucket"] for r in sim.lsh_buckets(nulls).collect()} == {"0" * 8}
+
+
+_LSH_DEDUP = dict(n_planes=4, n_tables=8)  # the oracle's defaults
+BLOCKED_CASES = {
+    "dedup_t0.4": (
+        lambda e: sim.dedup_embedding_lsh(e, threshold=0.4, **_LSH_DEDUP),
+        lambda: oracles.q_dedup_embedding_lsh(threshold=0.4),
+        49,
+    ),
+    # the cap binds: the largest bucket has 52 members
+    "dedup_t0.2_cap3": (
+        lambda e: sim.dedup_embedding_lsh(
+            e, threshold=0.2, max_bucket_size=3, **_LSH_DEDUP
+        ),
+        lambda: oracles.q_dedup_embedding_lsh(threshold=0.2, max_bucket=3),
+        31,
+    ),
+    # 99 rows uncapped
+    "ann_topk_cap2": (
+        lambda e: sim.ann_topk_lsh(e, max_bucket_size=2),
+        lambda: oracles.q_ann_topk_lsh(max_bucket=2),
+        74,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(BLOCKED_CASES))
+def test_blocked_embedding_paths_match_oracle(spark, name):
+    """Exact parity of the LSH-blocked embedding paths on cases that
+    return rows (the driver's dedup_embedding_lsh, threshold 0.9,
+    returns none at sf0.001 or sf0.01, so its parity compares two empty
+    sets)."""
+    build, sql, n_rows = BLOCKED_CASES[name]
+    df = build(_emb(spark))
+    assert df.count() == n_rows
+    ok, msg = compare(df, sql(), SF_SMOKE)
+    assert ok, f"{name}: {msg}"
