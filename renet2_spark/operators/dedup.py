@@ -7,8 +7,9 @@ the `text` column:
 
 * exact            — md5 grouping, one shuffle
 * ngram-jaccard    — word-shingle inverted index: one groupBy(shingle)
-                     yields each shingle's sorted member list, pairs fan
-                     out row-locally (frequency-capped at scale)
+                     yields each shingle's member set, set sizes
+                     included; pairs fan out row-locally (frequency-
+                     capped at scale)
 * minhash + LSH    — k=12 md5-minhash signature computed row-locally,
                      b=4/r=3 banding, sorted-member bucket fan-out,
                      exact-jaccard verify of candidates by array_intersect
@@ -24,8 +25,10 @@ Embedding-cosine dedup and ANN search live in `operators.similarity`.
 
 Every shingle consumer reads one relation, the per-doc distinct
 shingle array with its size: (doc_id, shingles, n_sh)
-(`doc_shingle_arrays`, persisted once per query by
-`_shared_shingle_arrays`).
+(`doc_shingle_arrays`). Minhash persists it once per query
+(`_shared_shingle_arrays`), since its signatures and its verify both
+read it; jaccard reads it once and carries n_sh in its inverted index,
+so it persists nothing.
 
 Hash choice: md5 (not xxhash/murmur) so every stage is reproducible
 in ANSI SQL by the DuckDB oracle — at production scale swap in
@@ -77,6 +80,8 @@ MAX_SHINGLE_DF = 1024
 # bucket. Mirrored in the DuckDB oracles (row_number <= cap), so
 # parity holds even when the cap binds. Accounting: hot_bucket_stats.
 MAX_LSH_BUCKET = 256
+# shared-shingle count per candidate pair, the numerator of jaccard
+_N_COMMON = "CAST(count(*) AS INT) AS n_common"
 
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
@@ -96,20 +101,19 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_arr(n: int = NGRAM):
-    """Row-local distinct word n-gram array expression."""
-    words = F.split(F.col("text"), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
+def _shingle_arr(n: int = NGRAM) -> str:
+    """Row-local distinct word n-gram array, as a SQL expression."""
+    words = "split(text, ' ')"
+    return (
+        f"array_distinct(transform(sequence(0, greatest(size({words}) - {n}, 0)),"
+        f" i -> array_join(slice({words}, i + 1, {n}), ' ')))"
     )
 
 
 def doc_shingles(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams. Narrow explode."""
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.explode(_shingle_arr(n)).alias("shingle"),
+    return documents.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", f"explode({_shingle_arr(n)}) AS shingle"
     )
 
 
@@ -125,10 +129,9 @@ def doc_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     column because the columnar cache prunes unread columns: set-size
     consumers read the int instead of decoding the arrays (measured
     ~3 task-s per pass at sf0.1)."""
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        _shingle_arr(n).alias("shingles"),
-    ).withColumn("n_sh", F.size("shingles").cast("int"))
+    return documents.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", f"{_shingle_arr(n)} AS shingles"
+    ).selectExpr("*", "CAST(size(shingles) AS INT) AS n_sh")
 
 
 def capped_shingle_stats(
@@ -162,10 +165,10 @@ def cap_hot_buckets(
     the bucket key, which the downstream bucket grouping (or join)
     needs too, so the cap adds no exchange; a hot bucket costs one
     LINEAR single-task scan. Dropped membership: `hot_bucket_stats`."""
-    w = W.partitionBy(*bucket_cols).orderBy(id_col)
+    over = f"PARTITION BY {', '.join(bucket_cols)} ORDER BY {id_col}"
     return (
-        keys.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= max_bucket_size)
+        keys.selectExpr("*", f"row_number() OVER ({over}) AS _r")
+        .where(f"_r <= {max_bucket_size}")
         .drop("_r")
     )
 
@@ -174,11 +177,10 @@ def _member_pairs(members: DataFrame) -> DataFrame:
     """(doc_a, doc_b) for every i < j over each row's `ds` member
     array, sorted here: a row-local fan-out, so grouping members needs
     no self-join on the grouping key (bounded by C(|ds|, 2) per row)."""
-    s = members.select(F.array_sort("ds").alias("ds"))
-    s = s.select("ds", F.posexplode("ds").alias("_i", "doc_a"))
-    return s.select(
-        "doc_a",
-        F.explode(F.slice("ds", F.col("_i") + 2, F.size("ds"))).alias("doc_b"),
+    return (
+        members.selectExpr("array_sort(ds) AS ds")
+        .selectExpr("ds", "posexplode(ds) AS (_i, doc_a)")
+        .selectExpr("doc_a", "explode(slice(ds, _i + 2, size(ds))) AS doc_b")
     )
 
 
@@ -199,17 +201,18 @@ def blocked_pairs(
     if max_bucket_size is not None:
         keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
     return _member_pairs(
-        keys.groupBy(*bucket_cols).agg(F.collect_list(id_col).alias("ds"))
+        keys.groupBy(*bucket_cols).agg(F.expr(f"collect_list({id_col}) AS ds"))
     ).distinct()
 
 
 def _with_jaccard(common: DataFrame) -> DataFrame:
     """Adds jaccard = n_common / (n_a + n_b - n_common), rounded to 5
     places as in the DuckDB oracle."""
-    jac = F.col("n_common").cast("double") / (
-        (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+    return common.selectExpr(
+        "*",
+        "round(CAST(n_common AS DOUBLE)"
+        " / CAST(n_a + n_b - n_common AS DOUBLE), 5) AS jaccard",
     )
-    return common.withColumn("jaccard", F.round(jac, 5))
 
 
 def hot_bucket_stats(
@@ -243,45 +246,50 @@ def dedup_ngram_jaccard(
     (doc_a, doc_b, n_common, n_a, n_b, jaccard).
 
     The pair fan-out is df-capped by default (MAX_SHINGLE_DF): set
-    sizes (n_a/n_b) are computed over ALL shingles, intersections over
-    capped shingles only — jaccard is under-counted for pairs whose
-    overlap is exclusively stop-shingles, never over-counted. The
-    DuckDB oracle applies the identical cap. max_shingle_docs=None
-    omits the upper df bound.
+    sizes (n_a/n_b) count ALL shingles, intersections only capped ones,
+    so jaccard is under-counted for pairs whose overlap is exclusively
+    stop-shingles, never over-counted; the DuckDB oracle applies the
+    same cap. max_shingle_docs=None omits the upper df bound (a hot
+    shingle then emits O(df^2) pairs, as under any formulation).
 
-    `shingles` optionally injects the shingle relation for `documents`
-    (e.g. one persisted relation shared with a decontamination stage —
-    r4 verdict #2: the composed curation chain used to explode the
-    corpus twice); it must equal doc_shingle_arrays(documents, n).
-    Otherwise the relation comes from ONE persisted per-doc array build
-    (_shared_shingle_arrays) that also carries the set sizes.
+    `shingles` optionally injects doc_shingle_arrays(documents, n), e.g.
+    one persisted relation shared with decontamination (r4 verdict #2);
+    otherwise the relation is built here and read once, unpersisted.
 
-    Plan (r7 optimization, guide §2.3/§2.4): ONE groupBy(shingle)
-    yields the document frequency AND the member list, and candidate
-    pairs fan out ROW-LOCALLY (_member_pairs: i < j over the sorted
-    members — bounded by C(cap, 2) per shingle). No self-join of the
-    index, no separate df aggregation, no anti-join: the exploded index
-    is shuffled ONCE (measured at sf0.1: the old join+count stage alone
-    was 60 task-seconds of 91.6 total; see OPTIMIZATION_r07.md).
-    Uncapped, a hot shingle's member row is O(df) while the pairs it
-    emits are O(df^2) under any formulation."""
-    sh_arr = shingles if shingles is not None else _shared_shingle_arrays(documents, n)
-    ex = sh_arr.select("doc_id", F.explode("shingles").alias("shingle"))
-    grouped = ex.filter(F.col("shingle").isNotNull()).groupBy("shingle").agg(
-        F.count("*").alias("df"), F.collect_list("doc_id").alias("ds")
-    )
-    keep = F.col("df") >= 2
+    Plan: ONE groupBy(shingle) yields each shingle's member set
+    ds = collect_set(struct(doc_id, n_sh)), whose size is the document
+    frequency; pairs fan out ROW-LOCALLY (_member_pairs, at most
+    C(cap, 2) per shingle). Each member carries its set size (SparkER: a
+    block carries its profiles' data), so the count per (doc_a, doc_b,
+    n_a, n_b) needs no lookup join: two exchanges (shingle, then pair),
+    no join, no persist. A doc_id listed twice is one member, as in the
+    oracle's distinct (doc_id, shingle) relation."""
+    sh_arr = shingles if shingles is not None else doc_shingle_arrays(documents, n)
+    keep = "size(ds) >= 2"
     if max_shingle_docs is not None:
-        keep = keep & (F.col("df") <= max_shingle_docs)
-    common = _member_pairs(grouped.filter(keep)).groupBy("doc_a", "doc_b").agg(
-        F.count("*").cast("int").alias("n_common")
+        keep += f" AND size(ds) <= {max_shingle_docs}"
+    # explode_outer: from an inner explode of an attribute Catalyst infers
+    # size(shingles) > 0 and pushes it below the projection that builds
+    # the arrays, so each array is built twice (12k docs, 4 cores: 3.5 s
+    # against 2.3 s). The arrays are never empty; NULLs are dropped below.
+    index = (
+        sh_arr.selectExpr("doc_id", "n_sh", "explode_outer(shingles) AS shingle")
+        .where("shingle IS NOT NULL")
+        .groupBy("shingle")
+        .agg(F.expr("collect_set(struct(doc_id, n_sh)) AS ds"))
+        .where(keep)
     )
-    sa = sh_arr.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sh_arr.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    pairs = _member_pairs(index).selectExpr(
+        "doc_a.doc_id AS doc_a",
+        "doc_b.doc_id AS doc_b",
+        "doc_a.n_sh AS n_a",
+        "doc_b.n_sh AS n_b",
+    )
+    common = pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(F.expr(_N_COMMON))
     return (
-        _with_jaccard(common.join(sa, "doc_a").join(sb, "doc_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
+        _with_jaccard(common)
+        .where(f"jaccard >= {float(threshold)!r}D")
+        .selectExpr("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
     )
 
 
@@ -314,18 +322,15 @@ def lsh_band_keys(
 ) -> DataFrame:
     """(doc_id, band, band_key) — md5 of each band's row concat."""
     r = k // bands
-    rows = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * r + j}") for j in range(r)]
-        rows.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
-            )
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*rows)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    rows = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('|', "
+        + ", ".join(f"mh_{b * r + j}" for j in range(r))
+        + ")) AS band_key)"
+        for b in range(bands)
+    )
+    return sig.selectExpr("doc_id", f"explode(array({rows})) AS bk").selectExpr(
+        "doc_id", "bk.band AS band", "bk.band_key AS band_key"
+    )
 
 
 def dedup_minhash_lsh(
@@ -370,30 +375,24 @@ def dedup_minhash_lsh(
     shared = (
         cand.join(sh_arr.toDF("doc_a", "sa", "n_a"), "doc_a")
         .join(sh_arr.toDF("doc_b", "sb", "n_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_a",
-            "n_b",
-            F.explode(F.array_intersect("sa", "sb")).alias("shingle"),
+        .selectExpr(
+            "doc_a", "doc_b", "n_a", "n_b", "explode(array_intersect(sa, sb)) AS shingle"
         )
-        .filter(F.col("shingle").isNotNull())
+        .where("shingle IS NOT NULL")
     )
     if max_shingle_docs is not None:
         dropped = (
-            sh_arr.select(F.explode("shingles").alias("shingle"))
+            sh_arr.selectExpr("explode(shingles) AS shingle")
             .groupBy("shingle")
             .count()
-            .filter(F.col("count") > max_shingle_docs)
+            .where(f"`count` > {max_shingle_docs}")
             .select("shingle")
         )
         shared = shared.join(F.broadcast(dropped), "shingle", "left_anti")
-    common = shared.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
-        F.count("*").cast("int").alias("n_common")
-    )
+    common = shared.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(F.expr(_N_COMMON))
     return (
         _with_jaccard(common)
-        .filter(F.col("jaccard") >= threshold)
+        .where(f"jaccard >= {float(threshold)!r}D")
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -572,10 +571,12 @@ def release_dedup_caches() -> None:
 
 def _shared_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     """Rotated persisted doc_shingle_arrays relation — the one shingle
-    build a dedup query's consumers share (jaccard's index and set
-    sizes, minhash's signatures and verify, a curation chain's dedup
-    and decontamination stages, both survivor rules). Materialized by
-    the first action and reused by every later consumer."""
+    build that several consumers of one query share (minhash's
+    signatures and verify, a curation chain's dedup and decontamination
+    stages, both survivor rules, which pass it to jaccard through
+    `shingles=`). Jaccard alone does not read it: it reads its input
+    once. Materialized by the first action and reused by every later
+    consumer."""
     release_dedup_caches()
     df = doc_shingle_arrays(documents, n).persist()
     _DEDUP_CACHES.append(df)

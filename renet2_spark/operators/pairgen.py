@@ -100,47 +100,32 @@ def edge_relations(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
         mentions.repartition("doc_id")
         .groupBy("doc_id", "type", "entity_id")
         .agg(
-            F.count("*").cast("int").alias("n_mentions"),
-            F.concat_ws("|", F.sort_array(F.collect_set("mention"))).alias("name"),
-            F.collect_set("sent_no").alias("sents"),
+            F.expr("CAST(count(*) AS INT) AS n_mentions"),
+            F.expr("concat_ws('|', sort_array(collect_set(mention))) AS name"),
+            F.expr("collect_set(sent_no) AS sents"),
         )
     )
-    ent = F.struct(
-        F.col("entity_id").alias("id"),
-        F.col("n_mentions").alias("n"),
-        "name",
-        "sents",
-    )
-    gene = F.col("type") == "Gene"
+    ent = "struct(entity_id AS id, n_mentions AS n, name, sents)"
     per_doc = info.groupBy("doc_id").agg(
-        F.collect_list(F.when(gene, ent)).alias("gs"),
-        F.collect_list(F.when(~gene, ent)).alias("ds"),
+        F.expr(f"collect_list(CASE WHEN type = 'Gene' THEN {ent} END) AS gs"),
+        F.expr(f"collect_list(CASE WHEN NOT (type = 'Gene') THEN {ent} END) AS ds"),
     )
-    g = F.col("g")
-    cooc = F.filter(
-        F.transform(
-            "ds",
-            lambda d: F.struct(
-                d["id"].alias("id"),
-                d["n"].alias("n"),
-                d["name"].alias("name"),
-                F.size(F.array_intersect(g["sents"], d["sents"])).alias("c"),
-            ),
-        ),
-        lambda p: p["c"] > 0,
+    cooc = (
+        "filter(transform(ds, d -> struct(d.id AS id, d.n AS n, d.name AS name,"
+        " size(array_intersect(g.sents, d.sents)) AS c)), p -> p.c > 0)"
     )
     pairs = (
-        per_doc.select("doc_id", F.explode("gs").alias("g"), "ds")
-        .select("doc_id", "g", F.explode(cooc).alias("d"))
-        .select(
+        per_doc.selectExpr("doc_id", "explode(gs) AS g", "ds")
+        .selectExpr("doc_id", "g", f"explode({cooc}) AS d")
+        .selectExpr(
             "doc_id",
-            F.col("g.id").alias("gene_id"),
-            F.col("d.id").alias("disease_id"),
-            F.col("d.c").alias("n_cooc_sents"),
-            F.col("g.n").alias("n_g"),
-            F.col("d.n").alias("n_d"),
-            F.col("g.name").alias("g_name"),
-            F.col("d.name").alias("d_name"),
+            "g.id AS gene_id",
+            "d.id AS disease_id",
+            "d.c AS n_cooc_sents",
+            "g.n AS n_g",
+            "d.n AS n_d",
+            "g.name AS g_name",
+            "d.name AS d_name",
         )
     )
     return pairs, info

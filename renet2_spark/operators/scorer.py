@@ -53,19 +53,18 @@ def score_and_vote(pairs: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
     model-independent prefix `_base` computed once, and the prob sum
     keeps the same left fold.
 
-    Built from a few SQL strings: the equivalent Column-API tree costs
-    ~400 Py4J calls, which made it the largest part of build_edges'
-    driver-side construction."""
+    Built from SQL strings, one per projection and one for the filter:
+    every Column-API call is one or more Py4J round trips, and the
+    equivalent Column tree cost ~400 of them, the largest part of
+    build_edges' driver-side construction."""
     base = (
         f"({W_COOC}D * CAST(n_cooc_sents AS DOUBLE)"
         f" + {W_CNT}D * (CAST(n_g AS DOUBLE) + CAST(n_d AS DOUBLE)))"
         f" + ({BIAS}D)"
     )
     probs = [
-        F.expr(
-            f"greatest(0.0D, least(1.0D, 0.5D"
-            f" + (_base + ({MODEL_STEP}D) * {float(i)}D) / 8.0D))"
-        ).alias(f"_p{i}")
+        f"greatest(0.0D, least(1.0D, 0.5D"
+        f" + (_base + ({MODEL_STEP}D) * {float(i)}D) / 8.0D)) AS _p{i}"
         for i in range(N_MODELS)
     ]
     ps = [f"_p{i}" for i in range(N_MODELS)]
@@ -74,16 +73,17 @@ def score_and_vote(pairs: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
     for p in ps:
         total = f"({total} + {p})"
     fmt = ", ".join(f"format_number({p}, 5)" for p in ps)
+    cols = [f"`{c}`" for c in pairs.columns]
     return (
-        pairs.select("*", F.expr(base).alias("_base"))
-        .select(*pairs.columns, *probs)
-        .select(
-            *pairs.columns,
-            F.expr(f"CAST({hit} AS INT)").alias("hit_cnt"),
-            F.expr(f"round({total} / {float(N_MODELS)}D, 5)").alias("prob_avg"),
-            F.expr(f"concat_ws(';', {fmt})").alias("prob_X"),
+        pairs.selectExpr("*", f"{base} AS _base")
+        .selectExpr(*cols, *probs)
+        .selectExpr(
+            *cols,
+            f"CAST({hit} AS INT) AS hit_cnt",
+            f"round({total} / {float(N_MODELS)}D, 5) AS prob_avg",
+            f"concat_ws(';', {fmt}) AS prob_X",
         )
-        .filter(F.col("hit_cnt") >= F.lit(cutoff))
+        .where(f"hit_cnt >= {cutoff}")
     )
 
 

@@ -400,19 +400,14 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
         sent_words = SENT_WORDS
     d = entity_dict if entity_dict is not None else entity_dict_df(spark)
     id_cols = [c for c in ("raw_id", "entity_id") if c in d.columns]
-    words = F.split(F.col("text"), " ")
-    tok = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.posexplode(words).alias("k", "token"),
+    tok = documents.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", "posexplode(split(text, ' ')) AS (k, token)"
     )
-    return (
-        tok.join(F.broadcast(d), F.lower(tok.token) == d.surface, "inner")
-        .select(
-            "doc_id",
-            (F.col("k") / sent_words).cast("int").alias("sent_no"),
-            F.pmod(F.col("k"), F.lit(sent_words)).cast("int").alias("tok_no"),
-            F.col("token").alias("mention"),
-            "type",
-            *id_cols,
-        )
+    return tok.join(F.broadcast(d), F.expr("lower(token) = surface"), "inner").selectExpr(
+        "doc_id",
+        f"CAST(k / {sent_words} AS INT) AS sent_no",
+        f"CAST(pmod(k, {sent_words}) AS INT) AS tok_no",
+        "token AS mention",
+        "type",
+        *id_cols,
     )

@@ -185,10 +185,10 @@ def build_edges(
     # scorer is row-local codegen over the fanned-out pairs
     pairs, _ = edge_relations(mentions)
     voted = score_and_vote(pairs, cutoff=cutoff)
-    return voted.select(
+    return voted.selectExpr(
         "doc_id",
         "gene_id",
-        F.lit("associated_with").alias("predicate"),
+        "'associated_with' AS predicate",
         "disease_id",
         "g_name",
         "d_name",

@@ -78,3 +78,16 @@ def test_dedup_degenerate_corpus(spark, op, rows, pairs):
     got = sorted(map(tuple, build(docs, threshold=0.0).collect()))
     assert got == _oracle_rows(oracle(threshold=0.0), rows)
     assert {g[:2] for g in got} == pairs
+
+
+def test_ngram_duplicated_doc_id_rows(spark):
+    """A doc_id listed twice is one document, as in the oracle's
+    distinct (doc_id, shingle) relation: no self-pair, and shared
+    shingles and set sizes counted once."""
+    words = [f"w{i}" for i in range(20)]
+    t, t2 = " ".join(words), " ".join(words[:-1] + ["changed"])
+    rows = [(1, t), (1, t), (2, t2)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = sorted(map(tuple, dedup_ngram_jaccard(docs, threshold=0.0).collect()))
+    assert got == _oracle_rows(q_dedup_ngram(threshold=0.0), rows)
+    assert got == [("1", "2", 15, 16, 16, 0.88235)]
