@@ -49,6 +49,7 @@ from renet2_spark.corpus import (
     derive_spans,
     load_documents,
     media_from_spans,
+    sentence_arrays,
     sentences_from_spans,
 )
 from renet2_spark.operators.normalize import canonicalize_mentions
@@ -594,10 +595,9 @@ def q_pair_tensors_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renet2_spark.operators.neural import pair_tensor_digests
 
     _ship_pkg(spark)
-    m = _mentions(spark, sf_dir)
-    sentences = sentences_from_spans(derive_spans(_docs(spark, sf_dir)))
-    pairs = pair_features(m).select("doc_id", "gene_id", "disease_id")
-    d = pair_tensor_digests(pairs, sentences, m)
+    d = pair_tensor_digests(
+        _mentions(spark, sf_dir), sentence_arrays(_docs(spark, sf_dir))
+    )
     row = F.concat_ws("|", "doc_id", "gene_id", "disease_id", "tensor_md5")
     return d.select(row.alias("r")).agg(
         F.count("*").cast("bigint").alias("n_pairs"),

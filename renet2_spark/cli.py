@@ -59,10 +59,6 @@ def cmd_predict(args) -> int:
         out.write.mode("overwrite").parquet(args.output)
     n = out.count()
     out.unpersist()
-    if args.scorer == "neural":
-        from .plans.pipeline import release_pipeline_caches
-
-        release_pipeline_caches()
     print(f"wrote {n} GDA triples to {args.output}")
     return 0
 

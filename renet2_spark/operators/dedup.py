@@ -553,11 +553,10 @@ def repeated_spans(
 
 # persisted generations of the shared shingle-array relation (and
 # _cache_keep intermediates), rotated at the start of each
-# _shared_shingle_arrays call — no persist without release; the neural
-# caches (plans.pipeline._NEURAL_CACHES) follow the same rule. One
-# chain in flight per driver: an overlapping call unpersists the
-# first call's relation, which then loses only the reuse, never
-# correctness.
+# _shared_shingle_arrays call — no persist without release. This is
+# the package's last cache registry. One chain in flight per driver:
+# an overlapping call unpersists the first call's relation, which then
+# loses only the reuse, never correctness.
 _DEDUP_CACHES: list[DataFrame] = []
 
 

@@ -23,10 +23,14 @@ feature-code matrix [S, T], S<=32 sentences, T<=54 tokens; codes
 masking, so results are independent of batching/partitioning.
 
 One encoder: pairs reach the scoring worker grouped per document
-(_doc_payload); the worker maps each doc's sentences through the
-packaged vocabulary (vocab_ids, the only vocabulary lookup) and builds
-the doc's tensors once (_doc_cache_entry); each pair then only flips
-its target codes (_target_feat). build_pair_tensors is that same
+(_doc_payload), built from the flagship's per-doc entity row
+(pairgen.doc_entities + DOC_PAIRS) joined to the doc's sentence
+array, then repartitioned round-robin to a fixed count of tasks: the
+payload is tiny in bytes, so AQE would coalesce a repartition-by-column
+to a couple of scoring tasks. The worker maps each doc's sentences through
+the packaged vocabulary (vocab_ids, the only vocabulary lookup) and
+builds the doc's tensors once (_doc_cache_entry); each pair then only
+flips its target codes (_target_feat). build_pair_tensors is that same
 recode for one pair, and pair_tensor_digests hashes it over the same
 payload, so the frozen encode digest pins the path that scores.
 
@@ -41,7 +45,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..dictionaries import VOCAB_SIZE
@@ -452,45 +455,39 @@ def score_batch(pdf: pd.DataFrame,
     return out  # [B, N]
 
 
-def _doc_payload(
-    pairs: DataFrame, sentences: DataFrame, mentions: DataFrame,
-    sents_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, _pairs, _sents, ments): one row per document with
-    pairs, so each doc's sentences and mentions cross the shuffle and
-    the Arrow boundary ONCE instead of once per pair (~10.7 pairs/doc
-    on the driver corpus; A/B in BENCH.md round 6). `_pairs` holds the
-    doc's pair rows minus doc_id; `_sents` its ordered sentence
-    strings, from `sents_arrays` (doc_id, _sents) when given — e.g.
-    corpus.sentence_arrays, derived row-locally from the text — else
-    by regrouping `sentences`; `ments` its mention coordinates (NULL
-    for a doc without mentions)."""
-    pair_cols = [c for c in pairs.columns if c != "doc_id"]
-    grouped = pairs.groupBy("doc_id").agg(
-        F.collect_list(F.struct(*pair_cols)).alias("_pairs")
+def _doc_payload(mentions: DataFrame, sents_arrays: DataFrame) -> DataFrame:
+    """(doc_id, _pairs, ments, _sents): one row per document, so each
+    doc's sentences and mentions cross the shuffle and the Arrow
+    boundary ONCE instead of once per pair (~10.7 pairs/doc on the
+    driver corpus; A/B in BENCH.md round 6). `_pairs` and `ments` come
+    from the flagship's per-doc entity row (pairgen.doc_entities,
+    DOC_PAIRS): the pairs carry their counts and names, so no lookup
+    join follows. `_sents` is the doc's ordered sentence strings from
+    `sents_arrays` (doc_id, _sents), e.g. corpus.sentence_arrays. A
+    doc without pairs (about 3% of the test corpora's docs) rides
+    along and expands to no rows in the worker: a `size(_pairs) > 0`
+    filter would be pushed below the projection and evaluate
+    DOC_PAIRS twice for every doc.
+
+    The repartition is round-robin to a FIXED count: the rows are few
+    and tiny in bytes but heavy in CPU per row, and AQE coalesces a
+    repartition-by-column exchange of such rows to a couple of
+    partitions, leaving most python workers idle (build_edges_neural
+    at sf0.1 on 4 cores: 2 scoring tasks instead of 8, median of 6
+    builds 11.6 s instead of 7.8 s). AQE never coalesces a
+    repartition to an explicit count. Not (count, doc_id): when the
+    count equals spark.sql.shuffle.partitions, Spark drops that
+    exchange as redundant with doc_entities' and the coalescible one
+    is left; a doc's row needs no particular partition."""
+    from .pairgen import DOC_PAIRS, doc_entities
+
+    nparts = mentions.sparkSession.sparkContext.defaultParallelism * 2
+    return (
+        doc_entities(mentions)
+        .selectExpr("doc_id", f"{DOC_PAIRS} AS _pairs", "ments")
+        .join(sents_arrays.select("doc_id", "_sents"), "doc_id")
+        .repartition(nparts)
     )
-    if sents_arrays is not None:
-        sents_g = sents_arrays.select("doc_id", "_sents")
-    else:
-        sents_g = sentences.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sent_no", "sentence"))),
-                lambda s: s["sentence"],
-            ).alias("_sents")
-        )
-    ments_g = mentions.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct("sent_no", "tok_no", "type", "entity_id")
-        ).alias("ments")
-    )
-    # repartition before the UDF: the rows are few/tiny in BYTES so
-    # AQE coalesces them to ~1 partition, but scoring is heavy in CPU
-    # per row — without this, one python worker scores everything
-    # (measured 24s -> ~2s at sf0.1 on 32 cores)
-    nparts = pairs.sparkSession.sparkContext.defaultParallelism * 2
-    return grouped.join(
-        sents_g.join(ments_g, "doc_id", "left"), "doc_id"
-    ).repartition(nparts)
 
 
 def _expand_pairs(pdf: pd.DataFrame, pair_cols: list[str],
@@ -526,8 +523,7 @@ def tensor_digest(tok: np.ndarray, feat: np.ndarray) -> str:
 
 
 def pair_tensor_digests(
-    pairs: DataFrame, sentences: DataFrame, mentions: DataFrame,
-    max_sents: int = MAX_SENTS,
+    mentions: DataFrame, sents_arrays: DataFrame, max_sents: int = MAX_SENTS,
 ) -> DataFrame:
     """(doc_id, gene_id, disease_id, tensor_md5) — per-pair digest of
     the DETERMINISTIC tensor-encode stage (vocab lookup, entity-index
@@ -538,9 +534,7 @@ def pair_tensor_digests(
     encoder exactly (round-3 verdict next #8: shrink the un-oracled
     neural surface to the forward pass alone)."""
     pair_cols = ["gene_id", "disease_id"]
-    payload = _doc_payload(
-        pairs.select("doc_id", *pair_cols), sentences, mentions
-    )
+    payload = _doc_payload(mentions, sents_arrays)
     schema = (
         "doc_id string, gene_id string, disease_id string, tensor_md5 string"
     )
@@ -565,13 +559,14 @@ def pair_tensor_digests(
 
 
 def neural_score_pairs(
-    pairs: DataFrame, sentences: DataFrame, mentions: DataFrame,
-    max_sents: int = MAX_SENTS, sents_arrays: DataFrame | None = None,
+    mentions: DataFrame, sents_arrays: DataFrame, max_sents: int = MAX_SENTS,
 ) -> DataFrame:
-    """pairs (doc_id, gene_id, disease_id, ...) -> + probs
-    array<double> of the 10-model ensemble; plugs into
-    scorer.ensemble_vote unchanged. max_sents = 32 (abstract mode,
-    default) or MAX_SENTS_FT=400 (full-text mode).
+    """Candidate pairs of `mentions` with their 10-model ensemble
+    probabilities: (doc_id, gene_id, disease_id, n_cooc_sents, n_g,
+    n_d, g_name, d_name, probs array<double>); plugs into
+    scorer.ensemble_vote. `sents_arrays` is (doc_id, _sents
+    array<string>), each doc's ordered sentence strings. max_sents =
+    32 (abstract mode, default) or MAX_SENTS_FT=400 (full-text mode).
 
     Pairs travel grouped per document (_doc_payload); the worker
     re-expands them (_expand_pairs), mapping each doc's sentences
@@ -579,21 +574,15 @@ def neural_score_pairs(
     once per worker process) with vocab_ids, and scores them with
     score_batch. Scores are bitwise independent of how pairs fall into
     batches, since score_batch evaluates every pair at its own doc
-    shape (test_forward_all_bitwise_batch_invariance).
-
-    sents_arrays optionally injects the per-doc sentence arrays
-    directly as (doc_id, _sents array<string>) — e.g.
-    corpus.sentence_arrays on a packed corpus, which derives the
-    array ROW-LOCALLY from the document text instead of regrouping
-    the exploded `sentences` relation (guide §2.4: drops a groupBy
-    shuffle + collect_list re-assembly of the full sentence text).
-    Must equal the grouped form: ordered sentence strings per doc."""
+    shape (test_forward_all_bitwise_batch_invariance)."""
+    payload = _doc_payload(mentions, sents_arrays)
+    pair_fields = payload.schema["_pairs"].dataType.elementType.fields
     out_schema = T.StructType(
-        list(pairs.schema.fields)
-        + [T.StructField("probs", T.ArrayType(T.DoubleType()))]
+        [payload.schema["doc_id"], *pair_fields,
+         T.StructField("probs", T.ArrayType(T.DoubleType()))]
     )
-    pair_cols = [c for c in pairs.columns if c != "doc_id"]
-    out_cols = [f.name for f in out_schema.fields]
+    pair_cols = [f.name for f in pair_fields]
+    out_cols = out_schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from renet2_spark.dictionaries import WORD_INDEX
@@ -613,5 +602,4 @@ def neural_score_pairs(
             out["probs"] = [list(map(float, row)) for row in probs]
             yield out[out_cols]
 
-    payload = _doc_payload(pairs, sentences, mentions, sents_arrays)
     return payload.mapInPandas(run, schema=out_schema)

@@ -17,8 +17,9 @@ shuffle key is (doc_id, sent_no), which is uniformly distributed no
 matter how hot an entity is. This is the explicit skew defusal the
 north_rule asks for: keying fan-out by document, never by entity.
 Entity-keyed aggregations downstream use salted two-phase aggs
-(operators/skew.py). The flagship edge plan (edge_relations) keys
-every step by doc_id alone, so it needs one shuffle in total.
+(operators/skew.py). The edge plans (flagship and neural) key every
+step by doc_id alone, so they share one shuffle: doc_entities builds
+a per-document entity row and DOC_PAIRS derives its pairs in place.
 
 Feature columns for the scorer (document-level evidence, the same
 signals the reference's feature codes 4/5/6 mark per token,
@@ -74,61 +75,64 @@ def doc_pair_candidates(mentions: DataFrame) -> DataFrame:
     )
 
 
-def edge_relations(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(pairs, info) for the flagship edge plan, doc-local after ONE
-    shuffle: every key below starts with doc_id, so the
-    HashPartitioning(doc_id) of the repartition satisfies both
-    aggregations and the plan has no other exchange, no join and no
-    persist (the reference likewise builds candidates one document at
-    a time, sequence_utils.py:255-304).
+def doc_entities(mentions: DataFrame) -> DataFrame:
+    """(doc_id, gs, ds, ments): one row per document after ONE shuffle.
+    Every key below starts with doc_id, so the HashPartitioning(doc_id)
+    of the repartition satisfies both aggregations: no other exchange,
+    no join, no persist (the reference likewise builds candidates one
+    document at a time, sequence_utils.py:255-304).
 
-    info: (doc_id, type, entity_id, n_mentions, name, sents) — one row
-    per entity in a doc, with entity_info's count and sorted-distinct
-    '|'-joined name, plus the set of its sentence numbers.
-    pairs: (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d,
-    g_name, d_name) — the same rows and values as
-    pair_features(mentions) joined to both sides' names. Every non-Gene
-    tag (incl. composites) is on the disease side (reference
-    ann_utils.py:195-207).
-
-    n_cooc_sents = |g.sents & d.sents| is computed INSIDE the
-    generator input and the zero pairs are filtered there: as a
-    projected column, Catalyst would push a downstream predicate on it
-    (the vote cutoff) through the projection and evaluate the
-    intersection once per reference."""
-    info = (
+    gs / ds: the doc's Gene / non-Gene entities (every non-Gene tag,
+    composites included, is on the disease side, reference
+    ann_utils.py:195-207) as struct(id, n, name, sents): entity_info's
+    mention count and sorted-distinct '|'-joined name, plus the set of
+    its sentence numbers. ments: the doc's mention coordinates
+    struct(sent_no, tok_no, type, entity_id), the neural encoder's
+    input. All three are top-level aggregate outputs, so a plan that
+    never reads ments prunes it (and tok_no with it) below the
+    shuffle."""
+    ent = "struct(entity_id AS id, n_mentions AS n, name, sents)"
+    return (
         mentions.repartition("doc_id")
         .groupBy("doc_id", "type", "entity_id")
         .agg(
             F.expr("CAST(count(*) AS INT) AS n_mentions"),
             F.expr("concat_ws('|', sort_array(collect_set(mention))) AS name"),
             F.expr("collect_set(sent_no) AS sents"),
+            F.expr("collect_list(struct(sent_no, tok_no, type, entity_id)) AS ments"),
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.expr(f"collect_list(CASE WHEN type = 'Gene' THEN {ent} END) AS gs"),
+            F.expr(f"collect_list(CASE WHEN NOT (type = 'Gene') THEN {ent} END) AS ds"),
+            F.expr("flatten(collect_list(ments)) AS ments"),
         )
     )
-    ent = "struct(entity_id AS id, n_mentions AS n, name, sents)"
-    per_doc = info.groupBy("doc_id").agg(
-        F.expr(f"collect_list(CASE WHEN type = 'Gene' THEN {ent} END) AS gs"),
-        F.expr(f"collect_list(CASE WHEN NOT (type = 'Gene') THEN {ent} END) AS ds"),
-    )
-    cooc = (
-        "filter(transform(ds, d -> struct(d.id AS id, d.n AS n, d.name AS name,"
-        " size(array_intersect(g.sents, d.sents)) AS c)), p -> p.c > 0)"
-    )
-    pairs = (
-        per_doc.selectExpr("doc_id", "explode(gs) AS g", "ds")
-        .selectExpr("doc_id", "g", f"explode({cooc}) AS d")
-        .selectExpr(
-            "doc_id",
-            "g.id AS gene_id",
-            "d.id AS disease_id",
-            "d.c AS n_cooc_sents",
-            "g.n AS n_g",
-            "d.n AS n_d",
-            "g.name AS g_name",
-            "d.name AS d_name",
-        )
-    )
-    return pairs, info
+
+
+# A doc_entities row's candidate pairs: genes x diseases that share a
+# sentence, as struct(gene_id, disease_id, n_cooc_sents, n_g, n_d,
+# g_name, d_name). n_cooc_sents = |g.sents & d.sents| is computed once
+# per pair and the zero pairs are filtered INSIDE the array: as a
+# projected column, Catalyst would push a downstream predicate on it
+# (the vote cutoff) through the projection and evaluate the
+# intersection once per reference.
+DOC_PAIRS = (
+    "flatten(transform(gs, g -> filter(transform(ds, d -> struct("
+    "g.id AS gene_id, d.id AS disease_id,"
+    " size(array_intersect(g.sents, d.sents)) AS n_cooc_sents,"
+    " g.n AS n_g, d.n AS n_d, g.name AS g_name, d.name AS d_name)),"
+    " p -> p.n_cooc_sents > 0)))"
+)
+
+
+def edge_relations(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(pairs, docs) for the flagship edge plan: docs is
+    doc_entities(mentions), pairs its DOC_PAIRS inlined to
+    (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d, g_name,
+    d_name)."""
+    docs = doc_entities(mentions)
+    return docs.selectExpr("doc_id", f"inline({DOC_PAIRS})"), docs
 
 
 def entity_info(mentions: DataFrame) -> DataFrame:
@@ -146,24 +150,9 @@ def pair_features(
     mentions: DataFrame, info: DataFrame | None = None
 ) -> DataFrame:
     """Candidate pairs + evidence features:
-    (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d).
-
-    Join keys include doc_id, so partitioning stays document-uniform
-    (hot entities do not skew these joins)."""
-    pairs = sentence_pair_candidates(mentions)
-    cnt = info if info is not None else entity_info(mentions)
-    g_cnt = cnt.filter(F.col("type") == "Gene").select(
-        "doc_id", F.col("entity_id").alias("gene_id"), F.col("n_mentions").alias("n_g")
-    )
-    d_cnt = cnt.filter(F.col("type") != "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("disease_id"),
-        F.col("n_mentions").alias("n_d"),
-    )
-    return (
-        pairs.join(g_cnt, ["doc_id", "gene_id"])
-        .join(d_cnt, ["doc_id", "disease_id"])
-        .select(
-            "doc_id", "gene_id", "disease_id", "n_cooc_sents", "n_g", "n_d"
-        )
+    (doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d), a projection
+    of edge_relations. `info` is accepted and ignored: the counts come
+    from the same per-doc row as the pairs."""
+    return edge_relations(mentions)[0].select(
+        "doc_id", "gene_id", "disease_id", "n_cooc_sents", "n_g", "n_d"
     )

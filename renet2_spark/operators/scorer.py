@@ -1,4 +1,4 @@
-"""Deterministic ensemble scorer + vote + edge materialization.
+"""Deterministic ensemble scorer + ensemble vote.
 
 The reference scores every candidate pair with an ensemble of 10
 CNN+BiGRU classifiers, one sequential full pass per model with a TSV
@@ -13,7 +13,7 @@ function of the pair evidence features — fully expressible in ANSI SQL
 so the DuckDB oracle can verify it bit-for-bit (pure IEEE arithmetic,
 no libm). The real neural scorer (NumPy CNN+BiGRU over Arrow batches,
 reference model.py:289-450) lives in operators/neural.py and plugs
-into the same vote/materialize stages.
+into the same vote stage.
 
 Spark-first restructure (SURVEY §4): instead of N passes + N files +
 N-way outer join, all N model scores are computed in ONE row-local
@@ -110,11 +110,14 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.withColumn("probs", probs)
 
 
-def ensemble_vote(scored: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
+def ensemble_vote(
+    scored: DataFrame, cutoff: int = CUTOFF, threshold: float = 0.5
+) -> DataFrame:
     """hit_cnt / prob_avg / prob_X + vote filter (reference
-    predict.py:104-140). prob_X keeps per-model order with ';' join and
+    predict.py:104-140; a model votes when its prob > threshold, 0.5
+    in train.py:564). prob_X keeps per-model order with ';' join and
     5-decimal formatting (predict.py:131-136, format '{:,.5f}')."""
-    hit_cnt = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(0.5)))
+    hit_cnt = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(threshold)))
     prob_avg = F.round(
         F.aggregate(
             F.col("probs"), F.lit(0.0), lambda a, p: a + p
@@ -130,36 +133,4 @@ def ensemble_vote(scored: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
         .withColumn("prob_avg", prob_avg)
         .withColumn("prob_X", prob_x)
         .filter(F.col("hit_cnt") >= F.lit(cutoff))
-    )
-
-
-def attach_names(edges: DataFrame, entity_info: DataFrame) -> DataFrame:
-    """Name attachment (reference predict.py:162-203): join the shared
-    per-(doc, entity) info table, '|'-joined distinct surfaces. The
-    reference keeps first-seen order; distributed execution makes that
-    nondeterministic, so we impose sorted order (documented in
-    SURVEY §7.2d) — comparisons treat names as sets."""
-    g = entity_info.filter(F.col("type") == "Gene").select(
-        "doc_id", F.col("entity_id").alias("gene_id"), F.col("name").alias("g_name")
-    )
-    d = entity_info.filter(F.col("type") != "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("disease_id"),
-        F.col("name").alias("d_name"),
-    )
-    return edges.join(g, ["doc_id", "gene_id"]).join(d, ["doc_id", "disease_id"])
-
-
-def materialize_edges(voted: DataFrame, entity_info: DataFrame) -> DataFrame:
-    """Final triple table (reference gda_rst.tsv 7 columns,
-    predict.py:203-213 / README.md:227-234) + fixed predicate."""
-    return attach_names(voted, entity_info).select(
-        "doc_id",
-        "gene_id",
-        F.lit("associated_with").alias("predicate"),
-        "disease_id",
-        "g_name",
-        "d_name",
-        "prob_avg",
-        "hit_cnt",
     )

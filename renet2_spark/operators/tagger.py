@@ -180,8 +180,9 @@ def tag_multiword(documents: DataFrame, spark: SparkSession,
 
 def verify_mentions(mentions: DataFrame, documents: DataFrame) -> DataFrame:
     """Drop mentions whose doc-text substring mismatches (reference F5,
-    parse_data.py:137-144 / 287-295). Broadcast-joins the doc text in
-    only when verification is requested."""
+    parse_data.py:137-144 / 287-295). Joins the doc text back on
+    doc_id with a plain join (no broadcast hint: the text side is the
+    whole corpus), so the planner picks the strategy by size."""
     docs = documents.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )

@@ -7,13 +7,19 @@ src/renet2/predict.py:338-448) as one declarative DataFrame DAG:
                     zero string allocation)--> raw mentions
     --canonicalize (narrow)--> mentions [optionally materialized as a
                     lineage-tracked stage table via CheckpointStore]
-    --edge_relations: repartition(doc_id) (the ONE shuffle)
+    --doc_entities: repartition(doc_id) (the ONE shuffle)
         --groupBy(doc,type,entity): count, names, sentence set-->
         --groupBy(doc): gene / disease struct lists-->
-        --explode genes x explode diseases, |sentence intersection|
-          filtered > 0 inside the generator--> candidate pairs
+    --inline(DOC_PAIRS): genes x diseases, |sentence intersection|
+          filtered > 0 inside the array--> candidate pairs
     --score_and_vote (row-local codegen, 10 models one pass)--> edges
   mentions --salted two-phase agg--> nodes
+
+The neural edge plan (build_edges_neural) is the same plan down to
+the per-doc entity row, which there also collects the doc's mention
+coordinates: the row joins the doc's sentence array, is repartitioned
+to a fixed count of scoring tasks, and the CNN+BiGRU ensemble scores
+its DOC_PAIRS in a Python worker before the shared ensemble_vote.
 
 Every shuffle is keyed by doc_id — document-uniform, so hot entities
 (the 'join' gene appears in ~77% of docs) never skew a partition.
@@ -27,11 +33,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..corpus import load_documents, sentences_direct
-from ..operators.normalize import canonicalize_mentions
-from ..operators.pairgen import pair_features
-from ..operators.scorer import CUTOFF, materialize_edges
-from ..operators.tagger import tag_mentions
+from ..corpus import load_documents
+from ..operators.scorer import CUTOFF
+
+# the edge table (reference gda_rst.tsv columns, predict.py:203-213 /
+# README.md:227-234) with its fixed predicate
+_EDGE_COLUMNS = (
+    "doc_id",
+    "gene_id",
+    "'associated_with' AS predicate",
+    "disease_id",
+    "g_name",
+    "d_name",
+    "prob_avg",
+    "hit_cnt",
+)
 
 
 def probe_corpus_contract_info(
@@ -181,20 +197,10 @@ def build_edges(
         mentions = store.run_stage("mentions", mentions, lambda df: df)
     # doc-local plan: ONE shuffle (repartition by doc_id) serves the
     # per-entity and per-doc aggregations, the gene x disease fan-out
-    # is a nested explode, so there is no join and no persist; the
+    # is one inline of DOC_PAIRS, so there is no join and no persist; the
     # scorer is row-local codegen over the fanned-out pairs
     pairs, _ = edge_relations(mentions)
-    voted = score_and_vote(pairs, cutoff=cutoff)
-    return voted.selectExpr(
-        "doc_id",
-        "gene_id",
-        "'associated_with' AS predicate",
-        "disease_id",
-        "g_name",
-        "d_name",
-        "prob_avg",
-        "hit_cnt",
-    )
+    return score_and_vote(pairs, cutoff=cutoff).selectExpr(*_EDGE_COLUMNS)
 
 
 def build_nodes(
@@ -222,28 +228,6 @@ def build_nodes(
     )
 
 
-_NEURAL_CACHES: list = []
-
-
-def release_pipeline_caches() -> None:
-    """Unpersist the DataFrames build_edges_neural caches (round-2
-    verdict #8: persist without unpersist leaks BlockManager memory in
-    a long-lived session). Rotated automatically at the start of each
-    build_edges_neural call, so a session holds at most one
-    generation of caches; hosts that trigger the action themselves
-    (CLI predict) call it explicitly once the action completes."""
-    while _NEURAL_CACHES:
-        try:
-            _NEURAL_CACHES.pop().unpersist()
-        except Exception:
-            pass  # cache belonged to an already-stopped session
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    _NEURAL_CACHES.append(df.persist())
-    return df
-
-
 def build_edges_neural(
     spark: SparkSession,
     documents: DataFrame,
@@ -256,93 +240,55 @@ def build_edges_neural(
     instead of the deterministic scorer; vote semantics identical
     (reference predict.py:104-140, threshold 0.5 train.py:564).
 
-    Corpus routing mirrors build_mentions: on a packed (contract)
-    corpus, sentences come from the arithmetic window derivation; on
-    raw punctuated text they come from the parity splitter+tokenizer,
-    NORMALIZED back to space-joined token strings so the downstream
-    tensor encoder's whitespace tokenization sees the real token
-    stream, with mention tok_no coordinates from the raw tagger.
+    The flagship plan down to the pairs: build_mentions, then the same
+    per-doc entity row (pairgen.doc_entities), which also collects each
+    doc's mention coordinates; that row joins the doc's sentence array
+    and feeds the scorer, then scorer.ensemble_vote. No persist, and no
+    join besides the sentence array's.
+
+    Sentence arrays: on a packed (contract) corpus they derive
+    row-locally from the text (corpus.sentence_arrays); on raw
+    punctuated text they are the parity splitter+tokenizer's token
+    stream, re-joined with spaces per sentence so the encoder's
+    whitespace split sees the real tokens, in the raw tagger's tok_no
+    coordinates.
 
     mode selects the reference input shape (predict.py:291-294:
     "recommend [for abs 32, for ft 400]"): 'abs' caps documents at 32
     sentences, 'ft' (full-text) at 400."""
     from ..operators.neural import MAX_SENTS, MAX_SENTS_FT, neural_score_pairs
-    from ..operators.pairgen import entity_info
-    from ..operators.scorer import N_MODELS
+    from ..operators.scorer import ensemble_vote
 
     if mode not in ("abs", "ft"):
         raise ValueError(f"mode must be abs|ft, got {mode!r}")
     max_sents = MAX_SENTS_FT if mode == "ft" else MAX_SENTS
-    release_pipeline_caches()
     if corpus == "auto":
         corpus = "packed" if probe_corpus_contract(documents) else "raw"
-    # NOTE (r7): a head ingest_parallelism_floor was A/B'd here
-    # (interleaved, same session, sf0.1): plain 3.27s vs floored
-    # 4.07s — the repartition exchange costs more than the serialized
-    # single-task cache builds it parallelizes, consistent with the r6
-    # flagship-chain A/B. The plain scan stays.
-    sents_arrays = None
+    mentions = build_mentions(spark, documents, corpus=corpus)
     if corpus == "packed":
-        # the doc payload's sentence arrays derive ROW-LOCALLY from
-        # the text (corpus.sentence_arrays) instead of regrouping the
-        # exploded sentences — that leaves the tagger as the exploded
-        # relation's ONLY consumer, so the sentences persist (and its
-        # serial cache-materialization stage) goes too (r7, guide
-        # §2.4; A/B in OPTIMIZATION_r07.md)
         from ..corpus import sentence_arrays
 
-        sentences = sentences_direct(documents)
         sents_arrays = sentence_arrays(documents)
-        # with_offsets=False: this chain keys everything by
-        # sent_no/tok_no — skip the per-mention char-offset prefix
-        # build (guide §2.3: don't compute what you throw away)
-        mentions = _cache(
-            canonicalize_mentions(
-                tag_mentions(sentences, spark, with_offsets=False)
-            )
-        )
     else:
-        from ..operators.tagger import tag_mentions_raw, tokenize_raw_sentences
         from ..functions.text import sentences_from_raw_text
+        from ..operators.tagger import tokenize_raw_sentences
 
-        toks = _cache(
-            tokenize_raw_sentences(sentences_from_raw_text(documents))
+        toks = tokenize_raw_sentences(sentences_from_raw_text(documents))
+        sents_arrays = (
+            toks.groupBy("doc_id", "sent_no")
+            .agg(F.expr(
+                "array_join(transform(array_sort(collect_list("
+                "struct(tok_no, token))), t -> t.token), ' ') AS sentence"
+            ))
+            .groupBy("doc_id")
+            .agg(F.expr(
+                "transform(array_sort(collect_list(struct(sent_no, sentence))),"
+                " s -> s.sentence) AS _sents"
+            ))
         )
-        sentences = toks.groupBy("doc_id", "sent_no").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("tok_no", "token"))
-                    ),
-                    lambda s: s["token"],
-                ),
-                " ",
-            ).alias("sentence"),
-            F.lit("paragraph").alias("kind"),
-            F.min("start").cast("int").alias("offset"),
-        ).select("doc_id", "sent_no", "kind", "sentence", "offset")
-        mentions = _cache(
-            canonicalize_mentions(
-                tag_mentions_raw(documents, spark).drop("start", "end")
-            )
-        )
-    info = _cache(entity_info(mentions))
-    pairs = pair_features(mentions, info=info)
-    scored = neural_score_pairs(pairs, sentences, mentions,
-                                max_sents=max_sents,
-                                sents_arrays=sents_arrays)
-    hit = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(threshold)))
-    prob_avg = F.round(
-        F.aggregate(F.col("probs"), F.lit(0.0), lambda a, p: a + p)
-        / F.lit(float(N_MODELS)),
-        5,
-    )
-    voted = (
-        scored.withColumn("hit_cnt", hit.cast("int"))
-        .withColumn("prob_avg", prob_avg)
-        .filter(F.col("hit_cnt") >= F.lit(cutoff))
-    )
-    return materialize_edges(voted, info)
+    scored = neural_score_pairs(mentions, sents_arrays, max_sents=max_sents)
+    voted = ensemble_vote(scored, cutoff=cutoff, threshold=threshold)
+    return voted.selectExpr(*_EDGE_COLUMNS)
 
 
 def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,9 +50,9 @@ def test_build_edges_neural_config_matrix(spark, name):
 
 
 def test_build_edges_neural_concurrent_builds(spark):
-    """Two neural builds at once: each build's start unpersists the
-    other's caches (_NEURAL_CACHES rotation), which may cost reuse but
-    must not change either result."""
+    """Two neural builds running at once in one session must not
+    disturb each other (no shared cache registry on the neural path
+    either)."""
     def build():
         return compare(
             run_neural(spark, SF_SMOKE), q_edges_neural_golden(), SF_SMOKE

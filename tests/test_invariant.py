@@ -1,6 +1,7 @@
 """Per-row invariant (BASELINE input_hint): span-sequence equality on
 (kind, text, media_ref, order) preserved through every stage."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from renet2_spark.corpus import (
@@ -156,6 +157,38 @@ def test_fused_dict_equals_runtime_fusion(spark):
     assert a == b and len(a) > 0
     # the joint surface actually fused
     assert any(t[4] == "Gene-Disease" for t in a)
+
+
+@pytest.mark.parametrize("corpus", ["packed", "raw", "raw_messy"])
+def test_build_mentions_equals_unfused_chain(spark, corpus):
+    """build_mentions (fused dictionary) yields exactly the mention rows
+    of the unfused tag -> canonicalize chain, on the packed corpus and
+    on both raw twins: the base dictionary has no joint surface, so
+    fusion only folds canonicalization in. The neural edge plan, which
+    used the unfused chain, shares build_mentions with the flagship on
+    the strength of this equality."""
+    from renet2_spark.corpus import (
+        raw_text_twin,
+        raw_text_twin_messy,
+        sentences_direct,
+    )
+    from renet2_spark.operators.normalize import canonicalize_mentions
+    from renet2_spark.operators.tagger import tag_mentions, tag_mentions_raw
+    from renet2_spark.plans.pipeline import build_mentions
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    if corpus == "packed":
+        unfused = tag_mentions(sentences_direct(docs), spark, with_offsets=False)
+    else:
+        docs = (raw_text_twin if corpus == "raw" else raw_text_twin_messy)(docs)
+        unfused = tag_mentions_raw(docs, spark).drop("start", "end")
+    cols = ["doc_id", "sent_no", "tok_no", "mention", "type", "entity_id"]
+    want = canonicalize_mentions(unfused).select(*cols)
+    got = build_mentions(
+        spark, docs, corpus="packed" if corpus == "packed" else "raw"
+    ).select(*cols)
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_ingest_parallelism_floor_semantics(spark):

@@ -188,14 +188,13 @@ def test_vocab_ids_large_vocab_equals_dict_get():
 
 def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
     """An unknown mode raises before anything is persisted or probed."""
-    from renet2_spark.plans import pipeline
-
-    pipeline.release_pipeline_caches()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    base = persistent().size()
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     for corpus in ("packed", "auto"):
         with pytest.raises(ValueError, match="mode"):
             build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
-        assert pipeline._NEURAL_CACHES == []
+        assert persistent().size() == base
 
 
 def test_fulltext_mode_tensor_shape():
@@ -234,12 +233,9 @@ def test_fulltext_mode_end_to_end(spark):
     """Both modes must run the full neural pipeline; on this corpus
     (max 32-sentence docs at smoke scale? -> verify dynamically) ft
     widens or preserves evidence, never loses it."""
-    from renet2_spark.plans.pipeline import build_edges_neural, release_pipeline_caches
-
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     abs_rows = build_edges_neural(spark, docs, mode="abs").count()
     ft_rows = build_edges_neural(spark, docs, mode="ft").count()
-    release_pipeline_caches()
     assert abs_rows > 0 and ft_rows > 0
 
 
@@ -535,10 +531,10 @@ def test_scale_fingerprints_match_testdata(sf):
 
 
 def test_sentence_arrays_matches_grouped(spark):
-    """corpus.sentence_arrays (the r7 row-local doc-payload build the
-    packed neural chain injects via neural_score_pairs(sents_arrays=))
-    must equal regrouping sentences_direct's exploded relation per doc
-    — same strings, same order — including the degenerate shapes:
+    """corpus.sentence_arrays (the row-local sentence arrays the packed
+    neural chain passes to neural_score_pairs) must equal regrouping
+    sentences_direct's exploded relation per doc — same strings, same
+    order — including the degenerate shapes:
     empty text (split('', ' ') = ['']), one word, exact 10/11-word
     boundaries, repeated spaces (empty words), a many-sentence doc and
     NULL text."""

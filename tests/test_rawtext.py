@@ -354,17 +354,12 @@ def test_cli_predict_routes_raw_on_variable_corpus(spark):
 
 def test_no_leaked_caches_after_pipeline_queries(spark):
     """Round-2 verdict #8: driver queries must not leak persisted RDDs.
-    build_nodes no longer persists; build_edges_neural's caches are
-    released by release_pipeline_caches (and rotated per call)."""
+    Neither build_nodes nor build_edges_neural persists anything."""
     docs = load_documents(spark, SF_SMOKE)
-    # drop any generation left by earlier tests before snapshotting
-    pipeline.release_pipeline_caches()
     base = spark.sparkContext._jsc.getPersistentRDDs().size()
     pipeline.build_nodes(spark, docs).collect()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
     pipeline.build_edges_neural(spark, docs).count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > base
-    pipeline.release_pipeline_caches()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
 
 
@@ -378,7 +373,6 @@ def test_neural_raw_corpus_routing(spark):
     docs = _var_df(spark)
     edges = pipeline.build_edges_neural(spark, docs, cutoff=1, corpus="auto")
     rows = edges.collect()
-    pipeline.release_pipeline_caches()
     assert len(rows) > 0
     pairs = {(r["gene_id"], r["disease_id"]) for r in rows}
     # doc 1's (scan, slow) co-occurs in all three sentences
