@@ -110,14 +110,12 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.withColumn("probs", probs)
 
 
-def ensemble_vote(
-    scored: DataFrame, cutoff: int = CUTOFF, threshold: float = 0.5
-) -> DataFrame:
+def ensemble_vote(scored: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
     """hit_cnt / prob_avg / prob_X + vote filter (reference
-    predict.py:104-140; a model votes when its prob > threshold, 0.5
-    in train.py:564). prob_X keeps per-model order with ';' join and
+    predict.py:104-140; a model votes when its prob > 0.5,
+    train.py:564). prob_X keeps per-model order with ';' join and
     5-decimal formatting (predict.py:131-136, format '{:,.5f}')."""
-    hit_cnt = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(threshold)))
+    hit_cnt = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(0.5)))
     prob_avg = F.round(
         F.aggregate(
             F.col("probs"), F.lit(0.0), lambda a, p: a + p

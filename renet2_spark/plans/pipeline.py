@@ -232,7 +232,6 @@ def build_edges_neural(
     spark: SparkSession,
     documents: DataFrame,
     cutoff: int = CUTOFF,
-    threshold: float = 0.5,
     corpus: str = "auto",
     mode: str = "abs",
 ) -> DataFrame:
@@ -287,7 +286,7 @@ def build_edges_neural(
             ))
         )
     scored = neural_score_pairs(mentions, sents_arrays, max_sents=max_sents)
-    voted = ensemble_vote(scored, cutoff=cutoff, threshold=threshold)
+    voted = ensemble_vote(scored, cutoff=cutoff)
     return voted.selectExpr(*_EDGE_COLUMNS)
 
 

@@ -187,14 +187,26 @@ def test_vocab_ids_large_vocab_equals_dict_get():
 
 
 def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
-    """An unknown mode raises before anything is persisted or probed."""
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    base = persistent().size()
+    """An unknown mode raises before any job runs: with corpus='auto'
+    the mode check precedes the corpus probe job. The probe run on its
+    own under a second job group shows that a job would be seen."""
+    from renet2_spark.plans.pipeline import probe_corpus_contract
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    for corpus in ("packed", "auto"):
-        with pytest.raises(ValueError, match="mode"):
-            build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
-        assert persistent().size() == base
+    try:
+        sc.setJobGroup("neural-bad-mode", "build_edges_neural mode check")
+        for corpus in ("packed", "auto"):
+            with pytest.raises(ValueError, match="mode"):
+                build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
+        assert tracker.getJobIdsForGroup("neural-bad-mode") == []
+        sc.setJobGroup("neural-probe", "corpus probe")
+        probe_corpus_contract(docs)
+        assert tracker.getJobIdsForGroup("neural-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_fulltext_mode_tensor_shape():

@@ -105,7 +105,9 @@ def test_flagship_edge_plan_is_one_shuffle(spark):
     repartition(doc_id) exchange serves both aggregations, with no
     shuffled join and no persist. The sentence intersection appears
     once (inside the generator input) — the vote cutoff must not be
-    inlined into it."""
+    inlined into it. doc_entities also aggregates the neural encoder's
+    mention coordinates (ments); this plan must prune that aggregate,
+    and tok_no with it, so neither crosses the doc_id shuffle."""
     from renet2_spark.plans.pipeline import build_edges
 
     # a build earlier in the session may have cached an identical
@@ -122,6 +124,8 @@ def test_flagship_edge_plan_is_one_shuffle(spark):
     assert "InMemoryTableScan" not in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert optimized.count("array_intersect") == 1
+    for text in (optimized, plan):
+        assert not re.search(r"\b(ments|tok_no)#", text), text
 
 
 def test_neural_edge_plan_is_flagship_plan_plus_scorer(spark):
