@@ -643,11 +643,11 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     'pairwise' is the keep-smallest-of-each-pair rule, rule='cc' keeps
     one representative per transitive near-dup connected component —
     the star-structure divergence between them is part of the hashed
-    surface. ONE persisted shingle-array relation feeds both rules
-    (the CC propagation rounds materialize it; the pairwise branch
-    reuses it — the shingle pass would otherwise run twice)."""
+    surface. ONE shingle-array relation feeds both rules: it is
+    localCheckpointed, like the CC propagation rounds, so the shingle
+    pass runs once and the relation lives as long as the result."""
     docs = _docs(spark, sf_dir)
-    sh = dd._shared_shingle_arrays(docs)
+    sh = dd.doc_shingle_arrays(docs).localCheckpoint()
     a = dd.dedup_survivors(docs, shingles=sh).withColumn(
         "rule", F.lit("pairwise")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 
@@ -48,7 +49,9 @@ def cmd_predict(args) -> int:
         "d_name",
         "prob_avg",
     )
-    out = out.persist()  # one pipeline compute for write + count
+    # the row count rides the write as an in-pass metric: one job, no cache
+    written = Observation("predict")
+    out = out.observe(written, F.count(F.lit(1)).alias("n"))
     if args.format == "tsv":
         # coalesce(1): reference-parity single gda_rst.tsv file only —
         # the parquet path keeps natural partitioning
@@ -57,9 +60,7 @@ def cmd_predict(args) -> int:
         ).csv(args.output)
     else:
         out.write.mode("overwrite").parquet(args.output)
-    n = out.count()
-    out.unpersist()
-    print(f"wrote {n} GDA triples to {args.output}")
+    print(f"wrote {written.get['n']} GDA triples to {args.output}")
     return 0
 
 

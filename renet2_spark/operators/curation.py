@@ -45,7 +45,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .dedup import NGRAM, doc_shingle_arrays, doc_shingles
+from .dedup import (
+    NGRAM,
+    checkpointer,
+    dedup_components,
+    doc_shingle_arrays,
+    doc_shingles,
+)
 
 PACK_BUDGET = 256  # tokens per packed context window
 
@@ -347,15 +353,15 @@ def curation_pipeline(
     are doc_id-keyed semi/anti joins (document-uniform, no skew).
 
     Shared shingle pass (r4 verdict #2): the quality-gated corpus is
-    shingled ONCE into the persisted per-doc shingle-array relation
-    (dedup._shared_shingle_arrays) that feeds BOTH the CC-dedup stage
-    and the decontamination stage (the decon side narrows it to dedup
-    survivors with a doc_id semi-join) — at the 100 TB target the
-    shingle pass is the chain's dominant cost and used to run twice.
-    The persisted generation is rotated per call by the dedup cache
-    registry (dedup.release_dedup_caches)."""
+    shingled ONCE into the per-doc shingle-array relation that feeds
+    BOTH the CC-dedup stage and the decontamination stage (the decon
+    side narrows it to dedup survivors with a doc_id semi-join) — at
+    the 100 TB target the shingle pass is the chain's dominant cost and
+    used to run twice. The relation goes through the same checkpoint as
+    the CC label rounds (dedup.checkpointer: local, or reliable with
+    reliable_checkpoint=True), so it is materialized once while the
+    chain is built and lives as long as the returned DataFrame."""
     from ..functions.textstats import quality_score_col
-    from .dedup import _shared_shingle_arrays, dedup_components
 
     # tolerate minimal (doc_id, text) corpora: lang/source are only
     # carried through (source keys the packing; single default source
@@ -382,10 +388,10 @@ def curation_pipeline(
         base = base.withColumn("text", pii_mask_col())
     d1 = base.filter(quality_score_col() >= F.lit(min_quality))
     # ONE shingle build over the quality-gated corpus, shared by the
-    # dedup and decontamination stages (dedup_components runs actions
-    # during its label-propagation loop, so the persisted relation is
-    # materialized before the decon branch is even constructed)
-    sh1 = _shared_shingle_arrays(d1)
+    # dedup and decontamination stages (dedup_components runs jobs
+    # while it is built anyway)
+    ckpt = checkpointer(d1.sparkSession, reliable_checkpoint)
+    sh1 = ckpt(doc_shingle_arrays(d1))
     dup_losers = (
         dedup_components(
             d1, shingles=sh1, reliable_checkpoint=reliable_checkpoint

@@ -16,19 +16,24 @@ the `text` column:
 * simhash          — 64-bit sign-of-sum signature over token hashes
 
 The near-dup operators share one pipeline: block -> purge -> candidate
-pairs -> verify (SparkER). `blocked_pairs` is the blocking primitive
-(hot-bucket cap, sorted-member fan-out, distinct); minhash uses it
-here and the embedding LSH in `operators.similarity` uses it too.
+pairs -> verify (SparkER). `_bucket_pairs` is the blocking primitive
+(hot-bucket cap, sorted member-set fan-out): minhash keeps one row per
+pair across bands itself, carrying the pair's shared shingles, and
+`blocked_pairs` adds a distinct for the embedding LSH in
+`operators.similarity`.
 Jaccard's shingle blocks share its fan-out (`_member_pairs`) but purge
 by document frequency, since the oracle drops a whole over-cap shingle.
 Embedding-cosine dedup and ANN search live in `operators.similarity`.
 
 Every shingle consumer reads one relation, the per-doc distinct
 shingle array with its size: (doc_id, shingles, n_sh)
-(`doc_shingle_arrays`). Minhash persists it once per query
-(`_shared_shingle_arrays`), since its signatures and its verify both
-read it; jaccard reads it once and carries n_sh in its inverted index,
-so it persists nothing.
+(`doc_shingle_arrays`). Neither operator persists it: as in SparkER, a
+block carries its profiles' data. Jaccard's inverted index carries
+n_sh; minhash's band buckets carry the whole (doc_id, shingles, n_sh)
+row, so its verify needs no lookup join. A chain that feeds one
+relation to several stages (curation_pipeline, the survivor rules)
+passes it through a checkpoint (`checkpointer`), which lives as long
+as the DataFrame that reads it.
 
 Hash choice: md5 (not xxhash/murmur) so every stage is reproducible
 in ANSI SQL by the DuckDB oracle — at production scale swap in
@@ -124,11 +129,10 @@ def doc_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     shingle construction (split + per-gram array_join string building)
     is the single most expensive narrow pass in the dedup family (r7
     stage profile: 7-18 task-s per pass at sf0.1); one row per doc is
-    far cheaper to persist than the exploded index, and each consumer
-    derives its view (explode / n_sh) from one build. n_sh is its own
-    column because the columnar cache prunes unread columns: set-size
-    consumers read the int instead of decoding the arrays (measured
-    ~3 task-s per pass at sf0.1)."""
+    far cheaper to carry or checkpoint than the exploded index, and
+    each consumer derives its view (explode / n_sh) from one build.
+    n_sh is its own column so set-size consumers read the int instead
+    of the arrays."""
     return documents.selectExpr(
         "CAST(doc_id AS STRING) AS doc_id", f"{_shingle_arr(n)} AS shingles"
     ).selectExpr("*", "CAST(size(shingles) AS INT) AS n_sh")
@@ -184,6 +188,22 @@ def _member_pairs(members: DataFrame) -> DataFrame:
     )
 
 
+def _bucket_pairs(
+    keys: DataFrame, bucket_cols: list[str], id_col: str, max_bucket_size: int | None
+) -> DataFrame:
+    """(doc_a, doc_b), one row per pair of `id_col` values per shared
+    bucket: the optional hot-bucket cap (cap_hot_buckets, lowest ids
+    kept; None disables it), one collect_set per bucket and the
+    row-local sorted fan-out (_member_pairs). A member listed twice in
+    a bucket is one member, so no self-pair fans out. No bucket
+    self-join; the cap's window and the grouping share one exchange."""
+    if max_bucket_size is not None:
+        keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
+    return _member_pairs(
+        keys.groupBy(*bucket_cols).agg(F.expr(f"collect_set({id_col}) AS ds"))
+    )
+
+
 def blocked_pairs(
     keys: DataFrame,
     bucket_cols: list[str],
@@ -191,18 +211,10 @@ def blocked_pairs(
     max_bucket_size: int | None = MAX_LSH_BUCKET,
 ) -> DataFrame:
     """(doc_a, doc_b) with doc_a < doc_b for every pair of `id_col`
-    values sharing any bucket of `keys` — the one blocking primitive of
-    the LSH family (SparkER's block -> purge -> candidates): the
-    optional hot-bucket cap (cap_hot_buckets, lowest ids kept; None
-    disables it), one collect_list per bucket, the row-local sorted
-    fan-out (_member_pairs) and a distinct across buckets. No bucket
-    self-join; the cap's window and the grouping share one exchange.
-    Ids compare in their own type, so integer ids sort numerically."""
-    if max_bucket_size is not None:
-        keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
-    return _member_pairs(
-        keys.groupBy(*bucket_cols).agg(F.expr(f"collect_list({id_col}) AS ds"))
-    ).distinct()
+    values sharing any bucket of `keys` (SparkER's block -> purge ->
+    candidates): _bucket_pairs, then a distinct across buckets. Ids
+    compare in their own type, so integer ids sort numerically."""
+    return _bucket_pairs(keys, bucket_cols, id_col, max_bucket_size).distinct()
 
 
 def _with_jaccard(common: DataFrame) -> DataFrame:
@@ -348,41 +360,50 @@ def dedup_minhash_lsh(
     N near-identical docs fans out O(cap^2) pairs per band, not O(N^2)
     (round-2 verdict finding #2).
 
-    Doc-local plan over ONE persisted relation, the per-doc shingle
-    arrays (_shared_shingle_arrays):
+    Doc-local plan over the per-doc shingle arrays (doc_shingle_arrays,
+    unpersisted); each band key carries its doc's whole row
+    (doc_id, shingles, n_sh), as a SparkER block carries its profiles:
       * signature — row-local (_row_local_signatures);
-      * block — band keys into blocked_pairs: the hot-bucket cap, then
-        each bucket's sorted member list fans out its pairs i < j
-        row-locally (no bucket self-join; the cap's window and the
-        member grouping share one exchange on the bucket key), distinct
-        across bands;
-      * verify — each candidate pair carries both docs' shingle arrays;
-        their exploded array_intersect, minus NULL shingles and minus
-        shingles over the df cap (broadcast anti-join: that set has at
-        most total_shingle_rows / cap rows; the SAME cap as the exact
-        path — round-2 advice), is counted per pair. A pair
+      * block — _bucket_pairs over the band keys (hot-bucket cap, then
+        each bucket's sorted member SET fans out its pairs i < j; an
+        identical duplicated row is one member);
+      * verify — each fanned-out pair intersects its two shingle arrays
+        and one row per pair is kept across bands. The shared shingles,
+        minus NULL and minus shingles over the df cap (broadcast
+        anti-join: that set has at most total_shingle_rows / cap rows;
+        the SAME cap as the exact path), are counted per pair. A pair
         with no capped shared shingle emits no row, as the oracle's
-        inner join drops it. Set sizes are the cached n_sh column.
-    Verification is candidate-restricted by construction: only
-    candidate pairs ever fetch shingles, and no shingle-keyed join over
-    the corpus exists. Jaccard arithmetic (capped n_common / uncapped
-    n_a, n_b) matches the exact path and the DuckDB oracle. The
-    non-adaptive plan shuffles three times: bucket key, candidate pair
-    and shingle df (guarded by test_minhash_plan_is_doc_local)."""
-    sh_arr = _shared_shingle_arrays(documents)
-    keys = lsh_band_keys(_row_local_signatures(sh_arr))
-    cand = blocked_pairs(keys, ["band", "band_key"], "doc_id", max_bucket_size)
-    shared = (
-        cand.join(sh_arr.toDF("doc_a", "sa", "n_a"), "doc_a")
-        .join(sh_arr.toDF("doc_b", "sb", "n_b"), "doc_b")
+        inner join drops it.
+    Only candidate pairs ever meet each other's shingles, and the df
+    anti-join is the only join. Jaccard arithmetic (capped n_common /
+    uncapped n_a, n_b) matches the exact path and the DuckDB oracle.
+    The non-adaptive plan shuffles three times: bucket key, candidate
+    pair and shingle df (guarded by test_minhash_plan_is_doc_local)."""
+    sh_arr = doc_shingle_arrays(documents)
+    # the member row rides under the id's name through the signature
+    # and band-key projections
+    docs = sh_arr.selectExpr("struct(doc_id, shingles, n_sh) AS doc_id", "shingles")
+    keys = lsh_band_keys(_row_local_signatures(docs))
+    cand = (
+        _bucket_pairs(keys, ["band", "band_key"], "doc_id", max_bucket_size)
         .selectExpr(
-            "doc_a", "doc_b", "n_a", "n_b", "explode(array_intersect(sa, sb)) AS shingle"
+            "doc_a.doc_id AS doc_a",
+            "doc_b.doc_id AS doc_b",
+            "doc_a.n_sh AS n_a",
+            "doc_b.n_sh AS n_b",
+            "array_intersect(doc_a.shingles, doc_b.shingles) AS shared",
         )
-        .where("shingle IS NOT NULL")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
+    shared = cand.selectExpr(
+        "doc_a", "doc_b", "n_a", "n_b", "explode(shared) AS shingle"
+    ).where("shingle IS NOT NULL")
     if max_shingle_docs is not None:
+        # explode_outer, as in dedup_ngram_jaccard: an inner explode
+        # would build this branch's arrays twice
         dropped = (
-            sh_arr.selectExpr("explode(shingles) AS shingle")
+            sh_arr.selectExpr("explode_outer(shingles) AS shingle")
+            .where("shingle IS NOT NULL")
             .groupBy("shingle")
             .count()
             .where(f"`count` > {max_shingle_docs}")
@@ -551,45 +572,36 @@ def repeated_spans(
     ).drop("_grp")
 
 
-# persisted generations of the shared shingle-array relation (and
-# _cache_keep intermediates), rotated at the start of each
-# _shared_shingle_arrays call — no persist without release. This is
-# the package's last cache registry. One chain in flight per driver:
-# an overlapping call unpersists the first call's relation, which then
-# loses only the reuse, never correctness.
-_DEDUP_CACHES: list[DataFrame] = []
-
-
-def release_dedup_caches() -> None:
-    while _DEDUP_CACHES:
-        try:
-            _DEDUP_CACHES.pop().unpersist()
-        except Exception:
-            pass  # cache belonged to an already-stopped session
-
-
 def _shared_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
-    """Rotated persisted doc_shingle_arrays relation — the one shingle
-    build that several consumers of one query share (minhash's
-    signatures and verify, a curation chain's dedup and decontamination
-    stages, both survivor rules, which pass it to jaccard through
-    `shingles=`). Jaccard alone does not read it: it reads its input
-    once. Materialized by the first action and reused by every later
-    consumer."""
-    release_dedup_caches()
-    df = doc_shingle_arrays(documents, n).persist()
-    _DEDUP_CACHES.append(df)
-    return df
+    """doc_shingle_arrays, unpersisted. Exists only for the traced plan
+    prefixes in perfbench/workloads.py and goes with the next change to
+    the benchmark; no operator calls it."""
+    return doc_shingle_arrays(documents, n)
 
 
 def _cache_keep(df: DataFrame) -> DataFrame:
-    """Persist WITHOUT rotating the registry — for small intermediates
-    of a chain whose head already rotated (_shared_shingle_arrays; the
-    traced plan prefixes in perfbench/workloads.py use it); released
-    together with it on the next rotation."""
-    df = df.persist()
-    _DEDUP_CACHES.append(df)
+    """`df` unchanged. Exists only for the traced plan prefixes in
+    perfbench/workloads.py and goes with the next change to the
+    benchmark; no operator calls it."""
     return df
+
+
+def checkpointer(spark, reliable: bool):
+    """The lineage-truncating materialization a multi-job chain uses:
+    `localCheckpoint()` (blocks on the executors: fastest, but an
+    executor loss kills the job) or, with reliable=True, `checkpoint()`
+    through the session's checkpoint dir (sparkContext.setCheckpointDir
+    — an HDFS/object-store path in production; raises up front if none
+    is configured). Both are eager, and the materialized relation lives
+    as long as the DataFrame that reads it: no registry, no release."""
+    if not reliable:
+        return lambda df: df.localCheckpoint()
+    if spark.sparkContext.getCheckpointDir() is None:
+        raise RuntimeError(
+            "reliable_checkpoint=True needs "
+            "sparkContext.setCheckpointDir(<fault-tolerant path>)"
+        )
+    return lambda df: df.checkpoint()
 
 
 CC_MAX_ITERS = 50
@@ -624,29 +636,16 @@ def dedup_components(
     truncate the iterative lineage (no exponential plan growth); the
     edge relation is persisted once and reused every round.
 
-    Checkpoint durability (r4 verdict #3): the default localCheckpoint
-    stores blocks on EXECUTORS — fastest, fine on local[...], but an
-    executor loss mid-iteration kills the job on a real cluster (the
-    truncated lineage cannot be recomputed). For cluster deployments
-    pass reliable_checkpoint=True to write each round's labels through
-    the session's checkpoint dir (sparkContext.setCheckpointDir — an
-    HDFS/object-store path in production) via reliable .checkpoint();
-    raises up front if no checkpoint dir is configured. Results are
+    Checkpoint durability (r4 verdict #3): each round goes through
+    `checkpointer` — localCheckpoint by default, fine on local[...];
+    for cluster deployments pass reliable_checkpoint=True to write each
+    round's labels through the session's checkpoint dir. Results are
     identical either way (asserted by
     test_dedup_components_reliable_checkpoint_matches).
 
     `shingles` forwards to dedup_ngram_jaccard (shared-pass hook —
     r4 verdict #2)."""
-    if reliable_checkpoint:
-        sc = documents.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise RuntimeError(
-                "dedup_components(reliable_checkpoint=True) needs "
-                "sparkContext.setCheckpointDir(<fault-tolerant path>)"
-            )
-        _ckpt = lambda df: df.checkpoint()
-    else:
-        _ckpt = lambda df: df.localCheckpoint()
+    _ckpt = checkpointer(documents.sparkSession, reliable_checkpoint)
     pairs = dedup_ngram_jaccard(documents, threshold=threshold,
                                 shingles=shingles)
     edges = (

@@ -7,7 +7,7 @@ embedding column, all verified by one exact cosine.
   LSH (:func:`lsh_buckets`): candidates only within a shared signature
   bucket (multi-probe via several independent tables), bucket
   membership capped (dedup.cap_hot_buckets). Dedup blocks its buckets
-  with dedup.blocked_pairs, the primitive minhash uses.
+  with dedup.blocked_pairs, on the bucket fan-out minhash uses.
 * :func:`ann_topk_ivf` — inverted file: queries probe their nprobe
   nearest centroid buckets.
 

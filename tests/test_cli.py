@@ -18,8 +18,10 @@ def test_cli_predict_tsv(spark, capsys):
     ])
     assert rc == 0
     df = spark.read.option("sep", "\t").option("header", True).csv(out)
-    assert df.count() > 0
+    n = df.count()
+    assert n > 0
     assert df.columns == ["pmid", "geneId", "diseaseId", "g_name", "d_name", "prob_avg"]
+    assert f"wrote {n} GDA triples to {out}" in capsys.readouterr().out
 
 
 def test_cli_parse_and_normalize_roundtrip(spark):

@@ -232,9 +232,9 @@ def test_sample_balanced_hash_properties(spark):
 
 def test_curation_pipeline_single_shingle_pass(spark, monkeypatch):
     """r4 verdict #2: the composed chain must shingle the train corpus
-    exactly ONCE (one persisted shingle-array relation shared by the
+    exactly ONCE (one checkpointed shingle-array relation shared by the
     dedup and decontamination stages); the only other shingle pass is
-    the tiny eval set. The persisted generation is rotated per call."""
+    the tiny eval set."""
     from renet2_spark.operators import dedup as dd
 
     calls = []
@@ -259,12 +259,27 @@ def test_curation_pipeline_single_shingle_pass(spark, monkeypatch):
     assert out.count() > 0
     # ONE train-side pass + the eval set
     assert sorted(calls) == ["doc_shingle_arrays", "doc_shingles"]
-    assert len(dd._DEDUP_CACHES) == 1  # the shared relation, persisted
-    # generation rotated (and released) on the next call
-    cur.curation_pipeline(tr, ev)
-    assert len(dd._DEDUP_CACHES) == 1
-    dd.release_dedup_caches()
-    assert not dd._DEDUP_CACHES
+
+
+def test_curation_pipeline_concurrent_builds(spark):
+    """Two curation chains built at once in one session each give the
+    oracle's bins: their shared shingle relations are their own."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from renet2_spark.oracles import q_curation_pipeline
+    from tests.oracle_utils import compare
+
+    def build():
+        docs = _docs(spark)
+        out = cur.curation_pipeline(
+            docs.filter("doc_id % 97 != 3"), docs.filter("doc_id % 97 = 3")
+        )
+        return compare(out, q_curation_pipeline(), SF_SMOKE)
+
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(build) for _ in range(2)]
+        results = [f.result(timeout=600) for f in futures]
+    assert results == [(True, "ok")] * 2, results
 
 
 def test_pack_sequences_many_sources_bounded_plan(spark):

@@ -234,8 +234,11 @@ def _blocked_pairs_reference(rows, cap):
             3,
         ),
         ([(0, "a", i) for i in range(6)] + [(1, "a", i) for i in (4, 7)], None),
+        # an id listed twice in one bucket is one member: no (1, 1)
+        ([(0, "x", 1), (0, "x", 1), (0, "x", 2), (1, "y", 1), (1, "y", 1)], 256),
     ],
-    ids=["numeric_order", "shared_buckets_once", "cap_boundary", "uncapped"],
+    ids=["numeric_order", "shared_buckets_once", "cap_boundary", "uncapped",
+         "duplicated_id"],
 )
 def test_blocked_pairs_matches_reference(spark, rows, cap):
     keys = spark.createDataFrame(rows, "table int, bucket string, id long")

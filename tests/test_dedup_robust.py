@@ -34,9 +34,8 @@ def test_dedup_config_matrix(spark, config, op):
 
 
 def test_dedup_concurrent_builds(spark):
-    """Both operators built at once in one session: each build rotates
-    the shared dedup cache registry and may unpersist the other's
-    shingle arrays, which must cost only the reuse, never a row."""
+    """Both operators built at once in one session give the oracle's
+    pairs: neither persists anything or shares state with the other."""
     with ThreadPoolExecutor(2) as pool:
         futures = [pool.submit(_check, spark, op) for op in sorted(OPERATORS)]
         results = [f.result(timeout=600) for f in futures]
@@ -80,14 +79,17 @@ def test_dedup_degenerate_corpus(spark, op, rows, pairs):
     assert {g[:2] for g in got} == pairs
 
 
-def test_ngram_duplicated_doc_id_rows(spark):
+@pytest.mark.parametrize("op", sorted(OPERATORS))
+def test_duplicated_doc_id_rows(spark, op):
     """A doc_id listed twice is one document, as in the oracle's
     distinct (doc_id, shingle) relation: no self-pair, and shared
     shingles and set sizes counted once."""
+    build, oracle = OPERATORS[op]
     words = [f"w{i}" for i in range(20)]
     t, t2 = " ".join(words), " ".join(words[:-1] + ["changed"])
     rows = [(1, t), (1, t), (2, t2)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = sorted(map(tuple, dedup_ngram_jaccard(docs, threshold=0.0).collect()))
-    assert got == _oracle_rows(q_dedup_ngram(threshold=0.0), rows)
-    assert got == [("1", "2", 15, 16, 16, 0.88235)]
+    got = sorted(map(tuple, build(docs, threshold=0.0).collect()))
+    assert got == _oracle_rows(oracle(threshold=0.0), rows)
+    want = {"minhash": ("1", "2", 0.88235), "ngram": ("1", "2", 15, 16, 16, 0.88235)}
+    assert got == [want[op]]

@@ -43,14 +43,15 @@ def test_flagship_dictionary_join_is_broadcast(spark):
 
 
 def test_minhash_verify_is_candidate_restricted(spark):
-    """No unrestricted shingle self-join: verification fetches shingle
-    arrays only for candidate pairs, so its inner joins are exactly the
-    two lookups keyed on the candidate's doc_a and doc_b."""
+    """No unrestricted shingle self-join and no lookup join: each band
+    key carries its doc's shingle array, so only the pairs fanned out
+    of a shared bucket ever reach array_intersect."""
     from renet2_spark.operators.dedup import dedup_minhash_lsh
 
     plan = _optimized(dedup_minhash_lsh(_docs(spark)))
-    inner = re.findall(r"Join Inner, \((\w+)#\d+ = (\w+)#\d+\)", plan)
-    assert sorted(inner) == [("doc_a", "doc_a"), ("doc_b", "doc_b")], plan
+    assert "Join Inner" not in plan, plan
+    intersect = re.findall(r"array_intersect\((\w+)#\d+\.shingles, (\w+)#\d+\.shingles\)", plan)
+    assert intersect == [("doc_a", "doc_b")], plan
 
 
 def test_ngram_cap_applies_map_side(spark):
@@ -229,20 +230,19 @@ def _cached_relations(df) -> int:
 
 
 def test_minhash_plan_is_doc_local(spark):
-    """dedup_minhash_lsh is doc-local over ONE persisted shingle-array
-    relation: signatures row-local, buckets fanned out from sorted
-    member lists, verification by array_intersect on candidate pairs.
-    In the non-adaptive plan that is at most three shuffles (bucket
-    key, candidate pair, shingle df), none keyed on doc_id, and no
-    shuffled join. Verification needs no candidate-doc semi-join: only
-    candidate pairs ever fetch shingles."""
+    """dedup_minhash_lsh is doc-local and persists nothing: signatures
+    row-local, buckets fanned out from sorted member sets that carry
+    each doc's shingle array, verification by array_intersect on the
+    fanned-out pairs. In the non-adaptive plan that is at most three
+    shuffles (bucket key, candidate pair, shingle df), none keyed on
+    doc_id, and no shuffled join."""
     from renet2_spark.operators.dedup import dedup_minhash_lsh
 
     spark.catalog.clearCache()
     with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         df = dedup_minhash_lsh(_docs(spark))
         plan = _executed(df)
-        assert _cached_relations(df) == 1
+        assert _cached_relations(df) == 0
     exchanges = re.findall(r"\bExchange hashpartitioning\((\w+)#", plan)
     assert 0 < len(exchanges) <= 3, plan
     assert "doc_id" not in exchanges, plan
@@ -253,19 +253,16 @@ def test_minhash_plan_is_doc_local(spark):
 def test_jaccard_plan_reads_input_once(spark):
     """dedup_ngram_jaccard carries each doc's set size in its inverted
     index, so its non-adaptive plan is two exchanges (shingle, then
-    pair) with no set-size join and no persisted relation, and the
-    build leaves the shared dedup cache registry alone."""
+    pair) with no set-size join and no persisted relation."""
     from renet2_spark.operators import dedup as dd
 
     # an earlier build may have cached an identical shingle relation,
     # which Spark would substitute into this plan
     spark.catalog.clearCache()
-    before = [id(df) for df in dd._DEDUP_CACHES]
     with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         df = dd.dedup_ngram_jaccard(_docs(spark))
         plan = _executed(df)
         optimized = _optimized(df)
-    assert [id(df) for df in dd._DEDUP_CACHES] == before
     assert "InMemoryRelation" not in optimized, optimized
     assert "Join" not in optimized, optimized
     exchanges = re.findall(r"\bExchange hashpartitioning\((\w+)#", plan)
@@ -452,3 +449,39 @@ def test_package_has_no_unused_imports():
                     if bound not in read:
                         unused.append(f"{f.relative_to(pkg.parent)}:{n.lineno} {bound}")
     assert unused == [], f"imports never read: {unused}"
+
+
+def test_package_has_no_module_level_registry():
+    """No function in renet2_spark/ mutates a module-level name (calls
+    append, pop, clear, extend, update or add on it): a process-global
+    registry lets two builds in one session interfere (one evicting
+    the other's persisted relations)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "renet2_spark"
+    mutating = {"append", "pop", "clear", "extend", "update", "add"}
+    found = set()
+    for f in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        module_names = set()
+        for stmt in tree.body:
+            if isinstance(stmt, ast.Assign):
+                module_names |= {t.id for t in stmt.targets if isinstance(t, ast.Name)}
+            elif isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+                module_names.add(stmt.target.id)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            args = fn.args
+            local = {a.arg for a in [*args.posonlyargs, *args.args, *args.kwonlyargs]}
+            local |= {n.id for n in ast.walk(fn)
+                      if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+            for call in ast.walk(fn):
+                if (isinstance(call, ast.Call)
+                        and isinstance(call.func, ast.Attribute)
+                        and call.func.attr in mutating
+                        and isinstance(call.func.value, ast.Name)
+                        and call.func.value.id in module_names - local):
+                    found.add(call.func.value.id)
+    assert found == set(), f"module-level names mutated by functions: {sorted(found)}"

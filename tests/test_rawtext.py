@@ -354,13 +354,22 @@ def test_cli_predict_routes_raw_on_variable_corpus(spark):
 
 def test_no_leaked_caches_after_pipeline_queries(spark):
     """Round-2 verdict #8: driver queries must not leak persisted RDDs.
-    Neither build_nodes nor build_edges_neural persists anything."""
+    Neither build_nodes, build_edges_neural nor the two near-dup
+    operators persists anything."""
+    from renet2_spark.operators.dedup import dedup_minhash_lsh, dedup_ngram_jaccard
+
+    # an earlier test's cached relations would hide a new one behind
+    # its own release
+    spark.catalog.clearCache()
     docs = load_documents(spark, SF_SMOKE)
     base = spark.sparkContext._jsc.getPersistentRDDs().size()
     pipeline.build_nodes(spark, docs).collect()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
     pipeline.build_edges_neural(spark, docs).count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
+    for build in (dedup_minhash_lsh, dedup_ngram_jaccard):
+        build(docs).collect()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == base, build
 
 
 def test_neural_raw_corpus_routing(spark):
