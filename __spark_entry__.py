@@ -484,10 +484,10 @@ def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_edges_rawtext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-TEXT flagship, BOTH twin corpora in one query (r4 verdict
     #1 consolidation): the corpus is rewritten as real punctuated text
-    and edges are built through the FULL raw chain (split_sentences
-    automaton -> reference-parity tokenizer -> boundary-guarded
-    char-offset cursor scan -> broadcast dict tagging ->
-    mention-vs-text verify -> pairgen -> scoring).
+    and edges are built through the FULL raw chain (one Python pass:
+    split_sentences automaton -> reference-parity tokenizer ->
+    boundary-guarded char-offset cursor scan -> mention-vs-text check;
+    then broadcast dict tagging -> pairgen -> scoring).
 
     variant='bang': corpus.raw_text_twin, '!'-terminated sentences
     (an unconditional cut in the reference splitter).

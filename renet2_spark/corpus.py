@@ -206,8 +206,8 @@ def raw_text_twin(documents: DataFrame) -> DataFrame:
     """Deterministic RAW-TEXT twin of the packed corpus: every derived
     SENT_WORDS-word sentence is emitted with a sentence-final '!' and
     single spaces between sentences — real punctuated text that the
-    packed contract probe rejects, forcing the full raw chain
-    (split_sentences -> tokenize -> offsets -> tag -> verify).
+    packed contract probe rejects, forcing the full raw chain (one
+    Python pass: split -> tokenize -> locate -> text check; then tag).
 
     Why '!': it is an UNCONDITIONAL sentence cut in the reference
     splitter when followed by a space (raw.py:462-464 — no abbreviation

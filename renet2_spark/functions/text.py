@@ -24,9 +24,10 @@ preprocessing:
   lookahead scans, the digit+unit continuation scan, and the
   trailing-')]' scan. Sentences keep the reference's exact substrings
   (including leading spaces). A character-scan automaton is inherently
-  sequential, so this stays a per-string function behind an
-  Arrow-batched UDF (the reference itself shells out to the GENIA C++
-  splitter in production, src/renet2/parse_data.py:456-467).
+  sequential, so this stays a per-string function, called inside the
+  one-pass raw tokenizer map (operators.tagger.raw_tokens; the
+  reference itself shells out to the GENIA C++ splitter in production,
+  src/renet2/parse_data.py:456-467).
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _lit(s: str, repl: str) -> tuple[str, str]:
@@ -426,48 +426,4 @@ def filter_rnn(tokens: DataFrame, mentions: DataFrame | None = None
         kept.withColumn("orig_tok_no", F.col("tok_no"))
         .withColumn("tok_no", (F.row_number().over(w) - 1).cast("int"))
         .drop("_ent")
-    )
-
-
-_RAW_SENT_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("sentence", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-        ]
-    )
-)
-
-
-def sentences_from_raw_text(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, text) -> (doc_id, sent_no, sentence, offset)
-    for raw (punctuated) text via the splitter UDF — the ingest-time
-    analogue of corpus.sentences_direct (which handles the
-    pre-normalized synthetic corpus natively). split_sentences
-    partitions the text into exact substrings, so each sentence's char
-    offset into the original text is the running sum of lengths —
-    computed inside the same Arrow batch, no extra pass."""
-
-    @F.pandas_udf(_RAW_SENT_SCHEMA)
-    def _split(s: pd.Series) -> pd.Series:
-        def run(t: str):
-            out, pos = [], 0
-            for snt in split_sentences(t or ""):
-                out.append((snt, pos))
-                pos += len(snt)
-            return out
-
-        return s.map(run)
-
-    return (
-        documents.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.posexplode(_split(F.col("text"))).alias("sent_no", "_s"),
-        )
-        .select(
-            "doc_id",
-            "sent_no",
-            F.col("_s.sentence").alias("sentence"),
-            F.col("_s.offset").alias("offset"),
-        )
     )

@@ -19,8 +19,13 @@ start/end are char offsets into the whole reconstructed doc text
 the section/sentence index (they coincide in this corpus — one derived
 sentence per text span).
 
-Mention-vs-text verification (reference F5, parse_data.py:137-144):
-:func:`verify_mentions` drops rows whose doc substring != mention.
+Raw punctuated text takes one Python pass, :func:`raw_tokens`: split
+sentences, tokenize, locate each token in the text and keep its span
+only where the text there equals the token (reference F5,
+parse_data.py:137-144). :func:`tag_mentions_raw` tags its located
+tokens. Span-derived mentions (PubTator/BioC ingest) are checked by
+:func:`verify_mentions`, which drops rows whose doc substring !=
+mention.
 """
 
 from __future__ import annotations
@@ -41,7 +46,7 @@ def tokenize_sentences(sentences: DataFrame) -> DataFrame:
 
     Whitespace tokenizer (the corpus is pre-normalized; the
     reference's 50-rule punctuation tokenizer lives in
-    functions/text.py and is applied upstream for raw text —
+    functions/text.py and is applied by raw_tokens for raw text —
     reference: src/renet2/utils/tokenizer.py:16-110).
 
     Narrow posexplode, O(tokens) allocation. Char offsets are NOT
@@ -207,150 +212,173 @@ _RAW_TOKEN_SCHEMA = T.StructType(
 )
 
 
-def tokenize_raw_sentences(sentences: DataFrame) -> DataFrame:
-    """(doc_id, sent_no, sentence, offset) -> token rows
-    (doc_id, sent_no, tok_no, token, start, end) with REAL char offsets
-    into the original raw text.
+def locate(sentence: str, tok: str, cur: int) -> int:
+    """First boundary-valid occurrence of tok in sentence at/after cur,
+    else -1. Tokens appear in source order and the tokenizer only
+    inserts spaces or rewrites a closed clitic/expansion set, so a
+    forward cursor scan finds each token's source span.
 
-    Tokens come from the reference-parity tokenizer
-    (functions.text.tokenize_series — the vectorized rule chain,
-    utils/tokenizer.py:16-110); each token is then located in its
-    sentence by a forward cursor scan (tokens appear in source order;
-    the tokenizer only inserts spaces or rewrites a closed clitic/
-    expansion set). Word-boundary guard (round-3 ADVICE): a candidate
-    position is accepted only if the token's alphanumeric edges are
-    not flanked by alphanumeric source chars — so a fragment the
-    tokenizer REWROTE out of a longer word ('Can'/'not' from
-    'Cannot', 'do'/"n't" from "don't") is never given a partial-word
-    span that verify_mentions' substring check would wrongly pass;
-    clitic pieces that legitimately start at an apostrophe ("'s")
-    skip the leading-edge check and still locate. On a boundary
-    failure the scan retries the next occurrence forward; a token
-    with no boundary-valid occurrence carries start=end=-1 and is
-    dropped by verify_mentions.
+    Boundary rule (round-3 ADVICE): an alnum token edge must not touch
+    an alnum source char, so a fragment the tokenizer REWROTE out of a
+    longer word ('Can'/'not' from 'Cannot', 'do'/"n't" from "don't")
+    never gets a partial-word span that the text check would wrongly
+    pass; punctuation edges are exempt (',' between digits, clitic
+    "'s" after its host word are real occurrences).
 
-    mapInPandas: Arrow-batched, embarrassingly parallel, no shuffle.
-    This is the raw-INGEST path, run once per corpus (the reference
-    shells out to the GENIA C++ splitter for the same job,
-    parse_data.py:456-467); the packed-corpus hot path never enters
-    Python."""
-    from ..functions.text import tokenize_series
+    Bounded retry (r4 ADVICE): boundary-failed retries may cross at
+    most ONE whitespace GAP (a maximal run of whitespace — multi-
+    space/tab separators count once) beyond the first raw find. A
+    legitimate retry happens when the first find lands inside the
+    immediately adjacent longer word ('a' inside 'banana a'),
+    which never skips more than one gap; an occurrence further
+    away is almost surely a DIFFERENT occurrence of a tokenizer-
+    REWRITTEN fragment ('can' from 'cannot' matching a later
+    standalone 'can') — accepting it would advance the cursor past
+    every intervening token and silently drop their mentions.
+
+    No-complete-token-skip (r5 ADVICE): the one-gap bound alone
+    still accepted a wrong occurrence exactly one gap away when
+    the first find sat at a word START and its word was longer
+    ('can' at the head of 'cannot can' retrying onto the
+    standalone 'can'); a retry may therefore never move past the
+    END of the word containing the first find when that find was
+    word-initial — doing so skips a complete source token. In the
+    legitimate adjacent-word case the first find is mid-word, so
+    the rule never fires there. Rejected tokens resolve to -1
+    and leave the cursor anchored for the tokens that follow."""
+    first = sentence.find(tok, cur)
+    if first >= 0:
+        first_at_word_start = first == 0 or sentence[first - 1].isspace()
+        wend = first
+        while wend < len(sentence) and not sentence[wend].isspace():
+            wend += 1
+    pos = first
+    while pos >= 0:
+        if first_at_word_start and pos >= wend:
+            return -1
+        gaps = 0
+        in_ws = False
+        for ch in sentence[first:pos]:
+            if ch.isspace():
+                if not in_ws:
+                    gaps += 1
+                    in_ws = True
+            else:
+                in_ws = False
+        if gaps > 1:
+            return -1
+        end = pos + len(tok)
+        ok_lead = not (
+            tok[0].isalnum() and pos > 0 and sentence[pos - 1].isalnum()
+        )
+        ok_trail = not (
+            tok[-1].isalnum()
+            and end < len(sentence)
+            and sentence[end].isalnum()
+        )
+        if ok_lead and ok_trail:
+            return pos
+        pos = sentence.find(tok, pos + 1)
+    return -1
+
+
+def raw_tokens(documents: DataFrame) -> DataFrame:
+    """documents(doc_id, text) -> token rows (doc_id, sent_no, tok_no,
+    token, start, end) with REAL char offsets into the raw text, in one
+    Arrow-batched pass. Per batch:
+
+    1. split_sentences (the reference's snt_split automaton) cuts each
+       text into exact substrings, so a sentence's char offset is the
+       running sum of the lengths before it;
+    2. tokenize_series (the reference-parity rule chain,
+       utils/tokenizer.py:16-110) tokenizes all of the batch's
+       sentences at once;
+    3. :func:`locate` finds each token in its sentence;
+    4. a token keeps its span only if text[start:end] == token (the
+       reference's F5 mention-vs-text check, parse_data.py:137-144),
+       so a consumer that keeps start >= 0 holds verified spans and
+       needs no join back to the text.
+
+    An unlocated token carries start=end=-1. A sentence that
+    tokenizes to nothing has no rows. mapInPandas: embarrassingly
+    parallel, no shuffle, one crossing of the Python boundary. This is
+    the raw-INGEST path (the reference shells out to the GENIA C++
+    splitter for step 1, parse_data.py:456-467); the packed-corpus hot
+    path never enters Python."""
+    from ..functions.text import split_sentences, tokenize_series
 
     cols = _RAW_TOKEN_SCHEMA.fieldNames()
 
-    def locate(sentence: str, tok: str, cur: int) -> int:
-        """First boundary-valid occurrence of tok at/after cur, else
-        -1. Boundary rule: an alnum token edge must not touch an alnum
-        source char (rewritten fragments get no partial-word span);
-        punctuation edges are exempt (',' between digits, clitic "'s"
-        after its host word are real occurrences).
-
-        Bounded retry (r4 ADVICE): boundary-failed retries may cross at
-        most ONE whitespace GAP (a maximal run of whitespace — multi-
-        space/tab separators count once) beyond the first raw find. A
-        legitimate retry happens when the first find lands inside the
-        immediately adjacent longer word ('a' inside 'banana a'),
-        which never skips more than one gap; an occurrence further
-        away is almost surely a DIFFERENT occurrence of a tokenizer-
-        REWRITTEN fragment ('can' from 'cannot' matching a later
-        standalone 'can') — accepting it would advance the cursor past
-        every intervening token and silently drop their mentions.
-
-        No-complete-token-skip (r5 ADVICE): the one-gap bound alone
-        still accepted a wrong occurrence exactly one gap away when
-        the first find sat at a word START and its word was longer
-        ('can' at the head of 'cannot can' retrying onto the
-        standalone 'can'); a retry may therefore never move past the
-        END of the word containing the first find when that find was
-        word-initial — doing so skips a complete source token. In the
-        legitimate adjacent-word case the first find is mid-word, so
-        the rule never fires there. Rejected tokens resolve to -1
-        (dropped by verify) and leave the cursor anchored for the
-        tokens that follow."""
-        first = sentence.find(tok, cur)
-        if first >= 0:
-            first_at_word_start = first == 0 or sentence[first - 1].isspace()
-            wend = first
-            while wend < len(sentence) and not sentence[wend].isspace():
-                wend += 1
-        pos = first
-        while pos >= 0:
-            if first_at_word_start and pos >= wend:
-                return -1
-            gaps = 0
-            in_ws = False
-            for ch in sentence[first:pos]:
-                if ch.isspace():
-                    if not in_ws:
-                        gaps += 1
-                        in_ws = True
-                else:
-                    in_ws = False
-            if gaps > 1:
-                return -1
-            end = pos + len(tok)
-            ok_lead = not (
-                tok[0].isalnum() and pos > 0 and sentence[pos - 1].isalnum()
-            )
-            ok_trail = not (
-                tok[-1].isalnum()
-                and end < len(sentence)
-                and sentence[end].isalnum()
-            )
-            if ok_lead and ok_trail:
-                return pos
-            pos = sentence.find(tok, pos + 1)
-        return -1
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            toks = tokenize_series(pdf["sentence"])
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, sent_no, sentence, offset, tl in zip(
-                pdf["doc_id"], pdf["sent_no"], pdf["sentence"],
-                pdf["offset"], toks,
-            ):
+            sents = []  # (doc_id, sent_no, sentence, offset, text)
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                text = text or ""
+                offset = 0
+                for sent_no, sentence in enumerate(split_sentences(text)):
+                    sents.append((doc_id, sent_no, sentence, offset, text))
+                    offset += len(sentence)
+            toks = tokenize_series(pd.Series([s[2] for s in sents], dtype=object))
+            out = []
+            for (doc_id, sent_no, sentence, offset, text), tl in zip(sents, toks):
                 cur = 0
-                for tn, tok in enumerate(tl):
+                for tok_no, tok in enumerate(tl):
                     pos = locate(sentence, tok, cur)
-                    if pos < 0:
-                        start = end = -1
-                    else:
-                        start = int(offset) + pos
-                        end = start + len(tok)
+                    start = end = -1
+                    if pos >= 0:
                         cur = pos + len(tok)
-                    rows["doc_id"].append(doc_id)
-                    rows["sent_no"].append(sent_no)
-                    rows["tok_no"].append(tn)
-                    rows["token"].append(tok)
-                    rows["start"].append(start)
-                    rows["end"].append(end)
-            yield pd.DataFrame(rows)
+                        if text[offset + pos : offset + cur] == tok:
+                            start, end = offset + pos, offset + cur
+                    out.append((doc_id, sent_no, tok_no, tok, start, end))
+            yield pd.DataFrame(out, columns=cols)
 
-    return sentences.select(
-        "doc_id", "sent_no", "sentence", "offset"
+    return documents.select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
     ).mapInPandas(run, schema=_RAW_TOKEN_SCHEMA)
+
+
+def raw_sentence_arrays(documents: DataFrame) -> DataFrame:
+    """Raw documents -> (doc_id, _sents array<string>), the raw
+    counterpart of corpus.sentence_arrays: each sentence is its
+    :func:`raw_tokens` tokens (located or not) re-joined with single
+    spaces, in sent_no order, so the neural encoder's whitespace split
+    sees the parity tokenizer's tokens in the raw tagger's tok_no
+    coordinates. A sentence that tokenizes to nothing is omitted, and
+    a doc with no tokens has no row."""
+    return (
+        raw_tokens(documents)
+        .groupBy("doc_id", "sent_no")
+        .agg(F.expr(
+            "array_join(transform(array_sort(collect_list("
+            "struct(tok_no, token))), t -> t.token), ' ') AS sentence"
+        ))
+        .groupBy("doc_id")
+        .agg(F.expr(
+            "transform(array_sort(collect_list(struct(sent_no, sentence))),"
+            " s -> s.sentence) AS _sents"
+        ))
+    )
 
 
 def tag_mentions_raw(documents: DataFrame, spark: SparkSession,
                      entity_dict: DataFrame | None = None,
                      verify: bool = True) -> DataFrame:
     """Raw punctuated text -> token-granularity mentions with real char
-    offsets: split_sentences (parity automaton) -> reference-parity
-    tokenize -> cursor offset scan -> broadcast dictionary join ->
-    mention-vs-text verify (reference F5). This is the pipeline the
-    reference's whole predict path starts from (raw.py:615-895,
+    offsets: the one-pass :func:`raw_tokens` (split, tokenize, locate,
+    check against the text), then the located tokens (start >= 0, only
+    when `verify`) broadcast-join the dictionary. This is the pipeline
+    the reference's whole predict path starts from (raw.py:615-895,
     parse_data.py:43-67,456-467); schema matches tag_mentions, plus
     entity_id instead of raw_id when a fused dictionary is passed.
-    The corpus side never shuffles: splitter/tokenizer are narrow
-    Arrow-batched maps, the dictionary join is broadcast, and verify
-    joins the doc text back on doc_id only when requested."""
-    from ..functions.text import sentences_from_raw_text
-
+    The corpus side never shuffles. verify=False keeps the unlocated
+    tokens' dictionary hits (start=end=-1), to count what the check
+    drops."""
     d = entity_dict if entity_dict is not None else entity_dict_df(spark)
     id_cols = [c for c in ("raw_id", "entity_id") if c in d.columns]
-    toks = tokenize_raw_sentences(sentences_from_raw_text(documents))
-    tagged = toks.join(
+    toks = raw_tokens(documents)
+    if verify:
+        toks = toks.where("start >= 0")
+    return toks.join(
         F.broadcast(d), F.lower(toks.token) == d.surface, "inner"
     ).select(
         "doc_id",
@@ -362,9 +390,6 @@ def tag_mentions_raw(documents: DataFrame, spark: SparkSession,
         "type",
         *id_cols,
     )
-    if verify:
-        tagged = verify_mentions(tagged, documents)
-    return tagged
 
 
 def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
@@ -391,7 +416,8 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
     would silently mis-coordinate there. The contract IS gated at
     runtime: plans.pipeline.build_mentions probes a sampled prefix
     (probe_corpus_contract — splitter/tokenizer identity check) and
-    routes non-contract corpora to tag_mentions_raw, so the CLI can
+    routes non-contract corpora to tag_mentions_raw (the one-pass
+    split/tokenize/locate chain, raw_tokens), so the CLI can
     never reach this function on punctuated text (round-2 verdict
     wrong #1 closed; tests/test_rawtext.py).
     """

@@ -141,8 +141,9 @@ def build_mentions(
     # __spark_entry__, tag_mentions + tag_multiword).
     #
     # corpus routing: 'packed' = the arithmetic fast tagger (valid only
-    # under the derive_spans contract), 'raw' = the full raw-text chain
-    # (split_sentences -> tokenize -> offsets -> tag -> verify),
+    # under the derive_spans contract), 'raw' = the raw-text chain, one
+    # Python pass (split -> tokenize -> locate -> text check) then the
+    # broadcast dictionary join,
     # 'auto' = probe_corpus_contract decides. Both paths tag against
     # the same fused dictionary, so downstream consumers see one
     # schema: (doc_id, sent_no, tok_no, mention, type, entity_id).
@@ -247,10 +248,11 @@ def build_edges_neural(
 
     Sentence arrays: on a packed (contract) corpus they derive
     row-locally from the text (corpus.sentence_arrays); on raw
-    punctuated text they are the parity splitter+tokenizer's token
-    stream, re-joined with spaces per sentence so the encoder's
-    whitespace split sees the real tokens, in the raw tagger's tok_no
-    coordinates.
+    punctuated text they come from the same one-pass split/tokenize/
+    locate map the raw tagger reads (tagger.raw_tokens), re-joined
+    with spaces per sentence (tagger.raw_sentence_arrays) so the
+    encoder's whitespace split sees the real tokens, in the raw
+    tagger's tok_no coordinates.
 
     mode selects the reference input shape (predict.py:291-294:
     "recommend [for abs 32, for ft 400]"): 'abs' caps documents at 32
@@ -269,22 +271,9 @@ def build_edges_neural(
 
         sents_arrays = sentence_arrays(documents)
     else:
-        from ..functions.text import sentences_from_raw_text
-        from ..operators.tagger import tokenize_raw_sentences
+        from ..operators.tagger import raw_sentence_arrays
 
-        toks = tokenize_raw_sentences(sentences_from_raw_text(documents))
-        sents_arrays = (
-            toks.groupBy("doc_id", "sent_no")
-            .agg(F.expr(
-                "array_join(transform(array_sort(collect_list("
-                "struct(tok_no, token))), t -> t.token), ' ') AS sentence"
-            ))
-            .groupBy("doc_id")
-            .agg(F.expr(
-                "transform(array_sort(collect_list(struct(sent_no, sentence))),"
-                " s -> s.sentence) AS _sents"
-            ))
-        )
+        sents_arrays = raw_sentence_arrays(documents)
     scored = neural_score_pairs(mentions, sents_arrays, max_sents=max_sents)
     voted = ensemble_vote(scored, cutoff=cutoff)
     return voted.selectExpr(*_EDGE_COLUMNS)

@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 
 from renet2_spark.corpus import raw_text_twin
 from renet2_spark.oracles import q_edges, q_edges_neural_golden
-from renet2_spark.plans.pipeline import build_edges, run_neural
+from renet2_spark.plans.pipeline import (
+    build_edges,
+    build_edges_neural,
+    run_neural,
+)
 from tests.conftest import CONFIG_MATRIX, SF_SMOKE, sql_conf
 from tests.oracle_utils import compare
 
@@ -64,18 +68,31 @@ def test_build_edges_neural_concurrent_builds(spark):
     assert results == [(True, "ok")] * 2, results
 
 
-@pytest.mark.parametrize("corpus", ["auto", "packed", "raw"])
-def test_build_edges_empty_corpus(spark, corpus):
+# the flagship over every routing, and the neural plan over both
+# sentence-array sources (its auto routing is the flagship's probe)
+_BUILDS = [
+    *(pytest.param(build_edges, c, id=c) for c in ("auto", "packed", "raw")),
+    *(
+        pytest.param(build_edges_neural, c, id=f"neural-{c}")
+        for c in ("packed", "raw")
+    ),
+]
+
+
+@pytest.mark.parametrize("build, corpus", _BUILDS)
+def test_build_edges_empty_corpus(spark, build, corpus):
     docs = spark.createDataFrame([], "doc_id bigint, text string")
-    assert build_edges(spark, docs, corpus=corpus).collect() == []
+    assert build(spark, docs, corpus=corpus).collect() == []
 
 
-@pytest.mark.parametrize("corpus", ["auto", "packed", "raw"])
-def test_build_edges_null_text_doc(spark, corpus):
+@pytest.mark.parametrize("build, corpus", _BUILDS)
+def test_build_edges_null_text_doc(spark, build, corpus):
     """A NULL-text document contributes no edges, leaves the edges of
     the documents beside it unchanged and does not flip auto routing.
-    The raw case runs on the punctuated twin, whose edges equal the
-    packed corpus's."""
+    The raw case runs on the punctuated twin. The flagship scorer reads
+    counts only, so the twin's edges equal the packed corpus's; the
+    neural encoder also reads the twin's '!' tokens, so its reference
+    is the twin without the NULL document."""
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         .select(F.col("doc_id").cast("string"), "text")
@@ -87,8 +104,11 @@ def test_build_edges_null_text_doc(spark, corpus):
     )
     if corpus == "raw":
         with_null = raw_text_twin(with_null)
-    want = sorted(build_edges(spark, docs, corpus="packed").collect())
-    got = sorted(build_edges(spark, with_null, corpus=corpus).collect())
+    if build is build_edges_neural and corpus == "raw":
+        want = sorted(build(spark, raw_text_twin(docs), corpus="raw").collect())
+    else:
+        want = sorted(build(spark, docs, corpus="packed").collect())
+    got = sorted(build(spark, with_null, corpus=corpus).collect())
     assert want and got == want
     only_null = with_null.filter("text IS NULL")
-    assert build_edges(spark, only_null, corpus=corpus).collect() == []
+    assert build(spark, only_null, corpus=corpus).collect() == []

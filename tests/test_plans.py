@@ -164,6 +164,34 @@ def test_neural_edge_plan_is_flagship_plan_plus_scorer(spark):
         assert plan.count("FileScan parquet") == 2, plan
 
 
+_PYTHON_NODE = re.compile(r"\b(MapInPandas|ArrowEvalPython|MapInArrow)\b")
+_JOIN_NODE = re.compile(r"\b\w*(?:Join|CartesianProduct)\b")
+
+
+def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
+    """Raw text crosses into Python once per plan that reads it: split,
+    tokenize, locate and the mention-vs-text check are one map over
+    (doc_id, text). build_edges(corpus='raw') has one Python node, one
+    document scan and the broadcast dictionary join as its only join
+    (no join of the text back for the check). build_edges_neural reads
+    the same map twice at most, for its mentions and its sentence
+    arrays, besides the scorer's Python node."""
+    from renet2_spark.corpus import raw_text_twin_messy
+    from renet2_spark.plans.pipeline import build_edges, build_edges_neural
+
+    spark.catalog.clearCache()
+    docs = raw_text_twin_messy(_docs(spark))
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        flagship = _executed(build_edges(spark, docs, corpus="raw"))
+        neural = _executed(build_edges_neural(spark, docs, corpus="raw"))
+    assert len(_PYTHON_NODE.findall(flagship)) == 1, flagship
+    assert flagship.count("FileScan parquet") == 1, flagship
+    assert _JOIN_NODE.findall(flagship) == ["BroadcastHashJoin"], flagship
+    # the scorer is one MapInPandas; the rest are raw passes
+    assert len(_PYTHON_NODE.findall(neural)) - 1 <= 2, neural
+    assert neural.count("FileScan parquet") <= 2, neural
+
+
 def test_decontaminate_probe_is_broadcast(spark):
     """The eval shingle set must reach the train side as a broadcast
     hash relation — the train corpus is never shuffled for the probe."""

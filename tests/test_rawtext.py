@@ -197,20 +197,14 @@ def test_rewritten_fragments_get_no_partial_word_span(spark):
     of 'Cannot') must NOT receive partial-word char spans the verify
     substring check would wrongly pass — they carry start=end=-1 and
     verify drops them even when a dictionary surface matches."""
-    from renet2_spark.operators.tagger import (
-        tag_mentions_raw,
-        tokenize_raw_sentences,
-    )
-    from renet2_spark.functions.text import sentences_from_raw_text
+    from renet2_spark.operators.tagger import raw_tokens, tag_mentions_raw
 
     docs = spark.createDataFrame(
         [("1", "We cannot scan .")], "doc_id string, text string"
     )
     toks = {
         r["token"]: (r["start"], r["end"])
-        for r in tokenize_raw_sentences(
-            sentences_from_raw_text(docs)
-        ).collect()
+        for r in raw_tokens(docs).collect()
     }
     # rewrite fragments: no span (NOT a partial match inside
     # 'cannot'/'scan'); real tokens: exact spans
@@ -238,8 +232,7 @@ def test_rewrite_fragment_does_not_overshoot_cursor(spark):
     at one whitespace gap, so the fragment resolves -1 and every
     legitimate token (including the later standalone 'can'/'not')
     keeps its true span."""
-    from renet2_spark.functions.text import sentences_from_raw_text
-    from renet2_spark.operators.tagger import tokenize_raw_sentences
+    from renet2_spark.operators.tagger import raw_tokens
 
     docs = spark.createDataFrame(
         [("1", "You cannot run but can not walk .")],
@@ -248,9 +241,7 @@ def test_rewrite_fragment_does_not_overshoot_cursor(spark):
     rows = sorted(
         (
             (r["tok_no"], r["token"], r["start"], r["end"])
-            for r in tokenize_raw_sentences(
-                sentences_from_raw_text(docs)
-            ).collect()
+            for r in raw_tokens(docs).collect()
         )
     )
     assert rows == [
@@ -275,8 +266,7 @@ def test_rewrite_fragment_one_gap_standalone_not_stolen(spark):
     first find's word when the find was word-initial: the fragment
     resolves -1 and NO token ever receives a wrong span (the ambiguous
     standalone drops too — safe, verify-consistent)."""
-    from renet2_spark.functions.text import sentences_from_raw_text
-    from renet2_spark.operators.tagger import tokenize_raw_sentences
+    from renet2_spark.operators.tagger import raw_tokens
 
     docs = spark.createDataFrame(
         [("1", "You cannot can .")], "doc_id string, text string"
@@ -284,9 +274,7 @@ def test_rewrite_fragment_one_gap_standalone_not_stolen(spark):
     rows = sorted(
         (
             (r["tok_no"], r["token"], r["start"], r["end"])
-            for r in tokenize_raw_sentences(
-                sentences_from_raw_text(docs)
-            ).collect()
+            for r in raw_tokens(docs).collect()
         )
     )
     assert rows == [
@@ -386,6 +374,37 @@ def test_neural_raw_corpus_routing(spark):
     pairs = {(r["gene_id"], r["disease_id"]) for r in rows}
     # doc 1's (scan, slow) co-occurs in all three sentences
     assert ("1001", "D0001") in pairs
+
+
+def test_raw_sentence_arrays_are_tokenized_sentences(spark):
+    """The raw neural input: each doc's sentence array is its
+    split_sentences sentences in order, each the parity tokenizer's
+    tokens joined by single spaces; a sentence that tokenizes to
+    nothing is omitted, and a doc left with no sentence (NULL text)
+    has no row."""
+    from renet2_spark.functions.text import split_sentences, tokenize_text
+    from renet2_spark.operators.tagger import raw_sentence_arrays
+
+    docs = raw_text_twin_messy(
+        load_documents(spark, SF_SMOKE)
+        .select(F.col("doc_id").cast("string"), "text")
+        .unionByName(
+            spark.createDataFrame([("-1", None)], "doc_id string, text string")
+        )
+    )
+    got = {
+        r["doc_id"]: list(r["_sents"])
+        for r in raw_sentence_arrays(docs).collect()
+    }
+    want = {}
+    for r in docs.collect():
+        sents = [
+            " ".join(tokenize_text(s)) for s in split_sentences(r["text"] or "")
+        ]
+        if any(sents):
+            want[r["doc_id"]] = [s for s in sents if s]
+    assert "-1" not in want and len(want) > 1
+    assert got == want
 
 
 def test_concurrent_probes_record_own_decisions(spark):

@@ -403,18 +403,19 @@ def test_real_text_spans_survive_verify(spark):
 
 
 def test_real_text_tokenizer_offsets(spark):
-    """Boundary-guarded cursor offsets (tokenize_raw_sentences) over
-    REAL reference sentences: every located token must substring-match
-    the source exactly, and the vast majority of real tokens locate
-    (unlocatable = tokenizer-rewritten fragments only)."""
-    from renet2_spark.operators.tagger import tokenize_raw_sentences
+    """Boundary-guarded cursor offsets (raw_tokens) over REAL
+    reference sentences, each passed as one document's text: every
+    located token must substring-match the source exactly, and the
+    vast majority of real tokens locate (unlocatable = tokenizer-
+    rewritten fragments only)."""
+    from renet2_spark.operators.tagger import raw_tokens
 
     pairs = _real_sentence_fixture()
-    sents = spark.createDataFrame(
-        [(str(i), 0, s, 0) for i, (s, _) in enumerate(pairs)],
-        "doc_id string, sent_no int, sentence string, offset int",
+    docs = spark.createDataFrame(
+        [(str(i), s) for i, (s, _) in enumerate(pairs)],
+        "doc_id string, text string",
     )
-    rows = tokenize_raw_sentences(sents).collect()
+    rows = raw_tokens(docs).collect()
     text = {str(i): s for i, (s, _) in enumerate(pairs)}
     located = sum(1 for r in rows if r["start"] >= 0)
     for r in rows:

@@ -52,16 +52,21 @@ def test_sentence_splitter_decimal_and_lowercase_continuation():
 
 
 def test_splitter_udf_roundtrip(spark):
-    from renet2_spark.functions.text import sentences_from_raw_text
+    """raw_tokens numbers sentences by the splitter's cuts and gives
+    each token its char offset in the whole text, across the leading
+    space the splitter leaves on a later sentence."""
+    from renet2_spark.operators.tagger import raw_tokens
 
     df = spark.createDataFrame(
         [("1", "Alpha beta. Gamma delta."), ("2", "One. Two. Three.")],
         "doc_id string, text string",
     )
-    rows = sentences_from_raw_text(df).collect()
-    got = {(r["doc_id"], r["sent_no"]): r["sentence"] for r in rows}
-    assert got[("1", 0)] == "Alpha beta."
-    assert got[("2", 2)] == " Three."
+    rows = raw_tokens(df).collect()
+    got = {(r["doc_id"], r["token"], r["start"]): r["sent_no"] for r in rows}
+    assert got[("1", "Alpha", 0)] == 0
+    assert got[("1", "Gamma", 12)] == 1
+    assert got[("2", "Three", 10)] == 2
+    assert got[("2", ".", 15)] == 2
 
 
 # ---- annotation cleaning -------------------------------------------------
