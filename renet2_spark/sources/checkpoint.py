@@ -8,25 +8,37 @@ unioned (src/renet2/predict.py:383-443) — single-node, no lineage.
 
 Design (Iceberg in production, parquet dirs here — same layout):
 
-  <root>/<stage>/data/part_key=<k>/...   stage output, partitioned by
-                                         a stable input fingerprint
+  <root>/<stage>/data/part_key=<k>/...   output per hash bucket of the
+                                         key, rows stamped with their
+                                         bucket's input_fingerprint
   <root>/<stage>/lineage/                (stage, part_key,
                                          input_fingerprint, status,
                                          rows_out, updated_at)
   <root>/metrics/                        (stage, metric, value)
 
-``run_stage`` is idempotent: a partition whose (part_key,
-input_fingerprint) is already COMMITTED in lineage is skipped on
-resume; anything else is (re)computed and overwritten atomically via
-dynamic partition overwrite. part_key = hash-bucket of doc_id, so the
-unit of resume is stable under repartitioning and cluster size.
+``run_stage`` commits in one pass: one ``collect`` of the input's
+per-bucket fingerprints against the latest COMMITTED lineage (new or
+changed = to-do), one write of the to-do buckets' transform with each
+row stamped ``input_fingerprint = map(k -> fp)[part_key]``, one
+lineage append. A row keyed outside the to-do set stamps NULL: it is
+dropped before the dynamic partition overwrite, counted by an in-pass
+``Observation``, and raises after the write with no lineage row, so
+committed buckets are untouched. The readback keeps only rows stamped
+with the input's current fingerprints: a bucket whose recompute
+emitted nothing, or whose input is gone, serves none of its old
+files. The observe sits above the ``repartition`` exchange: below it,
+an empty shuffle lets AQE's empty-relation propagation drop the
+CollectMetrics node and ``Observation.get`` fails. part_key is a hash
+bucket of the key, so the unit of resume is stable under
+repartitioning and cluster size.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -74,11 +86,16 @@ def input_fingerprint(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
     )
 
 
+def _fingerprint_of(fps: dict[int, str]) -> Column:
+    """The fingerprint of the row's bucket in `fps`, NULL outside it."""
+    kvs = [F.lit(x) for kv in fps.items() for x in kv]
+    return F.create_map(*kvs).cast("map<int,string>")[F.col("part_key")]
+
+
 class CheckpointStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def _lineage_path(self, stage: str) -> str:
         return os.path.join(self.root, stage, "lineage")
@@ -87,10 +104,12 @@ class CheckpointStore:
         return os.path.join(self.root, stage, "data")
 
     def lineage(self, stage: str) -> DataFrame:
-        p = self._lineage_path(stage)
+        """The stage's lineage rows; empty only if none was ever written."""
         try:
-            return self.spark.read.parquet(p)
-        except Exception:
+            return self.spark.read.parquet(self._lineage_path(stage))
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
     def committed(self, stage: str) -> DataFrame:
@@ -118,73 +137,52 @@ class CheckpointStore:
         unchanged. Returns the stage output DataFrame (reading back
         from the checkpoint so downstream stages see one lineage)."""
         keyed = with_part_key(inp, key_col, buckets)
-        fps = input_fingerprint(keyed, key_col)
         done = self.committed(stage).select(
             "part_key", F.col("input_fingerprint").alias("_done_fp")
         )
-        todo_keys = (
-            fps.join(done, "part_key", "left")
-            .filter(
-                F.col("_done_fp").isNull()
-                | (F.col("_done_fp") != F.col("input_fingerprint"))
-            )
-            .select("part_key", "input_fingerprint")
-        )
-        todo = [
-            (r["part_key"], r["input_fingerprint"]) for r in todo_keys.collect()
-        ]
+        fps, todo = {}, {}
+        for r in input_fingerprint(keyed, key_col).join(done, "part_key", "left").collect():
+            fps[r["part_key"]] = r["input_fingerprint"]
+            if r["_done_fp"] != r["input_fingerprint"]:
+                todo[r["part_key"]] = r["input_fingerprint"]
         if todo:
-            part_keys = [k for k, _ in todo]
-            subset = keyed.filter(F.col("part_key").isin(part_keys))
-            out = transform(subset.drop("part_key"))
-            out = with_part_key(out, key_col, buckets).persist()
-            # ONE pass over the cached output serves both the
-            # key-preservation guard and the lineage row counts (was
-            # two separate actions — measured as a fixed cost that
-            # capped scaling efficiency in the cluster bench):
-            counts = {
-                r["part_key"]: r["n"]
-                for r in out.groupBy("part_key")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            # guard: a transform that rewrites key values would emit
-            # rows bucketed OUTSIDE the recomputed set, and dynamic
-            # overwrite would then clobber committed partitions with
-            # partial data — fail loudly BEFORE any write
-            allowed = set(part_keys)
-            stray = sum(n for k, n in counts.items() if k not in allowed)
-            if stray:
-                out.unpersist()
+            subset = keyed.filter(F.col("part_key").isin(list(todo))).drop("part_key")
+            out = with_part_key(transform(subset), key_col, buckets)
+            obs = Observation()
+            # one task (one file) per bucket: without the repartition every
+            # task writes into every bucket dir (measured 1,024 files vs
+            # 32). The observe sits above the exchange (module docstring).
+            out.withColumn("input_fingerprint", _fingerprint_of(todo)).repartition(
+                "part_key"
+            ).observe(
+                obs,
+                F.count_if(F.col("input_fingerprint").isNull()).alias("stray"),
+                *[F.count_if(F.col("part_key") == k).alias(f"n{k}") for k in todo],
+            ).filter("input_fingerprint IS NOT NULL").write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("part_key").parquet(self._data_path(stage))
+            n = obs.get
+            # a transform that rewrites key values emits rows bucketed
+            # OUTSIDE the recomputed set: they were not written, and a
+            # commit would lose them — fail loudly
+            if n["stray"]:
                 raise ValueError(
-                    f"run_stage('{stage}'): transform emitted {stray} rows "
+                    f"run_stage('{stage}'): transform emitted {n['stray']} rows "
                     f"whose {key_col} hashes outside the recomputed buckets "
-                    f"{sorted(part_keys)} — transforms must preserve "
+                    f"{sorted(todo)} — transforms must preserve "
                     f"{key_col} values (per-bucket idempotent resume)"
                 )
-            # atomic per-partition replace (dynamic overwrite). The
-            # pre-write repartition clusters each bucket into ONE task:
-            # without it every task writes into every bucket dir —
-            # tasks x buckets small files (measured 1,024 files, 6.6s;
-            # clustered: 32 files, 2.4s at 8 cores). At warehouse scale
-            # the small-file explosion is the bigger problem than the
-            # extra shuffle (which AQE sizes off the cached output).
-            out.repartition("part_key").write.mode("overwrite").partitionBy(
-                "part_key"
-            ).parquet(self._data_path(stage))
-            out.unpersist()
-            lin_rows = [
-                (stage, int(k), fp, "COMMITTED", int(counts.get(k, 0)))
-                for k, fp in todo
-            ]
             self.spark.createDataFrame(
-                lin_rows,
-                "stage string, part_key int, input_fingerprint string, "
-                "status string, rows_out long",
+                [(stage, k, fp, "COMMITTED", n[f"n{k}"], None) for k, fp in todo.items()],
+                LINEAGE_SCHEMA,
             ).withColumn("updated_at", F.current_timestamp()).write.mode(
                 "append"
             ).parquet(self._lineage_path(stage))
-        return self.spark.read.parquet(self._data_path(stage)).drop("part_key")
+        return (
+            self.spark.read.parquet(self._data_path(stage))
+            .filter(_fingerprint_of(fps) == F.col("input_fingerprint"))
+            .drop("part_key", "input_fingerprint")
+        )
 
     def record_metrics(self, stage: str, metrics: dict[str, float]) -> None:
         self.spark.createDataFrame(

@@ -5,8 +5,9 @@ tables as Iceberg — snapshot isolation gives the idempotent-overwrite
 semantics the CheckpointStore needs for free (REPLACE of a partition
 is one atomic snapshot commit), plus hidden partitioning and schema
 evolution. This sandbox has no iceberg-spark runtime jar on the
-classpath, so the writer degrades to parquet with dynamic partition
-overwrite (same layout contract, weaker atomicity) — the switch is a
+classpath, so the writer degrades to parquet, where an overwrite
+replaces the whole path as createOrReplace replaces the whole table
+(same layout contract, weaker atomicity) — the switch is a
 capability probe, not a config flag, so the identical code promotes
 itself on a real cluster launched with
 ``--packages org.apache.iceberg:iceberg-spark-runtime-...``.

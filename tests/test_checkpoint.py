@@ -1,14 +1,17 @@
 """Resumability: kill-and-resume semantics via the per-partition
 lineage table (north_rule)."""
 
+import hashlib
+import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from renet2_spark.sources.checkpoint import CheckpointStore, with_part_key
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, sql_conf
 
 
 @pytest.fixture()
@@ -22,6 +25,14 @@ def _docs(spark):
     return spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
+
+
+def _lose_lineage(store, root, stage, part_keys):
+    """Simulate a crash that lost some buckets' lineage commits."""
+    lin = store.lineage(stage).filter(~F.col("part_key").isin(part_keys))
+    lin.write.mode("overwrite").parquet(f"{root}/{stage}/lineage_tmp")
+    shutil.rmtree(f"{root}/{stage}/lineage")
+    shutil.move(f"{root}/{stage}/lineage_tmp", f"{root}/{stage}/lineage")
 
 
 def test_stage_runs_and_resumes_noop(spark, root):
@@ -49,12 +60,7 @@ def test_partial_failure_resume_recomputes_only_missing(spark, root):
         return df.withColumn("n_chars2", F.length("text"))
 
     store.run_stage("stats", _docs(spark), transform)
-    # simulate a crash that lost 3 partitions' lineage commits
-    lin = store.lineage("stats")
-    keep = lin.filter(~F.col("part_key").isin([0, 1, 2]))
-    keep.write.mode("overwrite").parquet(root + "/stats/lineage_tmp")
-    shutil.rmtree(root + "/stats/lineage")
-    shutil.move(root + "/stats/lineage_tmp", root + "/stats/lineage")
+    _lose_lineage(store, root, "stats", [0, 1, 2])
     assert store.committed("stats").count() == 29
 
     seen = []
@@ -105,12 +111,7 @@ def test_resume_survives_key_type_change_in_transform(spark, root):
     store = CheckpointStore(spark, root)
     out1 = store.run_stage("edges", docs, transform, buckets=8)
     assert out1.count() == 500
-    # lose one bucket's lineage (simulated crash before commit)
-    lin = store.lineage("edges")
-    keep = lin.filter(F.col("part_key") != 0)
-    keep.write.mode("overwrite").parquet(root + "/edges/lineage_tmp")
-    shutil.rmtree(root + "/edges/lineage")
-    shutil.move(root + "/edges/lineage_tmp", root + "/edges/lineage")
+    _lose_lineage(store, root, "edges", [0])
 
     out2 = store.run_stage("edges", docs, transform, buckets=8)
     assert out2.count() == 500  # was 61/500 before the fix
@@ -160,6 +161,138 @@ def test_key_rewriting_transform_fails_loudly(spark, root):
 
     with pytest.raises(ValueError, match="hashes outside"):
         store.run_stage("bad", _docs(spark), bad)
+
+
+def test_recompute_emitting_nothing_serves_no_stale_rows(spark, root):
+    """A bucket whose recompute emits no rows keeps its old files on
+    disk (dynamic overwrite replaces only partitions that receive
+    rows); the readback must not serve them."""
+    store = CheckpointStore(spark, root)
+
+    def transform(df):
+        return df.filter(F.col("text") != "").withColumn("n_chars2", F.length("text"))
+
+    docs = with_part_key(_docs(spark))
+    store.run_stage("stats", docs.drop("part_key"), transform)
+    edited = docs.withColumn(
+        "text", F.when(F.col("part_key") == 0, F.lit("")).otherwise(F.col("text"))
+    ).drop("part_key")
+    out = store.run_stage("stats", edited, transform)
+    gone = {r["doc_id"] for r in docs.filter("part_key = 0").collect()}
+    assert gone
+    got = {r["doc_id"] for r in out.collect()}
+    assert not got & gone
+    assert out.count() == 500 - len(gone)
+
+
+def test_bucket_with_all_docs_removed_serves_no_stale_rows(spark, root):
+    """A bucket whose input docs are all gone has no fingerprint row,
+    so it is never recomputed; the readback must drop its old rows."""
+    store = CheckpointStore(spark, root)
+
+    def transform(df):
+        return df.withColumn("n_chars2", F.length("text"))
+
+    store.run_stage("stats", _docs(spark), transform)
+    rest = with_part_key(_docs(spark)).filter("part_key != 0").drop("part_key")
+    out = store.run_stage("stats", rest, transform)
+    assert out.count() < 500
+    assert sorted(out.collect()) == sorted(transform(rest).collect())
+
+
+def _checksums(path):
+    """md5 of every file under `path`, keyed by relative path."""
+    return {
+        str(f.relative_to(path)): hashlib.md5(f.read_bytes()).hexdigest()
+        for f in Path(path).rglob("*")
+        if f.is_file()
+    }
+
+
+def test_stray_rows_leave_committed_buckets_untouched(spark, root):
+    """A partial resume whose transform rewrites keys raises after its
+    write, leaves every committed bucket's files byte-identical and
+    commits nothing; the next run with a key-preserving transform
+    serves the full, deduplicated output."""
+    store = CheckpointStore(spark, root)
+    store.run_stage("bad", _docs(spark), lambda df: df)
+    _lose_lineage(store, root, "bad", [0])
+    data = f"{root}/bad/data"
+    committed = {
+        k: _checksums(f"{data}/{k}")
+        for k in os.listdir(data)
+        if k.startswith("part_key=") and k != "part_key=0"
+    }
+    assert len(committed) == 31
+    n_lineage = store.lineage("bad").count()
+
+    def bad(df):
+        return df.select(
+            F.concat(F.lit("x"), F.col("doc_id")).alias("doc_id"), "text"
+        )
+
+    with pytest.raises(ValueError, match="hashes outside"):
+        store.run_stage("bad", _docs(spark), bad)
+    assert {k: _checksums(f"{data}/{k}") for k in committed} == committed
+    assert store.lineage("bad").count() == n_lineage
+
+    out = store.run_stage("bad", _docs(spark), lambda df: df)
+    assert sorted(out.collect()) == sorted(_docs(spark).collect())
+
+
+def test_store_leaves_session_overwrite_mode_alone(spark, root):
+    """The dynamic overwrite is a write option: creating a store and
+    running a stage must not change the session's setting, which every
+    later partitioned overwrite in the session reads."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    with sql_conf(spark, {key: "STATIC"}):
+        store = CheckpointStore(spark, root)
+        store.run_stage("stats", _docs(spark), lambda df: df)
+        assert spark.conf.get(key) == "STATIC"
+
+
+def test_fresh_stage_is_one_pass(spark, root):
+    """A fresh-store run_stage persists nothing and evaluates the
+    transform once per input row, in a pinned number of Spark jobs:
+    the fingerprint collect, the write and the lineage append."""
+    sc = spark.sparkContext
+    rows = sc.accumulator(0)
+
+    @F.udf("int")
+    def n_chars(text):
+        rows.add(1)
+        return len(text)
+
+    docs = _docs(spark)
+    cached = set(sc._jsc.getPersistentRDDs().keySet())
+    store = CheckpointStore(spark, root)
+    try:
+        sc.setJobGroup("ckpt-one-pass", "fresh run_stage")
+        store.run_stage("stats", docs, lambda df: df.withColumn("n", n_chars("text")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached
+    assert rows.value == 500
+    # the status tracker is fed by the listener bus: drain it first.
+    # 4 jobs for the fingerprint collect (AQE query stages), 3 for the
+    # write (the exchange's query stages, then the files) and 1 for the
+    # lineage append
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("ckpt-one-pass")
+    assert len(jobs) == 8, sorted(jobs)
+
+
+def test_lineage_read_failure_is_not_an_empty_lineage(spark, root):
+    """Only a missing lineage path reads as "nothing committed"; an
+    unreadable one raises."""
+    store = CheckpointStore(spark, root)
+    assert store.lineage("never").count() == 0
+    os.makedirs(f"{root}/broken/lineage")
+    with open(f"{root}/broken/lineage/part-0.parquet", "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        store.lineage("broken")
 
 
 def test_metrics_roundtrip(spark, root):
