@@ -5,56 +5,34 @@ x disease ids, src/renet2/utils/sequence_utils.py:370-438) and
 Generate_data_rnn_v (pairs restricted to co-occurrence within one
 section, sequence_utils.py:255-304 — section pair set `tar_p_set` at
 291, cross at 301-304). The reference loops per doc in Python; here
-the fan-out is a declarative plan:
+the fan-out is a declarative plan with ONE candidate-pair definition,
+which every pair consumer reads (both edge plans, the pair and label
+queries, the threshold sweep and the P/R metrics query):
 
-  mentions --groupBy(doc_id, sent_no)--> per-sentence entity sets
-           --explode x explode--> co-occurring pairs
-           --groupBy(doc_id, g, d)--> n_cooc_sents
+  mentions --repartition(doc_id)--> (the one shuffle)
+           --groupBy(doc_id, type, entity_id)--> per-entity counts,
+                                                 names, sentence sets
+           --groupBy(doc_id)--> one row per doc (doc_entities)
+           --inline(DOC_PAIRS)--> genes x diseases sharing a sentence,
+                                  n_cooc_sents = |sentence overlap|
 
-One shuffle (the groupBy); the cross product is generated row-locally
-by nested explode, so no join and **no skew on hot entities** — the
-shuffle key is (doc_id, sent_no), which is uniformly distributed no
-matter how hot an entity is. This is the explicit skew defusal the
-north_rule asks for: keying fan-out by document, never by entity.
-Entity-keyed aggregations downstream use salted two-phase aggs
-(operators/skew.py). The edge plans (flagship and neural) key every
-step by doc_id alone, so they share one shuffle: doc_entities builds
-a per-document entity row and DOC_PAIRS derives its pairs in place.
+Every key starts with doc_id, so one exchange serves both
+aggregations; the cross product is generated row-locally by the
+array expression, so there is no join and **no skew on hot
+entities** — the shuffle key is the document, uniformly distributed
+no matter how hot an entity is (the north_rule's explicit skew
+defusal: key fan-out by document, never by entity). Entity-keyed
+aggregations downstream use salted two-phase aggs (operators/skew.py).
 
 Feature columns for the scorer (document-level evidence, the same
 signals the reference's feature codes 4/5/6 mark per token,
-sequence_utils.py:325-349): n_cooc_sents, n_gene_mentions,
-n_disease_mentions.
+sequence_utils.py:325-349): n_cooc_sents, n_g, n_d (pair_features).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def sentence_pair_candidates(mentions: DataFrame) -> DataFrame:
-    """Sentence/section co-occurrence variant (_v). Output:
-    (doc_id, gene_id, disease_id, n_cooc_sents)."""
-    per_sent = mentions.groupBy("doc_id", "sent_no").agg(
-        F.collect_set(
-            F.when(F.col("type") == "Gene", F.col("entity_id"))
-        ).alias("genes"),
-        F.collect_set(
-            F.when(F.col("type") != "Gene", F.col("entity_id"))
-        ).alias("diseases"),
-    )
-    pairs = (
-        per_sent.select(
-            "doc_id", "sent_no", F.explode("genes").alias("gene_id"), "diseases"
-        )
-        .select(
-            "doc_id", "sent_no", "gene_id", F.explode("diseases").alias("disease_id")
-        )
-    )
-    return pairs.groupBy("doc_id", "gene_id", "disease_id").agg(
-        F.countDistinct("sent_no").cast("int").alias("n_cooc_sents")
-    )
 
 
 def doc_pair_candidates(mentions: DataFrame) -> DataFrame:
@@ -136,10 +114,11 @@ def edge_relations(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def entity_info(mentions: DataFrame) -> DataFrame:
-    """(doc_id, type, entity_id, n_mentions, name) — ONE aggregation
-    serving both the scorer's evidence counts and the edge table's
-    name attachment (reference computes these in two separate passes,
-    predict.py:162-203; we share the shuffle)."""
+    """(doc_id, type, entity_id, n_mentions, name): per-entity mention
+    counts and names (reference predict.py:162-203). No plan reads it:
+    doc_entities computes the same columns inside the pair relation,
+    and only perfbench's neural pairgen layer still passes it to
+    pair_features."""
     return mentions.groupBy("doc_id", "type", "entity_id").agg(
         F.count("*").cast("int").alias("n_mentions"),
         F.concat_ws("|", F.sort_array(F.collect_set("mention"))).alias("name"),

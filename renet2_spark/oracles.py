@@ -807,102 +807,6 @@ FROM w
 # ---- relational coverage / metrics / multimodal oracles -------------------
 
 
-def q_rel_agg_filter() -> str:
-    return """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                           AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_rows
-FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY 1, 2
-"""
-
-
-def q_rel_join_left_fillna() -> str:
-    return """
-SELECT o_orderkey, o_custkey,
-       coalesce(c_name, 'UNKNOWN') AS cust_name,
-       coalesce(c_acctbal, 0.0) AS acctbal
-FROM orders LEFT JOIN (SELECT * FROM customer WHERE c_acctbal > 9000) c
-  ON o_custkey = c.c_custkey
-"""
-
-
-def q_rel_semi() -> str:
-    return """
-SELECT c_custkey, c_name, c_nationkey FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
-def q_rel_anti() -> str:
-    return """
-SELECT c_custkey, c_name, c_nationkey FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
-def q_rel_window_rank() -> str:
-    return """
-SELECT o_custkey, rank, o_orderkey, o_totalprice FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         CAST(row_number() OVER (PARTITION BY o_custkey
-              ORDER BY o_totalprice DESC, o_orderkey ASC) AS INT) AS rank
-  FROM orders
-) WHERE rank <= 3
-"""
-
-
-def q_rel_window_lag() -> str:
-    return """
-SELECT user_id, event_id,
-       round(value - lag(value, 1, 0.0) OVER (
-             PARTITION BY user_id ORDER BY ts ASC, event_id ASC), 5)
-         AS value_delta
-FROM events
-"""
-
-
-def q_rel_union_distinct() -> str:
-    return """
-SELECT DISTINCT * FROM (
-  SELECT o_custkey AS key, 'order' AS src FROM orders
-  UNION ALL
-  SELECT c_custkey AS key, 'customer' AS src FROM customer
-)
-"""
-
-
-def q_rel_topk() -> str:
-    return """
-SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-LIMIT 10
-"""
-
-
-def q_rel_grouping_top_nation() -> str:
-    return """
-SELECT n_name,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-             / count(*) AS avg_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-GROUP BY 1 HAVING count(*) > 1
-"""
-
-
-def q_rel_json_extract() -> str:
-    return """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(props->>'k' AS INT)) AS BIGINT) AS sum_k,
-       CAST(max(CAST(props->>'k' AS INT)) AS INT) AS max_k
-FROM events GROUP BY 1
-"""
-
-
 def q_rel_suite_join() -> str:
     """Consolidated join suite (r4 verdict #1): semi + anti + union +
     left join + fillna + grouped agg — mirrors

@@ -1,15 +1,19 @@
 """Generic relational operator coverage (SURVEY §2.2-2.7 classes) over
 the TPC-H-ish testdata, plus the P/R metrics join (J5).
 
-Each function is the Spark side of an oracle-checked query; together
-they exercise the operator classes the KG pipeline uses — left join +
-fillna (J1, reference raw_handler.py:45-47), semi/anti joins (J7,
-raw.py:1142-1166; set membership sequence_utils.py:291), grouped
-aggregation + threshold (A1, predict.py:120-128), window ranking (W3,
-predict.py:120-140), lag-shaped windows (W1), union+distinct
-(predict.py:434-438 / raw.py:1146), sort+limit top-k (raw.py:1172),
-and the metrics inner join (J5,
-benchmark/calculate_metrics_with_input.py:21-26).
+Three composed suites, each the Spark side of one exact-oracle query
+in __spark_entry__.queries(), exercise the operator classes the KG
+pipeline uses: left join + fillna (J1, reference raw_handler.py:45-47)
+and semi/anti joins (J7, raw.py:1142-1166; set membership
+sequence_utils.py:291) in rel_suite_join; window ranking (W3,
+predict.py:120-140), lag-shaped windows (W1) and sort+limit top-k
+(raw.py:1172) in rel_suite_window; grouped aggregation + threshold
+(A1, predict.py:120-128), JSON extraction (T10, parse_data.py:149-170),
+a broadcast join + having and union+distinct (predict.py:434-438 /
+raw.py:1146) in rel_suite_setagg.
+The two KG metric queries, the P/R metrics join (J5,
+benchmark/calculate_metrics_with_input.py:21-26) and the threshold
+sweep, read the flagship's candidate pairs.
 """
 
 from __future__ import annotations
@@ -23,153 +27,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def rel_agg_filter(spark, sf_dir) -> DataFrame:
-    """A1/F-class: filtered grouped aggregation (Q1-shaped)."""
-    li = _t(spark, sf_dir, "lineitem")
-    # doubles are summed as DECIMAL: double addition is order-dependent
-    # and Spark's partial aggregation order differs from DuckDB's —
-    # decimal sums are exact, hence engine- and partitioning-invariant
-    rev_term = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,6)"
-    )
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.round(F.sum(rev_term).cast("double"), 2).alias("revenue"),
-            F.count("*").cast("bigint").alias("n_rows"),
-        )
-    )
-
-
-def rel_join_left_fillna(spark, sf_dir) -> DataFrame:
-    """J1: left equi join + null fill (labels-join shape)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey, "left")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.coalesce("c_name", F.lit("UNKNOWN")).alias("cust_name"),
-            F.coalesce("c_acctbal", F.lit(0.0)).alias("acctbal"),
-        )
-    )
-
-
-def rel_semi(spark, sf_dir) -> DataFrame:
-    """left_semi: customers having >= 1 order (set membership)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name", "c_nationkey")
-
-
-def rel_anti(spark, sf_dir) -> DataFrame:
-    """left_anti: customers with no orders (exclusion-list shape J7)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name", "c_nationkey")
-
-
-def rel_window_rank(spark, sf_dir) -> DataFrame:
-    """W3: top-3 orders per customer by price (window-ranked dedup
-    shape)."""
-    o = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("o_custkey", "rank", "o_orderkey", "o_totalprice")
-    )
-
-
-def rel_window_lag(spark, sf_dir) -> DataFrame:
-    """W1-shaped lag comparison: per-user event value deltas."""
-    e = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return e.select(
-        "user_id",
-        "event_id",
-        F.round(
-            F.col("value") - F.lag("value", 1, 0.0).over(w), 5
-        ).alias("value_delta"),
-    )
-
-
-def rel_union_distinct(spark, sf_dir) -> DataFrame:
-    """Set op: union + distinct over two key sources."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("key"), F.lit("order").alias("src")
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("key"), F.lit("customer").alias("src")
-    )
-    return o.unionByName(c).distinct()
-
-
-def rel_topk(spark, sf_dir) -> DataFrame:
-    """Sort + limit with a total order (deterministic top-k)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.orderBy(
-            F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
-        )
-        .limit(10)
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-    )
-
-
-def rel_grouping_top_nation(spark, sf_dir) -> DataFrame:
-    """Join + agg + having: revenue-bearing customers per nation."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count("*").cast("bigint").alias("n_customers"),
-            # no round(): round-half behavior differs between engines at
-            # exact .5 boundaries; the raw double quotient is identical
-            (
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
-                / F.count("*")
-            ).alias("avg_acctbal"),
-        )
-        .filter(F.col("n_customers") > 1)
-    )
-
-
-def rel_json_extract(spark, sf_dir) -> DataFrame:
-    """T10: JSON field access (reference parse_data.py:149-170 walks
-    BioC-JSON passages) + grouped agg over the extracted value."""
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    return (
-        e.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("k").cast("bigint").alias("sum_k"),
-            F.max("k").cast("int").alias("max_k"),
-        )
-    )
-
-
-# ---- consolidated operator suites (r4 verdict #1) ------------------------
-# The ten single-operator rel_* queries above stay as the library
-# surface; the driver contract exercises them through three COMPOSED
-# plans so the whole contract fits the driver's 50-query correctness
-# window. Each suite is one genuinely-composed DataFrame plan with one
-# exact DuckDB oracle.
+# ---- operator suites ----------------------------------------------------
+# Each suite is one composed DataFrame plan with one exact DuckDB
+# oracle; together they are the module's whole operator surface.
 
 
 def rel_suite_join(spark, sf_dir) -> DataFrame:
@@ -337,19 +197,29 @@ def pr_metrics(
     )
 
 
+def _candidate_pairs(spark, sf_dir) -> DataFrame:
+    """The flagship's candidate pairs with their scorer features
+    (pairgen.pair_features) over the auto-routed tagger: one corpus
+    probe, one tagger chain, one doc_id shuffle."""
+    from ..corpus import load_documents
+    from ..operators.pairgen import pair_features
+    from .pipeline import build_mentions
+
+    return pair_features(build_mentions(spark, load_documents(spark, sf_dir)))
+
+
 def kg_pr_vs_strong_cooc(spark, sf_dir) -> DataFrame:
     """Metrics query: edges vs a 'gold' of strongly co-occurring pairs
-    (n_cooc_sents >= 3) — demonstrates J5 end-to-end with an oracle."""
-    from ..corpus import load_documents
-    from ..operators.pairgen import sentence_pair_candidates
-    from .pipeline import build_edges, build_mentions
+    (n_cooc_sents >= 3) — demonstrates J5 end-to-end with an oracle.
+    Both sides are the same candidate pairs: the edges are those the
+    vote keeps."""
+    from ..operators.scorer import score_and_vote
 
-    docs = load_documents(spark, sf_dir)
-    edges = build_edges(spark, docs)
-    gold = sentence_pair_candidates(build_mentions(spark, docs)).filter(
-        F.col("n_cooc_sents") >= 3
+    pairs = _candidate_pairs(spark, sf_dir)
+    gold = pairs.filter(F.col("n_cooc_sents") >= 3)
+    return pr_metrics(
+        score_and_vote(pairs), gold, ["doc_id", "gene_id", "disease_id"]
     )
-    return pr_metrics(edges, gold, ["doc_id", "gene_id", "disease_id"])
 
 
 def kg_threshold_sweep(spark, sf_dir) -> DataFrame:
@@ -358,28 +228,9 @@ def kg_threshold_sweep(spark, sf_dir) -> DataFrame:
     best): cross join of scored pairs x threshold grid, grouped
     metric, deterministic argmax. Gold = strong co-occurrence
     (n_cooc_sents >= 3)."""
-    from ..corpus import load_documents
-    from ..operators.pairgen import entity_info, sentence_pair_candidates
     from ..operators.scorer import score_and_vote
-    from .pipeline import build_mentions
 
-    m = build_mentions(spark, load_documents(spark, sf_dir))
-    pairs = sentence_pair_candidates(m)
-    info = entity_info(m)
-    g = info.filter(F.col("type") == "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("gene_id"),
-        F.col("n_mentions").alias("n_g"),
-    )
-    d = info.filter(F.col("type") != "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("disease_id"),
-        F.col("n_mentions").alias("n_d"),
-    )
-    scored = score_and_vote(
-        pairs.join(g, ["doc_id", "gene_id"]).join(d, ["doc_id", "disease_id"]),
-        cutoff=0,
-    ).select(
+    scored = score_and_vote(_candidate_pairs(spark, sf_dir), cutoff=0).select(
         "prob_avg", (F.col("n_cooc_sents") >= 3).alias("gold")
     )
     grid = spark.range(1, 19).select(

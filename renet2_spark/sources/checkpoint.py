@@ -145,16 +145,20 @@ class CheckpointStore:
             fps[r["part_key"]] = r["input_fingerprint"]
             if r["_done_fp"] != r["input_fingerprint"]:
                 todo[r["part_key"]] = r["input_fingerprint"]
+        data = self.spark.read
         if todo:
             subset = keyed.filter(F.col("part_key").isin(list(todo))).drop("part_key")
-            out = with_part_key(transform(subset), key_col, buckets)
+            out = with_part_key(transform(subset), key_col, buckets).withColumn(
+                "input_fingerprint", _fingerprint_of(todo)
+            )
+            # the readback's schema is the written one: an empty output
+            # leaves no file to infer it from
+            data = data.schema(out.schema)
             obs = Observation()
             # one task (one file) per bucket: without the repartition every
             # task writes into every bucket dir (measured 1,024 files vs
             # 32). The observe sits above the exchange (module docstring).
-            out.withColumn("input_fingerprint", _fingerprint_of(todo)).repartition(
-                "part_key"
-            ).observe(
+            out.repartition("part_key").observe(
                 obs,
                 F.count_if(F.col("input_fingerprint").isNull()).alias("stray"),
                 *[F.count_if(F.col("part_key") == k).alias(f"n{k}") for k in todo],
@@ -179,7 +183,7 @@ class CheckpointStore:
                 "append"
             ).parquet(self._lineage_path(stage))
         return (
-            self.spark.read.parquet(self._data_path(stage))
+            data.parquet(self._data_path(stage))
             .filter(_fingerprint_of(fps) == F.col("input_fingerprint"))
             .drop("part_key", "input_fingerprint")
         )

@@ -200,6 +200,21 @@ def test_bucket_with_all_docs_removed_serves_no_stale_rows(spark, root):
     assert sorted(out.collect()) == sorted(transform(rest).collect())
 
 
+def test_stage_emitting_nothing_reads_back_empty(spark, root):
+    """A fresh stage whose transform emits no rows writes no data file;
+    the readback still returns an empty DataFrame with the transform's
+    columns instead of failing to infer a schema."""
+    store = CheckpointStore(spark, root)
+
+    def transform(df):
+        return df.filter("length(text) < 0").withColumn("n", F.length("text"))
+
+    out = store.run_stage("empty", _docs(spark), transform)
+    assert out.columns == ["doc_id", "text", "n"]
+    assert out.count() == 0
+    assert store.committed("empty").count() == 32
+
+
 def _checksums(path):
     """md5 of every file under `path`, keyed by relative path."""
     return {
@@ -275,12 +290,13 @@ def test_fresh_stage_is_one_pass(spark, root):
     assert set(sc._jsc.getPersistentRDDs().keySet()) == cached
     assert rows.value == 500
     # the status tracker is fed by the listener bus: drain it first.
-    # 4 jobs for the fingerprint collect (AQE query stages), 3 for the
-    # write (the exchange's query stages, then the files) and 1 for the
-    # lineage append
+    # 4 jobs for the fingerprint collect (AQE query stages), 2 for the
+    # write (the exchange's query stage, then the files) and 1 for the
+    # lineage append; the readback is given the written schema, so no
+    # job infers it from a file footer
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("ckpt-one-pass")
-    assert len(jobs) == 8, sorted(jobs)
+    assert len(jobs) == 7, sorted(jobs)
 
 
 def test_lineage_read_failure_is_not_an_empty_lineage(spark, root):

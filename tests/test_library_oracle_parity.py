@@ -9,7 +9,9 @@ operator drifted. This suite restores it: every retired
 single-operator (plan, oracle) pair still compares exactly at
 sf0.001, using the same DuckDB mirrors the driver used through
 round 4 (they remain the per-operator oracle surface of
-renet2_spark.oracles)."""
+renet2_spark.oracles). The relational operator classes have no
+single-operator plans: each runs inside one of the three rel_suite_*
+queries of __spark_entry__.queries(), whose exact oracles cover them."""
 
 import pytest
 
@@ -114,12 +116,6 @@ def q_media_frames(spark):
     return mm.sample_frames(mm.media_table(derive_spans(_docs(spark))))
 
 
-def _rel(name):
-    from renet2_spark.plans import relational as rel
-
-    return lambda spark: getattr(rel, name)(spark, SF_SMOKE)
-
-
 def q_pair_tensors_digest(spark):
     """Retired from the driver contract in round 6 (its encode digest
     is strictly subsumed by kg_edges_neural's exact row-level golden
@@ -204,25 +200,6 @@ CASES = {
     "dedup_survivors_cc": (q_dedup_survivors_cc, oracles.q_dedup_survivors_cc),
     "media_features": (q_media_features, oracles.q_media_features),
     "media_frames": (q_media_frames, oracles.q_media_frames),
-    "rel_agg_filter": (_rel("rel_agg_filter"), oracles.q_rel_agg_filter),
-    "rel_join_left_fillna": (
-        _rel("rel_join_left_fillna"),
-        oracles.q_rel_join_left_fillna,
-    ),
-    "rel_semi": (_rel("rel_semi"), oracles.q_rel_semi),
-    "rel_anti": (_rel("rel_anti"), oracles.q_rel_anti),
-    "rel_window_rank": (_rel("rel_window_rank"), oracles.q_rel_window_rank),
-    "rel_window_lag": (_rel("rel_window_lag"), oracles.q_rel_window_lag),
-    "rel_union_distinct": (
-        _rel("rel_union_distinct"),
-        oracles.q_rel_union_distinct,
-    ),
-    "rel_topk": (_rel("rel_topk"), oracles.q_rel_topk),
-    "rel_grouping_top_nation": (
-        _rel("rel_grouping_top_nation"),
-        oracles.q_rel_grouping_top_nation,
-    ),
-    "rel_json_extract": (_rel("rel_json_extract"), oracles.q_rel_json_extract),
 }
 
 

@@ -166,6 +166,8 @@ def test_neural_edge_plan_is_flagship_plan_plus_scorer(spark):
 
 _PYTHON_NODE = re.compile(r"\b(MapInPandas|ArrowEvalPython|MapInArrow)\b")
 _JOIN_NODE = re.compile(r"\b\w*(?:Join|CartesianProduct)\b")
+# an Exchange operator line (a ReusedExchange line only names one)
+_EXCHANGE = re.compile(r"^[\s:+-]*Exchange ", re.M)
 
 
 def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
@@ -190,6 +192,64 @@ def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
     # the scorer is one MapInPandas; the rest are raw passes
     assert len(_PYTHON_NODE.findall(neural)) - 1 <= 2, neural
     assert neural.count("FileScan parquet") <= 2, neural
+
+
+def test_threshold_sweep_scores_the_flagship_pairs(spark):
+    """kg_threshold_sweep scores the flagship's candidate pairs: in the
+    non-adaptive plan one document scan, two hash exchanges (the pairs'
+    doc_id repartition and the groupBy threshold) and no join besides
+    the dictionary broadcast and the grid's nested-loop join. Entity
+    counts joined back onto a second pair relation would add scans,
+    exchanges and joins."""
+    from renet2_spark.plans.relational import kg_threshold_sweep
+
+    spark.catalog.clearCache()
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        plan = _executed(kg_threshold_sweep(spark, SF_SMOKE))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert len(_EXCHANGE.findall(plan)) == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert sorted(_JOIN_NODE.findall(plan)) == [
+        "BroadcastHashJoin", "BroadcastNestedLoopJoin"
+    ], plan
+
+
+def test_pr_query_builds_its_pairs_once(spark, monkeypatch):
+    """kg_pr_vs_strong_cooc probes the corpus once and runs one tagger
+    chain: its edges and its gold are two filters of the same candidate
+    pairs. In the non-adaptive plan of its one metrics action: one
+    document scan, the dictionary broadcast join, the doc_id
+    repartition once (the gold branch reuses that exchange), the two
+    key-set exchanges of the metrics full outer join and the final
+    single-partition exchange."""
+    from renet2_spark.plans import pipeline
+    from renet2_spark.plans.relational import kg_pr_vs_strong_cooc
+
+    probes, actions = [], []
+    probe = pipeline.probe_corpus_contract_info
+    monkeypatch.setattr(
+        pipeline, "probe_corpus_contract_info",
+        lambda docs, *a: probes.append(docs) or probe(docs, *a),
+    )
+    cls = type(spark.range(1))
+    first = cls.first
+    monkeypatch.setattr(cls, "first", lambda df: actions.append(df) or first(df))
+    spark.catalog.clearCache()
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        kg_pr_vs_strong_cooc(spark, SF_SMOKE)
+        [metrics] = actions
+        plan = _executed(metrics)
+    assert len(probes) == 1
+    assert plan.count("FileScan parquet") == 1, plan
+    assert sorted(_JOIN_NODE.findall(plan)) == [
+        "BroadcastHashJoin", "SortMergeJoin"
+    ], plan
+    assert len(_EXCHANGE.findall(plan)) == 4, plan
+    assert plan.count("ReusedExchange") == 1, plan
+    assert len(re.findall(
+        r"^[\s:+-]*Exchange hashpartitioning\(doc_id#\d+, \d+\), REPARTITION_BY_COL",
+        plan, re.M,
+    )) == 1, plan
 
 
 def test_decontaminate_probe_is_broadcast(spark):

@@ -293,7 +293,7 @@ def test_cli_predict_routes_raw_on_variable_corpus(spark):
     from renet2_spark.cli import main
     from renet2_spark.operators.anncleaner import fuse_joint_tags
     from renet2_spark.operators.normalize import canonicalize_mentions
-    from renet2_spark.operators.pairgen import entity_info, sentence_pair_candidates
+    from renet2_spark.operators.pairgen import edge_relations
     from renet2_spark.operators.scorer import CUTOFF, score_and_vote
     from renet2_spark.operators.tagger import tag_mentions
 
@@ -313,24 +313,7 @@ def test_cli_predict_routes_raw_on_variable_corpus(spark):
     mentions = fuse_joint_tags(
         canonicalize_mentions(tag_mentions(sents, spark))
     )
-    pairs = sentence_pair_candidates(mentions)
-    info = entity_info(mentions)
-    g = info.filter(F.col("type") == "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("gene_id"),
-        F.col("n_mentions").alias("n_g"),
-        F.col("name").alias("g_name"),
-    )
-    dd = info.filter(F.col("type") != "Gene").select(
-        "doc_id",
-        F.col("entity_id").alias("disease_id"),
-        F.col("n_mentions").alias("n_d"),
-        F.col("name").alias("d_name"),
-    )
-    voted = score_and_vote(
-        pairs.join(g, ["doc_id", "gene_id"]).join(dd, ["doc_id", "disease_id"]),
-        cutoff=CUTOFF,
-    )
+    voted = score_and_vote(edge_relations(mentions)[0], cutoff=CUTOFF)
     expected = {
         (r["doc_id"], r["gene_id"], r["disease_id"], r["g_name"], r["d_name"],
          float(r["prob_avg"]))

@@ -484,7 +484,7 @@ def test_real_text_dictionary_tagging_recovers_reference_ner(spark):
 # DOCUMENTS (title + multi-sentence abstract, annotation spans re-based
 # to doc offsets exactly as PubTator publishes them), run through the
 # production chain parse_pubtator -> verify_mentions ->
-# sentence_pair_candidates. Expected values are derived INDEPENDENTLY
+# edge_relations (the flagship's candidate pairs). Expected values are derived INDEPENDENTLY
 # in python from the notebook fixture AND frozen as literals, so a
 # silent change in any stage (or in the fixture) fails loudly.
 
@@ -524,14 +524,14 @@ def _real_pubtator_golden_input():
 def test_real_pubtator_golden_parse_mentions_pairs(spark):
     """10 real reference documents through the production chain:
     every re-based annotation span must survive verify against the
-    parse-reconstructed doc text, and sentence-co-occurrence pair
-    generation must reproduce the independent python recompute AND the
-    frozen golden digest."""
+    parse-reconstructed doc text, and the flagship's sentence
+    co-occurrence pairs (edge_relations) must reproduce the independent
+    python recompute AND the frozen golden digest."""
     import hashlib
 
     from pyspark.sql import functions as F
 
-    from renet2_spark.operators.pairgen import sentence_pair_candidates
+    from renet2_spark.operators.pairgen import edge_relations
     from renet2_spark.operators.tagger import verify_mentions
     from renet2_spark.sources.pubtator import parse_pubtator
 
@@ -571,7 +571,7 @@ def test_real_pubtator_golden_parse_mentions_pairs(spark):
     )
     got = {
         (r["doc_id"], r["gene_id"], r["disease_id"], r["n_cooc_sents"])
-        for r in sentence_pair_candidates(mdf).collect()
+        for r in edge_relations(mdf)[0].collect()
     }
     # independent recompute
     per_sent: dict = {}
