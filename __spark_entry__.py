@@ -821,8 +821,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d).filter(F.pmod(F.col("doc_id"), F.lit(97)) == 3),
         ),
         # the full per-doc text-analysis profile in ONE row-local scan
-        # (text_stats + lang_id + token_counts + fingerprint +
-        # text_repetition + simhash)
+        # (text_stats + fingerprint + simhash, plus the lang_id,
+        # token_counts and text_repetition columns that live only here)
         "text_profile": lambda s, d: ts.text_profile(_docs(s, d)),
         # PII scrubbing (emails/phones/IPv4 -> typed masks) over
         # deterministically-injected PII

@@ -1,5 +1,5 @@
 """Text analysis functions for corpus curation: quality scoring,
-language-ID heuristic, token counting, document fingerprinting.
+document fingerprinting and the per-document text profile.
 
 All pure Catalyst expressions (zero Python in the hot path) and all
 reproducible in ANSI SQL for the oracle. At 100 TB these run inside
@@ -68,43 +68,6 @@ def text_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def lang_id(documents: DataFrame) -> DataFrame:
-    """(doc_id, lang, lang_pred, lang_conf) — n-gram/stopword
-    heuristic. The synthetic corpus is English-like word salad, so the
-    heuristic scores en-stopword density; conf = stopword hits /
-    tokens. (The real corpus analogue scores per-language character
-    n-gram tables; plumbing is identical.)"""
-    ws = _words()
-    hits = _stop_hits(ws)
-    pred = F.when(hits > 0, F.lit("en")).otherwise(F.lit("und"))
-    conf = F.round(hits.cast("double") / F.size(ws).cast("double"), 5)
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        "lang",
-        pred.alias("lang_pred"),
-        conf.alias("lang_conf"),
-    )
-
-
-def token_counts(documents: DataFrame) -> DataFrame:
-    """(doc_id, ws_tokens, subword_tokens) — whitespace count plus a
-    BPE-ish upper bound: ceil(len(word)/4) subword units per word.
-
-    subword counting is a single codegen'd regexp_count: greedy
-    non-overlapping matches of [^ ]{1,4} split every space-delimited
-    word of length L into exactly ceil(L/4) chunks — identical value to
-    the per-word aggregate, without the interpreted HOF lambda the old
-    version paid per row (round-2 verdict #4)."""
-    ws = _words()
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.size(ws).cast("int").alias("ws_tokens"),
-        F.regexp_count("text", F.lit("[^ ]{1,4}")).cast("int").alias(
-            "subword_tokens"
-        ),
-    )
-
-
 def fingerprint(documents: DataFrame) -> DataFrame:
     """(doc_id, fp, text_md5) — order-sensitive rolling polynomial hash
     over words (h = h*31 + (ascii(first)*100 + len)) mod 1e9+7, plus
@@ -144,39 +107,6 @@ def fingerprint_udf():
         return pd.Series(out, dtype="Int64")
 
     return _fp
-
-
-def text_repetition(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, n_grams, n_distinct, dup_ratio) — intra-document
-    repetition: fraction of word n-gram OCCURRENCES that are repeats
-    of an earlier n-gram in the same doc (the Gopher-style
-    duplicate-n-gram quality signal). Row-local: the gram array and
-    its distinct count are computed per row with array expressions —
-    no explode, no shuffle (the per-row HOF fold beats an
-    explode+groupBy reshuffle here for the same reason simhash's did,
-    BENCH.md round 3)."""
-    ws = F.split(F.col("text"), " ")
-    n_gr = F.greatest(F.size(ws) - (n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_gr - 1, F.lit(0))),
-        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-    )
-    # guard: sequence(0, -1+? ) — when n_gr == 0 the sequence above
-    # still emits index 0; slice it away with a CASE
-    n_dist = F.when(n_gr == 0, F.lit(0)).otherwise(
-        F.size(F.array_distinct(grams))
-    )
-    dup_ratio = F.when(n_gr == 0, F.lit(0.0)).otherwise(
-        F.round(
-            (n_gr - n_dist).cast("double") / n_gr.cast("double"), 5
-        )
-    )
-    return documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        n_gr.cast("int").alias("n_grams"),
-        n_dist.cast("int").alias("n_distinct"),
-        dup_ratio.alias("dup_ratio"),
-    )
 
 
 # PII patterns: the common Java-regex / RE2 subset (no lookaround), so
@@ -360,14 +290,23 @@ def text_profile(documents: DataFrame, rep_n: int = 3) -> DataFrame:
     queries consolidated so the whole contract fits the driver's
     50-query correctness window).
 
-    Columns are the union of text_stats + lang_id + token_counts +
-    fingerprint + text_repetition + simhash, with each operator's
-    original names kept (ws_tokens intentionally duplicates n_tokens —
-    both operators' contracts are preserved). One scan, zero shuffle,
-    zero joins: every signal is computed per row, which is also the
-    right 100 TB shape (at scale these run fused into the same pass).
-    The only Python is fingerprint's Arrow-batched Horner fold; the
-    simhash fold is the measured-fastest formulation (BENCH.md r3)."""
+    Columns are the union of text_stats, fingerprint and simhash plus
+    three signal groups that live only here, each checked on its own
+    by projecting it out of this profile against its per-operator
+    oracle (a projection prunes the fingerprint UDF):
+    * lang_id (lang, lang_pred, lang_conf) — an en-stopword density
+      heuristic, conf = stopword hits / tokens (the synthetic corpus
+      is English-like word salad);
+    * token_counts (ws_tokens, subword_tokens) — ws_tokens duplicates
+      n_tokens; subword_tokens is ceil(len(word)/4) per word, counted
+      by one codegen'd regexp_count of greedy [^ ]{1,4} chunks;
+    * text_repetition (n_grams, n_distinct, dup_ratio) — the share of
+      word rep_n-gram occurrences that repeat an earlier one in the
+      same doc (Gopher-style), from a per-row array_distinct.
+    One scan, zero shuffle, zero joins: every signal is computed per
+    row, which is also the right 100 TB shape. The only Python is
+    fingerprint's Arrow-batched Horner fold; the simhash fold is the
+    measured-fastest formulation (BENCH.md r3)."""
     from ..operators.dedup import simhash_col
 
     ws = _words()

@@ -6,7 +6,7 @@ kept text are dropped (raw.py:741-742). Tensor pad shape caps live in
 operators/neural.py (MAX_SENTS/MAX_TOKENS, raw_handler.py:51-61).
 
 Class-balance utilities (reference raw_handler.py:326-377 weighted
-sampling): label distribution + stratified downsampling via sampleBy.
+sampling): label distribution + deterministic stratified downsampling.
 """
 
 from __future__ import annotations
@@ -63,23 +63,6 @@ def label_distribution(labels: DataFrame) -> DataFrame:
     return labels.groupBy("label").agg(F.count("*").cast("bigint").alias("n"))
 
 
-def sample_balanced(labels: DataFrame, ratio: float = 2.0,
-                    seed: int = 42) -> DataFrame:
-    """Downsample negatives to `ratio` x positives via stratified
-    sampleBy (reference silver-negative sampling train.py:472-480).
-    Sampling is seeded; exact counts are probabilistic — tests assert
-    bounds, not equality (documented train-only nondeterminism)."""
-    counts = {r["label"]: r["n"] for r in label_distribution(labels).collect()}
-    n_pos = sum(n for l, n in counts.items() if l and l >= 1.0)
-    fractions = {}
-    for label, n in counts.items():
-        if label is not None and label < 1.0 and n > 0:
-            fractions[label] = min(1.0, ratio * n_pos / n)
-        else:
-            fractions[label] = 1.0
-    return labels.sampleBy("label", fractions, seed=seed)
-
-
 def sample_balanced_hash(labels: DataFrame, ratio: float = 2.0,
                          salt: str = "bal") -> DataFrame:
     """Deterministic stratified class balancing: every label >= 1.0
@@ -88,8 +71,8 @@ def sample_balanced_hash(labels: DataFrame, ratio: float = 2.0,
     is kept iff the first 4 hex digits of md5(salt:doc:gene:disease),
     as an int, fall below fraction * 65536.
 
-    Same balancing intent as sample_balanced (reference
-    raw_handler.py:326-377) but content-hash-deterministic instead of
+    Balances as the reference's weighted sampling does
+    (raw_handler.py:326-377), but content-hash-deterministic instead of
     seeded-random: reproducible across engines (exact DuckDB oracle,
     kg_sample_balanced), stable under corpus growth (a row's fate
     never depends on other rows once the fraction is fixed), and

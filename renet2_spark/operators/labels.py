@@ -109,8 +109,8 @@ def silver_negatives(pairs: DataFrame, annotated: DataFrame) -> DataFrame:
     >= 1 tool where EVERY observed prediction is negative become
     silver negatives (label 0), minus already-annotated pairs
     (left-anti; the reference's new_label.isnull() filter at 468-469).
-    The 2x-positives downsampling lives in caps.sample_balanced
-    (probabilistic, train-only)."""
+    The 2x-positives downsampling lives in caps.sample_balanced_hash
+    (deterministic per-row md5 rule)."""
     keys = ["doc_id", "gene_id", "disease_id"]
     agg = tool_votes(pairs).groupBy(*keys).agg(
         F.max("pred").alias("_any_pos"),

@@ -1783,66 +1783,6 @@ FROM ranked r JOIN surp USING (doc_id) WHERE r.rnk <= {k}
 """
 
 
-def q_events_asof() -> str:
-    """As-of join parity: each click event gains its user's most
-    recent prior-or-equal view event — DuckDB's NATIVE ASOF LEFT JOIN
-    is the oracle for operators/asof.asof_join's union+window
-    formulation."""
-    return """
-WITH clicks AS (SELECT event_id, ts, user_id, value FROM events
-                WHERE event_type = 'click'),
-views  AS (SELECT event_id, ts, user_id, value FROM events
-           WHERE event_type = 'view')
-SELECT c.event_id, c.ts, c.user_id, c.value,
-       v.event_id AS r_event_id, v.ts AS r_ts, v.user_id AS r_user_id,
-       v.value AS r_value
-FROM clicks c ASOF LEFT JOIN views v
-  ON c.user_id = v.user_id AND c.ts >= v.ts
-"""
-
-
-def q_events_range() -> str:
-    """Range (interval-overlap) join parity: 6h view windows x +-1h
-    error windows per user — DuckDB's range-predicate join is the
-    oracle for operators/rangejoin.range_join's binned equi-join."""
-    return """
-WITH w AS (SELECT event_id, user_id,
-                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS st,
-                  CAST(FLOOR(epoch(ts)) AS BIGINT) + 21600 AS en
-           FROM events WHERE event_type = 'view'),
-e AS (SELECT event_id, user_id,
-             CAST(FLOOR(epoch(ts)) AS BIGINT) - 3600 AS st,
-             CAST(FLOOR(epoch(ts)) AS BIGINT) + 3600 AS en
-      FROM events WHERE event_type = 'error')
-SELECT w.event_id, w.user_id, w.st, w.en,
-       e.event_id AS r_event_id, e.user_id AS r_user_id,
-       e.st AS r_st, e.en AS r_en
-FROM w JOIN e
-  ON w.user_id = e.user_id AND w.st < e.en AND e.st < w.en
-"""
-
-
-def q_events_sessionize() -> str:
-    """Gap-based sessionization parity (operators/sessionize): 3-day
-    inactivity gap per user over the events table — the identical
-    lag-flag + running-sum window formulation in DuckDB."""
-    return """
-WITH m AS (
-  SELECT event_id, ts, user_id, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch(ts) - epoch(lag(ts) OVER w) > 259200.0
-              THEN 1 ELSE 0 END AS st
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value)
-)
-SELECT event_id, ts, user_id, value,
-       CAST(SUM(st) OVER (
-         PARTITION BY user_id ORDER BY ts, event_id, value
-         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-FROM m
-"""
-
-
 def q_text_pii() -> str:
     """PII injection + scrub — mirrors __spark_entry__.q_text_pii over
     functions.textstats.pii_scrub. The regex patterns are the common

@@ -170,26 +170,25 @@ def pr_metrics(
     ONE action: a full-outer join of the two distinct key sets with
     side markers, aggregated in a single pass (the previous 3x
     .count() formulation recomputed the full upstream pipeline three
-    times per metrics call — round-1 verdict wrong-list #4)."""
+    times per metrics call — round-1 verdict wrong-list #4). The
+    distinct keeps it right for user tables that repeat a key."""
     p = predicted.select(*keys).distinct().withColumn("_p", F.lit(1))
     g = gold.select(*keys).distinct().withColumn("_g", F.lit(1))
-    row = (
-        p.join(g, keys, "full_outer")
-        .agg(
-            F.sum(
-                F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1)
-                .otherwise(0)
-            ).alias("tp"),
-            F.sum(F.coalesce("_p", F.lit(0))).alias("n_p"),
-            F.sum(F.coalesce("_g", F.lit(0))).alias("n_g"),
-        )
-        .first()
+    counts = p.join(g, keys, "full_outer").agg(
+        F.count_if(F.col("_p").isNotNull() & F.col("_g").isNotNull()).alias("tp"),
+        F.count("_p").alias("n_pred"),
+        F.count("_g").alias("n_gold"),
     )
-    tp, n_p, n_g = int(row["tp"] or 0), int(row["n_p"] or 0), int(row["n_g"] or 0)
+    return _pr_row(predicted.sparkSession, counts.first())
+
+
+def _pr_row(spark: SparkSession, counts) -> DataFrame:
+    """The one-row metrics DataFrame from a collected (tp, n_pred,
+    n_gold) row; a zero denominator scores 0.0."""
+    tp, n_p, n_g = (int(counts[c] or 0) for c in ("tp", "n_pred", "n_gold"))
     prec = tp / n_p if n_p else 0.0
     rec = tp / n_g if n_g else 0.0
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-    spark = predicted.sparkSession
     return spark.createDataFrame(
         [(tp, n_p, n_g, round(prec, 5), round(rec, 5), round(f1, 5))],
         "tp long, n_pred long, n_gold long, precision double, "
@@ -212,14 +211,22 @@ def kg_pr_vs_strong_cooc(spark, sf_dir) -> DataFrame:
     """Metrics query: edges vs a 'gold' of strongly co-occurring pairs
     (n_cooc_sents >= 3) — demonstrates J5 end-to-end with an oracle.
     Both sides are the same candidate pairs: the edges are those the
-    vote keeps."""
-    from ..operators.scorer import score_and_vote
+    vote keeps. So one aggregation over the unfiltered scored pairs
+    counts tp, n_pred and n_gold, as kg_threshold_sweep does; no join.
+    This needs each (doc_id, gene_id, disease_id) to be one pair row,
+    which holds: the dictionary tagger emits only Gene and Disease
+    mentions, and doc_entities groups them by (doc_id, type,
+    entity_id), so each side lists an id once per doc."""
+    from ..operators.scorer import CUTOFF, score_and_vote
 
-    pairs = _candidate_pairs(spark, sf_dir)
-    gold = pairs.filter(F.col("n_cooc_sents") >= 3)
-    return pr_metrics(
-        score_and_vote(pairs), gold, ["doc_id", "gene_id", "disease_id"]
+    voted = F.col("hit_cnt") >= CUTOFF
+    gold = F.col("n_cooc_sents") >= 3
+    counts = score_and_vote(_candidate_pairs(spark, sf_dir), cutoff=0).agg(
+        F.count_if(voted & gold).alias("tp"),
+        F.count_if(voted).alias("n_pred"),
+        F.count_if(gold).alias("n_gold"),
     )
+    return _pr_row(spark, counts.first())
 
 
 def kg_threshold_sweep(spark, sf_dir) -> DataFrame:

@@ -1,5 +1,5 @@
 """Caps (S5), BioC ingest (S4), incremental/streaming (S9), skew
-helpers, class-balance sampling (A8)."""
+helpers."""
 
 import json
 import shutil
@@ -148,21 +148,6 @@ def test_salted_aggs_match_plain(spark):
         assert v == sorted(set(v))
 
 
-def test_sample_balanced_bounds(spark):
-    from renet2_spark.operators.caps import label_distribution, sample_balanced
-
-    rows = [("d%d" % i, "g", "D", 1.0) for i in range(100)] + [
-        ("e%d" % i, "g", "D", 0.0) for i in range(2000)
-    ]
-    labels = spark.createDataFrame(
-        rows, "doc_id string, gene_id string, disease_id string, label double"
-    )
-    sampled = sample_balanced(labels, ratio=2.0, seed=7)
-    dist = {r["label"]: r["n"] for r in label_distribution(sampled).collect()}
-    assert dist[1.0] == 100  # positives kept
-    assert 120 <= dist[0.0] <= 280  # ~2x positives, binomial spread
-
-
 def test_table_sink_fallback(spark):
     import tempfile
 
@@ -251,51 +236,6 @@ def test_bioc_parse_null_section_type(spark):
     raw = spark.createDataFrame([(_json.dumps(doc),)], "doc_json string")
     spans = parse_bioc(raw).collect()[0]["spans"]
     assert [s["kind"] for s in spans] == ["title", "abstract"]
-
-
-def test_stream_windowed_mention_counts_watermark(spark, tmp_path):
-    """Watermarked event-time windows: append mode emits a window only
-    after the watermark passes it; a second micro-batch advances the
-    watermark and flushes the previously-open window; counts equal the
-    batch aggregation over the emitted windows."""
-    import datetime as dt
-
-    from renet2_spark.streaming.incremental import (
-        stream_windowed_mention_counts,
-    )
-
-    indir, outdir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    )
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def write_batch(rows, name):
-        spark.createDataFrame(
-            rows, "doc_id bigint, text string, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(indir)
-
-    # batch 1: mentions at t0 (2 genes, 1 disease) and one at t0+60min
-    write_batch(
-        [(1, "scan join slow", t0), (2, "merge the big", t0),
-         (3, "scan data", t0 + dt.timedelta(minutes=60))], "b1"
-    )
-    stream_windowed_mention_counts(spark, indir, outdir, ckpt)
-    got1 = {
-        (r["window_start"], r["type"]): r["n_mentions"]
-        for r in spark.read.parquet(outdir).collect()
-    }
-    # watermark after batch1 = t0+60 - 30min -> the t0 window emitted,
-    # the t0+60 window still open
-    assert got1 == {(t0, "Gene"): 3, (t0, "Disease"): 2}
-
-    # batch 2 advances the watermark past the t0+60 window
-    write_batch([(4, "filter text", t0 + dt.timedelta(minutes=180))], "b2")
-    stream_windowed_mention_counts(spark, indir, outdir, ckpt)
-    got2 = {
-        (r["window_start"], r["type"]): r["n_mentions"]
-        for r in spark.read.parquet(outdir).collect()
-    }
-    assert got2[(t0 + dt.timedelta(minutes=60), "Gene")] == 1
 
 
 # ---- S1/S2 executor-parallel fetch shape ----------------------------------
@@ -483,47 +423,3 @@ def test_sample_frames_true_last_byte_any_payload_length(spark):
             [h, h, h, h],
         ).fetchone()
         assert n == 1 + pl[-1] % 32
-
-
-def test_stream_dedup_exact_stateful_across_batches(spark):
-    """Custom stateful operator (applyInPandasWithState): exact dedup
-    whose state survives ACROSS micro-batches and across query
-    restarts (state-store checkpoint). Batch 2 repeats batch-1 texts —
-    they must NOT be re-emitted; its genuinely new text must."""
-    from renet2_spark.streaming.incremental import stream_dedup_exact
-
-    indir = tempfile.mkdtemp(prefix="sd_in_")
-    outdir = tempfile.mkdtemp(prefix="sd_out_") + "/keepers"
-    ckpt = tempfile.mkdtemp(prefix="sd_ck_")
-    try:
-        b1 = spark.createDataFrame(
-            [(3, "aa bb"), (1, "aa bb"), (2, "cc dd")],
-            "doc_id long, text string",
-        )
-        b1.write.mode("append").parquet(indir)
-        stream_dedup_exact(spark, indir, outdir, ckpt)
-        got1 = {
-            (r["text_hash"], r["keeper_doc_id"])
-            for r in spark.read.parquet(outdir).collect()
-        }
-        # earliest doc_id per text within the batch
-        keepers1 = {k for _, k in got1}
-        assert keepers1 == {"1", "2"} and len(got1) == 2
-
-        b2 = spark.createDataFrame(
-            [(9, "aa bb"), (8, "cc dd"), (7, "ee ff")],
-            "doc_id long, text string",
-        )
-        b2.write.mode("append").parquet(indir)
-        # restart the query on the same checkpoint: state resumes
-        stream_dedup_exact(spark, indir, outdir, ckpt)
-        got2 = {
-            (r["text_hash"], r["keeper_doc_id"])
-            for r in spark.read.parquet(outdir).collect()
-        }
-        new = got2 - got1
-        assert {k for _, k in new} == {"7"}  # only the new text emitted
-        assert len(got2) == 3
-    finally:
-        shutil.rmtree(indir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -207,18 +207,21 @@ def test_filter_rnn_entity_punct_survives(spark):
 
 def test_text_repetition_edges(spark):
     """Repetition signal: fully repetitive doc scores high, distinct
-    doc scores 0, docs shorter than n grams score (0, 0, 0.0)."""
-    from renet2_spark.functions.textstats import text_repetition
+    doc scores 0, docs shorter than n grams score (0, 0, 0.0). The
+    columns live only in text_profile, so they are projected from it."""
+    from renet2_spark.functions.textstats import text_profile
 
     docs = spark.createDataFrame(
         [
-            ("1", "a b c a b c a b c"),   # grams: 7, distinct: 3
-            ("2", "q w e r t y u"),       # all distinct
-            ("3", "x y"),                 # shorter than one 3-gram
+            ("1", "a b c a b c a b c", "en"),   # grams: 7, distinct: 3
+            ("2", "q w e r t y u", "en"),       # all distinct
+            ("3", "x y", "en"),                 # shorter than one 3-gram
         ],
-        "doc_id string, text string",
+        "doc_id string, text string, lang string",
     )
-    got = {r["doc_id"]: r for r in text_repetition(docs).collect()}
+    rep = text_profile(docs).select("doc_id", "n_grams", "n_distinct",
+                                    "dup_ratio")
+    got = {r["doc_id"]: r for r in rep.collect()}
     assert (got["1"]["n_grams"], got["1"]["n_distinct"]) == (7, 3)
     assert abs(got["1"]["dup_ratio"] - round(4 / 7, 5)) < 1e-9
     assert got["2"]["dup_ratio"] == 0.0
