@@ -23,22 +23,18 @@ _PKG_SHIPPED: set[str] = set()
 
 def _ship_pkg(spark) -> None:
     """Make renet2_spark importable on executor python workers via a
-    zip + addPyFile (equivalent of spark-submit --py-files)."""
+    zip + addPyFile (equivalent of spark-submit --py-files). The zip is
+    named by the application id, so two drivers on one host never
+    rewrite each other's."""
     app = spark.sparkContext.applicationId
     if app in _PKG_SHIPPED:
         return
     import tempfile
-    import zipfile
 
-    zpath = os.path.join(tempfile.gettempdir(), "renet2_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        pkg = os.path.join(_REPO, "renet2_spark")
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zpath)
+    from renet2_spark.packaging import build_pyfiles_zip
+
+    zpath = os.path.join(tempfile.gettempdir(), f"renet2_spark_pkg_{app}.zip")
+    spark.sparkContext.addPyFile(build_pyfiles_zip(zpath))
     _PKG_SHIPPED.add(app)
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,7 +50,7 @@ from renet2_spark.corpus import (
 )
 from renet2_spark.operators.normalize import canonicalize_mentions
 from renet2_spark.operators.pairgen import doc_pair_candidates, pair_features
-from renet2_spark.operators.scorer import ensemble_vote, score_pairs
+from renet2_spark.operators.scorer import score_and_vote
 from renet2_spark.operators.tagger import tag_mentions
 from renet2_spark.operators import dedup as dd
 from renet2_spark.operators import similarity as sim
@@ -459,9 +455,7 @@ def q_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     never appears; format_number replicates it above 1000). r4 verdict
     #1: the former kg_scores_probx query's column folded in, one
     driver hash pins both the score math and the formatting."""
-    scored = ensemble_vote(
-        score_pairs(pair_features(_mentions(spark, sf_dir))), cutoff=0
-    )
+    scored = score_and_vote(pair_features(_mentions(spark, sf_dir)), cutoff=0)
     return scored.select(
         "doc_id", "gene_id", "disease_id", "n_cooc_sents", "n_g", "n_d",
         "hit_cnt", "prob_avg", "prob_X",
@@ -790,9 +784,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding": lambda s, d: sim.dedup_embedding(_emb(s, d)),
         # LSH-blocked scale path — EXACT oracle (deterministic
         # hyperplane literals shared by both engines)
-        "dedup_embedding_lsh": lambda s, d: sim.dedup_embedding_lsh(
-            _emb(s, d), n_planes=4, n_tables=8
-        ),
+        "dedup_embedding_lsh": lambda s, d: sim.dedup_embedding_lsh(_emb(s, d)),
         # both survivor rules (pairwise + transitive CC representative)
         "dedup_survivors": q_dedup_survivors,
         # connected components of the dup-pair graph (min-label

@@ -149,12 +149,12 @@ def derive_spans(documents: DataFrame) -> DataFrame:
     return documents.select(doc_id.alias("doc_id"), spans.alias("spans"))
 
 
-def spans_fingerprint(spans: Column = None) -> Column:
-    """Order-sensitive fingerprint of (kind, text, media_ref, order) —
-    the per-row invariant channel checked after every stage."""
-    spans = F.col("spans") if spans is None else spans
+def spans_fingerprint() -> Column:
+    """Order-sensitive fingerprint of the `spans` column's (kind, text,
+    media_ref, order) — the per-row invariant channel checked after
+    every stage."""
     parts = F.transform(
-        spans,
+        F.col("spans"),
         lambda s, i: F.concat_ws(
             "\x01",
             i.cast("string"),
@@ -334,14 +334,7 @@ def ingest_parallelism_floor(df: DataFrame, spark, key: str = "doc_id") -> DataF
     few narrow ops of the scan — the flagship KG chain — gain nothing
     downstream of that shuffle and pay the extra exchange across
     their probe/checkpoint actions (kg_edges measured ~2x slower with
-    a global floor), so pipeline.run keeps the plain scan.
-    SPARK_GRAFT_NO_PAR_FLOOR=1 disables (A/B reproducibility; r7
-    ADVICE fix — only the documented values disable, so =0 no longer
-    silently disables via string truthiness)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_PAR_FLOOR", "").lower() in ("1", "true"):
-        return df
+    a global floor), so pipeline.run keeps the plain scan."""
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 2):
         df = df.repartition(target, key)

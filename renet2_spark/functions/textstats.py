@@ -117,13 +117,12 @@ PII_PHONE = r"\+[0-9]{1,3}-[0-9]{3}-[0-9]{3,10}"
 PII_IP = r"\b([0-9]{1,3}\.){3}[0-9]{1,3}\b"
 
 
-def pii_mask_col(col: Column | str = "text") -> Column:
-    """The masking chain as a reusable row-local Column (shared by
-    pii_scrub and the curation pipeline's pii=True stage)."""
-    c = F.col(col) if isinstance(col, str) else col
+def pii_mask_col() -> Column:
+    """The masking chain over `text` as a reusable row-local Column
+    (shared by pii_scrub and the curation pipeline's pii=True stage)."""
     return F.regexp_replace(
         F.regexp_replace(
-            F.regexp_replace(c, PII_EMAIL, "[EMAIL]"), PII_PHONE, "[PHONE]"
+            F.regexp_replace("text", PII_EMAIL, "[EMAIL]"), PII_PHONE, "[PHONE]"
         ),
         PII_IP,
         "[IP]",
@@ -158,9 +157,7 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_topk(
-    documents: DataFrame, k: int = 3, broadcast_df: bool = True
-) -> DataFrame:
+def tfidf_topk(documents: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, word, tf, n_tokens, df, tfidf, rnk) — per-document
     top-k keywords by corpus-weighted TF-IDF: tfidf = (tf / n_tokens)
     * ln(n_docs / df), ranked per doc (ties broken by word) and cut at
@@ -174,9 +171,9 @@ def tfidf_topk(
     documents relation directly — a cheap count-only scan; r7 ADVICE
     docstring fix: the old text claimed no second scan at all.)
     The df table is vocabulary-sized — tiny relative to the corpus —
-    and joins back broadcast by default; pass broadcast_df=False for
-    open-vocabulary corpora whose vocab outgrows broadcast limits and
-    let AQE pick the strategy. The final ranking windows per doc_id
+    and joins back broadcast; a vocabulary past the driver's broadcast
+    limit is out of scope (no caller has one). The final ranking
+    windows per doc_id
     (skew-free: a document bounds its own vocabulary). tfidf is
     rounded to 6 decimals BEFORE ranking so rank order is robust to
     last-ulp ln() differences across engines."""
@@ -188,9 +185,9 @@ def tfidf_topk(
         F.count("*").cast("long").alias("tf")
     )
     doclen = tf.groupBy("doc_id").agg(F.sum("tf").alias("n_tokens"))
-    df_tbl = tf.groupBy("word").agg(F.count("*").cast("long").alias("df"))
-    if broadcast_df:
-        df_tbl = F.broadcast(df_tbl)
+    df_tbl = F.broadcast(
+        tf.groupBy("word").agg(F.count("*").cast("long").alias("df"))
+    )
     n_docs = F.broadcast(
         documents.agg(
             F.countDistinct(F.col("doc_id").cast("string")).alias("n_docs")
@@ -229,9 +226,7 @@ def tfidf_topk(
     )
 
 
-def unigram_surprisal(
-    documents: DataFrame, broadcast_lm: bool = True
-) -> DataFrame:
+def unigram_surprisal(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, surprisal) — per-document mean unigram
     surprisal under the corpus's own unigram language model:
     surprisal(doc) = sum_w tf_w * -ln(cnt_w / total) / n_tokens,
@@ -242,8 +237,8 @@ def unigram_surprisal(
 
     100 TB shape: the SAME one-explode / one (doc,word) partial-agg
     relation as tfidf_topk; the unigram table is vocabulary-sized and
-    broadcast by default (broadcast_lm=False lets AQE pick for open
-    vocabularies); the final per-doc agg shuffles on doc_id
+    broadcast, as tfidf_topk's df table is; the final per-doc agg
+    shuffles on doc_id
     (skew-free). Per-word terms are rounded to 6 decimals and summed
     as DECIMAL(28,6) — exact integer arithmetic, so the sum is
     independent of both task order and engine, which is what makes an
@@ -255,9 +250,7 @@ def unigram_surprisal(
     tf = words.groupBy("doc_id", "word").agg(
         F.count("*").cast("long").alias("tf")
     )
-    lm = tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
-    if broadcast_lm:
-        lm = F.broadcast(lm)
+    lm = F.broadcast(tf.groupBy("word").agg(F.sum("tf").alias("cnt")))
     total = F.broadcast(tf.agg(F.sum("tf").alias("total")))
     term = F.round(
         F.col("tf").cast("double")
@@ -283,7 +276,7 @@ def unigram_surprisal(
     )
 
 
-def text_profile(documents: DataFrame, rep_n: int = 3) -> DataFrame:
+def text_profile(documents: DataFrame) -> DataFrame:
     """The FULL per-document text-analysis profile as ONE row-local
     projection — the composite the consolidated driver query
     `text_profile` hash-checks (r4 verdict #1: six single-operator
@@ -301,7 +294,7 @@ def text_profile(documents: DataFrame, rep_n: int = 3) -> DataFrame:
       n_tokens; subword_tokens is ceil(len(word)/4) per word, counted
       by one codegen'd regexp_count of greedy [^ ]{1,4} chunks;
     * text_repetition (n_grams, n_distinct, dup_ratio) — the share of
-      word rep_n-gram occurrences that repeat an earlier one in the
+      word trigram occurrences that repeat an earlier one in the
       same doc (Gopher-style), from a per-row array_distinct.
     One scan, zero shuffle, zero joins: every signal is computed per
     row, which is also the right 100 TB shape. The only Python is
@@ -313,10 +306,10 @@ def text_profile(documents: DataFrame, rep_n: int = 3) -> DataFrame:
     n_tok = F.size(ws)
     n_chars = F.length("text")
     stop = _stop_hits(ws)
-    n_gr = F.greatest(n_tok - (rep_n - 1), F.lit(0))
+    n_gr = F.greatest(n_tok - 2, F.lit(0))
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n_gr - 1, F.lit(0))),
-        lambda i: F.array_join(F.slice(ws, i + 1, rep_n), " "),
+        lambda i: F.array_join(F.slice(ws, i + 1, 3), " "),
     )
     n_dist = F.when(n_gr == 0, F.lit(0)).otherwise(
         F.size(F.array_distinct(grams))

@@ -63,12 +63,11 @@ def label_distribution(labels: DataFrame) -> DataFrame:
     return labels.groupBy("label").agg(F.count("*").cast("bigint").alias("n"))
 
 
-def sample_balanced_hash(labels: DataFrame, ratio: float = 2.0,
-                         salt: str = "bal") -> DataFrame:
+def sample_balanced_hash(labels: DataFrame) -> DataFrame:
     """Deterministic stratified class balancing: every label >= 1.0
-    row is kept; each label < 1.0 class is downsampled to ~ratio x
+    row is kept; each label < 1.0 class is downsampled to ~2 x
     positives by the md5-prefix rule of curation.sample_hash — a row
-    is kept iff the first 4 hex digits of md5(salt:doc:gene:disease),
+    is kept iff the first 4 hex digits of md5(bal:doc:gene:disease),
     as an int, fall below fraction * 65536.
 
     Balances as the reference's weighted sampling does
@@ -88,7 +87,7 @@ def sample_balanced_hash(labels: DataFrame, ratio: float = 2.0,
         .otherwise(
             F.least(
                 F.lit(1.0),
-                F.lit(ratio) * F.col("_np") / F.col("_n"),
+                F.lit(2.0) * F.col("_np") / F.col("_n"),
             )
         )
         .alias("_frac"),
@@ -97,7 +96,7 @@ def sample_balanced_hash(labels: DataFrame, ratio: float = 2.0,
         F.substring(
             F.md5(
                 F.concat_ws(
-                    ":", F.lit(salt), "doc_id", "gene_id", "disease_id"
+                    ":", F.lit("bal"), "doc_id", "gene_id", "disease_id"
                 )
             ),
             1,

@@ -106,23 +106,23 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_arr(n: int = NGRAM) -> str:
-    """Row-local distinct word n-gram array, as a SQL expression."""
+def _shingle_arr() -> str:
+    """Row-local distinct word NGRAM-gram array, as a SQL expression."""
     words = "split(text, ' ')"
     return (
-        f"array_distinct(transform(sequence(0, greatest(size({words}) - {n}, 0)),"
-        f" i -> array_join(slice({words}, i + 1, {n}), ' ')))"
+        f"array_distinct(transform(sequence(0, greatest(size({words}) - {NGRAM}, 0)),"
+        f" i -> array_join(slice({words}, i + 1, {NGRAM}), ' ')))"
     )
 
 
-def doc_shingles(documents: DataFrame, n: int = NGRAM) -> DataFrame:
+def doc_shingles(documents: DataFrame) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams. Narrow explode."""
     return documents.selectExpr(
-        "CAST(doc_id AS STRING) AS doc_id", f"explode({_shingle_arr(n)}) AS shingle"
+        "CAST(doc_id AS STRING) AS doc_id", f"explode({_shingle_arr()}) AS shingle"
     )
 
 
-def doc_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
+def doc_shingle_arrays(documents: DataFrame) -> DataFrame:
     """(doc_id, shingles array<string>, n_sh) — the per-doc distinct
     shingle ARRAY, un-exploded, with its size: the one shingle relation
     every dedup and decontamination consumer reads. The row-local
@@ -134,17 +134,17 @@ def doc_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
     n_sh is its own column so set-size consumers read the int instead
     of the arrays."""
     return documents.selectExpr(
-        "CAST(doc_id AS STRING) AS doc_id", f"{_shingle_arr(n)} AS shingles"
+        "CAST(doc_id AS STRING) AS doc_id", f"{_shingle_arr()} AS shingles"
     ).selectExpr("*", "CAST(size(shingles) AS INT) AS n_sh")
 
 
 def capped_shingle_stats(
-    documents: DataFrame, n: int = NGRAM, max_shingle_docs: int = MAX_SHINGLE_DF
+    documents: DataFrame, max_shingle_docs: int = MAX_SHINGLE_DF
 ) -> DataFrame:
     """Dropped-shingle accounting for the df cap (no-silent-caps rule):
     one row (n_shingles, n_dropped, max_df). Run as a side metrics
     query; record via CheckpointStore.record_metrics in pipelines."""
-    freq = doc_shingles(documents, n).groupBy("shingle").agg(
+    freq = doc_shingles(documents).groupBy("shingle").agg(
         F.count("*").alias("df")
     )
     return freq.agg(
@@ -189,16 +189,15 @@ def _member_pairs(members: DataFrame) -> DataFrame:
 
 
 def _bucket_pairs(
-    keys: DataFrame, bucket_cols: list[str], id_col: str, max_bucket_size: int | None
+    keys: DataFrame, bucket_cols: list[str], id_col: str, max_bucket_size: int
 ) -> DataFrame:
     """(doc_a, doc_b), one row per pair of `id_col` values per shared
-    bucket: the optional hot-bucket cap (cap_hot_buckets, lowest ids
-    kept; None disables it), one collect_set per bucket and the
-    row-local sorted fan-out (_member_pairs). A member listed twice in
-    a bucket is one member, so no self-pair fans out. No bucket
-    self-join; the cap's window and the grouping share one exchange."""
-    if max_bucket_size is not None:
-        keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
+    bucket: the hot-bucket cap (cap_hot_buckets, lowest ids kept), one
+    collect_set per bucket and the row-local sorted fan-out
+    (_member_pairs). A member listed twice in a bucket is one member,
+    so no self-pair fans out. No bucket self-join; the cap's window and
+    the grouping share one exchange."""
+    keys = cap_hot_buckets(keys, bucket_cols, id_col, max_bucket_size)
     return _member_pairs(
         keys.groupBy(*bucket_cols).agg(F.expr(f"collect_set({id_col}) AS ds"))
     )
@@ -208,7 +207,7 @@ def blocked_pairs(
     keys: DataFrame,
     bucket_cols: list[str],
     id_col: str,
-    max_bucket_size: int | None = MAX_LSH_BUCKET,
+    max_bucket_size: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
     """(doc_a, doc_b) with doc_a < doc_b for every pair of `id_col`
     values sharing any bucket of `keys` (SparkER's block -> purge ->
@@ -249,22 +248,19 @@ def hot_bucket_stats(
 
 def dedup_ngram_jaccard(
     documents: DataFrame,
-    n: int = NGRAM,
     threshold: float = JACCARD_THRESHOLD,
-    max_shingle_docs: int | None = MAX_SHINGLE_DF,
+    max_shingle_docs: int = MAX_SHINGLE_DF,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by exact word-ngram Jaccard via inverted index:
     (doc_a, doc_b, n_common, n_a, n_b, jaccard).
 
-    The pair fan-out is df-capped by default (MAX_SHINGLE_DF): set
-    sizes (n_a/n_b) count ALL shingles, intersections only capped ones,
-    so jaccard is under-counted for pairs whose overlap is exclusively
-    stop-shingles, never over-counted; the DuckDB oracle applies the
-    same cap. max_shingle_docs=None omits the upper df bound (a hot
-    shingle then emits O(df^2) pairs, as under any formulation).
+    The pair fan-out is df-capped (MAX_SHINGLE_DF): set sizes (n_a/n_b)
+    count ALL shingles, intersections only capped ones, so jaccard is
+    under-counted for pairs whose overlap is exclusively stop-shingles,
+    never over-counted; the DuckDB oracle applies the same cap.
 
-    `shingles` optionally injects doc_shingle_arrays(documents, n), e.g.
+    `shingles` optionally injects doc_shingle_arrays(documents), e.g.
     one persisted relation shared with decontamination (r4 verdict #2);
     otherwise the relation is built here and read once, unpersisted.
 
@@ -276,10 +272,8 @@ def dedup_ngram_jaccard(
     n_a, n_b) needs no lookup join: two exchanges (shingle, then pair),
     no join, no persist. A doc_id listed twice is one member, as in the
     oracle's distinct (doc_id, shingle) relation."""
-    sh_arr = shingles if shingles is not None else doc_shingle_arrays(documents, n)
-    keep = "size(ds) >= 2"
-    if max_shingle_docs is not None:
-        keep += f" AND size(ds) <= {max_shingle_docs}"
+    sh_arr = shingles if shingles is not None else doc_shingle_arrays(documents)
+    keep = f"size(ds) >= 2 AND size(ds) <= {max_shingle_docs}"
     # explode_outer: from an inner explode of an attribute Catalyst infers
     # size(shingles) > 0 and pushes it below the projection that builds
     # the arrays, so each array is built twice (12k docs, 4 cores: 3.5 s
@@ -305,17 +299,18 @@ def dedup_ngram_jaccard(
     )
 
 
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, mh_0..mh_{k-1}) — md5-based minhash, one agg pass."""
+def minhash_signatures(documents: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_{MINHASH_K-1}) — md5-based minhash, one agg
+    pass."""
     sh = doc_shingles(documents)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh_{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _row_local_signatures(sh_arr: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def _row_local_signatures(sh_arr: DataFrame) -> DataFrame:
     """minhash_signatures computed per row of a (doc_id, shingles)
     relation: no explode, no shuffle. array_min skips the NULL shingle
     of a NULL-text doc as min() does. One SQL string per hash, since a
@@ -324,21 +319,19 @@ def _row_local_signatures(sh_arr: DataFrame, k: int = MINHASH_K) -> DataFrame:
         "doc_id",
         *[
             f"array_min(transform(shingles, s -> md5(concat('{i}:', s)))) AS mh_{i}"
-            for i in range(k)
+            for i in range(MINHASH_K)
         ],
     )
 
 
-def lsh_band_keys(
-    sig: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> DataFrame:
+def lsh_band_keys(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) — md5 of each band's row concat."""
-    r = k // bands
+    r = MINHASH_K // LSH_BANDS
     rows = ", ".join(
         f"struct({b} AS band, md5(concat_ws('|', "
         + ", ".join(f"mh_{b * r + j}" for j in range(r))
         + ")) AS band_key)"
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     )
     return sig.selectExpr("doc_id", f"explode(array({rows})) AS bk").selectExpr(
         "doc_id", "bk.band AS band", "bk.band_key AS band_key"
@@ -348,8 +341,8 @@ def lsh_band_keys(
 def dedup_minhash_lsh(
     documents: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    max_shingle_docs: int | None = MAX_SHINGLE_DF,
-    max_bucket_size: int | None = MAX_LSH_BUCKET,
+    max_shingle_docs: int = MAX_SHINGLE_DF,
+    max_bucket_size: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
     """LSH candidates (same band bucket) verified by exact jaccard
     computed ONLY over the candidate set: (doc_a, doc_b, jaccard).
@@ -398,18 +391,17 @@ def dedup_minhash_lsh(
     shared = cand.selectExpr(
         "doc_a", "doc_b", "n_a", "n_b", "explode(shared) AS shingle"
     ).where("shingle IS NOT NULL")
-    if max_shingle_docs is not None:
-        # explode_outer, as in dedup_ngram_jaccard: an inner explode
-        # would build this branch's arrays twice
-        dropped = (
-            sh_arr.selectExpr("explode_outer(shingles) AS shingle")
-            .where("shingle IS NOT NULL")
-            .groupBy("shingle")
-            .count()
-            .where(f"`count` > {max_shingle_docs}")
-            .select("shingle")
-        )
-        shared = shared.join(F.broadcast(dropped), "shingle", "left_anti")
+    # explode_outer, as in dedup_ngram_jaccard: an inner explode would
+    # build this branch's arrays twice
+    dropped = (
+        sh_arr.selectExpr("explode_outer(shingles) AS shingle")
+        .where("shingle IS NOT NULL")
+        .groupBy("shingle")
+        .count()
+        .where(f"`count` > {max_shingle_docs}")
+        .select("shingle")
+    )
+    shared = shared.join(F.broadcast(dropped), "shingle", "left_anti")
     common = shared.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(F.expr(_N_COMMON))
     return (
         _with_jaccard(common)
@@ -418,7 +410,7 @@ def dedup_minhash_lsh(
     )
 
 
-def simhash_col(bits: int = SIMHASH_BITS):
+def simhash_col():
     """The simhash signature as a row-local Column over `text` — shared
     by :func:`simhash` and the composite text_profile query
     (functions.textstats.text_profile). See :func:`simhash` for the
@@ -437,12 +429,12 @@ def simhash_col(bits: int = SIMHASH_BITS):
     return F.concat(
         *[
             F.when(bit_sum(j) >= 0, F.lit("1")).otherwise(F.lit("0"))
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
 
 
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) — per-bit sign of sum over DISTINCT tokens of
     (+1 if the selected md5 bit is set else -1); bit j reads bit
     (3 - j//32) of hex digit (j % 32).
@@ -462,7 +454,7 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     factor only). Full A/B in BENCH.md round 3."""
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        simhash_col(bits).alias("simhash"),
+        simhash_col().alias("simhash"),
     )
 
 
@@ -481,17 +473,15 @@ def dedup_simhash(documents: DataFrame) -> DataFrame:
 
 
 def dedup_survivors(
-    documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    shingles: DataFrame | None = None,
+    documents: DataFrame, shingles: DataFrame | None = None
 ) -> DataFrame:
     """Dedup as a pipeline stage: documents surviving near-dup removal
-    — a doc is dropped iff it is the LARGER id of any >= threshold
-    ngram-jaccard pair (deterministic keep-smallest rule; the exact
-    analogue of 'keep first seen'). Output: (doc_id, n_chars).
-    `shingles` forwards to dedup_ngram_jaccard (shared-pass hook)."""
-    pairs = dedup_ngram_jaccard(documents, threshold=threshold,
-                                shingles=shingles)
+    — a doc is dropped iff it is the LARGER id of any >=
+    JACCARD_THRESHOLD ngram-jaccard pair (deterministic keep-smallest
+    rule; the exact analogue of 'keep first seen'). Output:
+    (doc_id, n_chars). `shingles` forwards to dedup_ngram_jaccard
+    (shared-pass hook)."""
+    pairs = dedup_ngram_jaccard(documents, shingles=shingles)
     losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return (
         documents.select(
@@ -503,16 +493,13 @@ def dedup_survivors(
 
 
 def repeated_spans(
-    documents: DataFrame,
-    n: int = NGRAM,
-    min_df: int = 2,
-    max_shingle_docs: int | None = MAX_SHINGLE_DF,
+    documents: DataFrame, max_shingle_docs: int = MAX_SHINGLE_DF
 ) -> DataFrame:
     """Cross-document repeated-SUBSTRING spans (the span-level exact
     dedup of 'Deduplicating Training Data Makes Language Models
     Better'-style pipelines, complementing the doc-level operators):
     (doc_id, start_word, end_word, n_grams, max_df) — maximal runs of
-    word positions whose n-gram starting there occurs in >= min_df
+    word positions whose NGRAM-gram starting there occurs in >= 2
     DISTINCT documents. Downstream cutters drop or trim these spans
     instead of whole documents.
 
@@ -524,6 +511,7 @@ def repeated_spans(
     window; pos - row_number() is constant within a consecutive run).
     Every shuffle key is gram- or doc-uniform; no self-join exists —
     scale shape matches the rest of the dedup suite."""
+    n = NGRAM
     words = F.split(F.col("text"), " ")
     idx = F.sequence(F.lit(0), F.size(words) - n)
     grams = (
@@ -556,9 +544,9 @@ def repeated_spans(
     freq = grams.groupBy("gram").agg(
         F.countDistinct("doc_id").cast("int").alias("df")
     )
-    keep = freq.filter(F.col("df") >= min_df)
-    if max_shingle_docs is not None:
-        keep = keep.filter(F.col("df") <= max_shingle_docs)
+    keep = freq.filter(F.col("df") >= 2).filter(
+        F.col("df") <= max_shingle_docs
+    )
     rep = grams.join(keep, "gram").select("doc_id", "pos", "df")
     w = W.partitionBy("doc_id").orderBy("pos")
     runs = rep.withColumn(
@@ -572,11 +560,11 @@ def repeated_spans(
     ).drop("_grp")
 
 
-def _shared_shingle_arrays(documents: DataFrame, n: int = NGRAM) -> DataFrame:
+def _shared_shingle_arrays(documents: DataFrame) -> DataFrame:
     """doc_shingle_arrays, unpersisted. Exists only for the traced plan
     prefixes in perfbench/workloads.py and goes with the next change to
     the benchmark; no operator calls it."""
-    return doc_shingle_arrays(documents, n)
+    return doc_shingle_arrays(documents)
 
 
 def _cache_keep(df: DataFrame) -> DataFrame:
@@ -609,13 +597,12 @@ CC_MAX_ITERS = 50
 
 def dedup_components(
     documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
     max_iters: int = CC_MAX_ITERS,
     shingles: DataFrame | None = None,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
-    """(doc_id, component) — connected components of the >= threshold
-    ngram-jaccard near-dup graph; component = lexicographically
+    """(doc_id, component) — connected components of the >=
+    JACCARD_THRESHOLD ngram-jaccard near-dup graph; component = lexicographically
     smallest doc_id reachable through dup pairs. Docs in no pair are
     excluded (singletons are trivially their own component).
 
@@ -646,8 +633,7 @@ def dedup_components(
     `shingles` forwards to dedup_ngram_jaccard (shared-pass hook —
     r4 verdict #2)."""
     _ckpt = checkpointer(documents.sparkSession, reliable_checkpoint)
-    pairs = dedup_ngram_jaccard(documents, threshold=threshold,
-                                shingles=shingles)
+    pairs = dedup_ngram_jaccard(documents, shingles=shingles)
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .unionByName(
@@ -692,17 +678,14 @@ def dedup_components(
 
 
 def dedup_survivors_cc(
-    documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    shingles: DataFrame | None = None,
+    documents: DataFrame, shingles: DataFrame | None = None
 ) -> DataFrame:
     """Component-representative dedup: keep exactly ONE document (the
     lexicographically smallest id) per near-dup connected component,
     plus every doc in no dup pair. Output: (doc_id, n_chars) — same
     shape as dedup_survivors, transitive semantics. `shingles`
     forwards to the shared-pass hook."""
-    comp = dedup_components(documents, threshold=threshold,
-                            shingles=shingles)
+    comp = dedup_components(documents, shingles=shingles)
     losers = comp.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
     )

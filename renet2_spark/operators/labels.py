@@ -60,7 +60,7 @@ def synthetic_labels(pairs: DataFrame) -> DataFrame:
 N_SILVER_TOOLS = 4  # reference train.py:454-470: RENET/BeFree/DTMiner/BioBERT
 
 
-def tool_votes(pairs: DataFrame, n_tools: int = N_SILVER_TOOLS) -> DataFrame:
+def tool_votes(pairs: DataFrame) -> DataFrame:
     """Deterministic stand-ins for the 4 external tools' outputs
     (reference train.py:345-376 reads BeFree/DTMiner/BioBERT result
     files): tool i sees a pair iff hex digit of md5('ti:triple') < 8
@@ -71,7 +71,7 @@ def tool_votes(pairs: DataFrame, n_tools: int = N_SILVER_TOOLS) -> DataFrame:
     union of 4 per-tool branches would recompute the upstream pair
     pipeline 4x (Spark does not CSE across union branches)."""
     tools = []
-    for i in range(n_tools):
+    for i in range(N_SILVER_TOOLS):
         d = _label_digit(
             F.concat(F.lit(f"t{i}:"), F.col("doc_id")),
             F.col("gene_id"),

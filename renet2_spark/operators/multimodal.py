@@ -140,12 +140,12 @@ def decode_media(media: DataFrame) -> DataFrame:
     return cols.mapInPandas(run, schema=_DECODE_SCHEMA)
 
 
-def sample_frames(media: DataFrame, stride: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Video-style frame sampling: frame count derived from the TRUE
     last payload byte — hex chars length(payload)*2-1..*2, so payloads
     of any length read their final byte (r5 verdict #6: the old
     hardcoded position 31 was only correct for 16-byte md5 payloads) —
-    frames sampled every `stride`; the fan-out is a native explode of
+    frames sampled every 4th; the fan-out is a native explode of
     a sequence (no python)."""
     n_frames = (
         1
@@ -163,6 +163,6 @@ def sample_frames(media: DataFrame, stride: int = 4) -> DataFrame:
         "media_ref",
         n_frames.cast("int").alias("n_frames"),
         F.explode(
-            F.sequence(F.lit(0), n_frames.cast("int") - 1, F.lit(stride))
+            F.sequence(F.lit(0), n_frames.cast("int") - 1, F.lit(4))
         ).alias("frame_no"),
     )

@@ -48,8 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..dictionaries import VOCAB_SIZE
-
-N_MODELS = 10
+from .scorer import N_MODELS
 MAX_SENTS = 32  # reference abstract-mode snt_n (README.md:216)
 # full-text mode: fix_snt_n=400 (reference predict.py:291-294 default;
 # "recommend [for abs 32, for ft 400]") — exposed as mode="ft" through
@@ -522,12 +521,11 @@ def tensor_digest(tok: np.ndarray, feat: np.ndarray) -> str:
     return h.hexdigest()
 
 
-def pair_tensor_digests(
-    mentions: DataFrame, sents_arrays: DataFrame, max_sents: int = MAX_SENTS,
-) -> DataFrame:
+def pair_tensor_digests(mentions: DataFrame, sents_arrays: DataFrame) -> DataFrame:
     """(doc_id, gene_id, disease_id, tensor_md5) — per-pair digest of
-    the DETERMINISTIC tensor-encode stage (vocab lookup, entity-index
-    remap, feature codes 0-6, truncation/padding; reference
+    the DETERMINISTIC abstract-mode (MAX_SENTS) tensor-encode stage
+    (vocab lookup, entity-index remap, feature codes 0-6,
+    truncation/padding; reference
     sequence_utils.py:325-349 + raw.py:1223-1226). Everything up to —
     but excluding — the float forward pass, over the same payload and
     lookup neural_score_pairs scores, so the driver can hash-check the
@@ -547,7 +545,7 @@ def pair_tensor_digests(
             if flat.empty:
                 continue
             flat["tensor_md5"] = [
-                tensor_digest(*build_pair_tensors(t, m, g, d, max_sents))
+                tensor_digest(*build_pair_tensors(t, m, g, d))
                 for t, m, g, d in zip(
                     flat["tok_ids"], flat["ments"], flat["gene_id"],
                     flat["disease_id"],

@@ -17,15 +17,14 @@ into the same vote stage.
 
 Spark-first restructure (SURVEY §4): instead of N passes + N files +
 N-way outer join, all N model scores are computed in ONE row-local
-array expression (`transform(sequence(0, N-1), ...)`) — zero shuffle,
-zero extra scans; the ensemble collapse that was the reference's
-biggest algorithmic cost disappears into whole-stage codegen.
+projection (score_and_vote) — zero shuffle, zero extra scans; the
+ensemble collapse that was the reference's biggest algorithmic cost
+disappears into whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 N_MODELS = 10  # reference predict.py:316
 # vote cutoff max(1, N//2); sensitive mode uses 1 (predict.py:122-124)
@@ -35,23 +34,34 @@ CUTOFF = max(1, N_MODELS // 2)
 W_COOC, W_CNT, BIAS, MODEL_STEP = 1.2, 0.2, -3.0, -0.3
 
 
-def model_logit(n_cooc: Column, n_g: Column, n_d: Column, i: Column) -> Column:
-    return (
-        F.lit(W_COOC) * n_cooc
-        + F.lit(W_CNT) * (n_g + n_d)
-        + F.lit(BIAS)
-        + F.lit(MODEL_STEP) * i
-    )
+def _vote(df: DataFrame, cols: list[str], ps: list[str], cutoff: int) -> DataFrame:
+    """`cols` plus hit_cnt / prob_avg / prob_X over the N_MODELS
+    per-model prob expressions `ps`, filtered by the vote cutoff
+    (reference predict.py:104-140; a model votes when its prob > 0.5,
+    train.py:564). The prob sum is a left fold from 0.0; prob_X keeps
+    model order with ';' join and 5-decimal formatting
+    (predict.py:131-136, format '{:,.5f}')."""
+    hit = " + ".join(f"CASE WHEN {p} > 0.5D THEN 1 ELSE 0 END" for p in ps)
+    total = "0.0D"
+    for p in ps:
+        total = f"({total} + {p})"
+    fmt = ", ".join(f"format_number({p}, 5)" for p in ps)
+    return df.selectExpr(
+        *cols,
+        f"CAST({hit} AS INT) AS hit_cnt",
+        f"round({total} / {float(N_MODELS)}D, 5) AS prob_avg",
+        f"concat_ws(';', {fmt}) AS prob_X",
+    ).where(f"hit_cnt >= {cutoff}")
 
 
 def score_and_vote(pairs: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
     """Fused deterministic scorer + ensemble vote with zero lambda
     HOFs (Spark evaluates HOF lambdas interpreted — measured hot in
-    the reduce stage). Adds hit_cnt, prob_avg, prob_X; filters by the
-    vote cutoff. Bit-identical to ensemble_vote(score_pairs(...)): the
-    logit keeps model_logit's left-fold association, with its
-    model-independent prefix `_base` computed once, and the prob sum
-    keeps the same left fold.
+    the reduce stage). Model i's prob is the piecewise-linear
+    'sigmoid' clamp(0.5 + logit_i / 8, 0, 1), logit_i = (W_COOC *
+    n_cooc + W_CNT * (n_g + n_d)) + BIAS + MODEL_STEP * i, with the
+    model-independent prefix `_base` computed once. Adds hit_cnt,
+    prob_avg, prob_X (_vote); filters by the vote cutoff.
 
     Built from SQL strings, one per projection and one for the filter:
     every Column-API call is one or more Py4J round trips, and the
@@ -67,68 +77,14 @@ def score_and_vote(pairs: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
         f" + (_base + ({MODEL_STEP}D) * {float(i)}D) / 8.0D)) AS _p{i}"
         for i in range(N_MODELS)
     ]
-    ps = [f"_p{i}" for i in range(N_MODELS)]
-    hit = " + ".join(f"CASE WHEN {p} > 0.5D THEN 1 ELSE 0 END" for p in ps)
-    total = "0.0D"
-    for p in ps:
-        total = f"({total} + {p})"
-    fmt = ", ".join(f"format_number({p}, 5)" for p in ps)
     cols = [f"`{c}`" for c in pairs.columns]
-    return (
-        pairs.selectExpr("*", f"{base} AS _base")
-        .selectExpr(*cols, *probs)
-        .selectExpr(
-            *cols,
-            f"CAST({hit} AS INT) AS hit_cnt",
-            f"round({total} / {float(N_MODELS)}D, 5) AS prob_avg",
-            f"concat_ws(';', {fmt}) AS prob_X",
-        )
-        .where(f"hit_cnt >= {cutoff}")
-    )
-
-
-def score_pairs(pairs: DataFrame) -> DataFrame:
-    """pairs(+features) -> + probs array<double>, per-model piecewise-
-    linear 'sigmoid' clamp(0.5 + logit/8, 0, 1). Row-local, codegen."""
-    probs = F.transform(
-        F.sequence(F.lit(0), F.lit(N_MODELS - 1)),
-        lambda i: F.greatest(
-            F.lit(0.0),
-            F.least(
-                F.lit(1.0),
-                F.lit(0.5)
-                + model_logit(
-                    F.col("n_cooc_sents").cast("double"),
-                    F.col("n_g").cast("double"),
-                    F.col("n_d").cast("double"),
-                    i.cast("double"),
-                )
-                / F.lit(8.0),
-            ),
-        ),
-    )
-    return pairs.withColumn("probs", probs)
+    scored = pairs.selectExpr("*", f"{base} AS _base").selectExpr(*cols, *probs)
+    return _vote(scored, cols, [f"_p{i}" for i in range(N_MODELS)], cutoff)
 
 
 def ensemble_vote(scored: DataFrame, cutoff: int = CUTOFF) -> DataFrame:
-    """hit_cnt / prob_avg / prob_X + vote filter (reference
-    predict.py:104-140; a model votes when its prob > 0.5,
-    train.py:564). prob_X keeps per-model order with ';' join and
-    5-decimal formatting (predict.py:131-136, format '{:,.5f}')."""
-    hit_cnt = F.size(F.filter(F.col("probs"), lambda p: p > F.lit(0.5)))
-    prob_avg = F.round(
-        F.aggregate(
-            F.col("probs"), F.lit(0.0), lambda a, p: a + p
-        )
-        / F.lit(float(N_MODELS)),
-        5,
-    )
-    prob_x = F.concat_ws(
-        ";", F.transform(F.col("probs"), lambda p: F.format_number(p, 5))
-    )
-    return (
-        scored.withColumn("hit_cnt", hit_cnt.cast("int"))
-        .withColumn("prob_avg", prob_avg)
-        .withColumn("prob_X", prob_x)
-        .filter(F.col("hit_cnt") >= F.lit(cutoff))
-    )
+    """The vote of score_and_vote (_vote) over a `probs` array of
+    N_MODELS per-model probabilities (the neural scorer's output),
+    read by index: no lambda."""
+    cols = [f"`{c}`" for c in scored.columns]
+    return _vote(scored, cols, [f"probs[{i}]" for i in range(N_MODELS)], cutoff)

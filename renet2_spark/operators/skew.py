@@ -70,13 +70,12 @@ def salted_collect_set(
     df: DataFrame,
     keys: list[str],
     value_col: str,
-    doc_col: str = "doc_id",
     salt_buckets: int = 16,
 ) -> DataFrame:
-    """Two-phase collect_set: per-salt partial sets, then union+dedupe.
-    Output (keys..., values array<...>, sorted)."""
+    """Two-phase collect_set salted by doc_id: per-salt partial sets,
+    then union+dedupe. Output (keys..., values array<...>, sorted)."""
     stage1 = (
-        with_salt(df, doc_col, salt_buckets)
+        with_salt(df, "doc_id", salt_buckets)
         .groupBy(*keys, "_salt")
         .agg(F.collect_set(value_col).alias("_vals"))
     )

@@ -120,8 +120,7 @@ def tag_mentions(sentences: DataFrame, spark: SparkSession,
     )
 
 
-def tag_multiword(documents: DataFrame, spark: SparkSession,
-                  mw_dict: DataFrame | None = None) -> DataFrame:
+def tag_multiword(documents: DataFrame, spark: SparkSession) -> DataFrame:
     """Multi-token (bigram) dictionary tagger over the DOC-level word
     stream — unlike the per-sentence token tagger it can emit spans
     that straddle a sentence boundary (token 9 -> 10), which is exactly
@@ -136,15 +135,13 @@ def tag_multiword(documents: DataFrame, spark: SparkSession,
     ann_utils.py:209-226)."""
     from ..corpus import SENT_WORDS
     from ..dictionaries import MULTIWORD_DISEASE
+    from ..session import local_table
 
-    if mw_dict is None:
-        from ..session import local_table
-
-        mw_dict = local_table(
-            spark,
-            [(s, "Disease", r) for s, (r, _c) in MULTIWORD_DISEASE.items()],
-            "surface string, type string, raw_id string",
-        )
+    mw_dict = local_table(
+        spark,
+        [(s, "Disease", r) for s, (r, _c) in MULTIWORD_DISEASE.items()],
+        "surface string, type string, raw_id string",
+    )
     words = F.split(F.col("text"), " ")
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(words) - 2, F.lit(0))),
@@ -393,8 +390,7 @@ def tag_mentions_raw(documents: DataFrame, spark: SparkSession,
 
 
 def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
-                      entity_dict: DataFrame | None = None,
-                      sent_words: int | None = None) -> DataFrame:
+                      entity_dict: DataFrame | None = None) -> DataFrame:
     """Allocation-lean tagger for the scoring pipeline: split once,
     posexplode word positions, broadcast-join the dictionary —
     sentence strings are never materialized (sent_no/tok_no derive
@@ -410,12 +406,12 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
 
     CORPUS CONTRACT: sent_no/tok_no derive arithmetically from the
     global word index, valid ONLY for corpora packing exactly
-    `sent_words` words per sentence (the derive_spans contract this
+    SENT_WORDS words per sentence (the derive_spans contract this
     corpus is defined by). For span corpora with variable sentence
     lengths use tag_mentions (positional sentence ids) — this function
     would silently mis-coordinate there. The contract IS gated at
     runtime: plans.pipeline.build_mentions probes a sampled prefix
-    (probe_corpus_contract — splitter/tokenizer identity check) and
+    (probe_corpus_contract_info — splitter/tokenizer identity check) and
     routes non-contract corpora to tag_mentions_raw (the one-pass
     split/tokenize/locate chain, raw_tokens), so the CLI can
     never reach this function on punctuated text (round-2 verdict
@@ -423,8 +419,6 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
     """
     from ..corpus import SENT_WORDS
 
-    if sent_words is None:
-        sent_words = SENT_WORDS
     d = entity_dict if entity_dict is not None else entity_dict_df(spark)
     id_cols = [c for c in ("raw_id", "entity_id") if c in d.columns]
     tok = documents.selectExpr(
@@ -432,8 +426,8 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
     )
     return tok.join(F.broadcast(d), F.expr("lower(token) = surface"), "inner").selectExpr(
         "doc_id",
-        f"CAST(k / {sent_words} AS INT) AS sent_no",
-        f"CAST(pmod(k, {sent_words}) AS INT) AS tok_no",
+        f"CAST(k / {SENT_WORDS} AS INT) AS sent_no",
+        f"CAST(pmod(k, {SENT_WORDS}) AS INT) AS tok_no",
         "token AS mention",
         "type",
         *id_cols,

@@ -519,22 +519,7 @@ scored AS (
 
 def q_scores() -> str:
     """Scored pairs incl. prob_X (r4 verdict #1: the former
-    kg_scores_probx column folded in — printf('%.5f') == Spark
-    format_number for probs <= 1, see q_scores_probx)."""
-    prob_x = " || ';' || ".join(
-        f"printf('%.5f', {_prob_expr(i)})" for i in range(N_MODELS)
-    )
-    return f"""
-WITH {_scored_cte()}
-SELECT doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d, hit_cnt,
-       prob_avg, {prob_x} AS "prob_X"
-FROM scored
-"""
-
-
-def q_scores_probx() -> str:
-    """T8: ';'-joined per-model probs at 5 decimals (reference
-    '{:,.5f}', predict.py:131-136). printf('%.5f') == Spark
+    kg_scores_probx column folded in). printf('%.5f') == Spark
     format_number for probs <= 1 (no comma grouping below 1000; both
     round the same IEEE double)."""
     prob_x = " || ';' || ".join(
@@ -542,7 +527,8 @@ def q_scores_probx() -> str:
     )
     return f"""
 WITH {_scored_cte()}
-SELECT doc_id, gene_id, disease_id, hit_cnt, prob_avg, {prob_x} AS "prob_X"
+SELECT doc_id, gene_id, disease_id, n_cooc_sents, n_g, n_d, hit_cnt,
+       prob_avg, {prob_x} AS "prob_X"
 FROM scored
 """
 

@@ -27,23 +27,20 @@ def local_table(spark: SparkSession, rows, schema) -> DataFrame:
     kg_edges' 15.8 task-seconds). The Arrow path converts on the
     driver and ships JVM-side record batches — no executor python.
     Values/schema are identical (explicit schema, object-dtype
-    passthrough); falls back to the plain path if pandas/Arrow is
-    unavailable."""
-    try:
-        import pandas as pd
-        from pyspark.sql import types as _T
+    passthrough). pandas is a hard dependency, so there is no
+    fallback: a row that does not convert raises."""
+    import pandas as pd
+    from pyspark.sql import types as _T
 
-        if isinstance(schema, _T.StructType):
-            names = schema.fieldNames()
-        else:
-            names = [f.split()[0] for f in str(schema).split(",")]
-        rows = list(rows)
-        pdf = pd.DataFrame(
-            (tuple(r) for r in rows), columns=names, dtype=object
-        ) if rows else pd.DataFrame({n: [] for n in names}, dtype=object)
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    if isinstance(schema, _T.StructType):
+        names = schema.fieldNames()
+    else:
+        names = [f.split()[0] for f in str(schema).split(",")]
+    rows = list(rows)
+    pdf = pd.DataFrame(
+        (tuple(r) for r in rows), columns=names, dtype=object
+    ) if rows else pd.DataFrame({n: [] for n in names}, dtype=object)
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def get_spark(

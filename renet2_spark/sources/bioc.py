@@ -57,9 +57,9 @@ def _map_section(raw: Column) -> Column:
     )
 
 
-def parse_bioc(raw: DataFrame, json_col: str = "doc_json") -> DataFrame:
+def parse_bioc(raw: DataFrame) -> DataFrame:
     """raw(doc_json) -> documents_spans(doc_id, spans)."""
-    doc = F.from_json(F.col(json_col), BIOC_SCHEMA)
+    doc = F.from_json(F.col("doc_json"), BIOC_SCHEMA)
     passages = raw.select(
         doc["pmid"].alias("doc_id"),
         F.posexplode(doc["passages"]).alias("p_no", "p"),

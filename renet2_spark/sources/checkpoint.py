@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,7 +61,7 @@ def with_part_key(df: DataFrame, key_col: str = "doc_id", buckets: int = 32) -> 
     )
 
 
-def input_fingerprint(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
+def input_fingerprint(df: DataFrame) -> DataFrame:
     """(part_key, input_fingerprint) — order-insensitive digest per
     partition bucket over FULL row content (md5 of the JSON-encoded
     row struct, summed per bucket): changes iff any of the bucket's
@@ -104,13 +103,16 @@ class CheckpointStore:
         return os.path.join(self.root, stage, "data")
 
     def lineage(self, stage: str) -> DataFrame:
-        """The stage's lineage rows; empty only if none was ever written."""
-        try:
-            return self.spark.read.parquet(self._lineage_path(stage))
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
+        """The stage's lineage rows; empty only if none was ever written.
+        A new store is told by the path's absence, asked of the path's
+        own Hadoop FileSystem (local, HDFS or an object store): a read
+        of the missing path would log a FileNotFoundException stack."""
+        path = self._lineage_path(stage)
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(hpath):
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        return self.spark.read.parquet(path)
 
     def committed(self, stage: str) -> DataFrame:
         """Latest lineage row per part_key, filtered to COMMITTED."""
@@ -141,7 +143,7 @@ class CheckpointStore:
             "part_key", F.col("input_fingerprint").alias("_done_fp")
         )
         fps, todo = {}, {}
-        for r in input_fingerprint(keyed, key_col).join(done, "part_key", "left").collect():
+        for r in input_fingerprint(keyed).join(done, "part_key", "left").collect():
             fps[r["part_key"]] = r["input_fingerprint"]
             if r["_done_fp"] != r["input_fingerprint"]:
                 todo[r["part_key"]] = r["input_fingerprint"]

@@ -47,7 +47,6 @@ _FETCH_SCHEMA = T.StructType(
 def urllib_transport(
     url_template: str,
     timeout: float = 10.0,
-    retries: int = 3,
     backoff: float = 0.5,
 ) -> Callable[[str], tuple[str, str]]:
     """Default HTTP transport: GET url_template.format(id=doc_id) with
@@ -56,7 +55,7 @@ def urllib_transport(
     a hit; a 2xx response with no content is 'empty' (the reference's
     empty list); 404 is an immediate miss (the id does not exist —
     retrying cannot help); transient errors (5xx, timeouts,
-    connection resets) retry up to `retries` times with linear
+    connection resets) retry up to 3 times with linear
     backoff, then miss. The returned closure is picklable and runs
     inside executor Python workers (fetch_documents/mapInPandas)."""
 
@@ -67,7 +66,7 @@ def urllib_transport(
         import urllib.request
 
         url = url_template.format(id=doc_id)
-        for attempt in range(max(1, int(retries))):
+        for attempt in range(3):
             wait = backoff * (attempt + 1) if backoff else 0.0
             try:
                 with urllib.request.urlopen(url, timeout=timeout) as resp:
@@ -96,7 +95,7 @@ def urllib_transport(
                 # Exception` here converted bugs into silent
                 # retries-then-miss)
                 pass
-            if wait and attempt + 1 < max(1, int(retries)):
+            if wait and attempt + 1 < 3:
                 time.sleep(wait)
         return STATUS_MISS, ""
 

@@ -30,17 +30,17 @@ from pyspark.sql import functions as F
 EMPTY_ABSTRACT = "$$$"  # reference parse_data.py:52
 
 
-def parse_pubtator(raw: DataFrame, line_col: str = "value"
-                   ) -> tuple[DataFrame, DataFrame]:
-    """raw(line) -> (documents_spans(doc_id, spans), anns(doc_id,
-    start, end, mention, type, raw_id)).
+def parse_pubtator(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """raw(value) -> (documents_spans(doc_id, spans), anns(doc_id,
+    start, end, mention, type, raw_id)): `value` is a spark.read.text
+    line.
 
     Spans: [title span (kind='title', offset 0), abstract span
     (kind='abstract', offset len(title)+1)] — PubTator's abstract
     offsets start at len(title)+1, so annotation char offsets stay
     valid against the ' '-joined doc text."""
-    parts = F.split(F.col(line_col), r"\|", 3)
-    tab = F.split(F.col(line_col), "\t")
+    parts = F.split(F.col("value"), r"\|", 3)
+    tab = F.split(F.col("value"), "\t")
     is_ann = F.size(tab) == 6
     is_title = (~is_ann) & (F.size(parts) == 3) & (parts[1] == "t")
     is_abs = (~is_ann) & (F.size(parts) == 3) & (parts[1] == "a")

@@ -27,13 +27,11 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def write_table(
-    df: DataFrame,
-    path_or_name: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path_or_name: str, partition_by: list[str] | None = None
 ) -> str:
-    """Write df as an Iceberg table (by name) if the runtime is on the
-    classpath, else as parquet (by path). Returns 'iceberg'/'parquet'."""
+    """Overwrite df as an Iceberg table (by name) if the runtime is on
+    the classpath, else as parquet (by path). Returns
+    'iceberg'/'parquet'."""
     spark = df.sparkSession
     if iceberg_available(spark):
         w = df.writeTo(path_or_name)
@@ -41,9 +39,9 @@ def write_table(
             from pyspark.sql import functions as F
 
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        (w.createOrReplace() if mode == "overwrite" else w.append())
+        w.createOrReplace()
         return "iceberg"
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path_or_name)

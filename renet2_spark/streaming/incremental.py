@@ -49,12 +49,13 @@ def stream_edges(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string, lang string, "
-    "source string, n_chars bigint",
 ) -> None:
-    """Structured Streaming: watch input_dir for document parquet
-    files, extract edges per micro-batch, append to output_dir."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    """Structured Streaming: watch input_dir for documents-table
+    parquet files, extract edges per micro-batch, append to
+    output_dir."""
+    stream = spark.readStream.schema(
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ).parquet(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -313,7 +313,6 @@ def test_fetch_documents_real_http_transport(spark):
         transport = fx.urllib_transport(
             f"http://127.0.0.1:{port}/doc/{{id}}",
             timeout=5.0,
-            retries=3,
             backoff=0.05,
         )
         ids = spark.createDataFrame(
@@ -404,7 +403,7 @@ def test_sample_frames_true_last_byte_any_payload_length(spark):
         rows,
         "doc_id string, media_no int, media_ref string, payload binary",
     )
-    got = sample_frames(media, stride=4).collect()
+    got = sample_frames(media).collect()
     by_ref: dict[str, list] = {}
     for r in got:
         by_ref.setdefault(r["media_ref"], []).append(r)

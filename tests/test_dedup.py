@@ -78,8 +78,7 @@ def test_embedding_lsh_recall_vs_exact(spark):
     exact = {(r["vec_a"], r["vec_b"])
              for r in sim.dedup_embedding(emb, threshold=0.4).collect()}
     lsh = {(r["vec_a"], r["vec_b"])
-           for r in sim.dedup_embedding_lsh(
-               emb, threshold=0.4, n_planes=4, n_tables=8).collect()}
+           for r in sim.dedup_embedding_lsh(emb, threshold=0.4).collect()}
     assert lsh <= exact
     if exact:
         assert len(lsh & exact) / len(exact) >= 0.5
@@ -116,8 +115,9 @@ def test_ngram_df_cap_drops_stop_shingle_evidence(spark):
     rows = [(i, "alpha beta gamma delta epsilon zeta w%d x%d y%d z%d" % (i, i, i, i))
             for i in range(5)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    # a cap of 5, the corpus size, drops no shingle
     uncapped = dd.dedup_ngram_jaccard(docs, threshold=0.0,
-                                      max_shingle_docs=None).collect()
+                                      max_shingle_docs=5).collect()
     assert uncapped and all(p["n_common"] >= 1 for p in uncapped)
     capped = dd.dedup_ngram_jaccard(docs, threshold=0.0,
                                     max_shingle_docs=4).collect()
@@ -182,9 +182,10 @@ def test_minhash_verify_respects_shingle_df_cap(spark):
     }
     # threshold 0 so surviving candidates aren't filtered; cap binds on
     # the df=5 prefix shingles -> lsh must report the capped jaccard,
-    # and a pair with no capped shared shingle is not emitted at all
+    # and a pair with no capped shared shingle is not emitted at all.
+    # A bucket cap of 5, the corpus size, drops no bucket member.
     for r in dd.dedup_minhash_lsh(
-        docs, threshold=0.0, max_shingle_docs=4, max_bucket_size=None
+        docs, threshold=0.0, max_shingle_docs=4, max_bucket_size=5
     ).collect():
         assert exact[(r["doc_a"], r["doc_b"])] == r["jaccard"]
 
@@ -206,7 +207,7 @@ def test_minhash_threshold_zero_matches_oracle(spark):
 
 def _blocked_pairs_reference(rows, cap):
     """Pairs a < b sharing any bucket, among each bucket's `cap`
-    lowest ids (all ids when cap is None)."""
+    lowest ids."""
     buckets = {}
     for table, bucket, i in rows:
         buckets.setdefault((table, bucket), []).append(i)
@@ -233,7 +234,8 @@ def _blocked_pairs_reference(rows, cap):
             + [(1, "a", i) for i in (5, 6)],
             3,
         ),
-        ([(0, "a", i) for i in range(6)] + [(1, "a", i) for i in (4, 7)], None),
+        # a cap equal to the largest bucket keeps every member
+        ([(0, "a", i) for i in range(6)] + [(1, "a", i) for i in (4, 7)], 6),
         # an id listed twice in one bucket is one member: no (1, 1)
         ([(0, "x", 1), (0, "x", 1), (0, "x", 2), (1, "y", 1), (1, "y", 1)], 256),
     ],
@@ -406,7 +408,7 @@ def test_repeated_spans_finds_maximal_shared_passage(spark):
     )
     got = {
         r["doc_id"]: (r["start_word"], r["end_word"], r["n_grams"], r["max_df"])
-        for r in repeated_spans(docs, min_df=2).collect()
+        for r in repeated_spans(docs).collect()
     }
     n_positions = 12 - NGRAM + 1  # consecutive repeated gram starts
     assert got == {
@@ -434,20 +436,20 @@ def test_repeated_spans_merges_runs_and_caps_df(spark):
     )
     spans = {
         (r["doc_id"], r["start_word"], r["end_word"])
-        for r in repeated_spans(docs, min_df=2).collect()
+        for r in repeated_spans(docs).collect()
     }
     assert ("1", 0, 7) in spans and ("1", 13, 20) in spans
     assert ("2", 0, 7) in spans and ("2", 15, 22) in spans
     assert len([s for s in spans if s[0] == "1"]) == 2
     # df cap: with max_shingle_docs=1 every repeated gram (df=2) drops
-    assert repeated_spans(docs, min_df=2, max_shingle_docs=1).count() == 0
+    assert repeated_spans(docs, max_shingle_docs=1).count() == 0
     # docs shorter than n words have NO n-grams: two identical 2-word
     # docs must produce zero spans (not a truncated pseudo-gram span
     # whose end_word exceeds the doc length)
     short = spark.createDataFrame(
         [("8", "tiny doc"), ("9", "tiny doc")], "doc_id string, text string"
     )
-    assert repeated_spans(short, min_df=2).count() == 0
+    assert repeated_spans(short).count() == 0
 
 
 def test_repeated_spans_matches_duckdb_mirror(spark):

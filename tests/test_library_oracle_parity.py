@@ -79,15 +79,6 @@ def q_simhash(spark):
     return dd.simhash(_docs(spark))
 
 
-def q_scores_probx(spark):
-    from renet2_spark.operators.pairgen import pair_features
-    from renet2_spark.operators.scorer import score_and_vote
-
-    return score_and_vote(pair_features(_mentions(spark)), cutoff=0).select(
-        "doc_id", "gene_id", "disease_id", "hit_cnt", "prob_avg", "prob_X"
-    )
-
-
 def q_label_distribution(spark):
     from renet2_spark.operators.caps import label_distribution
 
@@ -140,7 +131,6 @@ CASES = {
     "fingerprint": (q_fingerprint, oracles.q_fingerprint),
     "text_repetition": (q_text_repetition, oracles.q_text_repetition),
     "text_simhash": (q_simhash, oracles.q_simhash),
-    "kg_scores_probx": (q_scores_probx, oracles.q_scores_probx),
     "kg_label_distribution": (q_label_distribution, oracles.q_label_distribution),
     "dedup_survivors_pairwise": (q_dedup_survivors, oracles.q_dedup_survivors),
     "dedup_survivors_cc": (q_dedup_survivors_cc, oracles.q_dedup_survivors_cc),

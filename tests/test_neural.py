@@ -190,7 +190,7 @@ def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
     """An unknown mode raises before any job runs: with corpus='auto'
     the mode check precedes the corpus probe job. The probe run on its
     own under a second job group shows that a job would be seen."""
-    from renet2_spark.plans.pipeline import probe_corpus_contract
+    from renet2_spark.plans.pipeline import probe_corpus_contract_info
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -202,7 +202,7 @@ def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
                 build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
         assert tracker.getJobIdsForGroup("neural-bad-mode") == []
         sc.setJobGroup("neural-probe", "corpus probe")
-        probe_corpus_contract(docs)
+        probe_corpus_contract_info(docs)
         assert tracker.getJobIdsForGroup("neural-probe")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

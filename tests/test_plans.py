@@ -59,18 +59,13 @@ def test_ngram_cap_applies_map_side(spark):
     inverted index. r7: the capped path folds the cap INTO the single
     groupBy(shingle) (a filter on the grouped relation) and fans pairs
     out row-locally — so the capped plan carries NO anti-join and NO
-    shingle-keyed self-join at all. Uncapped is the same plan without
-    the upper df bound: its pairs fan out by posexplode too."""
+    shingle-keyed self-join at all."""
     from renet2_spark.operators.dedup import dedup_ngram_jaccard
 
     plan = _executed(dedup_ngram_jaccard(_docs(spark)))
     assert "LeftAnti" not in plan  # cap is a grouped filter now
     # pair fan-out is generator-based, not a join of the index
     assert "Generate posexplode" in plan or "PosExplode" in plan
-    uncapped = _executed(
-        dedup_ngram_jaccard(_docs(spark), max_shingle_docs=None)
-    )
-    assert "Generate posexplode" in uncapped or "PosExplode" in uncapped
 
 
 def test_tool_votes_single_scan(spark):
@@ -471,7 +466,6 @@ def _referenced_names(node) -> set[str]:
 # Package names that only tests call, each with the reason it stays.
 _ORACLE = "per-operator oracle: localizes a composite driver-query mismatch"
 _TEST_ONLY = {
-    "q_scores_probx": _ORACLE,
     "q_simhash": _ORACLE,
     "q_text_stats": _ORACLE,
     "q_lang_id": _ORACLE,
@@ -545,6 +539,171 @@ def test_package_has_no_unreferenced_top_level_names():
     assert unlisted == {}, f"names only tests reference, no reason given: {unlisted}"
     stale = sorted(set(_TEST_ONLY) - set(test_only))
     assert stale == [], f"_TEST_ONLY names that are gone or used outside tests: {stale}"
+
+
+# Defaulted package parameters that only tests set, each with the
+# reason it stays.
+_SHRINK = "a test shrinks it so the bound binds at fixture scale"
+_REF = "test_ref_parity feeds the reference-scale dictionaries"
+_OFFLINE = "RENET2's download step; only testable offline"
+_TEST_SEAMS = {
+    "dedup_ngram_jaccard.threshold": _SHRINK,
+    "dedup_ngram_jaccard.max_shingle_docs": _SHRINK,
+    "dedup_minhash_lsh.threshold": _SHRINK,
+    "dedup_minhash_lsh.max_shingle_docs": _SHRINK,
+    "dedup_minhash_lsh.max_bucket_size": _SHRINK,
+    "capped_shingle_stats.max_shingle_docs": _SHRINK,
+    "hot_bucket_stats.max_bucket_size": _SHRINK,
+    "blocked_pairs.max_bucket_size": _SHRINK,
+    "repeated_spans.max_shingle_docs": _SHRINK,
+    "dedup_embedding.threshold": _SHRINK,
+    "dedup_embedding_lsh.threshold": _SHRINK,
+    "dedup_embedding_lsh.max_bucket_size": _SHRINK,
+    "ann_topk_lsh.max_bucket_size": _SHRINK,
+    "ann_topk_lsh.n_planes": "recall test: 4 planes x 8 tables",
+    "ann_topk_lsh.n_tables": "recall test: 4 planes x 8 tables",
+    "ann_topk_brute.k": "dense-rank test at a small k",
+    "ann_topk_brute.n_queries": "dense-rank test at few queries",
+    "dedup_components.max_iters": "non-convergence test: one round",
+    "lsh_buckets.dim": "wrong-dim test hashes 32- and 128-d vectors",
+    "pack_sequences.segments": "forces many segments at fixture scale",
+    "build_pair_tensors.max_sents": "full-text shape at the encoder",
+    "sample_hash.salt": "a different salt draws a different sample",
+    "canonicalize_mentions.transfer": _REF,
+    "canonicalize_mentions.omim": _REF,
+    "canonicalize_mentions.valid_c": _REF,
+    "fetch_documents.partitions": _OFFLINE,
+    "urllib_transport.timeout": _OFFLINE,
+    "urllib_transport.backoff": _OFFLINE,
+}
+# package parameters no body reads, each with the reason it stays
+_UNREAD = {"pair_features.info": "perfbench passes it; goes with the benchmark"}
+
+
+def test_every_option_has_a_caller():
+    """Every defaulted parameter of a renet2_spark/ function or method
+    (oracles.py aside) is set by a call outside tests/: in the package,
+    __spark_entry__.py, bench*.py, perfbench/ or scripts/. An argument
+    that only forwards the caller's own defaulted parameter sets it
+    only if that parameter is set. A parameter only tests set must be
+    a key of _TEST_SEAMS, and every key there must still be one; a
+    test call that passes the default literal sets nothing. No package
+    signature takes **kwargs, and every parameter is read (_UNREAD
+    aside): an option no caller sets is a configuration no workload
+    runs."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "renet2_spark"
+    files = [*pkg.rglob("*.py"), root / "__spark_entry__.py",
+             *root.glob("bench*.py")]
+    for d in ("perfbench", "scripts", "tests"):
+        files += (root / d).rglob("*.py")
+    trees = {f: ast.parse(f.read_text()) for f in files}
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+    funcs, bad = {}, []
+    for f, tree in trees.items():
+        if pkg not in f.parents or f.name == "oracles.py":
+            continue
+        for n in ast.walk(tree):
+            if isinstance(n, fn_types) and n.args.kwarg:
+                bad.append(f"{n.name}(**{n.args.kwarg.arg})")
+        for stmt in tree.body:
+            methods = [m for m in getattr(stmt, "body", []) if isinstance(m, fn_types)]
+            for fn, off in [(stmt, 0)] if isinstance(stmt, fn_types) else \
+                    [(m, 1) for m in methods] if isinstance(stmt, ast.ClassDef) else []:
+                assert fn.name not in funcs, f"two package functions named {fn.name}"
+                funcs[fn.name] = (fn, off)
+
+    def params(fn):
+        a = fn.args
+        pos = [p.arg for p in [*a.posonlyargs, *a.args]]
+        dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        dflt.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d)
+        return pos, dflt
+
+    for name, (fn, _) in funcs.items():
+        a = fn.args
+        read = {n.id for s in fn.body for n in ast.walk(s) if isinstance(n, ast.Name)}
+        bad += [f"{name}.{p.arg} is never read"
+                for p in [*a.posonlyargs, *a.args, *a.kwonlyargs]
+                if p.arg not in read and f"{name}.{p.arg}" not in _UNREAD]
+
+    # "func.param" -> [(in_tests, forwarded "func.param" or None)]
+    sites: dict[str, list] = {}
+    for f, tree in trees.items():
+        in_tests = root / "tests" in f.parents
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+
+        def binder(node, name):
+            """The tracked function whose defaulted parameter `name`
+            is, as seen from `node`; "" for any other binding."""
+            while node in parent:
+                node = parent[node]
+                if isinstance(node, (*fn_types, ast.Lambda)):
+                    a = node.args
+                    if name == getattr(a.kwarg, "arg", None) or name in {
+                        p.arg for p in [*a.posonlyargs, *a.args, *a.kwonlyargs]
+                    }:
+                        tracked = funcs.get(getattr(node, "name", None), (None,))[0]
+                        return node.name if tracked is node else ""
+            return ""
+
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", getattr(call.func, "attr", None))
+            if name not in funcs:
+                continue
+            fn, off = funcs[name]
+            pos, dflt = params(fn)
+            given = [(pos[i + off], v) for i, v in enumerate(call.args)
+                     if i + off < len(pos) and not isinstance(v, ast.Starred)]
+            given += [(k.arg, k.value) for k in call.keywords if k.arg]
+            for p, v in given:
+                if p not in dflt:
+                    if fn.args.kwarg and p not in pos:  # into **kwargs
+                        sites.setdefault(f"{name}.**{p}", []).append((in_tests, None))
+                    continue
+                if in_tests and isinstance(v, ast.Constant) and \
+                        isinstance(dflt[p], ast.Constant) and v.value == dflt[p].value:
+                    continue
+                fwd = binder(call, v.id) if isinstance(v, ast.Name) else ""
+                if fwd and v.id not in params(funcs[fwd][0])[1]:
+                    fwd = ""  # a required parameter is always set
+                sites.setdefault(f"{name}.{p}", []).append(
+                    (in_tests, f"{fwd}.{v.id}" if fwd else None))
+            for k in call.keywords:
+                fwd = binder(call, k.value.id) if k.arg is None and \
+                    isinstance(k.value, ast.Name) else ""
+                for p in dflt if fwd else ():
+                    sites.setdefault(f"{name}.{p}", []).append(
+                        (in_tests, f"{fwd}.**{p}"))
+
+    def set_by(with_tests):
+        done, grew = set(), True
+        while grew:
+            grew = False
+            for key, ss in sites.items():
+                if key not in done and any(
+                    (with_tests or not t) and (dep is None or dep in done)
+                    for t, dep in ss
+                ):
+                    done.add(key)
+                    grew = True
+        return done
+
+    outside, anywhere = set_by(False), set_by(True)
+    options = [f"{n}.{p}" for n, (fn, _) in funcs.items() for p in params(fn)[1]]
+    never = [o for o in options if o not in anywhere]
+    unlisted = [o for o in options
+                if o in anywhere and o not in outside and o not in _TEST_SEAMS]
+    stale = [o for o in _TEST_SEAMS if o not in anywhere or o in outside]
+    assert (never, unlisted, stale, bad) == ([], [], [], []), (
+        f"set by no caller: {never}; set only by tests, no reason given: "
+        f"{unlisted}; _TEST_SEAMS keys not test-only: {stale}; {bad}"
+    )
 
 
 def test_package_has_no_unused_imports():

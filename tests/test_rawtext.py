@@ -49,9 +49,9 @@ def _var_df(spark):
 
 def test_probe_contract(spark):
     docs = load_documents(spark, SF_SMOKE)
-    assert pipeline.probe_corpus_contract(docs) is True
-    assert pipeline.probe_corpus_contract(raw_text_twin(docs)) is False
-    assert pipeline.probe_corpus_contract(_var_df(spark)) is False
+    assert pipeline.probe_corpus_contract_info(docs)["packed"] is True
+    assert pipeline.probe_corpus_contract_info(raw_text_twin(docs))["packed"] is False
+    assert pipeline.probe_corpus_contract_info(_var_df(spark))["packed"] is False
     # decision + sample size are RETURNED to the caller (r4 ADVICE:
     # no module-global — concurrent probes can't clobber each other)
     info = pipeline.probe_corpus_contract_info(_var_df(spark))
@@ -72,9 +72,32 @@ def test_probe_rejects_mixed_corpus(spark):
     assert info["packed"] is False
     # same corpus with the raw docs FIRST must (still) route raw
     mixed2 = raw_tail.unionByName(docs.filter("doc_id % 5 != 0"))
-    assert pipeline.probe_corpus_contract(mixed2) is False
+    assert pipeline.probe_corpus_contract_info(mixed2)["packed"] is False
     # and the pure packed head alone still routes packed
-    assert pipeline.probe_corpus_contract(docs.filter("doc_id % 5 != 0"))
+    assert pipeline.probe_corpus_contract_info(docs.filter("doc_id % 5 != 0"))["packed"]
+
+
+def test_raw_chain_on_packed_text_changes_the_edges(spark):
+    """`corpus` declares the sentence semantics, not only a speed: the
+    raw chain reads each packed doc (no sentence punctuation) as ONE
+    sentence, so it tags the same mentions as the packed path but
+    every sent_no is 0, and the edges differ (sf0.001: 285 packed
+    edges, 0 raw). A conservative routing predicate is therefore not
+    safe in either direction."""
+    docs = load_documents(spark, SF_SMOKE)
+    ids = ["doc_id", "mention", "type", "entity_id"]
+    packed = pipeline.build_mentions(spark, docs, corpus="packed")
+    raw = pipeline.build_mentions(spark, docs, corpus="raw")
+    assert packed.count() > 0
+    assert raw.select(ids).exceptAll(packed.select(ids)).count() == 0
+    assert packed.select(ids).exceptAll(raw.select(ids)).count() == 0
+    assert [tuple(r) for r in raw.select("sent_no").distinct().collect()] == [(0,)]
+    assert packed.select("sent_no").distinct().count() > 1
+    edges = {
+        corpus: sorted(map(tuple, pipeline.build_edges(spark, docs, corpus=corpus).collect()))
+        for corpus in ("packed", "raw")
+    }
+    assert edges["packed"] and edges["raw"] != edges["packed"]
 
 
 def test_raw_edges_match_packed_on_twin_corpus(spark):
@@ -165,7 +188,7 @@ def test_raw_edges_match_packed_on_messy_twin_corpus(spark):
     docs = load_documents(spark, SF_SMOKE)
     messy = raw_text_twin_messy(docs)
     # the probe must route this corpus raw
-    assert pipeline.probe_corpus_contract(messy) is False
+    assert pipeline.probe_corpus_contract_info(messy)["packed"] is False
     a = sorted(map(tuple, pipeline.build_edges(spark, docs).collect()))
     b = sorted(
         map(

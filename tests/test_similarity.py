@@ -16,10 +16,8 @@ def test_lsh_recall_vs_brute(spark):
     (top-5 cosine ~0.3 -> near-uniform bucket collision); 8 tables x
     4 planes gives ~0.65 expected recall there, and far more on real
     clustered embeddings."""
-    brute = sim.ann_topk_brute(_emb(spark), k=5, n_queries=20).collect()
-    lsh = sim.ann_topk_lsh(
-        _emb(spark), k=5, n_queries=20, n_planes=4, n_tables=8
-    ).collect()
+    brute = sim.ann_topk_brute(_emb(spark)).collect()
+    lsh = sim.ann_topk_lsh(_emb(spark), n_planes=4, n_tables=8).collect()
     b = {(r["query_id"], r["neighbor_id"]) for r in brute}
     l = {(r["query_id"], r["neighbor_id"]) for r in lsh}
     assert len(b) == 100
@@ -97,7 +95,7 @@ def test_ivf_centroids_degenerate_inputs(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     with pytest.raises(ValueError, match="empty sample"):
         ivf_centroids(emb.filter("vec_id < 0"))
-    c = ivf_centroids(emb.filter("vec_id < 3"), n_centroids=8)
+    c = ivf_centroids(emb.filter("vec_id < 3"))
     assert c.shape[0] == 3  # clamped to the sample size
     assert np.isfinite(c).all()
 
@@ -128,18 +126,15 @@ def test_lsh_buckets_rejects_wrong_dim(spark):
     assert {r["bucket"] for r in sim.lsh_buckets(nulls).collect()} == {"0" * 8}
 
 
-_LSH_DEDUP = dict(n_planes=4, n_tables=8)  # the oracle's defaults
 BLOCKED_CASES = {
     "dedup_t0.4": (
-        lambda e: sim.dedup_embedding_lsh(e, threshold=0.4, **_LSH_DEDUP),
+        lambda e: sim.dedup_embedding_lsh(e, threshold=0.4),
         lambda: oracles.q_dedup_embedding_lsh(threshold=0.4),
         49,
     ),
     # the cap binds: the largest bucket has 52 members
     "dedup_t0.2_cap3": (
-        lambda e: sim.dedup_embedding_lsh(
-            e, threshold=0.2, max_bucket_size=3, **_LSH_DEDUP
-        ),
+        lambda e: sim.dedup_embedding_lsh(e, threshold=0.2, max_bucket_size=3),
         lambda: oracles.q_dedup_embedding_lsh(threshold=0.2, max_bucket=3),
         31,
     ),

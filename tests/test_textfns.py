@@ -290,22 +290,6 @@ def test_tfidf_topk_ranks_rare_words_first(spark):
     assert d3[1]["word"] == "alpha" and d3[1]["tfidf"] == 0.0
 
 
-def test_tfidf_topk_broadcast_fallback_identical(spark):
-    """broadcast_df=False (open-vocabulary fallback) returns the exact
-    same rows as the broadcast default."""
-    from renet2_spark.functions.textstats import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [("1", "a b c a"), ("2", "b c d"), ("3", "c d e e")],
-        "doc_id string, text string",
-    )
-    a = sorted(map(tuple, tfidf_topk(docs, k=3).collect()))
-    b = sorted(
-        map(tuple, tfidf_topk(docs, k=3, broadcast_df=False).collect())
-    )
-    assert a == b
-
-
 def test_unigram_surprisal_corpus_model(spark):
     """Mean unigram surprisal under the corpus's own LM: a doc made of
     corpus-common words scores LOWER than one containing a hapax; the
