@@ -463,9 +463,9 @@ def q_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # driver testdata is the packed contract by construction -> skip
-    # the auto probe job (the probe itself is exercised by
-    # kg_edges_rawtext's raw routing and tests/test_rawtext.py)
+    # driver testdata is the packed contract by construction ->
+    # declare it: one scan, no raw branch (per-document routing is
+    # exercised by tests/test_rawtext.py)
     return pipeline.build_edges(
         spark, _docs_plain(spark, sf_dir), corpus="packed"
     )
@@ -507,6 +507,23 @@ def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ram_tmpdir(prefix: str) -> str:
+    """A fresh directory on the RAM disk when there is one, removed when
+    the interpreter exits: the query's DataFrame reads it lazily, so it
+    must outlive the call. The RAM disk because a local /tmp disk can
+    throttle intermittently (BENCH.md r6 — identical writes varied
+    3s..69s); a production cluster provisions local SSD/NVMe or an
+    object store for stage tables."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    path = tempfile.mkdtemp(prefix=prefix, dir=tmp_base)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def q_edges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 incremental micro-batch execution driven through the EXACT
     flagship oracle: a fresh CheckpointStore scores the corpus in
@@ -514,19 +531,10 @@ def q_edges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-memory loop raw.py:1384-1638 made idempotent), and the
     read-back committed stage table must hash-equal kg_edges — proving
     the checkpoint write/read path loses and duplicates nothing."""
-    import os
-    import tempfile
-
     from renet2_spark.sources.checkpoint import CheckpointStore
     from renet2_spark.streaming.incremental import run_incremental
 
-    # checkpoint I/O on the RAM disk when available (r7): the
-    # sandbox's /tmp disk throttles intermittently (BENCH.md r6 —
-    # identical writes vary 3s..69s); a production cluster provisions
-    # local SSD/NVMe or an object store for stage tables
-    tmp_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="kg_inc_", dir=tmp_base)
-    store = CheckpointStore(spark, root)
+    store = CheckpointStore(spark, _ram_tmpdir("kg_inc_"))
     return run_incremental(
         spark, _docs_plain(spark, sf_dir), store, buckets=8, corpus="packed"
     )
@@ -538,13 +546,9 @@ def q_nodes_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     classpath, parquet otherwise — same layout contract) partitioned
     by entity type, read back via read_table, and must hash-equal the
     directly-computed nodes."""
-    import os
-    import tempfile
-
     from renet2_spark.sources.tables import read_table, write_table
 
-    tmp_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    path = tempfile.mkdtemp(prefix="kg_nodes_tbl_", dir=tmp_base) + "/nodes"
+    path = _ram_tmpdir("kg_nodes_tbl_") + "/nodes"
     nodes = pipeline.build_nodes(
         spark, _docs_plain(spark, sf_dir), corpus="packed"
     )

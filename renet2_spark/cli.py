@@ -33,9 +33,10 @@ def cmd_predict(args) -> int:
     spark = _spark(args)
     docs = spark.read.parquet(args.input)
     cutoff = 1 if args.sensitive else CUTOFF  # predict.py:122-124
-    # corpus routing: default 'auto' probes the packed contract and
-    # falls back to the raw splitter/tokenizer chain — arbitrary user
-    # corpora never silently hit the arithmetic fast tagger
+    # corpus routing: default 'auto' sends each document the packed
+    # contract (functions.text.PACKED_OK) holds for to the fast tagger
+    # and every other one to the raw splitter/tokenizer chain —
+    # arbitrary user corpora never silently hit the arithmetic tagger
     if args.scorer == "neural":
         edges = build_edges_neural(spark, docs, cutoff=cutoff,
                                    corpus=args.corpus, mode=args.mode)
@@ -158,7 +159,7 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--corpus", choices=["auto", "packed", "raw"],
                     default="auto",
                     help="sentence derivation: packed contract, raw "
-                         "splitter/tokenizer chain, or probe (default)")
+                         "splitter/tokenizer chain, or per document (default)")
     sp.add_argument("--mode", choices=["abs", "ft"], default="abs",
                     help="neural input shape: abstract 32 sents or "
                          "full-text 400 sents (reference fix_snt_n, "

@@ -206,8 +206,9 @@ def raw_text_twin(documents: DataFrame) -> DataFrame:
     """Deterministic RAW-TEXT twin of the packed corpus: every derived
     SENT_WORDS-word sentence is emitted with a sentence-final '!' and
     single spaces between sentences — real punctuated text that the
-    packed contract probe rejects, forcing the full raw chain (one
-    Python pass: split -> tokenize -> locate -> text check; then tag).
+    packed contract (functions.text.PACKED_OK) rejects, forcing the
+    full raw chain (one Python pass: split -> tokenize -> locate ->
+    text check; then tag).
 
     Why '!': it is an UNCONDITIONAL sentence cut in the reference
     splitter when followed by a space (raw.py:462-464 — no abbreviation
@@ -333,7 +334,7 @@ def ingest_parallelism_floor(df: DataFrame, spark, key: str = "doc_id") -> DataF
     dedup −40%, mention tagging −16%); plans that shuffle within a
     few narrow ops of the scan — the flagship KG chain — gain nothing
     downstream of that shuffle and pay the extra exchange across
-    their probe/checkpoint actions (kg_edges measured ~2x slower with
+    their checkpoint actions (kg_edges measured ~2x slower with
     a global floor), so pipeline.run keeps the plain scan."""
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 2):

@@ -16,6 +16,10 @@ preprocessing:
   SAME table via pd.Series.str.replace — a vectorized chain, no
   per-row python function in the tokenize path.
 
+* :data:`PACKED_OK` — the packed corpus contract as one SQL predicate
+  on `text`: true exactly where the splitter and tokenizer below are
+  the identity, with the deny-list generated from the rule table.
+
 * :func:`split_sentences` — the reference's `snt_split`
   (src/renet2/raw.py:437-545) re-expressed: bracket-balance gating
   (disabled when the text's brackets are unbalanced), '!?'+space
@@ -128,6 +132,34 @@ _RULES_POST: list[tuple[str, str]] = [
 
 _COMPILED_PRE = [(re.compile(p), r) for p, r in _RULES_PRE]
 _COMPILED_POST = [(re.compile(p), r) for p, r in _RULES_POST]
+
+
+def _rewritten_words() -> list[str]:
+    """The alphanumeric words W of the literal ' W ' rules of
+    _RULES_POST that change the text (the 'wanna' no-op excluded)."""
+    out = []
+    for pat, repl in _RULES_POST:
+        s = re.sub(r"\\(.)", r"\1", pat)
+        if (re.escape(s) == pat and re.fullmatch(" [A-Za-z0-9]+ ", s)
+                and repl != s):
+            out.append(s.strip())
+    return out
+
+
+# ---- the packed corpus contract ------------------------------------------
+# A document is PACKED iff this SQL predicate holds on its `text`: single
+# spaces between alphanumeric words (\z, not $: Java's $ also matches
+# before a final line terminator), and no word a _RULES_POST word rule
+# rewrites. Exactly then split_sentences is [text] and tokenize_text is
+# the split on ' ' (no _RULES_PRE rule and no splitter cut fires
+# without punctuation), so the arithmetic tagger's coordinates are the
+# reference's. NULL text is not packed.
+PACKED_OK = (
+    r"coalesce(text rlike '\\A[A-Za-z0-9]+( [A-Za-z0-9]+)*\\z'"
+    " AND NOT arrays_overlap(split(text, ' '), array("
+    + ", ".join(f"'{w}'" for w in _rewritten_words())
+    + ")), false)"
+)
 
 
 def tokenize_text(text: str) -> list[str]:

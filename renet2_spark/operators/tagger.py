@@ -410,12 +410,12 @@ def tag_mentions_fast(documents: DataFrame, spark: SparkSession,
     corpus is defined by). For span corpora with variable sentence
     lengths use tag_mentions (positional sentence ids) — this function
     would silently mis-coordinate there. The contract IS gated at
-    runtime: plans.pipeline.build_mentions probes a sampled prefix
-    (probe_corpus_contract_info — splitter/tokenizer identity check) and
-    routes non-contract corpora to tag_mentions_raw (the one-pass
-    split/tokenize/locate chain, raw_tokens), so the CLI can
-    never reach this function on punctuated text (round-2 verdict
-    wrong #1 closed; tests/test_rawtext.py).
+    runtime: a document is packed iff functions.text.PACKED_OK holds on
+    its text (the splitter and tokenizer are the identity on it), and
+    plans.pipeline.build_mentions(corpus='auto') sends every other
+    document to tag_mentions_raw (the one-pass split/tokenize/locate
+    chain, raw_tokens), so the CLI can never reach this function on
+    punctuated text (tests/test_rawtext.py).
     """
     from ..corpus import SENT_WORDS
 

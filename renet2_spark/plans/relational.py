@@ -198,13 +198,16 @@ def _pr_row(spark: SparkSession, counts) -> DataFrame:
 
 def _candidate_pairs(spark, sf_dir) -> DataFrame:
     """The flagship's candidate pairs with their scorer features
-    (pairgen.pair_features) over the auto-routed tagger: one corpus
-    probe, one tagger chain, one doc_id shuffle."""
+    (pairgen.pair_features) over the packed tagger (the driver testdata
+    is that contract by construction): one scan, one tagger chain, one
+    doc_id shuffle."""
     from ..corpus import load_documents
     from ..operators.pairgen import pair_features
     from .pipeline import build_mentions
 
-    return pair_features(build_mentions(spark, load_documents(spark, sf_dir)))
+    return pair_features(
+        build_mentions(spark, load_documents(spark, sf_dir), corpus="packed")
+    )
 
 
 def kg_pr_vs_strong_cooc(spark, sf_dir) -> DataFrame:

@@ -147,15 +147,14 @@ class CheckpointStore:
             fps[r["part_key"]] = r["input_fingerprint"]
             if r["_done_fp"] != r["input_fingerprint"]:
                 todo[r["part_key"]] = r["input_fingerprint"]
-        data = self.spark.read
+        subset = keyed.filter(F.col("part_key").isin(list(todo))).drop("part_key")
+        out = with_part_key(transform(subset), key_col, buckets).withColumn(
+            "input_fingerprint", _fingerprint_of(todo)
+        )
+        # the readback's schema is the transform's, also on a resume with
+        # nothing to do: an empty output leaves no file to infer it from
+        data = self.spark.read.schema(out.schema)
         if todo:
-            subset = keyed.filter(F.col("part_key").isin(list(todo))).drop("part_key")
-            out = with_part_key(transform(subset), key_col, buckets).withColumn(
-                "input_fingerprint", _fingerprint_of(todo)
-            )
-            # the readback's schema is the written one: an empty output
-            # leaves no file to infer it from
-            data = data.schema(out.schema)
             obs = Observation()
             # one task (one file) per bucket: without the repartition every
             # task writes into every bucket dir (measured 1,024 files vs

@@ -37,20 +37,20 @@ def _lose_lineage(store, root, stage, part_keys):
 
 def test_stage_runs_and_resumes_noop(spark, root):
     store = CheckpointStore(spark, root)
-    calls = []
 
     def transform(df):
-        calls.append(1)
         return df.withColumn("n_chars2", F.length("text"))
 
     out1 = store.run_stage("stats", _docs(spark), transform)
     assert out1.count() == 500
     assert store.committed("stats").count() == 32
-    # resume: nothing to do, transform not invoked again
-    n_calls = len(calls)
+    # resume: nothing to do — the transform only lends its schema; no
+    # bucket is rewritten and no lineage row appended
+    files = _checksums(f"{root}/stats/data")
     out2 = store.run_stage("stats", _docs(spark), transform)
     assert out2.count() == 500
-    assert len(calls) == n_calls
+    assert store.lineage("stats").count() == 32
+    assert _checksums(f"{root}/stats/data") == files
 
 
 def test_partial_failure_resume_recomputes_only_missing(spark, root):
@@ -215,6 +215,22 @@ def test_stage_emitting_nothing_reads_back_empty(spark, root):
     assert store.committed("empty").count() == 32
 
 
+def test_resume_of_stage_emitting_nothing_reads_back_empty(spark, root):
+    """A resume with nothing to do over a stage whose every bucket
+    emitted no rows has no data file to infer a schema from: the
+    readback takes the transform's (a plan, never run)."""
+    store = CheckpointStore(spark, root)
+
+    def transform(df):
+        return df.filter("length(text) < 0").withColumn("n", F.length("text"))
+
+    store.run_stage("empty", _docs(spark), transform)
+    out = store.run_stage("empty", _docs(spark), transform)
+    assert out.columns == ["doc_id", "text", "n"]
+    assert out.collect() == []
+    assert store.lineage("empty").count() == 32
+
+
 def _checksums(path):
     """md5 of every file under `path`, keyed by relative path."""
     return {
@@ -318,20 +334,28 @@ def test_metrics_roundtrip(spark, root):
     assert m["docs_per_sec"] == 123.4
 
 
-def test_auto_probe_decision_lands_in_metrics(spark, root):
-    """build_edges with corpus='auto' + a store must record the probe
-    routing decision as metric rows (round-3 verdict wrong #1: the
-    routing was unobservable)."""
+def test_auto_routing_counts_land_in_metrics(spark, root):
+    """build_edges with corpus='auto' + a store records how many
+    documents each route took, exactly, as metric rows counted in the
+    stage's own pass: on a corpus with every 5th doc swapped for its
+    raw twin, within one partition."""
+    from renet2_spark.corpus import raw_text_twin
     from renet2_spark.plans.pipeline import build_edges
 
+    docs = _docs(spark)
+    raw = docs.filter("doc_id % 5 = 0")
+    mixed = docs.filter("doc_id % 5 != 0").unionByName(raw_text_twin(raw))
     store = CheckpointStore(spark, root)
-    build_edges(spark, _docs(spark), store=store, corpus="auto").collect()
+    build_edges(spark, mixed.coalesce(1), store=store, corpus="auto").collect()
     m = {
         (r["stage"], r["metric"]): r["value"]
         for r in store.metrics().collect()
     }
-    assert m[("probe", "packed")] == 1.0
-    assert m[("probe", "sampled_docs")] >= 1.0
+    n_raw = raw.count()
+    assert m == {
+        ("routing", "packed_docs"): 500.0 - n_raw,
+        ("routing", "raw_docs"): float(n_raw),
+    } and n_raw > 0
 
 
 def test_write_table_parquet_fallback(spark, root):

@@ -186,27 +186,47 @@ def test_vocab_ids_large_vocab_equals_dict_get():
     assert vocab_ids([], vocab) == []
 
 
-def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
-    """An unknown mode raises before any job runs: with corpus='auto'
-    the mode check precedes the corpus probe job. The probe run on its
-    own under a second job group shows that a job would be seen."""
-    from renet2_spark.plans.pipeline import probe_corpus_contract_info
-
+def _jobs_in_group(spark, group: str, fn) -> list:
+    """The ids of the Spark jobs `fn()` starts, under job group `group`."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     try:
-        sc.setJobGroup("neural-bad-mode", "build_edges_neural mode check")
-        for corpus in ("packed", "auto"):
-            with pytest.raises(ValueError, match="mode"):
-                build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
-        assert tracker.getJobIdsForGroup("neural-bad-mode") == []
-        sc.setJobGroup("neural-probe", "corpus probe")
-        probe_corpus_contract_info(docs)
-        assert tracker.getJobIdsForGroup("neural-probe")
+        sc.setJobGroup(group, group)
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_build_edges_neural_rejects_bad_mode_before_persisting(spark):
+    """An unknown mode raises before any job runs. A count under a
+    second job group shows that a job would be seen."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+    def bad_modes():
+        for corpus in ("packed", "auto"):
+            with pytest.raises(ValueError, match="mode"):
+                build_edges_neural(spark, docs, corpus=corpus, mode="bogus")
+
+    assert _jobs_in_group(spark, "neural-bad-mode", bad_modes) == []
+    assert _jobs_in_group(spark, "neural-count", docs.count)
+
+
+def test_building_auto_plans_runs_no_job(spark):
+    """corpus='auto' routes inside the plan: building the edge, node
+    and neural plans starts no Spark job; running one does."""
+    from renet2_spark.plans.pipeline import build_edges, build_nodes
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plans = []
+
+    def build():
+        for b in (build_edges, build_nodes, build_edges_neural):
+            plans.append(b(spark, docs, corpus="auto"))
+
+    assert _jobs_in_group(spark, "auto-build", build) == []
+    assert len(plans) == 3
+    assert _jobs_in_group(spark, "auto-run", plans[1].count)
 
 
 def test_fulltext_mode_tensor_shape():

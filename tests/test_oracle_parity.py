@@ -40,3 +40,28 @@ def test_oracle_parity_sf001(spark, name):
 
 def test_all_oracle_keys_have_queries():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_query_tmpdir_is_removed_at_exit():
+    """q_edges_incremental and q_nodes_table_roundtrip return DataFrames
+    that read a fresh RAM-disk directory lazily (_ram_tmpdir); it goes
+    when the interpreter exits. Checked in a subprocess that starts no
+    Spark session."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os, __spark_entry__ as e\n"
+        "p = e._ram_tmpdir('kg_exit_')\n"
+        "open(os.path.join(p, 'f'), 'w').close()\n"
+        "print(os.path.isdir(p), p)\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.abspath(entry_mod.__file__)), timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    existed, path = r.stdout.split()
+    assert existed == "True" and os.path.basename(path).startswith("kg_exit_")
+    assert not os.path.exists(path)

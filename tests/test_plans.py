@@ -189,6 +189,20 @@ def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
     assert neural.count("FileScan parquet") <= 2, neural
 
 
+def test_auto_edge_plan_routes_each_document_in_the_plan(spark):
+    """corpus='auto' is one plan: the packed tagger over the documents
+    PACKED_OK holds for, unioned with the raw chain over the rest. In the non-adaptive plan: one document
+    scan per branch and one Python node, the raw pass."""
+    from renet2_spark.plans.pipeline import build_edges
+
+    spark.catalog.clearCache()
+    with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        plan = _executed(build_edges(spark, _docs(spark), corpus="auto"))
+    assert plan.count("FileScan parquet") == 2, plan
+    assert _PYTHON_NODE.findall(plan) == ["MapInPandas"], plan
+    assert plan.count("Union") == 1, plan
+
+
 def test_threshold_sweep_scores_the_flagship_pairs(spark):
     """kg_threshold_sweep scores the flagship's candidate pairs: in the
     non-adaptive plan one document scan, two hash exchanges (the pairs'
@@ -210,21 +224,15 @@ def test_threshold_sweep_scores_the_flagship_pairs(spark):
 
 
 def test_pr_query_builds_its_pairs_once(spark, monkeypatch):
-    """kg_pr_vs_strong_cooc probes the corpus once and runs one tagger
-    chain: its edges and its gold are two predicates over the same
-    candidate pairs, counted by one aggregation. In the non-adaptive
-    plan of its one metrics action: one document scan, the dictionary
-    broadcast join, the doc_id repartition and the final
-    single-partition exchange; no sort-merge join."""
-    from renet2_spark.plans import pipeline
+    """kg_pr_vs_strong_cooc runs one packed tagger chain: its edges and
+    its gold are two predicates over the same candidate pairs, counted
+    by one aggregation. In the non-adaptive plan of its one metrics
+    action: one document scan, no Python node, the dictionary broadcast
+    join, the doc_id repartition and the final single-partition
+    exchange; no sort-merge join."""
     from renet2_spark.plans.relational import kg_pr_vs_strong_cooc
 
-    probes, actions = [], []
-    probe = pipeline.probe_corpus_contract_info
-    monkeypatch.setattr(
-        pipeline, "probe_corpus_contract_info",
-        lambda docs, *a: probes.append(docs) or probe(docs, *a),
-    )
+    actions = []
     cls = type(spark.range(1))
     first = cls.first
     monkeypatch.setattr(cls, "first", lambda df: actions.append(df) or first(df))
@@ -233,8 +241,8 @@ def test_pr_query_builds_its_pairs_once(spark, monkeypatch):
         kg_pr_vs_strong_cooc(spark, SF_SMOKE)
         [metrics] = actions
         plan = _executed(metrics)
-    assert len(probes) == 1
     assert plan.count("FileScan parquet") == 1, plan
+    assert _PYTHON_NODE.findall(plan) == [], plan
     assert _JOIN_NODE.findall(plan) == ["BroadcastHashJoin"], plan
     assert len(_EXCHANGE.findall(plan)) == 2, plan
     assert "ReusedExchange" not in plan, plan
@@ -479,6 +487,7 @@ _TEST_ONLY = {
     "normalize_gene_id": "Python mirror of the reference's parse_ann_id gene path",
     "normalize_disease_id": "Python mirror of the reference's parse_ann_id disease path",
     "tokenize_s": "Python mirror of the reference's tokenize_s, pinned to frozen vectors",
+    "tokenize_text": "Python mirror of the reference's tokenize; PACKED_OK is checked against it",
     "sentence_split_simple": "Python mirror of the reference's sentence_split",
     "refine_snt": "Python mirror of the reference's refine_snt",
     "minhash_signatures": "reference for _row_local_signatures",

@@ -116,3 +116,74 @@ def test_merge_overlaps_equals_reference_scan(spark, spans):
     model_in = [(t[0], t[1], t[2], t[4]) for t in ordered]
     want = set(_scan_model(model_in))
     assert got == want
+
+
+def _contract_texts(n: int, seed: int) -> list[str]:
+    """Seeded texts around the packed contract: alphanumeric words,
+    every alphanumeric fragment of a tokenizer rule (so every word a
+    rule rewrites, the 'wanna' no-op and clitic parts), punctuation and
+    apostrophes, joined by single or double spaces or tabs, some with a
+    leading space or a trailing newline."""
+    import random
+    import re
+
+    from renet2_spark.functions.text import _RULES_POST
+
+    rng = random.Random(seed)
+    alnum = string.ascii_letters + string.digits
+    special = sorted({w for p, _ in _RULES_POST
+                      for w in re.findall("[A-Za-z0-9]+", p)})
+    special += ["Cannots", "gonnA", "lemmee"]
+    punct = ["x.", "a,b", "it's", "don't", "(", ")", "!", "?", ";", "e.g.",
+             "'", "\"q\"", "-", "vs.", "a.B"]
+
+    def word():
+        r = rng.random()
+        if r < 0.15:
+            return rng.choice(special)
+        if r < 0.25:
+            return rng.choice(punct)
+        return "".join(rng.choices(alnum, k=rng.randint(1, 6)))
+
+    out = []
+    for _ in range(n):
+        seps = [" "] * 20 + ["  ", "\t"]
+        t = word()
+        for _ in range(rng.randint(0, 7)):
+            t += rng.choice(seps) + word()
+        r = rng.random()
+        if r < 0.08:
+            t += "\n"
+        elif r < 0.12:
+            t = " " + t
+        elif r < 0.13:
+            t = ""
+        out.append(t)
+    return out
+
+
+def test_packed_ok_sql_is_the_splitter_tokenizer_identity(spark):
+    """The SQL predicate PACKED_OK, evaluated by Spark in one pass over
+    24k generated texts, holds only where the reference splitter and
+    tokenizer are the identity (one sentence, the text's ' ' split), and
+    on alphanumeric-and-space texts exactly there."""
+    import re
+
+    from renet2_spark.functions.text import PACKED_OK
+
+    texts = _contract_texts(24_000, seed=22)
+    rows = spark.createDataFrame(
+        list(enumerate(texts)), "i int, text string"
+    ).selectExpr("i", f"{PACKED_OK} AS ok").collect()
+    ok = {r["i"]: r["ok"] for r in rows}
+    assert len(ok) == len(texts)
+    n_ok = n_plain = 0
+    for i, t in enumerate(texts):
+        identity = tokenize_text(t) == t.split(" ") and split_sentences(t) == [t]
+        if ok[i]:
+            n_ok += 1
+            assert identity, repr(t)
+        if re.fullmatch("[A-Za-z0-9 ]*", t):
+            n_plain += 1
+            assert ok[i] == identity, repr(t)
+    assert n_ok > 1000 and n_plain > 5000

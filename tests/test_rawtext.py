@@ -1,4 +1,4 @@
-"""Raw-text pipeline: corpus-contract probe, raw tagger offsets, CLI
+"""Raw-text pipeline: per-document corpus routing, raw tagger offsets, CLI
 routing on variable-sentence-length corpora (round-2 verdict #1), and
 cache hygiene (#8)."""
 
@@ -12,6 +12,7 @@ from renet2_spark.corpus import (
     raw_text_twin,
     raw_text_twin_messy,
 )
+from renet2_spark.functions.text import PACKED_OK
 from renet2_spark.plans import pipeline
 from tests.conftest import SF_SMOKE
 
@@ -47,34 +48,68 @@ def _var_df(spark):
     return spark.createDataFrame(_VAR_DOCS, "doc_id string, text string")
 
 
-def test_probe_contract(spark):
+def _packed_ok(docs):
+    """Each doc's PACKED_OK value, by doc_id."""
+    return {
+        r["doc_id"]: r["ok"]
+        for r in docs.selectExpr("CAST(doc_id AS STRING) AS doc_id",
+                                 f"{PACKED_OK} AS ok").collect()
+    }
+
+
+def test_packed_ok_classifies_each_document(spark):
     docs = load_documents(spark, SF_SMOKE)
-    assert pipeline.probe_corpus_contract_info(docs)["packed"] is True
-    assert pipeline.probe_corpus_contract_info(raw_text_twin(docs))["packed"] is False
-    assert pipeline.probe_corpus_contract_info(_var_df(spark))["packed"] is False
-    # decision + sample size are RETURNED to the caller (r4 ADVICE:
-    # no module-global — concurrent probes can't clobber each other)
-    info = pipeline.probe_corpus_contract_info(_var_df(spark))
-    assert info == {"packed": False, "sampled_docs": 2}
-    assert not hasattr(pipeline, "last_probe")
+    packed = _packed_ok(docs)
+    assert len(packed) == 500 and all(packed.values())
+    for twin in (raw_text_twin, raw_text_twin_messy):
+        raw = _packed_ok(twin(docs))
+        assert len(raw) == 500 and not any(raw.values()), twin
+    assert _packed_ok(_var_df(spark)) == {"1": False, "2": False}
 
 
-def test_probe_rejects_mixed_corpus(spark):
-    """A packed-head / raw-tail UNION (what incremental ingest
-    produces) must route raw: the probe samples every partition's
-    head, not an arrival-order prefix (round-3 verdict wrong #1)."""
+def _mixed(spark, twin, every):
+    """sf0.001 with every `every`-th doc swapped for its `twin`, in ONE
+    partition: packed and raw docs interleave within the partition."""
     docs = load_documents(spark, SF_SMOKE).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    raw_tail = raw_text_twin(docs.filter("doc_id % 5 = 0"))
-    mixed = docs.filter("doc_id % 5 != 0").unionByName(raw_tail)
-    info = pipeline.probe_corpus_contract_info(mixed)
-    assert info["packed"] is False
-    # same corpus with the raw docs FIRST must (still) route raw
-    mixed2 = raw_tail.unionByName(docs.filter("doc_id % 5 != 0"))
-    assert pipeline.probe_corpus_contract_info(mixed2)["packed"] is False
-    # and the pure packed head alone still routes packed
-    assert pipeline.probe_corpus_contract_info(docs.filter("doc_id % 5 != 0"))["packed"]
+    raw = twin(docs.filter(f"doc_id % {every} = 0"))
+    return docs.filter(f"doc_id % {every} != 0").unionByName(raw).coalesce(1)
+
+
+def test_auto_routes_a_mixed_partition_exactly(spark):
+    """corpus='auto' routes each document by PACKED_OK, so a corpus
+    mixed WITHIN one partition gets the packed corpus's exact edges:
+    the raw chain reconstructs the twin docs' sentences."""
+    exact = sorted(
+        pipeline.build_edges(spark, load_documents(spark, SF_SMOKE), corpus="packed")
+        .collect()
+    )
+    assert len(exact) == 285
+    for twin, every in ((raw_text_twin, 5), (raw_text_twin, 50),
+                        (raw_text_twin_messy, 3)):
+        mixed = _mixed(spark, twin, every)
+        assert mixed.rdd.getNumPartitions() == 1
+        got = sorted(pipeline.build_edges(spark, mixed, corpus="auto").collect())
+        assert got == exact, (twin.__name__, every)
+
+
+def test_auto_routes_a_mixed_partition_exactly_neural(spark):
+    """The neural plan routes its sentence arrays as it routes the
+    mentions: on a mixed partition its edges are the packed plan's over
+    the packed docs plus the raw plan's over the raw docs."""
+    from renet2_spark.plans.pipeline import build_edges_neural
+
+    mixed = _mixed(spark, raw_text_twin, 5)
+    want = sorted(
+        build_edges_neural(spark, mixed.where(PACKED_OK), corpus="packed")
+        .unionByName(build_edges_neural(
+            spark, mixed.where(f"NOT {PACKED_OK}"), corpus="raw"
+        ))
+        .collect()
+    )
+    got = sorted(build_edges_neural(spark, mixed, corpus="auto").collect())
+    assert got == want and len(want) > 0
 
 
 def test_raw_chain_on_packed_text_changes_the_edges(spark):
@@ -153,7 +188,7 @@ def test_raw_mentions_match_general_tagger_on_variable_corpus(spark):
         .select(*cols)
         .collect()
     }
-    assert fast != expected  # the contract violation the probe catches
+    assert fast != expected  # the contract violation PACKED_OK catches
 
 
 def test_raw_tagger_offsets_are_real(spark):
@@ -187,8 +222,8 @@ def test_raw_edges_match_packed_on_messy_twin_corpus(spark):
     kg_edges_rawtext_messy driver query hash-checks."""
     docs = load_documents(spark, SF_SMOKE)
     messy = raw_text_twin_messy(docs)
-    # the probe must route this corpus raw
-    assert pipeline.probe_corpus_contract_info(messy)["packed"] is False
+    # PACKED_OK must route this corpus raw
+    assert messy.where(PACKED_OK).count() == 0
     a = sorted(map(tuple, pipeline.build_edges(spark, docs).collect()))
     b = sorted(
         map(
@@ -413,10 +448,10 @@ def test_raw_sentence_arrays_are_tokenized_sentences(spark):
     assert got == want
 
 
-def test_concurrent_probes_record_own_decisions(spark):
-    """r4 verdict #6 / ADVICE: two concurrent corpus='auto' builds on
-    one driver must each record THEIR OWN probe decision (packed vs
-    raw) into their stores — no shared mutable state to clobber."""
+def test_concurrent_auto_builds_record_own_routing(spark):
+    """Two concurrent corpus='auto' builds on one driver must each
+    record THEIR OWN routing counts into their stores — no shared
+    mutable state to clobber."""
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
@@ -426,16 +461,19 @@ def test_concurrent_probes_record_own_decisions(spark):
     raw = raw_text_twin(packed)
 
     def run(docs):
-        store = CheckpointStore(spark, tempfile.mkdtemp(prefix="probe_"))
-        pipeline.build_edges(spark, docs, store=store, corpus="auto").count()
-        m = {
-            (r["stage"], r["metric"]): r["value"]
-            for r in store.metrics().collect()
-        }
-        return m[("probe", "packed")]
+        root = tempfile.mkdtemp(prefix="routing_")
+        try:
+            store = CheckpointStore(spark, root)
+            pipeline.build_edges(spark, docs, store=store, corpus="auto").count()
+            return {
+                r["metric"]: r["value"]
+                for r in store.metrics().collect() if r["stage"] == "routing"
+            }
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
     with ThreadPoolExecutor(2) as ex:
         f_packed = ex.submit(run, packed)
         f_raw = ex.submit(run, raw)
-        assert f_packed.result() == 1.0
-        assert f_raw.result() == 0.0
+        assert f_packed.result() == {"packed_docs": 60.0, "raw_docs": 0.0}
+        assert f_raw.result() == {"packed_docs": 0.0, "raw_docs": 60.0}
