@@ -45,7 +45,6 @@ from renet2_spark.corpus import (
     derive_spans,
     load_documents,
     media_from_spans,
-    sentence_arrays,
     sentences_from_spans,
 )
 from renet2_spark.operators.normalize import canonicalize_mentions
@@ -589,9 +588,10 @@ def q_pair_tensors_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renet2_spark.operators.neural import pair_tensor_digests
 
     _ship_pkg(spark)
-    d = pair_tensor_digests(
-        _mentions(spark, sf_dir), sentence_arrays(_docs(spark, sf_dir))
+    texts = _docs(spark, sf_dir).selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", "text", "true AS packed"
     )
+    d = pair_tensor_digests(_mentions(spark, sf_dir), texts)
     row = F.concat_ws("|", "doc_id", "gene_id", "disease_id", "tensor_md5")
     return d.select(row.alias("r")).agg(
         F.count("*").cast("bigint").alias("n_pairs"),

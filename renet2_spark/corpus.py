@@ -91,24 +91,9 @@ def sentences_direct(documents: DataFrame) -> DataFrame:
 
 def sentence_arrays(documents: DataFrame) -> DataFrame:
     """flat documents -> (doc_id, _sents array<string>): each doc's
-    ordered sentence texts as ONE row-local array — exactly the value
-    the neural doc-payload builder needs per document.
-
-    Equals collecting sentences_direct's `sentence` column back per
-    doc (array_sort(collect_list(struct(sent_no, sentence)))) — the
-    strings come from the SAME slice/array_join expressions over the
-    same split(' ') word array, and transform(sequence(0, n-1))
-    preserves sentence order by construction (asserted in
-    tests/test_neural.py::test_sentence_arrays_matches_grouped) —
-    but with NO posexplode, NO groupBy shuffle and NO collect_list
-    re-assembly (guide §2.4: the explode + regroup pair cancels out).
-
-    HOF note (_sent_exprs docstring warns about interpreted lambdas):
-    this lambda runs once per SENTENCE (a single slice + array_join
-    call each, the identical work the codegen path does), not a
-    per-word fold with O(words) state — the interpreted overhead is
-    one boxed eval per ~10 words, measured neutral-to-positive at
-    sf0.1 and one full shuffle cheaper at scale."""
+    ordered sentences as one row-local array (test_neural.py::
+    test_sentence_arrays_matches_grouped). Kept only for perfbench's
+    neural.corpus layer; goes with the next benchmark change."""
     words = F.split(F.col("text"), " ")
     n_sent = F.ceil(F.size(words) / F.lit(SENT_WORDS)).cast("int")
     sents = F.transform(

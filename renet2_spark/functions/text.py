@@ -28,8 +28,9 @@ preprocessing:
   lookahead scans, the digit+unit continuation scan, and the
   trailing-')]' scan. Sentences keep the reference's exact substrings
   (including leading spaces). A character-scan automaton is inherently
-  sequential, so this stays a per-string function, called inside the
-  one-pass raw tokenizer map (operators.tagger.raw_tokens; the
+  sequential, so this stays a per-string function; split_tokenize runs
+  it over a batch for the raw tagger's one pass (operators.tagger.
+  raw_tokens) and the neural worker (operators.neural.word_rows; the
   reference itself shells out to the GENIA C++ splitter in production,
   src/renet2/parse_data.py:456-467).
 """
@@ -413,6 +414,15 @@ def split_sentences(text: str) -> list[str]:
             prv = i + 1
     snts.append(text[prv:])
     return snts
+
+
+def split_tokenize(texts) -> list[list[tuple[str, list[str]]]]:
+    """Each text's split_sentences sentences, in order, each with its
+    tokens: all sentences of `texts` are tokenized in ONE
+    tokenize_series call. A NULL text reads as the empty text."""
+    per_text = [split_sentences(t or "") for t in texts]
+    toks = iter(tokenize_series(pd.Series([s for ss in per_text for s in ss], dtype=object)))
+    return [[(s, next(toks)) for s in ss] for ss in per_text]
 
 
 # ---- Filter_rnn (reference utils/sequence_utils.py:170-198) ---------------

@@ -24,15 +24,16 @@ masking, so results are independent of batching/partitioning.
 
 One encoder: pairs reach the scoring worker grouped per document
 (_doc_payload), built from the flagship's per-doc entity row
-(pairgen.doc_entities + DOC_PAIRS) joined to the doc's sentence
-array, then repartitioned round-robin to a fixed count of tasks: the
-payload is tiny in bytes, so AQE would coalesce a repartition-by-column
-to a couple of scoring tasks. The worker maps each doc's sentences through
-the packaged vocabulary (vocab_ids, the only vocabulary lookup) and
-builds the doc's tensors once (_doc_cache_entry); each pair then only
-flips its target codes (_target_feat). build_pair_tensors is that same
-recode for one pair, and pair_tensor_digests hashes it over the same
-payload, so the frozen encode digest pins the path that scores.
+(pairgen.doc_entities + DOC_PAIRS) joined to the doc's text, then
+repartitioned round-robin to a fixed count of tasks: the payload is
+tiny in bytes, so AQE would coalesce a repartition-by-column to a
+couple of scoring tasks. The worker turns each doc's text into word
+rows (word_rows), maps them through the packaged vocabulary (vocab_ids,
+the only vocabulary lookup) and builds the doc's tensors once
+(_doc_cache_entry); each pair then only flips its target codes
+(_target_feat). build_pair_tensors is that same recode for one pair,
+and pair_tensor_digests hashes it over the same payload, so the
+frozen encode digest pins the path that scores.
 
 Scale: scoring is embarrassingly parallel; Arrow batch size is the
 only memory knob (spark.sql.execution.arrow.maxRecordsPerBatch).
@@ -47,7 +48,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..corpus import SENT_WORDS
 from ..dictionaries import VOCAB_SIZE
+from ..functions.text import split_tokenize
 from .scorer import N_MODELS
 MAX_SENTS = 32  # reference abstract-mode snt_n (README.md:216)
 # full-text mode: fix_snt_n=400 (reference predict.py:291-294 default;
@@ -336,15 +339,32 @@ def entity_remap(sorted_ments: list) -> dict[tuple[str, str], int]:
     return remap
 
 
-def vocab_ids(sentences: list[str], vocab: dict[str, int]) -> list[list[int]]:
-    """Token-id rows of one doc's space-joined sentences: every word
-    (the empty words of repeated spaces included) maps through `vocab`,
-    unknown words to vocab['[X]'] (reference raw_handler.py:24-33).
-    The encoder's only vocabulary lookup; it runs inside the scoring
-    worker, where the vocabulary ships with the package."""
+def word_rows(texts, packed) -> list[list[list[str]]]:
+    """Each document's sentences as word rows, the encoder's input: a
+    packed text's SENT_WORDS-word chunks of text.split(" ") (empty
+    words kept), a raw text's split_sentences sentences as the parity
+    tokenizer's tokens (split_tokenize, one call for the batch's raw
+    texts, as in tagger.raw_tokens) less those with no token."""
+    raw = iter(split_tokenize([t for t, p in zip(texts, packed) if not p]))
+    rows = []
+    for text, p in zip(texts, packed):
+        if p:
+            words = text.split(" ")
+            rows.append([words[i : i + SENT_WORDS] for i in range(0, len(words), SENT_WORDS)])
+        else:
+            rows.append([toks for _, toks in next(raw) if toks])
+    return rows
+
+
+def vocab_ids(rows: list[list[str]], vocab: dict[str, int]) -> list[list[int]]:
+    """Token-id rows of one doc's word rows: every word (an empty word
+    included) maps through `vocab`, unknown words to vocab['[X]']
+    (reference raw_handler.py:24-33). The encoder's only vocabulary
+    lookup; it runs inside the scoring worker, where the vocabulary
+    ships with the package."""
     oov = vocab["[X]"]
     lookup = vocab.get
-    return [[lookup(w, oov) for w in s.split(" ")] for s in sentences]
+    return [[lookup(w, oov) for w in row] for row in rows]
 
 
 def _doc_cache_entry(tok_ids: list, ments,
@@ -454,15 +474,15 @@ def score_batch(pdf: pd.DataFrame,
     return out  # [B, N]
 
 
-def _doc_payload(mentions: DataFrame, sents_arrays: DataFrame) -> DataFrame:
-    """(doc_id, _pairs, ments, _sents): one row per document, so each
-    doc's sentences and mentions cross the shuffle and the Arrow
+def _doc_payload(mentions: DataFrame, texts: DataFrame) -> DataFrame:
+    """(doc_id, _pairs, ments, text, packed): one row per document, so
+    each doc's text and mentions cross the shuffle and the Arrow
     boundary ONCE instead of once per pair (~10.7 pairs/doc on the
     driver corpus; A/B in BENCH.md round 6). `_pairs` and `ments` come
     from the flagship's per-doc entity row (pairgen.doc_entities,
     DOC_PAIRS): the pairs carry their counts and names, so no lookup
-    join follows. `_sents` is the doc's ordered sentence strings from
-    `sents_arrays` (doc_id, _sents), e.g. corpus.sentence_arrays. A
+    join follows. `text` and `packed` come from `texts`; the worker
+    derives the doc's sentences from them (word_rows). A
     doc without pairs (about 3% of the test corpora's docs) rides
     along and expands to no rows in the worker: a `size(_pairs) > 0`
     filter would be pushed below the projection and evaluate
@@ -484,7 +504,7 @@ def _doc_payload(mentions: DataFrame, sents_arrays: DataFrame) -> DataFrame:
     return (
         doc_entities(mentions)
         .selectExpr("doc_id", f"{DOC_PAIRS} AS _pairs", "ments")
-        .join(sents_arrays.select("doc_id", "_sents"), "doc_id")
+        .join(texts.select("doc_id", "text", "packed"), "doc_id")
         .repartition(nparts)
     )
 
@@ -493,12 +513,13 @@ def _expand_pairs(pdf: pd.DataFrame, pair_cols: list[str],
                   vocab: dict[str, int]) -> pd.DataFrame:
     """A batch of _doc_payload rows -> one row per pair: doc_id,
     tok_ids, ments and the pair columns (score_batch's input layout).
-    A doc's ids are looked up once and shared by all of its pairs."""
+    A doc's word rows and ids are built once, shared by its pairs."""
     cols: dict = {c: [] for c in ("doc_id", "tok_ids", "ments", *pair_cols)}
-    for doc_id, sents, m, plist in zip(
-        pdf["doc_id"], pdf["_sents"], pdf["ments"], pdf["_pairs"]
+    for doc_id, rows, m, plist in zip(
+        pdf["doc_id"], word_rows(pdf["text"], pdf["packed"]), pdf["ments"],
+        pdf["_pairs"],
     ):
-        t = vocab_ids(sents, vocab)
+        t = vocab_ids(rows, vocab)
         for p in plist:
             cols["doc_id"].append(doc_id)
             cols["tok_ids"].append(t)
@@ -521,7 +542,7 @@ def tensor_digest(tok: np.ndarray, feat: np.ndarray) -> str:
     return h.hexdigest()
 
 
-def pair_tensor_digests(mentions: DataFrame, sents_arrays: DataFrame) -> DataFrame:
+def pair_tensor_digests(mentions: DataFrame, texts: DataFrame) -> DataFrame:
     """(doc_id, gene_id, disease_id, tensor_md5) — per-pair digest of
     the DETERMINISTIC abstract-mode (MAX_SENTS) tensor-encode stage
     (vocab lookup, entity-index remap, feature codes 0-6,
@@ -532,7 +553,7 @@ def pair_tensor_digests(mentions: DataFrame, sents_arrays: DataFrame) -> DataFra
     encoder exactly (round-3 verdict next #8: shrink the un-oracled
     neural surface to the forward pass alone)."""
     pair_cols = ["gene_id", "disease_id"]
-    payload = _doc_payload(mentions, sents_arrays)
+    payload = _doc_payload(mentions, texts)
     schema = (
         "doc_id string, gene_id string, disease_id string, tensor_md5 string"
     )
@@ -557,23 +578,24 @@ def pair_tensor_digests(mentions: DataFrame, sents_arrays: DataFrame) -> DataFra
 
 
 def neural_score_pairs(
-    mentions: DataFrame, sents_arrays: DataFrame, max_sents: int = MAX_SENTS,
+    mentions: DataFrame, texts: DataFrame, max_sents: int = MAX_SENTS,
 ) -> DataFrame:
     """Candidate pairs of `mentions` with their 10-model ensemble
     probabilities: (doc_id, gene_id, disease_id, n_cooc_sents, n_g,
     n_d, g_name, d_name, probs array<double>); plugs into
-    scorer.ensemble_vote. `sents_arrays` is (doc_id, _sents
-    array<string>), each doc's ordered sentence strings. max_sents =
-    32 (abstract mode, default) or MAX_SENTS_FT=400 (full-text mode).
+    scorer.ensemble_vote. `texts` is (doc_id string, text, packed),
+    each doc's text and whether it is packed. max_sents = 32
+    (abstract mode, default) or MAX_SENTS_FT=400 (full-text mode).
 
     Pairs travel grouped per document (_doc_payload); the worker
-    re-expands them (_expand_pairs), mapping each doc's sentences
-    through the packaged vocabulary (dictionaries.WORD_INDEX, imported
-    once per worker process) with vocab_ids, and scores them with
-    score_batch. Scores are bitwise independent of how pairs fall into
-    batches, since score_batch evaluates every pair at its own doc
-    shape (test_forward_all_bitwise_batch_invariance)."""
-    payload = _doc_payload(mentions, sents_arrays)
+    re-expands them (_expand_pairs), turning each doc's text into word
+    rows (word_rows), mapping those through the packaged vocabulary
+    (dictionaries.WORD_INDEX, imported once per worker process) with
+    vocab_ids, and scores them with score_batch. Scores are bitwise
+    independent of how pairs fall into batches, since score_batch
+    evaluates every pair at its own doc shape
+    (test_forward_all_bitwise_batch_invariance)."""
+    payload = _doc_payload(mentions, texts)
     pair_fields = payload.schema["_pairs"].dataType.elementType.fields
     out_schema = T.StructType(
         [payload.schema["doc_id"], *pair_fields,
@@ -597,7 +619,8 @@ def neural_score_pairs(
             # dependence of the scores on batch composition.
             probs = score_batch(flat, max_sents)
             out = flat.drop(columns=["tok_ids", "ments"])
-            out["probs"] = [list(map(float, row)) for row in probs]
+            # float32 -> float64 is exact: the same bits as per-element float()
+            out["probs"] = probs.astype(np.float64).tolist()
             yield out[out_cols]
 
     return payload.mapInPandas(run, schema=out_schema)

@@ -282,7 +282,7 @@ def locate(sentence: str, tok: str, cur: int) -> int:
 def raw_tokens(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text) -> token rows (doc_id, sent_no, tok_no,
     token, start, end) with REAL char offsets into the raw text, in one
-    Arrow-batched pass. Per batch:
+    Arrow-batched pass. Per batch, split_tokenize does steps 1-2:
 
     1. split_sentences (the reference's snt_split automaton) cuts each
        text into exact substrings, so a sentence's char offset is the
@@ -302,59 +302,33 @@ def raw_tokens(documents: DataFrame) -> DataFrame:
     the raw-INGEST path (the reference shells out to the GENIA C++
     splitter for step 1, parse_data.py:456-467); the packed-corpus hot
     path never enters Python."""
-    from ..functions.text import split_sentences, tokenize_series
+    from ..functions.text import split_tokenize
 
     cols = _RAW_TOKEN_SCHEMA.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sents = []  # (doc_id, sent_no, sentence, offset, text)
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = text or ""
-                offset = 0
-                for sent_no, sentence in enumerate(split_sentences(text)):
-                    sents.append((doc_id, sent_no, sentence, offset, text))
-                    offset += len(sentence)
-            toks = tokenize_series(pd.Series([s[2] for s in sents], dtype=object))
             out = []
-            for (doc_id, sent_no, sentence, offset, text), tl in zip(sents, toks):
-                cur = 0
-                for tok_no, tok in enumerate(tl):
-                    pos = locate(sentence, tok, cur)
-                    start = end = -1
-                    if pos >= 0:
-                        cur = pos + len(tok)
-                        if text[offset + pos : offset + cur] == tok:
-                            start, end = offset + pos, offset + cur
-                    out.append((doc_id, sent_no, tok_no, tok, start, end))
+            for doc_id, text, sents in zip(
+                pdf["doc_id"], pdf["text"], split_tokenize(pdf["text"])
+            ):
+                offset = 0
+                for sent_no, (sentence, tl) in enumerate(sents):
+                    cur = 0
+                    for tok_no, tok in enumerate(tl):
+                        pos = locate(sentence, tok, cur)
+                        start = end = -1
+                        if pos >= 0:
+                            cur = pos + len(tok)
+                            if text[offset + pos : offset + cur] == tok:
+                                start, end = offset + pos, offset + cur
+                        out.append((doc_id, sent_no, tok_no, tok, start, end))
+                    offset += len(sentence)
             yield pd.DataFrame(out, columns=cols)
 
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     ).mapInPandas(run, schema=_RAW_TOKEN_SCHEMA)
-
-
-def raw_sentence_arrays(documents: DataFrame) -> DataFrame:
-    """Raw documents -> (doc_id, _sents array<string>), the raw
-    counterpart of corpus.sentence_arrays: each sentence is its
-    :func:`raw_tokens` tokens (located or not) re-joined with single
-    spaces, in sent_no order, so the neural encoder's whitespace split
-    sees the parity tokenizer's tokens in the raw tagger's tok_no
-    coordinates. A sentence that tokenizes to nothing is omitted, and
-    a doc with no tokens has no row."""
-    return (
-        raw_tokens(documents)
-        .groupBy("doc_id", "sent_no")
-        .agg(F.expr(
-            "array_join(transform(array_sort(collect_list("
-            "struct(tok_no, token))), t -> t.token), ' ') AS sentence"
-        ))
-        .groupBy("doc_id")
-        .agg(F.expr(
-            "transform(array_sort(collect_list(struct(sent_no, sentence))),"
-            " s -> s.sentence) AS _sents"
-        ))
-    )
 
 
 def tag_mentions_raw(documents: DataFrame, spark: SparkSession,

@@ -23,9 +23,10 @@ unioned with the raw-text chain over the rest.
 
 The neural edge plan (build_edges_neural) is the same plan down to
 the per-doc entity row, which there also collects the doc's mention
-coordinates: the row joins the doc's sentence array, is repartitioned
-to a fixed count of scoring tasks, and the CNN+BiGRU ensemble scores
-its DOC_PAIRS in a Python worker before the shared ensemble_vote.
+coordinates: the row joins the doc's text, is repartitioned to a fixed
+count of scoring tasks, and the CNN+BiGRU ensemble scores its
+DOC_PAIRS in a Python worker, which derives the doc's sentences from
+the text itself, before the shared ensemble_vote.
 
 Every shuffle is keyed by doc_id — document-uniform, so hot entities
 (the 'join' gene appears in ~77% of docs) never skew a partition.
@@ -198,34 +199,32 @@ def build_edges_neural(
 
     The flagship plan down to the pairs: build_mentions, then the same
     per-doc entity row (pairgen.doc_entities), which also collects each
-    doc's mention coordinates; that row joins the doc's sentence array
-    and feeds the scorer, then scorer.ensemble_vote. No persist, and no
-    join besides the sentence array's.
+    doc's mention coordinates; that row joins the doc's text and feeds
+    the scorer, then scorer.ensemble_vote. No persist, and no join
+    besides the text's.
 
-    Sentence arrays, routed per document as the mentions are: on
-    packed (contract) text they derive row-locally from the text
-    (corpus.sentence_arrays); on raw punctuated text they come from the same one-pass split/tokenize/
-    locate map the raw tagger reads (tagger.raw_tokens), re-joined
-    with spaces per sentence (tagger.raw_sentence_arrays) so the
-    encoder's whitespace split sees the real tokens, in the raw
-    tagger's tok_no coordinates.
+    The text carries its route as a literal `packed` flag, set by
+    _route as the mentions are routed; the scoring worker turns each
+    text into word rows itself (neural.word_rows), raw text with the
+    raw tagger's splitter and tokenizer, so no second raw pass runs.
 
     mode selects the reference input shape (predict.py:291-294:
     "recommend [for abs 32, for ft 400]"): 'abs' caps documents at 32
     sentences, 'ft' (full-text) at 400."""
-    from ..corpus import sentence_arrays
     from ..operators.neural import MAX_SENTS, MAX_SENTS_FT, neural_score_pairs
     from ..operators.scorer import ensemble_vote
-    from ..operators.tagger import raw_sentence_arrays
 
     if mode not in ("abs", "ft"):
         raise ValueError(f"mode must be abs|ft, got {mode!r}")
     max_sents = MAX_SENTS_FT if mode == "ft" else MAX_SENTS
     mentions = build_mentions(spark, documents, corpus=corpus)
-    sents_arrays = _route(
-        documents, corpus, sentence_arrays, raw_sentence_arrays
+    texts = _route(
+        documents.selectExpr("CAST(doc_id AS STRING) AS doc_id", "text"),
+        corpus,
+        lambda docs: docs.withColumn("packed", F.lit(True)),
+        lambda docs: docs.withColumn("packed", F.lit(False)),
     )
-    scored = neural_score_pairs(mentions, sents_arrays, max_sents=max_sents)
+    scored = neural_score_pairs(mentions, texts, max_sents=max_sents)
     voted = ensemble_vote(scored, cutoff=cutoff)
     return voted.selectExpr(*_EDGE_COLUMNS)
 

@@ -102,15 +102,16 @@ class CheckpointStore:
     def _data_path(self, stage: str) -> str:
         return os.path.join(self.root, stage, "data")
 
-    def lineage(self, stage: str) -> DataFrame:
-        """The stage's lineage rows; empty only if none was ever written.
-        A new store is told by the path's absence, asked of the path's
-        own Hadoop FileSystem (local, HDFS or an object store): a read
-        of the missing path would log a FileNotFoundException stack."""
-        path = self._lineage_path(stage)
+    def _exists(self, path: str) -> bool:
+        """Asked of the path's own Hadoop FileSystem (local, HDFS or an
+        object store); a read of a missing path fails with a stack."""
         hpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
+        return hpath.getFileSystem(self.spark._jsc.hadoopConfiguration()).exists(hpath)
+
+    def lineage(self, stage: str) -> DataFrame:
+        """The stage's lineage rows; empty only if none was ever written."""
+        path = self._lineage_path(stage)
+        if not self._exists(path):
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return self.spark.read.parquet(path)
 
@@ -151,9 +152,6 @@ class CheckpointStore:
         out = with_part_key(transform(subset), key_col, buckets).withColumn(
             "input_fingerprint", _fingerprint_of(todo)
         )
-        # the readback's schema is the transform's, also on a resume with
-        # nothing to do: an empty output leaves no file to infer it from
-        data = self.spark.read.schema(out.schema)
         if todo:
             obs = Observation()
             # one task (one file) per bucket: without the repartition every
@@ -183,9 +181,16 @@ class CheckpointStore:
             ).withColumn("updated_at", F.current_timestamp()).write.mode(
                 "append"
             ).parquet(self._lineage_path(stage))
+        # the readback's schema is the transform's: an empty output leaves
+        # no file to infer it from, an empty input on a fresh store no path
+        path = self._data_path(stage)
+        data = (
+            self.spark.read.schema(out.schema).parquet(path)
+            if self._exists(path)
+            else self.spark.createDataFrame([], out.schema)
+        )
         return (
-            data.parquet(self._data_path(stage))
-            .filter(_fingerprint_of(fps) == F.col("input_fingerprint"))
+            data.filter(_fingerprint_of(fps) == F.col("input_fingerprint"))
             .drop("part_key", "input_fingerprint")
         )
 

@@ -358,6 +358,24 @@ def test_auto_routing_counts_land_in_metrics(spark, root):
     } and n_raw > 0
 
 
+@pytest.mark.parametrize("empty", ["limit(0)", "doc_id < 0"])
+def test_fresh_store_with_empty_input_builds_no_edges(spark, root, empty):
+    """An empty input on a fresh store leaves nothing to do and writes
+    no data path; the stage reads back empty with the transform's
+    schema, so the edges are empty with the edge columns."""
+    from renet2_spark.plans.pipeline import build_edges
+
+    docs = _docs(spark)
+    docs = docs.limit(0) if empty == "limit(0)" else docs.where(empty)
+    store = CheckpointStore(spark, root)
+    edges = build_edges(spark, docs, store=store, corpus="packed")
+    assert edges.columns == [
+        "doc_id", "gene_id", "predicate", "disease_id", "g_name", "d_name",
+        "prob_avg", "hit_cnt",
+    ]
+    assert edges.collect() == []
+
+
 def test_write_table_parquet_fallback(spark, root):
     """S6 sink: no Iceberg runtime on this classpath -> write_table
     degrades to parquet with the same layout contract."""

@@ -69,7 +69,7 @@ def test_build_edges_neural_concurrent_builds(spark):
 
 
 # the flagship over every routing, and the neural plan over both
-# sentence-array sources (its auto routing is the flagship's probe)
+# declared contracts (its auto routing is the flagship's _route)
 _BUILDS = [
     *(pytest.param(build_edges, c, id=c) for c in ("auto", "packed", "raw")),
     *(

@@ -181,7 +181,7 @@ def test_vocab_ids_large_vocab_equals_dict_get():
     sents = ["w0 w1 w2999", "w5  unknown   w7", " w3 ", "", "zzz"]
     oov = vocab["[X]"]
     want = [[vocab.get(w, oov) for w in s.split(" ")] for s in sents]
-    assert vocab_ids(sents, vocab) == want
+    assert vocab_ids([s.split(" ") for s in sents], vocab) == want
     assert want[1] == [6, oov, oov, oov, oov, 8]
     assert vocab_ids([], vocab) == []
 
@@ -563,16 +563,18 @@ def test_scale_fingerprints_match_testdata(sf):
 
 
 def test_sentence_arrays_matches_grouped(spark):
-    """corpus.sentence_arrays (the row-local sentence arrays the packed
-    neural chain passes to neural_score_pairs) must equal regrouping
-    sentences_direct's exploded relation per doc — same strings, same
-    order — including the degenerate shapes:
-    empty text (split('', ' ') = ['']), one word, exact 10/11-word
-    boundaries, repeated spaces (empty words), a many-sentence doc and
-    NULL text."""
+    """corpus.sentence_arrays must equal regrouping sentences_direct's
+    exploded relation per doc — same strings, same order — including
+    the degenerate shapes: empty text (split('', ' ') = ['']), one
+    word, exact 10/11-word boundaries, repeated spaces (empty words), a
+    many-sentence doc and NULL text. The scoring worker's packed word
+    rows (neural.word_rows) are those sentences split on ' ', on
+    sf0.001 and on a text with double and trailing spaces (empty words
+    kept)."""
     from pyspark.sql import functions as F
 
-    from renet2_spark.corpus import sentence_arrays, sentences_direct
+    from renet2_spark.corpus import load_documents, sentence_arrays, sentences_direct
+    from renet2_spark.operators.neural import word_rows
 
     rows = [
         ("1", ""),
@@ -604,3 +606,19 @@ def test_sentence_arrays_matches_grouped(spark):
     }
     want["7"] = []  # NULL text: no exploded sentences, an empty array
     assert got == want
+
+    spaced = spark.createDataFrame(
+        [("-1", " ".join(f"w{i}" for i in range(12)).replace("w3 ", "w3  ") + " ")],
+        "doc_id string, text string",
+    )
+    packed = load_documents(spark, SF_SMOKE).select(
+        F.col("doc_id").cast("string"), "text"
+    ).unionByName(spaced)
+    rows = packed.join(sentence_arrays(packed), "doc_id").collect()
+    want = [[s.split(" ") for s in r["_sents"]] for r in rows]
+    assert len(rows) == 501
+    assert want[[r["doc_id"] for r in rows].index("-1")] == [
+        ["w0", "w1", "w2", "w3", "", "w4", "w5", "w6", "w7", "w8"],
+        ["w9", "w10", "w11", ""],
+    ]
+    assert word_rows([r["text"] for r in rows], [True] * len(rows)) == want

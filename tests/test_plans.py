@@ -129,11 +129,11 @@ def test_neural_edge_plan_is_flagship_plan_plus_scorer(spark):
     the non-adaptive plan two exchanges, the entity row's doc_id
     repartition and the round-robin scoring repartition to a fixed
     count, no shuffled join, no persisted relation, and two document
-    scans: the tagger's and the sentence arrays'. A second mentions
-    branch would add an exchange and a scan. The scoring count is set
-    to the shuffle partition count too: a (count, doc_id) scoring
-    repartition would then be dropped as redundant, leaving only the
-    doc_id exchange that AQE may coalesce."""
+    scans: the tagger's and the text's, which the scorer reads. A
+    second mentions branch would add an exchange and a scan. The
+    scoring count is set to the shuffle partition count too: a (count,
+    doc_id) scoring repartition would then be dropped as redundant,
+    leaving only the doc_id exchange that AQE may coalesce."""
     from renet2_spark.plans.pipeline import build_edges_neural
 
     spark.catalog.clearCache()
@@ -170,9 +170,12 @@ def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
     tokenize, locate and the mention-vs-text check are one map over
     (doc_id, text). build_edges(corpus='raw') has one Python node, one
     document scan and the broadcast dictionary join as its only join
-    (no join of the text back for the check). build_edges_neural reads
-    the same map twice at most, for its mentions and its sentence
-    arrays, besides the scorer's Python node."""
+    (no join of the text back for the check). build_edges_neural runs
+    that map once, for its mentions, and its scorer reads the text
+    itself: two Python nodes, at most two scans, and only the entity
+    row's doc_id exchange and the round-robin scoring exchange; a raw
+    relation of sentence arrays would add a Python pass, its two
+    aggregations and their exchanges."""
     from renet2_spark.corpus import raw_text_twin_messy
     from renet2_spark.plans.pipeline import build_edges, build_edges_neural
 
@@ -184,23 +187,30 @@ def test_raw_edge_plans_run_the_raw_chain_in_one_pass(spark):
     assert len(_PYTHON_NODE.findall(flagship)) == 1, flagship
     assert flagship.count("FileScan parquet") == 1, flagship
     assert _JOIN_NODE.findall(flagship) == ["BroadcastHashJoin"], flagship
-    # the scorer is one MapInPandas; the rest are raw passes
-    assert len(_PYTHON_NODE.findall(neural)) - 1 <= 2, neural
+    assert _PYTHON_NODE.findall(neural) == ["MapInPandas"] * 2, neural
+    nparts = 2 * spark.sparkContext.defaultParallelism
+    assert sorted(re.findall(r"\bExchange (\w+)\((\w+)", neural)) == [
+        ("RoundRobinPartitioning", str(nparts)), ("hashpartitioning", "doc_id"),
+    ], neural
     assert neural.count("FileScan parquet") <= 2, neural
 
 
 def test_auto_edge_plan_routes_each_document_in_the_plan(spark):
     """corpus='auto' is one plan: the packed tagger over the documents
     PACKED_OK holds for, unioned with the raw chain over the rest. In the non-adaptive plan: one document
-    scan per branch and one Python node, the raw pass."""
-    from renet2_spark.plans.pipeline import build_edges
+    scan per branch and one Python node, the raw pass. The neural plan
+    adds only the scorer's Python node: its text is routed by the same
+    predicate, with no second raw pass."""
+    from renet2_spark.plans.pipeline import build_edges, build_edges_neural
 
     spark.catalog.clearCache()
     with sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         plan = _executed(build_edges(spark, _docs(spark), corpus="auto"))
+        neural = _executed(build_edges_neural(spark, _docs(spark), corpus="auto"))
     assert plan.count("FileScan parquet") == 2, plan
     assert _PYTHON_NODE.findall(plan) == ["MapInPandas"], plan
     assert plan.count("Union") == 1, plan
+    assert _PYTHON_NODE.findall(neural) == ["MapInPandas"] * 2, neural
 
 
 def test_threshold_sweep_scores_the_flagship_pairs(spark):

@@ -2,6 +2,7 @@
 routing on variable-sentence-length corpora (round-2 verdict #1), and
 cache hygiene (#8)."""
 
+import hashlib
 import shutil
 import tempfile
 
@@ -95,7 +96,7 @@ def test_auto_routes_a_mixed_partition_exactly(spark):
 
 
 def test_auto_routes_a_mixed_partition_exactly_neural(spark):
-    """The neural plan routes its sentence arrays as it routes the
+    """The neural plan routes its texts as it routes the
     mentions: on a mixed partition its edges are the packed plan's over
     the packed docs plus the raw plan's over the raw docs."""
     from renet2_spark.plans.pipeline import build_edges_neural
@@ -417,35 +418,57 @@ def test_neural_raw_corpus_routing(spark):
     assert ("1001", "D0001") in pairs
 
 
-def test_raw_sentence_arrays_are_tokenized_sentences(spark):
-    """The raw neural input: each doc's sentence array is its
-    split_sentences sentences in order, each the parity tokenizer's
-    tokens joined by single spaces; a sentence that tokenizes to
-    nothing is omitted, and a doc left with no sentence (NULL text)
-    has no row."""
-    from renet2_spark.functions.text import split_sentences, tokenize_text
-    from renet2_spark.operators.tagger import raw_sentence_arrays
-
-    docs = raw_text_twin_messy(
-        load_documents(spark, SF_SMOKE)
-        .select(F.col("doc_id").cast("string"), "text")
-        .unionByName(
-            spark.createDataFrame([("-1", None)], "doc_id string, text string")
-        )
+def _edges_md5(edges) -> tuple[int, str]:
+    """(row count, md5 of the sorted rows), prob_avg by its exact bits."""
+    rows = sorted(edges.collect())
+    text = "\n".join(
+        "|".join(v.hex() if isinstance(v, float) else str(v) for v in r)
+        for r in rows
     )
-    got = {
-        r["doc_id"]: list(r["_sents"])
-        for r in raw_sentence_arrays(docs).collect()
-    }
-    want = {}
-    for r in docs.collect():
-        sents = [
-            " ".join(tokenize_text(s)) for s in split_sentences(r["text"] or "")
-        ]
-        if any(sents):
-            want[r["doc_id"]] = [s for s in sents if s]
-    assert "-1" not in want and len(want) > 1
-    assert got == want
+    return len(rows), hashlib.md5(text.encode()).hexdigest()
+
+
+# build_edges_neural(corpus="raw") over each sf0.001 raw twin, frozen
+# from the plan that built the raw sentence arrays in Spark: the
+# scorer's own word rows must reproduce every row and prob_avg bit
+_RAW_NEURAL_MD5 = {
+    "messy": (4490, "a08379b9726dd7d1709ca99ebf42e5e3"),
+    "bang": (2524, "92ac702387383cbb4661a3aa4518aceb"),
+}
+
+
+def test_raw_neural_edges_are_frozen(spark):
+    docs = load_documents(spark, SF_SMOKE).select(
+        F.col("doc_id").cast("string"), "text"
+    )
+    for name, twin in (("messy", raw_text_twin_messy), ("bang", raw_text_twin)):
+        edges = pipeline.build_edges_neural(spark, twin(docs), corpus="raw")
+        assert _edges_md5(edges) == _RAW_NEURAL_MD5[name], name
+
+
+def test_raw_word_rows_are_tokenized_sentences(spark):
+    """The raw neural input, as the scoring worker builds it
+    (neural.word_rows) from one batch of the messy twin's texts: each
+    doc's rows are its split_sentences sentences in order, each the
+    parity tokenizer's tokens, and a sentence that tokenizes to nothing
+    is dropped (an empty text has no row)."""
+    from renet2_spark.functions.text import split_sentences, tokenize_text
+    from renet2_spark.operators.neural import word_rows
+
+    texts = [
+        r["text"]
+        for r in raw_text_twin_messy(
+            load_documents(spark, SF_SMOKE).select(
+                F.col("doc_id").cast("string"), "text"
+            )
+        ).collect()
+    ] + ["", "  .  "]
+    want = [
+        [t for t in (tokenize_text(s) for s in split_sentences(text)) if t]
+        for text in texts
+    ]
+    assert len(texts) == 502 and want[-2] == [] and want[-1] == [["."]]
+    assert word_rows(texts, [False] * len(texts)) == want
 
 
 def test_concurrent_auto_builds_record_own_routing(spark):

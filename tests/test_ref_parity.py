@@ -279,7 +279,7 @@ def test_real_word_index_through_vocab_lookup():
     want = [
         [vocab.get(w, vocab["[X]"]) for w in s.split(" ")] for s in sents
     ]
-    assert vocab_ids(sents, vocab) == want
+    assert vocab_ids([s.split(" ") for s in sents], vocab) == want
 
 
 def test_real_omim2mesh_human_genes_through_canonicalize(spark):
